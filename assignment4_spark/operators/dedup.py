@@ -1109,9 +1109,13 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         # subset of its keys) AND the n_docs window's partitioning, so
         # the explicit repartition replaces the aggregate exchange and
         # the window exchange (2 Exchange → 1, verified in the plan
-        # gate). Bytes drop too: the single exchange carries each gram
-        # once, where the two-exchange form shuffled the (h, doc_id)
-        # aggregate twice.
+        # gate). Bytes are a trade-off, not a guaranteed drop: the
+        # exchange now sits BELOW the (h, doc_id) aggregate, so it
+        # carries every raw gram row and loses the map-side partial
+        # combine the two-exchange form had. On a high-duplication
+        # corpus (one gram repeated many times inside a doc) that one
+        # exchange can carry more bytes than the two it replaces; on
+        # mostly-distinct grams it carries fewer.
         .repartition(F.col("h"))
         .groupBy("h", "doc_id")
         .agg(F.count(F.lit(1)).alias("cnt"))

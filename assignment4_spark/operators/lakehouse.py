@@ -15,7 +15,8 @@ silently lacks, composed from two already-proven pieces:
   never be torn by a concurrent commit).
 
 The missing third piece — what Delta/Iceberg add on top — is the
-**optimistic-concurrency commit loop** implemented here:
+**optimistic-concurrency commit loop**, implemented once in
+``_transact`` and shared by every commit face except init and clone:
 
 1. pin the latest manifest (version N);
 2. plan the touched buckets from the UPDATE batch's keys and read ONLY
@@ -412,14 +413,17 @@ def _bucket_of(key_col: str, n_buckets: int):
 def _staging_path(base_dir: str, prefix: str, version: int, writer_id: str,
                   attempt: int) -> str:
     """ATTEMPT-PRIVATE staging directory name, shared by every commit
-    path (init / merge / compact): pid + thread + a process-wide
-    monotonic sequence. writer_id is identity/debugging only, never a
-    safety requirement. pid/thread alone are NOT enough: a published
-    commit directory keeps living under its staging name (the manifest
-    references files inside it), so a LATER attempt on the same thread
-    that pins a STALE manifest (vacuum race, missed CAS) recomputes the
-    same next_version and — with a deterministic name — would
-    mode(overwrite)/rmtree the LIVE v{N} directory it collides with
+    path that writes files (init, and every ``_transact`` face through
+    its ``stage(prefix)``: merge + quarantine, compact, optimize and
+    its coalesced sidecars, MOR/DV deletes, replaceWhere, rebucket):
+    pid + thread + a process-wide monotonic sequence. writer_id is
+    identity/debugging only, never a safety requirement. pid/thread
+    alone are NOT enough: a published commit directory keeps living
+    under its staging name (the manifest references files inside it),
+    so a LATER attempt on the same thread that pins a STALE manifest
+    (vacuum race, missed CAS) recomputes the same next_version and —
+    with a deterministic name — would mode(overwrite)/rmtree the LIVE
+    v{N} directory it collides with
     (measured: the vacuum-race test deleted v2's published files this
     way before the sequence term existed). The sequence number makes
     every attempt's staging unique for the life of the process, so
@@ -1347,7 +1351,7 @@ def _attach_sidecars(
     # to trust-the-file on a renamed/relocated dir — re-opening the
     # stale-byte-resurrection class the protocol fuzz caught (r10).
     newv = {
-        f: int(manifest["version"])
+        f: int(snap["version"]) + 1
         for fs in _list_bucket_files(staging).values()
         for f in fs
     }
@@ -1635,6 +1639,127 @@ def _publish_manifest(base_dir: str, manifest: dict) -> bool:
             pass  # a concurrent vacuum already expired the slot again
         return False
     return True
+
+
+def _transact(
+    base_dir: str,
+    kind: str,
+    writer_id: str,
+    build,
+    max_retries: int,
+    before_commit=None,
+    on_lost_race=None,
+):
+    """The optimistic commit loop every re-pinning commit face runs
+    through: pin the latest manifest, let ``build(snap, attempt,
+    stage)`` stage files and derive the next manifest, CAS it into
+    ``v{N+1}.json``, and on a lost race re-pin and rebuild.
+
+    ``stage(prefix)`` mints an attempt-private ``_staging_path`` and
+    records it. ``build`` returns ``(manifest, result)``; a ``None``
+    manifest returns ``result`` without committing. The loop stamps
+    ``version`` / ``commit_kind`` / ``writer_id``, then checks that
+    every ``.parquet`` file staged this attempt is referenced by the
+    manifest (a staged file the manifest misses would be lost data
+    the moment the commit lands; vacuum never reclaims it either),
+    then calls ``before_commit(attempt)`` (the test seam into the
+    pre-CAS window) and publishes.
+
+    A lost CAS, or a missing-file error from a read of the pinned
+    snapshot (a vacuum expired it mid-attempt), removes every dir
+    staged this attempt and re-pins; any other exception removes them
+    and propagates. ``on_lost_race(snap)`` runs after a lost CAS only
+    (merge's serializable probe). After ``max_retries + 1`` lost races
+    the commit raises MergeConflictError."""
+    import shutil
+
+    for attempt in range(max_retries + 1):
+        snap = load_manifest(base_dir)
+        staged: list[str] = []
+
+        def stage(prefix: str) -> str:
+            path = _staging_path(
+                base_dir, prefix, snap["version"] + 1, writer_id, attempt
+            )
+            staged.append(path)
+            return path
+
+        def drop_staged() -> None:
+            for d in staged:
+                shutil.rmtree(d, ignore_errors=True)
+
+        try:
+            manifest, result = build(snap, attempt, stage)
+            if manifest is None:
+                return result
+            manifest.update(
+                version=snap["version"] + 1,
+                commit_kind=kind,
+                writer_id=writer_id,
+            )
+            _assert_staged_referenced(manifest, staged)
+            if before_commit is not None:
+                before_commit(attempt)
+        except Exception as ex:
+            drop_staged()
+            if _is_missing_file_error(ex):
+                continue
+            raise
+        if _publish_manifest(base_dir, manifest):
+            return result
+        # lost the CAS: this attempt's files are in NO manifest, so
+        # vacuum would never reclaim them
+        drop_staged()
+        if on_lost_race is not None:
+            on_lost_race(snap)
+    raise MergeConflictError(
+        f"{kind} by {writer_id} lost the commit race {max_retries + 1} times"
+    )
+
+
+def _assert_staged_referenced(manifest: dict, staged: list[str]) -> None:
+    """Pre-publish exact-file-set check: every parquet file under the
+    attempt's staged dirs must be referenced by ``manifest`` (a
+    referenced dir, the quarantine side table, covers its files)."""
+    refs = {os.path.abspath(p) for p in _manifest_refs(manifest)}
+    stray = []
+    for d in staged:
+        if os.path.abspath(d) in refs:
+            continue
+        for root, _dirs, names in os.walk(d):
+            stray.extend(
+                p
+                for p in (os.path.abspath(os.path.join(root, n)) for n in names)
+                if p.endswith(".parquet") and p not in refs
+            )
+    if stray:
+        raise AssertionError(
+            f"{manifest['commit_kind']} by {manifest['writer_id']} staged "
+            f"files outside the touched set {sorted(stray)} (stale "
+            "bucket_hint?); publishing would lose their rows"
+        )
+
+
+def _carry_sidecars(
+    manifest: dict, snap: dict, key: str, replaced=(), added=None
+) -> None:
+    """Set ``manifest[key]`` (``delete_files`` or ``dv_files``) from
+    the pinned snapshot's entries: buckets in ``replaced`` drop theirs
+    (a rewrite applied them physically, or a coalesce supersedes
+    them), ``added`` ({bucket: files}) appends. Int-sorted, empty
+    entries dropped, the key absent when nothing is pending."""
+    replaced = {int(b) for b in replaced}
+    out = {
+        b: list(fs)
+        for b, fs in (snap.get(key) or {}).items()
+        if int(b) not in replaced
+    }
+    for b, fs in (added or {}).items():
+        out[str(b)] = out.get(str(b), []) + fs
+    manifest.pop(key, None)
+    out = {b: fs for b, fs in out.items() if fs}
+    if out:
+        manifest[key] = {b: out[b] for b in sorted(out, key=int)}
 
 
 def _staged_tombstone_buckets(
@@ -2134,8 +2259,9 @@ def table_history(base_dir: str) -> list[dict]:
     still on disk (vacuum-expired versions drop out — history IS the
     retention window), ordered oldest-first. Pure manifest metadata —
     zero data I/O, O(versions) regardless of table size. Every commit
-    path stamps ``commit_kind`` (init / merge / compact / rebucket /
-    restore / clone) and ``writer_id``; per-commit records surface as
+    stamps ``commit_kind`` (init / clone, and ``_transact``'s kinds:
+    merge / compact / optimize / evolve / delete / replace / rebucket /
+    restore / publish) and ``writer_id``; per-commit records surface as
     ``quarantined`` (expectations gate) and ``restored_from``. Legacy
     pre-stamp manifests read back with kind None rather than failing."""
     versions = sorted(
@@ -2194,26 +2320,19 @@ def restore_table(
 
     Returns ``(committed_version, attempts)``."""
     old = load_manifest(base_dir, to_version)  # raises if expired
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
-        manifest = _strip_commit_records(
-            {**old, "version": snap["version"] + 1}
-        )
-        manifest["commit_kind"] = "restore"
-        manifest["writer_id"] = writer_id
+
+    def build(snap, attempt, stage):
+        manifest = _strip_commit_records(dict(old))
         manifest["restored_from"] = to_version
         if snap.get("identity_col") is not None:
             manifest["identity_high_water"] = max(
                 int(old.get("identity_high_water") or 0),
                 int(snap.get("identity_high_water") or 0),
             )
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return manifest["version"], attempt + 1
-    raise MergeConflictError(
-        f"restore to v{to_version} lost the commit race "
-        f"{max_retries + 1} times"
+        return manifest, (snap["version"] + 1, attempt + 1)
+
+    return _transact(
+        base_dir, "restore", writer_id, build, max_retries, before_commit
     )
 
 
@@ -2322,13 +2441,9 @@ def publish_from(
     )
     with open(rec_path, "w") as fh:
         json.dump({"target": os.path.abspath(main_dir), "version": v}, fh)
-    for attempt in range(max_retries + 1):
-        snap_main = load_manifest(main_dir)
-        manifest = _strip_commit_records(
-            {**snap_src, "version": snap_main["version"] + 1}
-        )
-        manifest["commit_kind"] = "publish"
-        manifest["writer_id"] = writer_id
+
+    def build(snap_main, attempt, stage):
+        manifest = _strip_commit_records(dict(snap_src))
         manifest["published_from"] = {
             "base_dir": os.path.abspath(source_dir),
             "version": v,
@@ -2338,13 +2453,10 @@ def publish_from(
                 int(snap_src.get("identity_high_water") or 0),
                 int(snap_main.get("identity_high_water") or 0),
             )
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(main_dir, manifest):
-            return manifest["version"], attempt + 1
-    raise MergeConflictError(
-        f"publish from {source_dir} v{v} lost the commit race "
-        f"{max_retries + 1} times"
+        return manifest, (snap_main["version"] + 1, attempt + 1)
+
+    return _transact(
+        main_dir, "publish", writer_id, build, max_retries, before_commit
     )
 
 
@@ -2378,6 +2490,21 @@ def _clone_pinned_versions(base_dir: str) -> set[int]:
         else:
             pins.add(int(rec["version"]))
     return pins
+
+
+def _manifest_refs(manifest: dict) -> set[str]:
+    """Every path ``manifest`` references: bucket data files, MOR and
+    DV delete sidecars, and the quarantine side table's directory."""
+    refs = {
+        f
+        for group in ("buckets", "delete_files", "dv_files")
+        for fs in (manifest.get(group) or {}).values()
+        for f in fs
+    }
+    q = (manifest.get("expectations") or {}).get("path")
+    if q:
+        refs.add(q)
+    return refs
 
 
 def vacuum(
@@ -2437,52 +2564,32 @@ def vacuum(
     pins = _clone_pinned_versions(base_dir)
     kept = [v for v in existing if v > latest - keep_last or v in pins]
     expired = [v for v in existing if v not in kept]
-    kept_files: set[str] = set()
-    kept_qdirs: set[str] = set()
+    kept_refs: set[str] = set()
     for v in kept:
-        m = load_manifest(base_dir, v)
-        for fs in m["buckets"].values():
-            kept_files.update(fs)
-        for fs in (m.get("delete_files") or {}).values():
-            kept_files.update(fs)  # MOR sidecars live like data files
-        for fs in (m.get("dv_files") or {}).values():
-            kept_files.update(fs)  # DV sidecars likewise
-        q = (m.get("expectations") or {}).get("path")
-        if q:
-            kept_qdirs.add(q)
+        kept_refs |= _manifest_refs(load_manifest(base_dir, v))
     doomed: set[str] = set()
-    doomed_qdirs: set[str] = set()
     own = os.path.abspath(base_dir) + os.sep
     for v in expired:
-        m = load_manifest(base_dir, v)
-        for fs in (
-            list(m["buckets"].values())
-            + list((m.get("delete_files") or {}).values())
-            + list((m.get("dv_files") or {}).values())
-        ):
-            # ownership = directory containment: a CLONE's manifests
-            # reference files inside the SOURCE table's directory;
-            # expiring clone history must drop the references, never
-            # delete another table's files
-            doomed.update(
-                f
-                for f in fs
-                if f not in kept_files and os.path.abspath(f).startswith(own)
-            )
-        q = (m.get("expectations") or {}).get("path")
-        if q and q not in kept_qdirs:
-            # quarantine side tables expire with their commit — same
-            # kept-reference guard as data files (paths are attempt-
-            # private so sharing is impossible today, but the guard
-            # keeps the invariant structural, not accidental)
-            doomed_qdirs.add(q)
-    for f in sorted(doomed):
+        # ownership = directory containment: a CLONE's manifests
+        # reference files inside the SOURCE table's directory;
+        # expiring clone history must drop the references, never
+        # delete another table's files
+        doomed.update(
+            p
+            for p in _manifest_refs(load_manifest(base_dir, v))
+            if p not in kept_refs and os.path.abspath(p).startswith(own)
+        )
+    n_files = 0
+    for p in sorted(doomed):
+        if os.path.isdir(p):
+            # a quarantine side table expires with its commit
+            shutil.rmtree(p, ignore_errors=True)
+            continue
+        n_files += 1
         try:
-            os.remove(f)
+            os.remove(p)
         except FileNotFoundError:
             pass  # an earlier interrupted vacuum already got it
-    for q in sorted(doomed_qdirs):
-        shutil.rmtree(q, ignore_errors=True)
     if expired:
         # persist the reopened-slot ceiling BEFORE any manifest
         # deletion: _publish_manifest rejects commits at versions
@@ -2494,20 +2601,8 @@ def vacuum(
     orphans: list[str] = []
     if orphan_grace_seconds is not None:
         import re as _re
-        import shutil as _shutil
 
-        referenced: set[str] = set()
-        for v in kept:
-            m = load_manifest(base_dir, v)
-            for fs in (
-                list(m["buckets"].values())
-                + list((m.get("delete_files") or {}).values())
-                + list((m.get("dv_files") or {}).values())
-            ):
-                referenced.update(os.path.abspath(f) for f in fs)
-            q = (m.get("expectations") or {}).get("path")
-            if q:
-                referenced.add(os.path.abspath(q))
+        referenced = {os.path.abspath(p) for p in kept_refs}
         cutoff = time.time() - max(0.0, orphan_grace_seconds)
         for entry in sorted(os.listdir(base_dir)):
             d = os.path.join(base_dir, entry)
@@ -2526,13 +2621,13 @@ def vacuum(
                     for f in fnames
                 )
                 if not has_ref:
-                    _shutil.rmtree(d, ignore_errors=True)
+                    shutil.rmtree(d, ignore_errors=True)
                     orphans.append(entry)
             except FileNotFoundError:
                 continue  # a concurrent sweep got it
     return {
         "deleted_versions": expired,
-        "deleted_files": len(doomed),
+        "deleted_files": n_files,
         "kept_versions": kept,
         "orphan_dirs_deleted": len(orphans),
     }
@@ -2592,8 +2687,10 @@ def _is_missing_file_error(ex: Exception) -> bool:
 
 
 class MergeConflictError(RuntimeError):
-    """Raised when a merge loses the commit CAS more than max_retries
-    times in a row (livelock guard; production backs off instead)."""
+    """Raised when a commit (merge, delete, compaction, restore, any
+    face that runs through ``_transact``) loses the commit CAS more
+    than max_retries times in a row (livelock guard; production backs
+    off instead)."""
 
 
 class SerializationConflictError(MergeConflictError):
@@ -2753,8 +2850,8 @@ def merge_upsert_manifest(
     bucket-probe job — one fewer full pass over the batch lineage.
     Ignored (recomputed) when the pinned snapshot's n_buckets differs
     from the hint's or the batch carries a tombstone column; a wrong
-    hint is caught by the staged-bucket validation before publish, so
-    it can abort a commit but never corrupt one.
+    hint is caught by _transact's staged-file check before publish,
+    so it can abort a commit but never corrupt one.
 
     Retention interaction (the same contract Delta documents for
     VACUUM): the retention window must exceed the longest-running
@@ -2765,8 +2862,6 @@ def merge_upsert_manifest(
     exhausts max_retries.
 
     Returns ``(committed_version, attempts)``."""
-    import shutil
-
     spark = updates.sparkSession
     if patch_cols is not None and evolve_schema:
         raise ValueError(
@@ -2786,8 +2881,10 @@ def merge_upsert_manifest(
         updates, quarantined, gate_stats = _gate_expectations(
             updates, expectations
         )
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+    # the serializable probe's scope: the last attempt's buckets
+    probe_scope: dict = {}
+
+    def build(snap, attempt, stage):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         if tiebreak_col == key_col:
             # within a key every row shares the key, so it cannot break
@@ -2910,253 +3007,224 @@ def merge_upsert_manifest(
                 ]
             ).withColumn("bucket", _bucket_of(key_col, n_buckets))
         next_version = snap["version"] + 1
-        staging = _staging_path(base_dir, "commit", next_version, writer_id, attempt)
-        # everything that READS the pinned snapshot sits inside the
-        # retry guard: spark.read.parquet performs a plan-time
-        # path-existence check, so a vacuum expiring the pinned version
-        # between load_manifest and here surfaces as PATH_NOT_FOUND at
-        # READ construction, not only during the staging write
-        try:
-            # one pass over the (small) batch keys plans BOTH the bucket
-            # pruning and the tombstone bookkeeping the manifest carries
-            # for compact_tombstones — no second job
-            if (
-                bucket_hint is not None
-                and TOMBSTONE_COL not in upd.columns
-                and int(bucket_hint[0]) == n_buckets
-            ):
-                # caller already knows the batch's bucket set (e.g. the
-                # LSH admission path collected it for its own index
-                # pruning) — skip the bucket-probe job, which otherwise
-                # re-runs the whole batch lineage once before the write
-                # re-runs it again. Honored only when the hint was
-                # derived under the SAME n_buckets (a racing rebucket
-                # re-pins to a different count and the mapping moves)
-                # and the batch carries no tombstone column (the probe
-                # doubles as tombstone bookkeeping). A stale/short hint
-                # cannot corrupt: the staged-bucket validation below
-                # aborts the commit before publish.
-                touched = sorted({int(b) for b in bucket_hint[1]})
-                tomb_buckets = sorted(
-                    set(int(b) for b in snap.get("tombstone_buckets", []))
+        staging = stage("commit")
+        # one pass over the (small) batch keys plans BOTH the bucket
+        # pruning and the tombstone bookkeeping the manifest carries
+        # for compact_tombstones — no second job
+        if (
+            bucket_hint is not None
+            and TOMBSTONE_COL not in upd.columns
+            and int(bucket_hint[0]) == n_buckets
+        ):
+            # caller already knows the batch's bucket set (e.g. the
+            # LSH admission path collected it for its own index
+            # pruning) — skip the bucket-probe job, which otherwise
+            # re-runs the whole batch lineage once before the write
+            # re-runs it again. Honored only when the hint was
+            # derived under the SAME n_buckets (a racing rebucket
+            # re-pins to a different count and the mapping moves)
+            # and the batch carries no tombstone column (the probe
+            # doubles as tombstone bookkeeping). A stale/short hint
+            # cannot corrupt: _transact's staged-file check aborts
+            # the commit before publish.
+            touched = sorted({int(b) for b in bucket_hint[1]})
+            tomb_buckets = sorted(
+                set(int(b) for b in snap.get("tombstone_buckets", []))
+            )
+        else:
+            tomb_flag = (
+                F.coalesce(
+                    F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
+                )
+                if TOMBSTONE_COL in upd.columns
+                else F.lit(False)
+            )
+            bucket_info = (
+                upd.groupBy("bucket")
+                .agg(F.max(tomb_flag).alias("has_tomb"))
+                .collect()
+            )
+            touched = sorted(r.bucket for r in bucket_info)
+            tomb_buckets = sorted(
+                set(int(b) for b in snap.get("tombstone_buckets", []))
+                | {r.bucket for r in bucket_info if r.has_tomb}
+            )
+        base_files = [
+            f for b in touched for f in snap["buckets"].get(str(b), [])
+        ]
+        # THIS commit's column epochs, computed BEFORE the base
+        # read: carried columns keep their birth version; columns
+        # NEW to this commit (evolve-add, or a RE-ADD of a dropped
+        # name) are born at next_version. The base read must use
+        # THESE epochs, not the pinned snapshot's — the snapshot
+        # has no entry for a column this merge introduces, and an
+        # entry-less column would default to trusted, so a re-add
+        # would read the dropped incarnation's stale bytes out of
+        # old file groups and PERSIST them into the rewrite
+        # (caught by the protocol model fuzz, seed 1337).
+        snap_epochs = snap.get("column_epochs") or {}
+        # legacy manifests record no schema (expected is None): every
+        # batch column is a carried column there — stamping them at
+        # next_version would make _read_files_aligned NULL every base
+        # column (key included) and fold the table into NULL-keyed
+        # rows. Only a column absent from a RECORDED prior schema is
+        # genuinely new.
+        new_epochs = {
+            c: (
+                next_version
+                if expected is not None and c not in expected
+                else int(snap_epochs.get(c, 1))
+            )
+            for c in res_columns
+        }
+        base_df = None
+        if base_files:
+            # aligned, not a plain read: files written before a
+            # schema evolution physically lack added columns / carry
+            # narrower widened types — and pending MOR deletes apply
+            # BEFORE the merge fold, so this rewrite applies them
+            # physically (its buckets' sidecars clear below) and a
+            # deleted key patched/updated here re-inserts fresh
+            # rather than carrying dead values
+            base_df = _read_visible_base(
+                spark, snap, base_files, cols, res_types,
+                new_epochs, snap.get("file_versions"),
+            )
+        if patch_cols is not None:
+            # fill the carry columns from the pinned snapshot's
+            # visible rows (one row per key by the merge invariant).
+            # Duplicate batch keys need no pre-dedup: both rows get
+            # identical carry values — and, under identity_col, the
+            # same minted id (dense_rank below is per-key) — so the
+            # final latest-wins window picks the same winner it
+            # would after a dedup, with the same identity.
+            carry = [c for c in cols if c not in upd.columns]
+            carry_data = [c for c in carry if c != TOMBSTONE_COL]
+            if base_df is not None and carry_data:
+                upd = upd.join(
+                    _visible_rows(base_df).select(key_col, *carry_data),
+                    on=key_col,
+                    how="left",
                 )
             else:
-                tomb_flag = (
-                    F.coalesce(
-                        F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
-                    )
-                    if TOMBSTONE_COL in upd.columns
-                    else F.lit(False)
+                for c in carry_data:
+                    upd = upd.withColumn(c, F.lit(None).cast(res_types[c]))
+            if TOMBSTONE_COL in carry:
+                # a patch row is a live upsert: the key's previous
+                # tombstone state never carries (visible rows are
+                # all live, tombstoned/new keys re-insert live)
+                upd = upd.withColumn(
+                    TOMBSTONE_COL, F.lit(None).cast(res_types[TOMBSTONE_COL])
                 )
-                bucket_info = (
-                    upd.groupBy("bucket")
-                    .agg(F.max(tomb_flag).alias("has_tomb"))
-                    .collect()
-                )
-                touched = sorted(r.bucket for r in bucket_info)
-                tomb_buckets = sorted(
-                    set(int(b) for b in snap.get("tombstone_buckets", []))
-                    | {r.bucket for r in bucket_info if r.has_tomb}
-                )
-            base_files = [
-                f for b in touched for f in snap["buckets"].get(str(b), [])
-            ]
-            # THIS commit's column epochs, computed BEFORE the base
-            # read: carried columns keep their birth version; columns
-            # NEW to this commit (evolve-add, or a RE-ADD of a dropped
-            # name) are born at next_version. The base read must use
-            # THESE epochs, not the pinned snapshot's — the snapshot
-            # has no entry for a column this merge introduces, and an
-            # entry-less column would default to trusted, so a re-add
-            # would read the dropped incarnation's stale bytes out of
-            # old file groups and PERSIST them into the rewrite
-            # (caught by the protocol model fuzz, seed 1337).
-            snap_epochs = snap.get("column_epochs") or {}
-            # legacy manifests record no schema (expected is None): every
-            # batch column is a carried column there — stamping them at
-            # next_version would make _read_files_aligned NULL every base
-            # column (key included) and fold the table into NULL-keyed
-            # rows. Only a column absent from a RECORDED prior schema is
-            # genuinely new.
-            new_epochs = {
-                c: (
-                    next_version
-                    if expected is not None and c not in expected
-                    else int(snap_epochs.get(c, 1))
-                )
-                for c in res_columns
-            }
-            base_df = None
-            if base_files:
-                # aligned, not a plain read: files written before a
-                # schema evolution physically lack added columns / carry
-                # narrower widened types — and pending MOR deletes apply
-                # BEFORE the merge fold, so this rewrite applies them
-                # physically (its buckets' sidecars clear below) and a
-                # deleted key patched/updated here re-inserts fresh
-                # rather than carrying dead values
-                base_df = _read_visible_base(
-                    spark, snap, base_files, cols, res_types,
-                    new_epochs, snap.get("file_versions"),
-                )
-            if patch_cols is not None:
-                # fill the carry columns from the pinned snapshot's
-                # visible rows (one row per key by the merge invariant).
-                # Duplicate batch keys need no pre-dedup: both rows get
-                # identical carry values — and, under identity_col, the
-                # same minted id (dense_rank below is per-key) — so the
-                # final latest-wins window picks the same winner it
-                # would after a dedup, with the same identity.
-                carry = [c for c in cols if c not in upd.columns]
-                carry_data = [c for c in carry if c != TOMBSTONE_COL]
-                if base_df is not None and carry_data:
-                    upd = upd.join(
-                        _visible_rows(base_df).select(key_col, *carry_data),
-                        on=key_col,
-                        how="left",
-                    )
-                else:
-                    for c in carry_data:
-                        upd = upd.withColumn(c, F.lit(None).cast(res_types[c]))
-                if TOMBSTONE_COL in carry:
-                    # a patch row is a live upsert: the key's previous
-                    # tombstone state never carries (visible rows are
-                    # all live, tombstoned/new keys re-insert live)
-                    upd = upd.withColumn(
-                        TOMBSTONE_COL, F.lit(None).cast(res_types[TOMBSTONE_COL])
-                    )
-            ident = snap.get("identity_col")
-            # legacy manifests (identity declared, mark missing) start
-            # at 0 rather than crashing the arithmetic below
-            new_hw = (
-                int(snap.get("identity_high_water") or 0)
-                if ident is not None
-                else None
+        ident = snap.get("identity_col")
+        # legacy manifests (identity declared, mark missing) start
+        # at 0 rather than crashing the arithmetic below
+        new_hw = (
+            int(snap.get("identity_high_water") or 0)
+            if ident is not None
+            else None
+        )
+        if (
+            patch_cols is not None
+            and ident is not None
+            and ident not in updates.columns
+        ):
+            # identity assignment: matched keys carried their id in
+            # the join above; NEW keys (NULL id) take
+            # high_water + dense_rank-by-key — a window over ONLY
+            # the batch's unmatched rows (bounded by batch size, the
+            # one place a single-partition window is provably
+            # bounded); dense_rank (not row_number) so duplicate
+            # batch rows for the same new key mint ONE id — no
+            # high-water gaps, and the latest-wins winner's id is
+            # tiebreak-independent. The advanced mark publishes WITH
+            # this commit's manifest, so a lost CAS re-pins the
+            # winner's mark and re-assigns — two racing inserters
+            # can never mint the same id (raced in
+            # tests/test_lakehouse.py)
+            upd, new_hw = _mint_identities(
+                upd, ident, key_col, new_hw, res_types[ident]
             )
-            if (
-                patch_cols is not None
-                and ident is not None
-                and ident not in updates.columns
-            ):
-                # identity assignment: matched keys carried their id in
-                # the join above; NEW keys (NULL id) take
-                # high_water + dense_rank-by-key — a window over ONLY
-                # the batch's unmatched rows (bounded by batch size, the
-                # one place a single-partition window is provably
-                # bounded); dense_rank (not row_number) so duplicate
-                # batch rows for the same new key mint ONE id — no
-                # high-water gaps, and the latest-wins winner's id is
-                # tiebreak-independent. The advanced mark publishes WITH
-                # this commit's manifest, so a lost CAS re-pins the
-                # winner's mark and re-assigns — two racing inserters
-                # can never mint the same id (raced in
-                # tests/test_lakehouse.py)
+        elif ident is not None and ident in upd.columns:
+            # full-row mode: the batch carries caller-managed ids —
+            # keep the invariant hw >= every assigned id, then close
+            # the NULL-id hole: rows arriving without an id first
+            # re-adopt the key's existing id from the pinned
+            # snapshot (so a full-row rewrite cannot silently change
+            # a key's identity), and genuinely new keys mint from
+            # the raised mark exactly like the patch path — a
+            # full-row batch can never publish NULL identities
+            # one batch pass answers both questions (max assigned
+            # id AND does-any-row-lack-one) — this ran as two jobs
+            idstat = upd.agg(
+                F.max(ident).alias("m"),
+                F.sum(F.col(ident).isNull().cast("int")).alias("nn"),
+            ).first()
+            if idstat.m is not None:
+                new_hw = max(new_hw or 0, int(idstat.m))
+            if int(idstat.nn or 0) > 0:
+                if base_df is not None:
+                    existing = _visible_rows(base_df).select(
+                        key_col, F.col(ident).alias("__existing_id")
+                    )
+                    upd = (
+                        upd.join(existing, on=key_col, how="left")
+                        .withColumn(
+                            ident,
+                            F.coalesce(
+                                F.col(ident),
+                                F.col("__existing_id").cast(
+                                    res_types[ident]
+                                ),
+                            ),
+                        )
+                        .drop("__existing_id")
+                    )
                 upd, new_hw = _mint_identities(
                     upd, ident, key_col, new_hw, res_types[ident]
                 )
-            elif ident is not None and ident in upd.columns:
-                # full-row mode: the batch carries caller-managed ids —
-                # keep the invariant hw >= every assigned id, then close
-                # the NULL-id hole: rows arriving without an id first
-                # re-adopt the key's existing id from the pinned
-                # snapshot (so a full-row rewrite cannot silently change
-                # a key's identity), and genuinely new keys mint from
-                # the raised mark exactly like the patch path — a
-                # full-row batch can never publish NULL identities
-                # one batch pass answers both questions (max assigned
-                # id AND does-any-row-lack-one) — this ran as two jobs
-                idstat = upd.agg(
-                    F.max(ident).alias("m"),
-                    F.sum(F.col(ident).isNull().cast("int")).alias("nn"),
-                ).first()
-                if idstat.m is not None:
-                    new_hw = max(new_hw or 0, int(idstat.m))
-                if int(idstat.nn or 0) > 0:
-                    if base_df is not None:
-                        existing = _visible_rows(base_df).select(
-                            key_col, F.col(ident).alias("__existing_id")
-                        )
-                        upd = (
-                            upd.join(existing, on=key_col, how="left")
-                            .withColumn(
-                                ident,
-                                F.coalesce(
-                                    F.col(ident),
-                                    F.col("__existing_id").cast(
-                                        res_types[ident]
-                                    ),
-                                ),
-                            )
-                            .drop("__existing_id")
-                        )
-                    upd, new_hw = _mint_identities(
-                        upd, ident, key_col, new_hw, res_types[ident]
-                    )
-            unioned = upd
-            if base_df is not None:
-                unioned = base_df.withColumn(
-                    "bucket", _bucket_of(key_col, n_buckets)
-                ).unionByName(upd)
-            # the lazy plan writes straight to staging: pinned base
-            # files are IMMUTABLE under the protocol (commits only add
-            # files and publish manifests; only vacuum deletes), so no
-            # checkpoint barrier is needed — a materialize-then-rewrite
-            # here would double the commit path's I/O for nothing
-            ccol = snap.get("cluster_col")
-            if ccol is None:
-                # latest-wins winner selection FUSED into the write's
-                # bucket exchange: one shuffle of the commit's bytes
-                # instead of two (window-by-key, then
-                # repartition-by-bucket) — guide §2.4; grouping
-                # equivalence argued in _write_clustered's docstring
-                _write_clustered(
-                    unioned, staging, key_col, write_salt, n_buckets,
-                    None, snap.get("cluster_bins", 4),
-                    latest_wins=(ver_col, tiebreak_col),
-                )
-            else:
-                # a key's rows can land in different range bins, so
-                # the winner must be chosen before the bin exchange
-                w = Window.partitionBy(key_col).orderBy(
-                    F.col(ver_col).desc(), F.col(tiebreak_col)
-                )
-                merged = (
-                    unioned.withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") == 1)
-                    .drop("rn")
-                )
-                _write_clustered(
-                    merged, staging, key_col, write_salt, n_buckets,
-                    ccol, snap.get("cluster_bins", 4),
-                )
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                # a vacuum expired our pinned version mid-read (see
-                # docstring): same remedy as a lost CAS — re-pin + retry
-                continue
-            raise
-        new_files = _list_bucket_files(staging)
-        # every staged bucket must be in the touched set: the manifest
-        # update below only replaces touched buckets, so a stray staged
-        # bucket (stale/short bucket_hint, or a bucket-derivation bug)
-        # would orphan its file while the bucket's base rows survive —
-        # losing the batch's rows for that bucket. Abort pre-publish.
-        stray = sorted(set(new_files) - set(touched))
-        if stray:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise AssertionError(
-                f"commit staged buckets {stray} outside the touched set "
-                f"{touched} (stale bucket_hint?); publishing would lose "
-                "those buckets' batch rows"
+        unioned = upd
+        if base_df is not None:
+            unioned = base_df.withColumn(
+                "bucket", _bucket_of(key_col, n_buckets)
+            ).unionByName(upd)
+        # the lazy plan writes straight to staging: pinned base
+        # files are IMMUTABLE under the protocol (commits only add
+        # files and publish manifests; only vacuum deletes), so no
+        # checkpoint barrier is needed — a materialize-then-rewrite
+        # here would double the commit path's I/O for nothing
+        ccol = snap.get("cluster_col")
+        if ccol is None:
+            # latest-wins winner selection FUSED into the write's
+            # bucket exchange: one shuffle of the commit's bytes
+            # instead of two (window-by-key, then
+            # repartition-by-bucket) — guide §2.4; grouping
+            # equivalence argued in _write_clustered's docstring
+            _write_clustered(
+                unioned, staging, key_col, write_salt, n_buckets,
+                None, snap.get("cluster_bins", 4),
+                latest_wins=(ver_col, tiebreak_col),
             )
+        else:
+            # a key's rows can land in different range bins, so
+            # the winner must be chosen before the bin exchange
+            w = Window.partitionBy(key_col).orderBy(
+                F.col(ver_col).desc(), F.col(tiebreak_col)
+            )
+            merged = (
+                unioned.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .drop("rn")
+            )
+            _write_clustered(
+                merged, staging, key_col, write_salt, n_buckets,
+                ccol, snap.get("cluster_bins", 4),
+            )
+        new_files = _list_bucket_files(staging)
         buckets = dict(snap["buckets"])
         for b in touched:
             buckets[str(b)] = new_files.get(b, [])
         manifest = {
-            "version": next_version,
-            "commit_kind": "merge",
-            "writer_id": writer_id,
             "n_buckets": n_buckets,
             "key_col": key_col,
             "columns": list(res_columns),
@@ -3170,28 +3238,11 @@ def merge_upsert_manifest(
         }
         # column epochs: computed above, BEFORE the base read used them
         manifest["column_epochs"] = new_epochs
-        # pending MOR deletes: this rewrite applied the touched
-        # buckets' sidecars physically (base_df above), so only
-        # untouched buckets' sidecars carry forward
-        dels = {
-            b: fs
-            for b, fs in (snap.get("delete_files") or {}).items()
-            if int(b) not in set(touched) and fs
-        }
-        if dels:
-            manifest["delete_files"] = {
-                k: dels[k] for k in sorted(dels, key=int)
-            }
-        # positional deletion vectors follow the same rewrite contract
-        dvs = {
-            b: fs
-            for b, fs in (snap.get("dv_files") or {}).items()
-            if int(b) not in set(touched) and fs
-        }
-        if dvs:
-            manifest["dv_files"] = {
-                k: dvs[k] for k in sorted(dvs, key=int)
-            }
+        # pending MOR deletes and deletion vectors: this rewrite applied
+        # the touched buckets' sidecars physically (base_df above), so
+        # only untouched buckets' sidecars carry forward
+        for key in ("delete_files", "dv_files"):
+            _carry_sidecars(manifest, snap, key, touched)
         if ident is not None:
             manifest["identity_col"] = ident
             manifest["identity_high_water"] = int(new_hw or 0)
@@ -3202,32 +3253,24 @@ def merge_upsert_manifest(
                 # reasoning as _staging_path's docstring); the manifest
                 # pins the winning attempt's dir, vacuum reclaims it
                 # with the version
-                qpath = _staging_path(
-                    base_dir, "quarantine", next_version, writer_id, attempt
-                )
+                qpath = stage("quarantine")
                 quarantined.write.mode("error").parquet(qpath)
             manifest["expectations"] = {**gate_stats, "path": qpath}
         _attach_sidecars(spark, snap, manifest, buckets, staging)
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return next_version, attempt + 1
-        # lost the CAS: a competing commit moved the version — drop this
-        # attempt's unreferenced staging files (they are in NO manifest,
-        # so vacuum would never reclaim them) and re-merge against the
-        # winner's manifest
-        shutil.rmtree(staging, ignore_errors=True)
-        if qpath is not None:
-            shutil.rmtree(qpath, ignore_errors=True)
-        if isolation == "serializable":
-            # gated on the POST-expectations batch: quarantined rows
-            # never commit, so they cannot lose an update either
-            _check_serializable(
-                spark, base_dir, snap["version"], updates, key_col,
-                writer_id, bucket_hint=(n_buckets, touched),
-            )
-    raise MergeConflictError(
-        f"merge by {writer_id} lost the commit race {max_retries + 1} times"
+        probe_scope["buckets"] = (n_buckets, touched)
+        return manifest, (next_version, attempt + 1)
+
+    def serializable_probe(snap):
+        # gated on the POST-expectations batch: quarantined rows
+        # never commit, so they cannot lose an update either
+        _check_serializable(
+            spark, base_dir, snap["version"], updates, snap["key_col"],
+            writer_id, bucket_hint=probe_scope["buckets"],
+        )
+
+    return _transact(
+        base_dir, "merge", writer_id, build, max_retries, before_commit,
+        serializable_probe if isolation == "serializable" else None,
     )
 
 
@@ -3241,8 +3284,8 @@ def compact_tombstones(
     delete story. Reads ONLY the buckets the manifests flagged as
     possibly-tombstoned (commit-side bookkeeping; never a table scan),
     rewrites the ones that actually hold live tombstones without their
-    tombstone rows, clears the flags, and publishes a new version via
-    the same CAS loop as MERGE.
+    tombstone rows, clears the flags, and publishes a new version
+    through ``_transact``.
 
     Retention contract (identical to Delta vacuuming past its deletion
     retention window): while a tombstone lives, a late-arriving update
@@ -3255,75 +3298,58 @@ def compact_tombstones(
     Returns ``{"version", "buckets_compacted", "tombstones_dropped"}``;
     a table with no flagged buckets returns its current version with
     no new commit."""
-    import shutil
-
     tomb = F.coalesce(F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False))
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+
+    def build(snap, attempt, stage):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         cols_, types_ = snap["columns"], snap["column_types"]
         candidates = sorted(int(b) for b in snap.get("tombstone_buckets", []))
         if not candidates or TOMBSTONE_COL not in types_:
-            return {
+            return None, {
                 "version": snap["version"],
                 "buckets_compacted": [],
                 "tombstones_dropped": 0,
             }
-        next_version = snap["version"] + 1
-        staging = _staging_path(base_dir, "compact", next_version, writer_id, attempt)
-        try:
-            files = [
-                f for b in candidates for f in snap["buckets"].get(str(b), [])
-            ]
-            df = _read_visible_base(
-                spark, snap, files, cols_, types_,
-                snap.get("column_epochs"), snap.get("file_versions"),
-            ).withColumn("bucket", _bucket_of(key_col, n_buckets))
-            per = {
-                r.bucket: r.n
-                for r in df.groupBy("bucket")
-                .agg(F.sum(tomb.cast("int")).alias("n"))
-                .collect()
-            }
-            doomed = sorted(b for b, n in per.items() if n)
-            dropped = int(sum(per[b] for b in doomed))
-            if not doomed:
-                # flags were conservative over-approximations (the
-                # tombstones lost latest-wins at some later merge) —
-                # clear them with a metadata-only commit
-                # per-commit records never carry into a new commit
-                manifest = _strip_commit_records(
-                    {**snap, "version": next_version,
-                     "commit_kind": "compact",
-                     "writer_id": writer_id,
-                     "tombstone_buckets": []}
-                )
-                if _publish_manifest(base_dir, manifest):
-                    return {
-                        "version": next_version,
-                        "buckets_compacted": [],
-                        "tombstones_dropped": 0,
-                    }
-                continue
-            live = df.filter(F.col("bucket").isin(doomed)).filter(~tomb)
-            _write_clustered(
-                live, staging, key_col, 1, n_buckets,
-                snap.get("cluster_col"), snap.get("cluster_bins", 4),
-            )
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                continue  # vacuum expired the pin mid-read: re-pin
-            raise
+        files = [
+            f for b in candidates for f in snap["buckets"].get(str(b), [])
+        ]
+        df = _read_visible_base(
+            spark, snap, files, cols_, types_,
+            snap.get("column_epochs"), snap.get("file_versions"),
+        ).withColumn("bucket", _bucket_of(key_col, n_buckets))
+        per = {
+            r.bucket: r.n
+            for r in df.groupBy("bucket")
+            .agg(F.sum(tomb.cast("int")).alias("n"))
+            .collect()
+        }
+        doomed = sorted(b for b, n in per.items() if n)
+        dropped = int(sum(per[b] for b in doomed))
+        result = {
+            "version": snap["version"] + 1,
+            "buckets_compacted": doomed,
+            "tombstones_dropped": dropped,
+        }
+        if not doomed:
+            # flags were conservative over-approximations (the
+            # tombstones lost latest-wins at some later merge) —
+            # clear them with a metadata-only commit
+            # per-commit records never carry into a new commit
+            return _strip_commit_records(
+                {**snap, "tombstone_buckets": []}
+            ), result
+        staging = stage("compact")
+        live = df.filter(F.col("bucket").isin(doomed)).filter(~tomb)
+        _write_clustered(
+            live, staging, key_col, 1, n_buckets,
+            snap.get("cluster_col"), snap.get("cluster_bins", 4),
+        )
         new_files = _list_bucket_files(staging)
         buckets = dict(snap["buckets"])
         for b in doomed:
             # an all-tombstone bucket compacts to NO files at all
             buckets[str(b)] = new_files.get(b, [])
         manifest = {
-            "version": next_version,
-            "commit_kind": "compact",
-            "writer_id": writer_id,
             "n_buckets": n_buckets,
             "key_col": key_col,
             "columns": list(cols_),
@@ -3333,37 +3359,13 @@ def compact_tombstones(
             "column_epochs": snap.get("column_epochs")
             or {c: 1 for c in cols_},
         }
-        # rewritten buckets applied their pending MOR deletes; carry
-        # the rest
-        dels = {
-            b: fs
-            for b, fs in (snap.get("delete_files") or {}).items()
-            if int(b) not in set(doomed) and fs
-        }
-        if dels:
-            manifest["delete_files"] = {
-                k: dels[k] for k in sorted(dels, key=int)
-            }
-        dvs = {
-            b: fs
-            for b, fs in (snap.get("dv_files") or {}).items()
-            if int(b) not in set(doomed) and fs
-        }
-        if dvs:
-            manifest["dv_files"] = {
-                k: dvs[k] for k in sorted(dvs, key=int)
-            }
+        # rewritten buckets applied their pending deletes; carry the rest
+        for key in ("delete_files", "dv_files"):
+            _carry_sidecars(manifest, snap, key, doomed)
         _attach_sidecars(spark, snap, manifest, buckets, staging)
-        if _publish_manifest(base_dir, manifest):
-            return {
-                "version": next_version,
-                "buckets_compacted": doomed,
-                "tombstones_dropped": dropped,
-            }
-        shutil.rmtree(staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"compaction by {writer_id} lost the commit race {max_retries + 1} times"
-    )
+        return manifest, result
+
+    return _transact(base_dir, "compact", writer_id, build, max_retries)
 
 
 def optimize_compact(
@@ -3386,7 +3388,7 @@ def optimize_compact(
     the table's standard clustered write — a clustered table stays
     clustered (bins files per bucket, fresh zone-map stats); an
     unclustered one packs to one file per bucket — and commits
-    ``commit_kind='optimize'`` through the same CAS loop as MERGE.
+    ``commit_kind='optimize'`` through ``_transact``.
 
     Invariants (pinned in tests/test_lakehouse.py):
     * byte-identical visible rows — tombstone rows INCLUDED (dropping
@@ -3409,10 +3411,7 @@ def optimize_compact(
     Returns ``{"version", "buckets_optimized", "files_before",
     "files_after", "sidecars_coalesced"}``; a table with nothing to
     pack or coalesce returns its current version with no new commit."""
-    import shutil
-
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+    def build(snap, attempt, stage):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         cols_, types_ = snap["columns"], snap["column_types"]
         fragmented = sorted(
@@ -3434,7 +3433,7 @@ def optimize_compact(
         )
         n_before = sum(len(fs) for fs in snap["buckets"].values())
         if not fragmented and not side_frag and not dv_frag:
-            return {
+            return None, {
                 "version": snap["version"],
                 "buckets_optimized": [],
                 "files_before": n_before,
@@ -3442,161 +3441,107 @@ def optimize_compact(
                 "sidecars_coalesced": [],
                 "dv_coalesced": [],
             }
-        next_version = snap["version"] + 1
-        staging = _staging_path(
-            base_dir, "optimize", next_version, writer_id, attempt
-        )
-        del_staging = None
-        dv_staging = None
-        try:
-            if fragmented:
-                files = [
-                    f for b in fragmented for f in snap["buckets"][str(b)]
-                ]
-                # pending MOR deletes of the rewritten buckets apply
-                # physically here (visible rows unchanged — they were
-                # already hidden at read); their sidecars clear below
-                df = _read_visible_base(
-                    spark, snap, files, cols_, types_,
-                    snap.get("column_epochs"),
-                    snap.get("file_versions"),
-                ).withColumn("bucket", _bucket_of(key_col, n_buckets))
-                _write_clustered(
-                    df, staging, key_col, 1, n_buckets,
-                    snap.get("cluster_col"), snap.get("cluster_bins", 4),
-                )
-            del_new: dict[int, list] = {}
-            dv_new: dict[int, list] = {}
-            if dv_frag:
-                # deletion-vector sidecars coalesce by BIT_OR folding
-                # the per-(file, word) bitmap slots — one job over
-                # O(pending deleted rows / 64) words. The file column
-                # keys each word to its data file, and a file belongs
-                # to exactly one bucket, so re-deriving the bucket from
-                # the sidecar's own partition layout is unnecessary:
-                # fold per bucket's files directly
-                dv_staging = _staging_path(
-                    base_dir, "optdv", next_version, writer_id, attempt
-                )
-                bdf = spark.createDataFrame(
-                    [
-                        (f, int(b))
-                        for b in dv_frag
-                        for f in snap["buckets"].get(str(b), [])
-                    ],
-                    "file string, bucket int",
-                )
-                dv_files_in = [
-                    f for b in dv_frag for f in dvs_all[str(b)]
-                ]
-                (
-                    spark.read.parquet(*dv_files_in)
-                    .groupBy("file", "w")
-                    .agg(F.bit_or("word").alias("word"))
-                    # vectors only survive while their bucket is
-                    # unrewritten, so every referenced file is still a
-                    # current bucket file — the inner join drops nothing
-                    .join(F.broadcast(bdf), "file")
-                    .repartition(F.col("bucket"))
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(dv_staging)
-                )
-                dv_new = _list_bucket_files(dv_staging)
-            if side_frag:
-                # one job over O(pending deleted keys): keys re-derive
-                # their own bucket (sidecars are bucket-scoped by the
-                # same hash), so the rewrite is the delete_keys_mor
-                # write shape with a fresh attempt-private dir
-                del_staging = _staging_path(
-                    base_dir, "optdel", next_version, writer_id, attempt
-                )
-                side_files = [
-                    f for b in side_frag for f in dels_all[str(b)]
-                ]
-                (
-                    spark.read.parquet(*side_files)
-                    .select(key_col)
-                    .distinct()
-                    .withColumn("bucket", _bucket_of(key_col, n_buckets))
-                    .repartition(F.col("bucket"))
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(del_staging)
-                )
-                del_new = _list_bucket_files(del_staging)
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if del_staging is not None:
-                shutil.rmtree(del_staging, ignore_errors=True)
-            if dv_staging is not None:
-                shutil.rmtree(dv_staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                continue  # vacuum expired the pin mid-read: re-pin
-            raise
-        new_files = _list_bucket_files(staging) if fragmented else {}
         buckets = dict(snap["buckets"])
-        for b in fragmented:
-            buckets[str(b)] = new_files.get(b, [])
+        if fragmented:
+            staging = stage("optimize")
+            files = [f for b in fragmented for f in snap["buckets"][str(b)]]
+            # pending MOR deletes of the rewritten buckets apply
+            # physically here (visible rows unchanged — they were
+            # already hidden at read); their sidecars clear below
+            df = _read_visible_base(
+                spark, snap, files, cols_, types_,
+                snap.get("column_epochs"),
+                snap.get("file_versions"),
+            ).withColumn("bucket", _bucket_of(key_col, n_buckets))
+            _write_clustered(
+                df, staging, key_col, 1, n_buckets,
+                snap.get("cluster_col"), snap.get("cluster_bins", 4),
+            )
+            new_files = _list_bucket_files(staging)
+            for b in fragmented:
+                buckets[str(b)] = new_files.get(b, [])
+        del_new: dict[int, list] = {}
+        dv_new: dict[int, list] = {}
+        if dv_frag:
+            # deletion-vector sidecars coalesce by BIT_OR folding
+            # the per-(file, word) bitmap slots — one job over
+            # O(pending deleted rows / 64) words. The file column
+            # keys each word to its data file, and a file belongs
+            # to exactly one bucket, so re-deriving the bucket from
+            # the sidecar's own partition layout is unnecessary:
+            # fold per bucket's files directly
+            dv_staging = stage("optdv")
+            bdf = spark.createDataFrame(
+                [
+                    (f, int(b))
+                    for b in dv_frag
+                    for f in snap["buckets"].get(str(b), [])
+                ],
+                "file string, bucket int",
+            )
+            dv_files_in = [f for b in dv_frag for f in dvs_all[str(b)]]
+            (
+                spark.read.parquet(*dv_files_in)
+                .groupBy("file", "w")
+                .agg(F.bit_or("word").alias("word"))
+                # vectors only survive while their bucket is
+                # unrewritten, so every referenced file is still a
+                # current bucket file — the inner join drops nothing
+                .join(F.broadcast(bdf), "file")
+                .repartition(F.col("bucket"))
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(dv_staging)
+            )
+            dv_new = _list_bucket_files(dv_staging)
+        if side_frag:
+            # one job over O(pending deleted keys): keys re-derive
+            # their own bucket (sidecars are bucket-scoped by the
+            # same hash), so the rewrite is the delete_keys_mor
+            # write shape with a fresh attempt-private dir
+            del_staging = stage("optdel")
+            side_files = [f for b in side_frag for f in dels_all[str(b)]]
+            (
+                spark.read.parquet(*side_files)
+                .select(key_col)
+                .distinct()
+                .withColumn("bucket", _bucket_of(key_col, n_buckets))
+                .repartition(F.col("bucket"))
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(del_staging)
+            )
+            del_new = _list_bucket_files(del_staging)
         manifest = _strip_commit_records(
             {
                 **snap,
-                "version": next_version,
-                "commit_kind": "optimize",
-                "writer_id": writer_id,
                 "buckets": {k: buckets[k] for k in sorted(buckets, key=int)},
             }
         )
-        dels = {
-            b: fs
-            for b, fs in dels_all.items()
-            if int(b) not in set(fragmented) and fs
-        }
-        for b in side_frag:
-            # an all-duplicate sidecar set can coalesce to zero files
-            # for a bucket whose keys were empty — drop the entry
-            dels[str(b)] = del_new.get(b, [])
-        dels = {b: fs for b, fs in dels.items() if fs}
-        manifest.pop("delete_files", None)
-        if dels:
-            manifest["delete_files"] = {
-                k: dels[k] for k in sorted(dels, key=int)
-            }
-        dvs = {
-            b: fs
-            for b, fs in dvs_all.items()
-            if int(b) not in set(fragmented) and fs
-        }
-        for b in dv_frag:
-            dvs[str(b)] = dv_new.get(b, [])
-        dvs = {b: fs for b, fs in dvs.items() if fs}
-        manifest.pop("dv_files", None)
-        if dvs:
-            manifest["dv_files"] = {
-                k: dvs[k] for k in sorted(dvs, key=int)
-            }
+        # rewritten buckets applied their pending deletes; coalesced
+        # buckets swap theirs for the folded sidecar (an all-duplicate
+        # set can coalesce to zero files — the entry drops)
+        _carry_sidecars(
+            manifest, snap, "delete_files", fragmented + side_frag, del_new
+        )
+        _carry_sidecars(
+            manifest, snap, "dv_files", fragmented + dv_frag, dv_new
+        )
         if fragmented:
             _attach_sidecars(spark, snap, manifest, buckets, staging)
         # sidecar-only commits change no data files: every per-file
         # sidecar map carried verbatim by the {**snap} copy stays exact
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return {
-                "version": next_version,
-                "buckets_optimized": fragmented,
-                "files_before": n_before,
-                "files_after": sum(len(fs) for fs in buckets.values()),
-                "sidecars_coalesced": side_frag,
-                "dv_coalesced": dv_frag,
-            }
-        shutil.rmtree(staging, ignore_errors=True)
-        if del_staging is not None:
-            shutil.rmtree(del_staging, ignore_errors=True)
-        if dv_staging is not None:
-            shutil.rmtree(dv_staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"optimize by {writer_id} lost the commit race {max_retries + 1} times"
+        return manifest, {
+            "version": snap["version"] + 1,
+            "buckets_optimized": fragmented,
+            "files_before": n_before,
+            "files_after": sum(len(fs) for fs in buckets.values()),
+            "sidecars_coalesced": side_frag,
+            "dv_coalesced": dv_frag,
+        }
+
+    return _transact(
+        base_dir, "optimize", writer_id, build, max_retries, before_commit
     )
 
 
@@ -3622,8 +3567,8 @@ def drop_column(
     bloom_col, identity_col, and the tombstone marker.
 
     Returns ``(committed_version, attempts)``."""
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+
+    def build(snap, attempt, stage):
         if col not in (snap.get("columns") or []):
             raise ValueError(
                 f"column {col!r} not in table schema {snap.get('columns')}"
@@ -3643,9 +3588,6 @@ def drop_column(
         manifest = _strip_commit_records(
             {
                 **snap,
-                "version": snap["version"] + 1,
-                "commit_kind": "evolve",
-                "writer_id": writer_id,
                 "columns": [c for c in snap["columns"] if c != col],
                 "column_types": {
                     c: t
@@ -3669,12 +3611,9 @@ def drop_column(
                 f: {c: s for c, s in d.items() if c != col}
                 for f, d in snap["column_stats"].items()
             }
-        if _publish_manifest(base_dir, manifest):
-            return manifest["version"], attempt + 1
-    raise MergeConflictError(
-        f"drop_column({col!r}) by {writer_id} lost the commit race "
-        f"{max_retries + 1} times"
-    )
+        return manifest, (snap["version"] + 1, attempt + 1)
+
+    return _transact(base_dir, "evolve", writer_id, build, max_retries)
 
 
 def delete_keys_mor(
@@ -3707,16 +3646,10 @@ def delete_keys_mor(
 
     Returns ``(committed_version, attempts)``. Keys are deduplicated;
     deleting an absent key is a harmless no-op at read time."""
-    import shutil
-
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+    def build(snap, attempt, stage):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         key_type = snap["column_types"][key_col]
-        next_version = snap["version"] + 1
-        staging = _staging_path(
-            base_dir, "mordel", next_version, writer_id, attempt
-        )
+        staging = stage("mordel")
         keys = (
             keys_df.select(
                 F.col(keys_df.columns[0]).cast(key_type).alias(key_col)
@@ -3730,30 +3663,15 @@ def delete_keys_mor(
             .partitionBy("bucket")
             .parquet(staging)
         )
-        new_files = _list_bucket_files(staging)
-        dels = {
-            b: list(fs)
-            for b, fs in (snap.get("delete_files") or {}).items()
-        }
-        for b, fs in new_files.items():
-            dels[str(b)] = dels.get(str(b), []) + fs
-        manifest = _strip_commit_records(
-            {
-                **snap,
-                "version": next_version,
-                "commit_kind": "delete",
-                "writer_id": writer_id,
-                "delete_files": {k: dels[k] for k in sorted(dels, key=int)},
-            }
+        manifest = _strip_commit_records(dict(snap))
+        _carry_sidecars(
+            manifest, snap, "delete_files",
+            added=_list_bucket_files(staging),
         )
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return next_version, attempt + 1
-        shutil.rmtree(staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"MOR delete by {writer_id} lost the commit race "
-        f"{max_retries + 1} times"
+        return manifest, (snap["version"] + 1, attempt + 1)
+
+    return _transact(
+        base_dir, "delete", writer_id, build, max_retries, before_commit
     )
 
 
@@ -3800,10 +3718,8 @@ def replace_where_range(
       re-open the straggler window compact_tombstones closes.
 
     Returns ``(committed_version, attempts)``."""
-    import shutil
 
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+    def build(snap, attempt, stage):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         cols_, types_ = snap["columns"], snap["column_types"]
         if col not in types_:
@@ -3827,114 +3743,110 @@ def replace_where_range(
                 f"replaceWhere constraint: {n_bad} batch rows lie "
                 f"outside {col} BETWEEN {lo!r} AND {hi!r}"
             )
-        next_version = snap["version"] + 1
-        staging = _staging_path(
-            base_dir, "replace", next_version, writer_id, attempt
-        )
-        try:
-            kept, _skipped = prune_files_by_column(snap, col, lo, hi)
-            keptset = set(kept)
-            bb = batch.withColumn("bucket", _bucket_of(key_col, n_buckets))
-            new_buckets = {
-                r.bucket for r in bb.select("bucket").distinct().collect()
-            }
-            dels_all = snap.get("delete_files") or {}
-            dvs_all = snap.get("dv_files") or {}
-            plan: dict[str, str] = {}
-            for b, fs in snap["buckets"].items():
-                has_kept = any(f in keptset for f in fs)
-                gets_new = int(b) in new_buckets
-                if not has_kept and not gets_new:
-                    plan[b] = "carry"
-                elif dels_all.get(b) or dvs_all.get(b):
-                    plan[b] = "full"
-                else:
-                    plan[b] = "partial"
-            # out-of-slice key-conflict check: visible rows sharing a
-            # batch key, restricted to the batch keys' buckets and the
-            # (key, col) columns — never a table scan
-            check_files = [
-                f
-                for b, fs in snap["buckets"].items()
-                if int(b) in new_buckets
-                for f in fs
-            ]
-            if check_files:
-                sub = list(
-                    dict.fromkeys(
-                        [key_col, col]
-                        + ([TOMBSTONE_COL] if TOMBSTONE_COL in types_ else [])
-                    )
+        kept, _skipped = prune_files_by_column(snap, col, lo, hi)
+        keptset = set(kept)
+        bb = batch.withColumn("bucket", _bucket_of(key_col, n_buckets))
+        new_buckets = {
+            r.bucket for r in bb.select("bucket").distinct().collect()
+        }
+        dels_all = snap.get("delete_files") or {}
+        dvs_all = snap.get("dv_files") or {}
+        # a bucket that holds no file yet (never written, or emptied)
+        # has no manifest entry; the batch may still land in it
+        all_buckets = {
+            **{str(b): [] for b in new_buckets}, **snap["buckets"]
+        }
+        plan: dict[str, str] = {}
+        for b, fs in all_buckets.items():
+            has_kept = any(f in keptset for f in fs)
+            gets_new = int(b) in new_buckets
+            if not has_kept and not gets_new:
+                plan[b] = "carry"
+            elif dels_all.get(b) or dvs_all.get(b):
+                plan[b] = "full"
+            else:
+                plan[b] = "partial"
+        # out-of-slice key-conflict check: visible rows sharing a
+        # batch key, restricted to the batch keys' buckets and the
+        # (key, col) columns — never a table scan
+        check_files = [
+            f
+            for b, fs in snap["buckets"].items()
+            if int(b) in new_buckets
+            for f in fs
+        ]
+        if check_files:
+            sub = list(
+                dict.fromkeys(
+                    [key_col, col]
+                    + ([TOMBSTONE_COL] if TOMBSTONE_COL in types_ else [])
                 )
-                probe = _visible_rows(
-                    _read_visible_base(
-                        spark, snap, check_files, sub,
-                        {c: types_[c] for c in sub},
-                        snap.get("column_epochs"),
-                        snap.get("file_versions"),
-                    )
+            )
+            probe = _visible_rows(
+                _read_visible_base(
+                    spark, snap, check_files, sub,
+                    {c: types_[c] for c in sub},
+                    snap.get("column_epochs"),
+                    snap.get("file_versions"),
                 )
-                clash = (
-                    probe.filter(out_of_slice)
-                    .join(
-                        F.broadcast(batch.select(key_col).distinct()),
-                        key_col,
-                        "inner",
-                    )
-                    .limit(5)
-                    .collect()
+            )
+            clash = (
+                probe.filter(out_of_slice)
+                .join(
+                    F.broadcast(batch.select(key_col).distinct()),
+                    key_col,
+                    "inner",
                 )
-                if clash:
-                    raise ValueError(
-                        "replaceWhere key conflict: batch keys "
-                        f"{sorted(r[0] for r in clash)} (sample) have "
-                        "visible rows OUTSIDE the slice; replace would "
-                        "either drop them (undeclared upsert) or "
-                        "duplicate the key"
-                    )
-            to_rewrite = [
-                f
-                for b, fs in snap["buckets"].items()
-                for f in fs
-                if plan[b] == "full" or (plan[b] == "partial" and f in keptset)
-            ]
-            nothing_staged = not to_rewrite and not new_buckets
-            parts = []
-            if to_rewrite:
-                base_df = _read_visible_base(
-                    spark, snap, to_rewrite, cols_, types_,
-                    snap.get("column_epochs"), snap.get("file_versions"),
+                .limit(5)
+                .collect()
+            )
+            if clash:
+                raise ValueError(
+                    "replaceWhere key conflict: batch keys "
+                    f"{sorted(r[0] for r in clash)} (sample) have "
+                    "visible rows OUTSIDE the slice; replace would "
+                    "either drop them (undeclared upsert) or "
+                    "duplicate the key"
                 )
-                tomb = (
-                    F.coalesce(
-                        F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
-                    )
-                    if TOMBSTONE_COL in types_
-                    else F.lit(False)
+        to_rewrite = [
+            f
+            for b, fs in all_buckets.items()
+            for f in fs
+            if plan[b] == "full" or (plan[b] == "partial" and f in keptset)
+        ]
+        nothing_staged = not to_rewrite and not new_buckets
+        parts = []
+        if to_rewrite:
+            base_df = _read_visible_base(
+                spark, snap, to_rewrite, cols_, types_,
+                snap.get("column_epochs"), snap.get("file_versions"),
+            )
+            tomb = (
+                F.coalesce(
+                    F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
                 )
-                parts.append(base_df.filter(tomb | out_of_slice))
-            parts.append(batch)
-            if not nothing_staged:
-                out = parts[0]
-                for p_ in parts[1:]:
-                    out = out.unionByName(p_)
-                _write_clustered(
-                    out.withColumn(
-                        "bucket", _bucket_of(key_col, n_buckets)
-                    ),
-                    staging, key_col, 1, n_buckets,
-                    snap.get("cluster_col"), snap.get("cluster_bins", 4),
-                )
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                continue  # vacuum expired the pin mid-read: re-pin
-            raise
+                if TOMBSTONE_COL in types_
+                else F.lit(False)
+            )
+            parts.append(base_df.filter(tomb | out_of_slice))
+        parts.append(batch)
+        if not nothing_staged:
+            staging = stage("replace")
+            out = parts[0]
+            for p_ in parts[1:]:
+                out = out.unionByName(p_)
+            _write_clustered(
+                out.withColumn(
+                    "bucket", _bucket_of(key_col, n_buckets)
+                ),
+                staging, key_col, 1, n_buckets,
+                snap.get("cluster_col"), snap.get("cluster_bins", 4),
+            )
         new_files = (
             _list_bucket_files(staging) if not nothing_staged else {}
         )
         buckets: dict[str, list] = {}
-        for b, fs in snap["buckets"].items():
+        for b, fs in all_buckets.items():
             if plan[b] == "carry":
                 buckets[b] = fs
             elif plan[b] == "full":
@@ -3946,39 +3858,21 @@ def replace_where_range(
         manifest = _strip_commit_records(
             {
                 **snap,
-                "version": next_version,
-                "commit_kind": "replace",
-                "writer_id": writer_id,
                 "buckets": {k: buckets[k] for k in sorted(buckets, key=int)},
             }
         )
-        dels = {
-            b: fs for b, fs in dels_all.items() if plan.get(b) != "full" and fs
-        }
-        manifest.pop("delete_files", None)
-        if dels:
-            manifest["delete_files"] = {
-                k: dels[k] for k in sorted(dels, key=int)
-            }
-        dvs = {
-            b: fs for b, fs in dvs_all.items() if plan.get(b) != "full" and fs
-        }
-        manifest.pop("dv_files", None)
-        if dvs:
-            manifest["dv_files"] = {k: dvs[k] for k in sorted(dvs, key=int)}
+        full = [b for b, how in plan.items() if how == "full"]
+        for key in ("delete_files", "dv_files"):
+            _carry_sidecars(manifest, snap, key, full)
         if not nothing_staged:
             _attach_sidecars(spark, snap, manifest, buckets, staging)
         # an empty slice over an empty batch stages nothing: the
         # {**snap} copy's sidecar maps stay exact, like OPTIMIZE's
         # metadata-only commits
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return next_version, attempt + 1
-        shutil.rmtree(staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"replaceWhere by {writer_id} lost the commit race "
-        f"{max_retries + 1} times"
+        return manifest, (snap["version"] + 1, attempt + 1)
+
+    return _transact(
+        base_dir, "replace", writer_id, build, max_retries, before_commit
     )
 
 
@@ -4052,17 +3946,11 @@ def delete_keys_dv(
     pruned position scan at delete time is too much.
 
     Returns ``(committed_version, attempts)``."""
-    import shutil
 
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+    def build(snap, attempt, stage):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         key_type = snap["column_types"][key_col]
         cols_, types_ = snap["columns"], snap["column_types"]
-        next_version = snap["version"] + 1
-        staging = _staging_path(
-            base_dir, "dv", next_version, writer_id, attempt
-        )
         keys = (
             keys_df.select(
                 F.col(keys_df.columns[0]).cast(key_type).alias(key_col)
@@ -4070,90 +3958,64 @@ def delete_keys_dv(
             .distinct()
             .withColumn("bucket", _bucket_of(key_col, n_buckets))
         )
-        try:
-            touched = sorted(
-                r.bucket
-                for r in keys.select("bucket").distinct().collect()
-            )
-            files = [
-                f for b in touched for f in snap["buckets"].get(str(b), [])
-            ]
-            if files:
-                # position-finding read: key + tombstone visibility +
-                # native row indexes ONLY (column-pruned); every
-                # pending delete representation applies first, so an
-                # already-hidden key yields no position
-                sub = [key_col] + (
-                    [TOMBSTONE_COL] if TOMBSTONE_COL in types_ else []
-                )
-                df = _read_files_aligned(
-                    spark, files, sub,
-                    {c: types_[c] for c in sub},
-                    snap.get("column_epochs"),
-                    snap.get("file_versions"),
-                    carry_positions=True,
-                )
-                if snap.get("dv_files"):
-                    df = _apply_dv_deletes(
-                        spark, df, snap, keep_positions=True
-                    )
-                df = _apply_mor_deletes(spark, df, snap)
-                df = _visible_rows(df)
-                hits = df.join(
-                    F.broadcast(keys.select(key_col)), key_col, "inner"
-                ).select(
-                    _bucket_of(key_col, n_buckets).alias("bucket"),
-                    F.col(DV_FILE_COL).alias("file"),
-                    (F.col(DV_POS_COL) / 64).cast("int").alias("w"),
-                    F.expr(
-                        "shiftleft(CAST(1 AS BIGINT), "
-                        f"CAST({DV_POS_COL} % 64 AS INT))"
-                    ).alias("bit"),
-                )
-                words = hits.groupBy("bucket", "file", "w").agg(
-                    F.bit_or("bit").alias("word")
-                )
-                (
-                    words.repartition(F.col("bucket"))
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(staging)
-                )
-                new_files = _list_bucket_files(staging)
-            else:
-                new_files = {}
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                continue  # vacuum expired the pin mid-read: re-pin
-            raise
-        dvs = {
-            b: list(fs)
-            for b, fs in (snap.get("dv_files") or {}).items()
-        }
-        for b, fs in new_files.items():
-            dvs[str(b)] = dvs.get(str(b), []) + fs
-        manifest = _strip_commit_records(
-            {
-                **snap,
-                "version": next_version,
-                "commit_kind": "delete",
-                "writer_id": writer_id,
-            }
+        touched = sorted(
+            r.bucket
+            for r in keys.select("bucket").distinct().collect()
         )
-        manifest.pop("dv_files", None)
-        if dvs:
-            manifest["dv_files"] = {
-                k: dvs[k] for k in sorted(dvs, key=int)
-            }
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return next_version, attempt + 1
-        shutil.rmtree(staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"DV delete by {writer_id} lost the commit race "
-        f"{max_retries + 1} times"
+        files = [
+            f for b in touched for f in snap["buckets"].get(str(b), [])
+        ]
+        if files:
+            # position-finding read: key + tombstone visibility +
+            # native row indexes ONLY (column-pruned); every
+            # pending delete representation applies first, so an
+            # already-hidden key yields no position
+            sub = [key_col] + (
+                [TOMBSTONE_COL] if TOMBSTONE_COL in types_ else []
+            )
+            df = _read_files_aligned(
+                spark, files, sub,
+                {c: types_[c] for c in sub},
+                snap.get("column_epochs"),
+                snap.get("file_versions"),
+                carry_positions=True,
+            )
+            if snap.get("dv_files"):
+                df = _apply_dv_deletes(
+                    spark, df, snap, keep_positions=True
+                )
+            df = _apply_mor_deletes(spark, df, snap)
+            df = _visible_rows(df)
+            hits = df.join(
+                F.broadcast(keys.select(key_col)), key_col, "inner"
+            ).select(
+                _bucket_of(key_col, n_buckets).alias("bucket"),
+                F.col(DV_FILE_COL).alias("file"),
+                (F.col(DV_POS_COL) / 64).cast("int").alias("w"),
+                F.expr(
+                    "shiftleft(CAST(1 AS BIGINT), "
+                    f"CAST({DV_POS_COL} % 64 AS INT))"
+                ).alias("bit"),
+            )
+            words = hits.groupBy("bucket", "file", "w").agg(
+                F.bit_or("bit").alias("word")
+            )
+            staging = stage("dv")
+            (
+                words.repartition(F.col("bucket"))
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(staging)
+            )
+            new_files = _list_bucket_files(staging)
+        else:
+            new_files = {}
+        manifest = _strip_commit_records(dict(snap))
+        _carry_sidecars(manifest, snap, "dv_files", added=new_files)
+        return manifest, (snap["version"] + 1, attempt + 1)
+
+    return _transact(
+        base_dir, "delete", writer_id, build, max_retries, before_commit
     )
 
 
@@ -4798,8 +4660,7 @@ def rebucket_table(
     tombstoned row once (tombstones carry forward — the straggler-
     suppression retention contract survives the rewrite), recomputes
     the bucket under the new B, writes clustered, and publishes a
-    manifest with the new ``n_buckets`` through the same CAS loop as
-    MERGE. Pinned readers keep their epoch: old manifests and their
+    manifest with the new ``n_buckets`` through ``_transact``. Pinned readers keep their epoch: old manifests and their
     files are untouched (rebucket only ADDS files; vacuum reclaims the
     old generation later), so an in-flight reader pinned at v_N keeps
     planning from the OLD bucket map, while every post-commit merge
@@ -4817,70 +4678,57 @@ def rebucket_table(
     guarantee across the rewrite.
 
     Returns ``(committed_version, attempts)``."""
-    import shutil
-
     if new_n_buckets < 1:
         raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+
+    def build(snap, attempt, stage):
         key_col = snap["key_col"]
         if snap["n_buckets"] == new_n_buckets:
-            return snap["version"], 0
+            return None, (snap["version"], 0)
         cols, types = snap.get("columns"), snap.get("column_types")
-        next_version = snap["version"] + 1
-        staging = _staging_path(
-            base_dir, "rebucket", next_version, writer_id, attempt
+        staging = stage("rebucket")
+        files = [f for fs in snap["buckets"].values() for f in fs]
+        if cols is None or types is None:
+            # legacy pre-evolution manifest: derive the logical
+            # schema from the files (uniform by construction) and
+            # RECORD it in the new manifest
+            if not files:
+                raise ValueError(
+                    f"manifest v{snap['version']} at {base_dir} has "
+                    "no schema and no files; cannot rebucket"
+                )
+            derived = spark.read.parquet(*files)
+            cols = list(derived.columns)
+            types = _column_types(derived)
+        # include_tombstones semantics: NO visibility filter — a
+        # live tombstone must keep suppressing lower-version
+        # stragglers after the rewrite. Pending MOR deletes DO
+        # apply (full rewrite = every sidecar applied + cleared)
+        df = _read_visible_base(
+            spark, snap, files, cols, types,
+            snap.get("column_epochs"), snap.get("file_versions"),
+        ).withColumn("bucket", _bucket_of(key_col, new_n_buckets))
+        _write_clustered(
+            df, staging, key_col, write_salt, new_n_buckets,
+            snap.get("cluster_col"), snap.get("cluster_bins", 4),
         )
-        try:
-            files = [f for fs in snap["buckets"].values() for f in fs]
-            if cols is None or types is None:
-                # legacy pre-evolution manifest: derive the logical
-                # schema from the files (uniform by construction) and
-                # RECORD it in the new manifest
-                if not files:
-                    raise ValueError(
-                        f"manifest v{snap['version']} at {base_dir} has "
-                        "no schema and no files; cannot rebucket"
-                    )
-                derived = spark.read.parquet(*files)
-                cols = list(derived.columns)
-                types = _column_types(derived)
-            # include_tombstones semantics: NO visibility filter — a
-            # live tombstone must keep suppressing lower-version
-            # stragglers after the rewrite. Pending MOR deletes DO
-            # apply (full rewrite = every sidecar applied + cleared)
-            df = _read_visible_base(
-                spark, snap, files, cols, types,
-                snap.get("column_epochs"), snap.get("file_versions"),
-            ).withColumn("bucket", _bucket_of(key_col, new_n_buckets))
-            _write_clustered(
-                df, staging, key_col, write_salt, new_n_buckets,
-                snap.get("cluster_col"), snap.get("cluster_bins", 4),
-            )
-            # footer-read boolean max when the marker is a plain
-            # boolean (zero Spark jobs — the same _staged_tombstone_
-            # buckets init uses), distributed scan otherwise
-            tomb_buckets = (
-                _staged_tombstone_buckets(spark, staging, types)
-                if TOMBSTONE_COL in types
-                else []
-            )
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                continue  # vacuum expired the pin mid-read: re-pin
-            raise
-        new_files = _list_bucket_files(staging)
         manifest = {
-            "version": next_version,
-            "commit_kind": "rebucket",
-            "writer_id": writer_id,
             "n_buckets": new_n_buckets,
             "key_col": key_col,
             "columns": list(cols),
             "column_types": dict(types),
-            "buckets": {str(b): fs for b, fs in sorted(new_files.items())},
-            "tombstone_buckets": tomb_buckets,
+            "buckets": {
+                str(b): fs
+                for b, fs in sorted(_list_bucket_files(staging).items())
+            },
+            # footer-read boolean max when the marker is a plain
+            # boolean (zero Spark jobs — the same _staged_tombstone_
+            # buckets init uses), distributed scan otherwise
+            "tombstone_buckets": (
+                _staged_tombstone_buckets(spark, staging, types)
+                if TOMBSTONE_COL in types
+                else []
+            ),
             "column_epochs": snap.get("column_epochs")
             or {c: 1 for c in cols},
         }
@@ -4888,13 +4736,10 @@ def rebucket_table(
         _attach_sidecars(
             spark, snap, manifest, manifest["buckets"], staging, carry=False
         )
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return next_version, attempt + 1
-        shutil.rmtree(staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"rebucket by {writer_id} lost the commit race {max_retries + 1} times"
+        return manifest, (snap["version"] + 1, attempt + 1)
+
+    return _transact(
+        base_dir, "rebucket", writer_id, build, max_retries, before_commit
     )
 
 

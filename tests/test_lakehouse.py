@@ -284,36 +284,120 @@ def test_vacuum_retention_window(spark, tmp_path):
     assert (v, tries) == (4, 1)
 
 
-def test_lost_cas_leaves_no_orphan_staging(spark, tmp_path):
-    """A lost CAS (and an exhausted merge) must clean up its staging
-    directory: those files appear in no manifest, so vacuum would never
-    reclaim them and every conflict would otherwise leak a
-    touched-bucket-sized copy of the data forever."""
+def _staging_dirs(base):
+    """Top-level staging directories on disk (vacuum's naming regex)."""
+    import os
+    import re
+
+    return {
+        d
+        for d in os.listdir(base)
+        if re.match(r"[a-z]+_v\d+_", d) and os.path.isdir(os.path.join(base, d))
+    }
+
+
+def _lost_cas_face(spark, base, face, before_commit):
+    """Run one staging commit face with ``before_commit`` armed; returns
+    the staging-dir prefixes the face must stage on every attempt."""
+    from assignment4_spark.operators.lakehouse import (
+        _bucket_of,
+        delete_keys_dv,
+        delete_keys_mor,
+        optimize_compact,
+        rebucket_table,
+        replace_where_range,
+    )
+
+    def keys(ks):
+        return spark.createDataFrame([(k,) for k in ks], "k long")
+
+    if face == "merge":
+        merge_upsert_manifest(
+            base, _upd(spark, [10], 2, "a"), "ver", "payload",
+            writer_id="A", before_commit=before_commit,
+        )
+        return {"commit"}
+    if face == "merge_quarantine":
+        merge_upsert_manifest(
+            base, _upd(spark, [10, 11], 2, "a"), "ver", "payload",
+            writer_id="A", before_commit=before_commit,
+            expectations={"not_eleven": "k <> 11"},
+        )
+        return {"commit", "quarantine"}
+    if face == "optimize":
+        # fragment one bucket (salted merge) and pile two MOR and two
+        # DV sidecars on two other, unrewritten buckets
+        by_bucket: dict[int, list[int]] = {}
+        for r in spark.range(200).select(
+            F.col("id").alias("k"), _bucket_of("k", 8).alias("b")
+        ).collect():
+            by_bucket.setdefault(r.b, []).append(r.k)
+        frag, mor, dv = (by_bucket[b] for b in sorted(by_bucket)[1:4])
+        merge_upsert_manifest(
+            base, _upd(spark, frag[:3], 2, "f"), "ver", "payload",
+            write_salt=4,
+        )
+        for k in mor[:2]:
+            delete_keys_mor(spark, base, keys([k]))
+        for k in dv[:2]:
+            delete_keys_dv(spark, base, keys([k]))
+        optimize_compact(spark, base, before_commit=before_commit)
+        return {"optimize", "optdel", "optdv"}
+    if face == "mor":
+        delete_keys_mor(spark, base, keys([10, 11]), before_commit=before_commit)
+        return {"mordel"}
+    if face == "dv":
+        delete_keys_dv(spark, base, keys([10, 11]), before_commit=before_commit)
+        return {"dv"}
+    if face == "replace":
+        replace_where_range(
+            spark, base, "k", 10, 14, _upd(spark, [10, 12], 2, "r"),
+            before_commit=before_commit,
+        )
+        return {"replace"}
+    assert face == "rebucket"
+    rebucket_table(spark, base, 4, before_commit=before_commit)
+    return {"rebucket"}
+
+
+@pytest.mark.parametrize(
+    "face",
+    ["merge", "merge_quarantine", "optimize", "mor", "dv", "replace",
+     "rebucket"],
+)
+def test_lost_cas_leaves_no_orphan_staging(spark, tmp_path, face):
+    """A lost CAS must clean up every directory its attempt staged
+    (commit data, quarantine side table, OPTIMIZE's packed files and
+    coalesced MOR/DV sidecars, delete sidecars, rebucket output): those
+    files appear in no manifest, so vacuum would never reclaim them and
+    every conflict would otherwise leak a touched-bucket-sized copy of
+    the data forever."""
     import os
 
+    from assignment4_spark.operators.lakehouse import _manifest_refs
+
     base = _mk_table(spark, tmp_path)
+    staged_by_loser: set[str] = set()
 
     def spoil(attempt):
         if attempt == 0:
+            staged_by_loser.update(_staging_dirs(base))
             merge_upsert_manifest(
-                base, _upd(spark, [50], 2, "s"), "ver", "payload", writer_id="S"
+                base, _upd(spark, [199], 9, "s"), "ver", "payload",
+                writer_id="S",
             )
 
-    merge_upsert_manifest(
-        base, _upd(spark, [10], 2, "a"), "ver", "payload",
-        writer_id="A", before_commit=spoil,
-    )
+    expected = _lost_cas_face(spark, base, face, spoil)
     referenced = {
-        os.path.dirname(os.path.dirname(f))
-        for v in (1, 2, 3)
-        for fs in load_manifest(base, v)["buckets"].values()
-        for f in fs
+        os.path.relpath(p, base).split(os.sep)[0]
+        for v in range(1, latest_version(base) + 1)
+        for p in _manifest_refs(load_manifest(base, v))
     }
-    on_disk = {
-        os.path.join(base, d)
-        for d in os.listdir(base)
-        if d.startswith("commit_") and os.path.isdir(os.path.join(base, d))
-    }
+    lost = staged_by_loser - referenced
+    assert {d.split("_v")[0] for d in lost} >= expected, (
+        f"losing attempt must have staged {sorted(expected)}: {sorted(lost)}"
+    )
+    on_disk = _staging_dirs(base)
     assert on_disk == referenced, f"orphans: {sorted(on_disk - referenced)}"
 
 
@@ -3078,6 +3162,7 @@ def test_protocol_model_fuzz(spark, tmp_path, seed):
     import copy
 
     from assignment4_spark.operators.lakehouse import (
+        _PER_COMMIT_KEYS,
         TOMBSTONE_COL,
         delete_keys_dv,
         delete_keys_mor,
@@ -3143,6 +3228,7 @@ def test_protocol_model_fuzz(spark, tmp_path, seed):
              "rebucket", "dropadd", "vacuum", "restore", "replace"]
         )
         ver += 1
+        head = latest_version(base)
         if op == "merge":
             ks = rng.sample(keys, rng.randint(1, 10))
             rows = [
@@ -3261,6 +3347,28 @@ def test_protocol_model_fuzz(spark, tmp_path, seed):
                 restore_table(base, target)
                 model = copy.deepcopy(hist[target][0])
                 attr_live = hist[target][1]
+        # the new head is stamped with this step's kind and writer, and
+        # carries no per-commit record it did not set itself
+        m = load_manifest(base)
+        if m["version"] == head:
+            assert op in ("vacuum", "optimize", "rebucket", "restore"), (
+                f"seed={seed} step={step}: {op} did not commit"
+            )
+        else:
+            kind = {
+                "merge": "merge", "tomb": "merge", "mor": "delete",
+                "dv": "delete", "optimize": "optimize",
+                "rebucket": "rebucket", "replace": "replace",
+                "restore": "restore",
+                "dropadd": "merge" if attr_live else "evolve",
+            }[op]
+            assert (m["commit_kind"], m["writer_id"]) == (kind, "w0"), (
+                f"seed={seed} step={step}: {op} stamped "
+                f"{m['commit_kind']!r}/{m['writer_id']!r}"
+            )
+            own = ("restored_from",) if op == "restore" else ()
+            leaked = [k for k in _PER_COMMIT_KEYS if k in m and k not in own]
+            assert not leaked, f"seed={seed} step={step}: {op} leaked {leaked}"
         hist[latest_version(base)] = (copy.deepcopy(model), attr_live)
         check(step)
 
@@ -3802,6 +3910,22 @@ def test_replace_where_contract(spark, tmp_path):
     rows = {r.k: r.payload for r in read_snapshot(spark, base).collect()}
     assert 20 not in rows, "pending DV must keep hiding key 20"
     assert rows[70] == "R2"
+
+
+def test_replace_where_into_unwritten_bucket(spark, tmp_path):
+    """A bucket no commit has written yet has no manifest entry; a
+    REPLACE WHERE batch row hashing into it must still commit (its
+    staged file referenced by the new manifest), not vanish."""
+    from assignment4_spark.operators.lakehouse import replace_where_range
+
+    base = _mk_table(spark, tmp_path, n=2, n_buckets=8)
+    assert len(load_manifest(base)["buckets"]) <= 2
+    replace_where_range(
+        spark, base, "k", 0, 99, _upd(spark, list(range(10)), 2, "r")
+    )
+    assert len(load_manifest(base)["buckets"]) > 2
+    rows = {r.k: r.payload for r in read_snapshot(spark, base).collect()}
+    assert rows == {k: f"r{k}" for k in range(10)}
 
 
 def test_replace_where_preserves_tombstone_guard(spark, tmp_path):
