@@ -48,16 +48,13 @@ from .operators.lakehouse import (  # noqa: F401
     delete_keys_mor,
     drop_column,
     optimize_compact,
-    prune_files_by_column,
-    prune_files_by_null,
+    plan_files,
     read_snapshot_null,
     read_snapshot_where,
     init_table,
     latest_version,
     load_manifest,
     merge_upsert_manifest,
-    prune_files_by_bloom,
-    prune_files_by_range,
     publish_from,
     read_quarantine,
     read_snapshot,
@@ -160,8 +157,7 @@ __all__ = [
     "delete_keys_mor",
     "drop_column",
     "optimize_compact",
-    "prune_files_by_column",
-    "prune_files_by_null",
+    "plan_files",
     "read_snapshot_null",
     "read_snapshot_where",
     "compose_markdown",
@@ -196,9 +192,7 @@ __all__ = [
     "pypdf_text_parser",
     "quantize_int8_audit",
     "read_idempotent_sink",
-    "prune_files_by_range",
     "read_snapshot",
-    "prune_files_by_bloom",
     "read_snapshot_point",
     "read_snapshot_range",
     "rebucket_table",

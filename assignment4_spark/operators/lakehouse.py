@@ -684,56 +684,18 @@ def _fused_latest_wins(
     )
 
 
-# numeric-only for cluster stats: (min, max) must survive a JSON
-# manifest roundtrip and compare with plain <= at plan time
+# numeric-only cluster columns: their column_stats (min, max) survive a
+# JSON manifest roundtrip and compare with plain <= at plan time
 _CLUSTERABLE = ("tinyint", "smallint", "int", "bigint", "float", "double")
 
 
-def _staged_cluster_stats(
-    spark: SparkSession, staging: str, cluster_col: str
-) -> dict[str, list]:
-    """Per-file (min, max) of the cluster column for a just-staged
-    commit, read from the parquet footers (zero Spark jobs — see
-    _staged_column_stats; the cluster column is numeric-only per
-    _CLUSTERABLE, so footer stats always exist for it). Files holding
-    only NULLs get no entry (conservatively unprunable)."""
-    from urllib.parse import unquote, urlparse
-
-    files = [
-        f for fs in _list_bucket_files(staging).values() for f in fs
-    ]
-    if files:
-        stats, fallback = _footer_column_stats(files, [cluster_col])
-        if not fallback:
-            return {
-                f: d[cluster_col][:2]
-                for f, d in stats.items()
-                if cluster_col in d
-            }
-    rows = (
-        spark.read.parquet(staging)
-        .select(
-            F.input_file_name().alias("f"), F.col(cluster_col).alias("c")
-        )
-        .groupBy("f")
-        .agg(F.min("c").alias("lo"), F.max("c").alias("hi"))
-        .collect()
-    )
-    out: dict[str, list] = {}
-    for r in rows:
-        if r.lo is None:
-            continue
-        out[unquote(urlparse(r.f).path)] = [r.lo, r.hi]
-    return out
-
-
 def _carry_file_stats(
-    snap: dict, buckets: dict, new_stats: dict, key: str = "file_stats"
+    snap: dict, buckets: dict, new_stats: dict, key: str
 ) -> dict[str, list]:
-    """Next manifest's per-file sidecar map (``file_stats`` /
-    ``file_blooms``): entries of carried-over files that are still
-    referenced + the staged files' fresh entries (replaced files'
-    entries drop with their files)."""
+    """Next manifest's per-file map under ``key`` (``column_stats`` /
+    ``file_blooms`` / ``file_versions``): entries of carried-over files
+    that are still referenced + the staged files' fresh entries
+    (replaced files' entries drop with their files)."""
     live = {f for fs in buckets.values() for f in fs}
     old = snap.get(key, {})
     return {f: s for f, s in old.items() if f in live} | new_stats
@@ -990,54 +952,89 @@ def _coerce_probe(manifest: dict, col: str, v):
     return v
 
 
-def prune_files_by_column(
-    manifest: dict, col: str, lo, hi
-) -> tuple[list, list]:
-    """Plan a range read over ANY stats-covered column from the
-    manifest's all-column file statistics: (kept, skipped) file lists.
-    A file is skipped ONLY when its recorded [min, max] provably
-    misses [lo, hi]; files or columns without stats are always kept —
-    pruning is an optimization, never a filter."""
-    stats = manifest.get("column_stats", {})
-    lo = _coerce_probe(manifest, col, lo)
-    hi = _coerce_probe(manifest, col, hi)
-    kept, skipped = [], []
-    for fs in manifest["buckets"].values():
-        for f in fs:
-            s = stats.get(f, {}).get(col)
-            if s is not None and (s[0] > hi or s[1] < lo):
-                skipped.append(f)
-            else:
-                kept.append(f)
-    return kept, skipped
+def _bind_where(manifest: dict, where: tuple) -> tuple:
+    """Resolve a read_snapshot predicate spec against the table's
+    declared columns: ``("kind", col, *args)`` with kind ``between``,
+    ``is_null`` or ``point``. ``("range", lo, hi)`` is a between on the
+    table's cluster_col and ``("point", v)`` an equality on its
+    bloom_col — both refuse a table that never declared the column."""
+    kind = where[0]
+    if kind == "range":
+        if manifest.get("cluster_col") is None:
+            raise ValueError(
+                "table has no cluster_col; init with one to get "
+                "stats-pruned range reads"
+            )
+        return ("between", manifest["cluster_col"], *where[1:])
+    if kind == "point":
+        if manifest.get("bloom_col") is None:
+            raise ValueError(
+                "table has no bloom_col; init with one to get "
+                "bloom-pruned point lookups"
+            )
+        return ("point", manifest["bloom_col"], where[1])
+    if kind not in ("between", "is_null"):
+        raise ValueError(
+            f"unknown read predicate {kind!r}: expected between, "
+            "is_null, range or point"
+        )
+    return tuple(where)
 
 
-def prune_files_by_null(
-    manifest: dict, col: str, want_null: bool
+def plan_files(
+    spark: SparkSession | None, manifest: dict, where: tuple | None
 ) -> tuple[list, list]:
-    """Plan an IS [NOT] NULL read from the all-column file statistics:
-    (kept, skipped). For ``IS NULL``: a file whose recorded null_count
-    is 0 provably holds no NULL row — skip it; a file with NO stats
-    entry for the column is either all-NULL (stats skip all-NULL
-    columns) or stats-less — kept either way. For ``IS NOT NULL``:
-    only a file with NO entry AND stats for some other column can be
-    proven all-NULL... which the [min,max,nulls] shape cannot
-    distinguish from 'column added after this file was written', so
-    IS NOT NULL conservatively skips nothing with an absent entry and
-    skips a present entry only when null_count equals... unknown row
-    count — also never. Net: IS NULL prunes (the useful direction —
-    completeness audits scan for missing values), IS NOT NULL keeps
-    all; both stay exact because pruning is only ever an optimization
-    over the row filter that follows."""
-    stats = manifest.get("column_stats", {})
-    kept, skipped = [], []
-    for fs in manifest["buckets"].values():
-        for f in fs:
+    """Plan a read of ``manifest`` under a read_snapshot predicate spec
+    from the per-file metadata alone: (kept, skipped) file lists that
+    partition the manifest's files. A file is skipped ONLY when its
+    recorded metadata proves it holds no matching row; a file without
+    an entry is always kept — pruning is an optimization, never a
+    filter (the exact row filter runs on what is kept):
+
+    - between / range: its ``column_stats`` [min, max] misses [lo, hi]
+      (probes coerced to the stats encoding by _coerce_probe);
+    - is_null: its ``column_stats`` null_count is 0. An absent entry is
+      an all-NULL column or one added after the file was written (the
+      [min, max, null_count] shape cannot tell them apart), so it is
+      kept — and for the same reason IS NOT NULL could never prune;
+    - point: some probe bit is absent from its ``file_blooms`` filter.
+      The bit positions are computed by ``spark`` (one 1-row job); the
+      other kinds need no session."""
+    files = [f for fs in manifest["buckets"].values() for f in fs]
+    if where is None:
+        return files, []
+    kind, col, *args = _bind_where(manifest, where)
+    if kind == "point":
+        positions = _bloom_positions(
+            spark, args[0], manifest["column_types"][col],
+            manifest["bloom_m"], manifest["bloom_k"],
+        )
+        blooms = manifest.get("file_blooms", {})
+
+        def keep(f):
+            # Python's arbitrary-precision ints read two's-complement
+            # longs correctly: (word >> bit) & 1 is exact even for
+            # negative words
+            b = blooms.get(f)
+            return b is None or all(
+                (b.get(str(p // 64), 0) >> (p % 64)) & 1 for p in positions
+            )
+    elif kind == "is_null":
+        stats = manifest.get("column_stats", {})
+
+        def keep(f):
             s = stats.get(f, {}).get(col)
-            if want_null and s is not None and s[2] == 0:
-                skipped.append(f)
-            else:
-                kept.append(f)
+            return s is None or s[2] != 0
+    else:
+        stats = manifest.get("column_stats", {})
+        lo, hi = (_coerce_probe(manifest, col, v) for v in args)
+
+        def keep(f):
+            s = stats.get(f, {}).get(col)
+            return s is None or not (s[0] > hi or s[1] < lo)
+    kept, skipped = [], []
+    for f in files:
+        (kept if keep(f) else skipped).append(f)
     return kept, skipped
 
 
@@ -1085,67 +1082,6 @@ def _manifest_col_max(manifest: dict, col: str):
             if mx is None or s[1] > mx:
                 mx = s[1]
     return mx
-
-
-def read_snapshot_null(
-    spark: SparkSession,
-    base_dir: str,
-    col: str,
-    version: int | None = None,
-    include_tombstones: bool = False,
-) -> DataFrame:
-    """Completeness-audit read: the rows where ``col`` IS NULL, planned
-    from the per-file null counts — files recording zero NULLs for the
-    column are never opened (the data-quality scan that at 100 TB
-    should cost O(files with holes), not O(table))."""
-    manifest = load_manifest(base_dir, version)
-    kept, _ = prune_files_by_null(manifest, col, want_null=True)
-    if not kept:
-        ddl = ", ".join(
-            f"`{c}` {manifest['column_types'][c]}"
-            for c in manifest["columns"]
-        )
-        df = spark.createDataFrame([], ddl)
-    else:
-        df = _read_visible_base(
-            spark, manifest, kept,
-            manifest["columns"], manifest["column_types"],
-            manifest.get("column_epochs"),
-            manifest.get("file_versions"),
-        ).filter(F.col(col).isNull())
-    if not include_tombstones:
-        df = _visible_rows(df)
-    return df
-
-
-def read_snapshot_where(
-    spark: SparkSession,
-    base_dir: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-    include_tombstones: bool = False,
-) -> DataFrame:
-    """Range read over ANY column, planned from the manifest's
-    all-column file statistics (read_snapshot_range generalized beyond
-    the declared cluster_col — Delta data skipping): files whose
-    recorded value slice misses [lo, hi] are never opened, then the
-    exact row filter applies on what remains. Works on any
-    stats-eligible column; correlation with the physical layout
-    (cluster bins, per-commit ingest slices) determines how much
-    skips — correctness never depends on it."""
-    manifest = load_manifest(base_dir, version)
-    kept, _ = prune_files_by_column(manifest, col, lo, hi)
-    df = _read_visible_base(
-        spark, manifest, kept,
-        manifest["columns"], manifest["column_types"],
-        manifest.get("column_epochs"),
-        manifest.get("file_versions"),
-    ).filter(F.col(col).between(lo, hi))
-    if not include_tombstones:
-        df = _visible_rows(df)
-    return df
 
 
 # Bloom sizing for the per-file point-lookup index: 32 Ki bits (512
@@ -1253,80 +1189,6 @@ def _bloom_positions(
     return [row[f"p{i}"] for i in range(k)]
 
 
-def prune_files_by_bloom(
-    manifest: dict, positions: list[int]
-) -> tuple[list, list]:
-    """Plan a point-lookup from the manifest's per-file blooms:
-    (kept, skipped) file lists. A file is skipped ONLY when some probe
-    bit is provably absent from its recorded filter; files without a
-    bloom entry (written before the table had bloom_col — impossible
-    under init-time declaration, but cheap to honor) are always kept.
-    Python's arbitrary-precision ints read two's-complement longs
-    correctly: (word >> bit) & 1 is exact even for negative words."""
-    blooms = manifest.get("file_blooms", {})
-    kept, skipped = [], []
-    for fs in manifest["buckets"].values():
-        for f in fs:
-            b = blooms.get(f)
-            if b is None:
-                kept.append(f)
-                continue
-            hit = all(
-                (b.get(str(p // 64), 0) >> (p % 64)) & 1 for p in positions
-            )
-            (kept if hit else skipped).append(f)
-    return kept, skipped
-
-
-def read_snapshot_point(
-    spark: SparkSession,
-    base_dir: str,
-    value,
-    version: int | None = None,
-    include_tombstones: bool = False,
-) -> DataFrame:
-    """Point lookup on the table's bloom column, planned from the
-    manifest's per-file Bloom filters: files whose filter provably
-    lacks the value are never opened, then the exact equality filter
-    applies on what remains — a false-keep costs one file read, never
-    a wrong row (the secondary-index face of read_snapshot_range;
-    bucket pruning already serves point lookups on the TABLE KEY, the
-    bloom serves every other high-cardinality column). Requires a
-    table initialized with ``bloom_col``."""
-    manifest = load_manifest(base_dir, version)
-    bcol = manifest.get("bloom_col")
-    if bcol is None:
-        raise ValueError(
-            f"table at {base_dir} has no bloom_col; init with one to "
-            "get bloom-pruned point lookups"
-        )
-    positions = _bloom_positions(
-        spark,
-        value,
-        manifest["column_types"][bcol],
-        manifest["bloom_m"],
-        manifest["bloom_k"],
-    )
-    kept, _ = prune_files_by_bloom(manifest, positions)
-    if not kept:
-        # no file can hold the value: an empty frame at the pinned
-        # schema, zero files opened
-        ddl = ", ".join(
-            f"`{c}` {manifest['column_types'][c]}" for c in manifest["columns"]
-        )
-        df = spark.createDataFrame([], ddl)
-        return df if include_tombstones else _visible_rows(df)
-    df = _read_visible_base(
-        spark, manifest, kept,
-        manifest["columns"], manifest["column_types"],
-        manifest.get("column_epochs"),
-        manifest.get("file_versions"),
-    ).filter(F.col(bcol) == F.lit(value))
-    if not include_tombstones:
-        df = _visible_rows(df)
-    return df
-
-
 def _attach_sidecars(
     spark: SparkSession,
     snap: dict,
@@ -1335,12 +1197,12 @@ def _attach_sidecars(
     staging: str,
     carry: bool = True,
 ) -> None:
-    """Propagate the table-wide layout properties (cluster stats,
-    bloom index) from the pinned snapshot onto the next manifest:
-    fresh entries computed for the staged files, carried entries for
-    still-referenced files. ``carry=False`` for full-rewrite commits
-    (rebucket), where every visible file is staged and a carry would
-    resurrect dead paths."""
+    """Propagate the table-wide layout properties (column stats,
+    cluster layout, bloom index) from the pinned snapshot onto the
+    next manifest: fresh entries computed for the staged files,
+    carried entries for still-referenced files. ``carry=False`` for
+    full-rewrite commits (rebucket), where every visible file is
+    staged and a carry would resurrect dead paths."""
     # all-column file statistics (Delta data skipping): recorded by
     # EVERY commit path, not just clustered tables — one distributed
     # metadata pass over the staged files
@@ -1373,23 +1235,10 @@ def _attach_sidecars(
     )
     staged_any = any(_list_bucket_files(staging).values())
     if snap.get("cluster_col") is not None:
-        ccol = snap["cluster_col"]
-        manifest["cluster_col"] = ccol
+        # range reads plan from column_stats: the cluster column is
+        # numeric (_CLUSTERABLE), so it is always stats-eligible
+        manifest["cluster_col"] = snap["cluster_col"]
         manifest["cluster_bins"] = snap.get("cluster_bins", 4)
-        if not staged_any:
-            new = {}
-        elif (types or {}).get(ccol) in _CLUSTERABLE:
-            # cluster columns are numeric-only (_CLUSTERABLE), so the
-            # all-column stats just computed already hold the exact
-            # per-file (min, max) — no second pass of any kind
-            new = {
-                f: d[ccol][:2] for f, d in newc.items() if ccol in d
-            }
-        else:
-            new = _staged_cluster_stats(spark, staging, ccol)
-        manifest["file_stats"] = (
-            _carry_file_stats(snap, buckets, new) if carry else new
-        )
     if snap.get("bloom_col") is not None:
         manifest["bloom_col"] = snap["bloom_col"]
         manifest["bloom_m"] = snap["bloom_m"]
@@ -1415,57 +1264,6 @@ def _attach_sidecars(
         manifest.setdefault(
             "identity_high_water", snap.get("identity_high_water", 0)
         )
-
-
-def prune_files_by_range(manifest: dict, lo, hi) -> tuple[list, list]:
-    """Plan a range read from the manifest's per-file cluster stats:
-    (kept, skipped) file lists. A file is skipped ONLY when its
-    recorded [min, max] provably misses [lo, hi]; stats-less files
-    (pre-clustering commits, all-NULL files) are always kept —
-    pruning is an optimization, never a filter."""
-    stats = manifest.get("file_stats", {})
-    kept, skipped = [], []
-    for fs in manifest["buckets"].values():
-        for f in fs:
-            s = stats.get(f)
-            if s is not None and (s[0] > hi or s[1] < lo):
-                skipped.append(f)
-            else:
-                kept.append(f)
-    return kept, skipped
-
-
-def read_snapshot_range(
-    spark: SparkSession,
-    base_dir: str,
-    lo,
-    hi,
-    version: int | None = None,
-    include_tombstones: bool = False,
-) -> DataFrame:
-    """Range read over the table's cluster column, planned from the
-    manifest's per-file (min, max) stats: files whose value slice
-    misses [lo, hi] are never opened (the scan_file_skipping_stats
-    idiom applied to the MERGE write path), then the exact row filter
-    applies on what remains — pruning is conservative, results are
-    exact. Requires a table initialized with ``cluster_col``."""
-    manifest = load_manifest(base_dir, version)
-    ccol = manifest.get("cluster_col")
-    if ccol is None:
-        raise ValueError(
-            f"table at {base_dir} has no cluster_col; init with one to "
-            "get stats-pruned range reads"
-        )
-    kept, _ = prune_files_by_range(manifest, lo, hi)
-    df = _read_visible_base(
-        spark, manifest, kept,
-        manifest["columns"], manifest["column_types"],
-        manifest.get("column_epochs"),
-        manifest.get("file_versions"),
-    ).filter(F.col(ccol).between(lo, hi))
-    if not include_tombstones:
-        df = _visible_rows(df)
-    return df
 
 
 def _column_types(df: DataFrame) -> dict[str, str]:
@@ -1832,17 +1630,18 @@ def init_table(
 
     ``cluster_col`` (numeric, optional) declares the table's zorder-
     lite secondary layout: EVERY commit path (init/merge/compact/
-    rebucket) range-bins each bucket's rows by this column and records
-    per-file (min, max) in the manifest, so read_snapshot_range plans
-    stats-pruned scans — the property is table-wide and writer-
-    independent, like the bucket count.
+    rebucket) range-bins each bucket's rows by this column, so the
+    per-file [min, max] every commit records in ``column_stats`` makes
+    ``read_snapshot(where=("range", lo, hi))`` skip most files — the
+    property is table-wide and writer-independent, like the bucket
+    count.
 
     ``bloom_col`` (optional) declares the table's point-lookup
     secondary index: every commit path builds a per-file Bloom filter
     over this column for the files it writes and carries untouched
-    files' filters forward, so read_snapshot_point opens only files
-    whose filter holds the probe value (equality's answer to
-    cluster_col's ranges — min/max stats cannot prune a
+    files' filters forward, so ``read_snapshot(where=("point", v))``
+    opens only files whose filter holds the probe value (equality's
+    answer to cluster_col's ranges — min/max stats cannot prune a
     high-cardinality equality probe whose value sits inside every
     file's span). Blooming the KEY column is redundant (bucket pruning
     already answers key lookups) but harmless.
@@ -1939,13 +1738,6 @@ def init_table(
     if cluster_col is not None:
         manifest["cluster_col"] = cluster_col
         manifest["cluster_bins"] = cluster_bins
-        # cluster columns are numeric-only (validated above), so the
-        # all-column stats already hold the exact per-file (min, max)
-        manifest["file_stats"] = {
-            f: d[cluster_col][:2]
-            for f, d in manifest["column_stats"].items()
-            if cluster_col in d
-        }
     if bloom_col is not None:
         manifest["bloom_col"] = bloom_col
         manifest["bloom_m"] = bloom_m
@@ -1979,31 +1771,103 @@ def read_snapshot(
     base_dir: str,
     version: int | None = None,
     include_tombstones: bool = False,
+    where: tuple | None = None,
 ) -> DataFrame:
     """Read the table AS OF ``version`` (default: latest) — exactly the
     manifest's file set, so concurrent commits can never tear the scan.
     Rows are aligned to the PINNED manifest's logical schema (a reader
     pinned before a schema evolution keeps its epoch's columns/types).
     Tombstoned keys (``_deleted`` true) are hidden and the marker
-    column dropped unless ``include_tombstones=True``."""
+    column dropped unless ``include_tombstones=True``.
+
+    ``where`` keeps only the rows matching a predicate spec, and files
+    whose manifest metadata proves they hold none are never opened
+    (plan_files — Delta/Iceberg data skipping):
+
+    - ``("between", col, lo, hi)``: ``lo <= col <= hi`` on any
+      stats-eligible column, pruned by per-file [min, max];
+    - ``("is_null", col)``: the completeness audit, pruned by per-file
+      null counts;
+    - ``("range", lo, hi)``: a between on the table's ``cluster_col``;
+    - ``("point", value)``: equality on the table's ``bloom_col``,
+      pruned by per-file Bloom filters (a false keep costs one file
+      read, never a wrong row).
+
+    The exact row filter always runs on what is kept, and pending
+    MOR/DV deletes apply to every read."""
     manifest = load_manifest(base_dir, version)
-    files = [f for fs in manifest["buckets"].values() for f in fs]
     cols, types = manifest.get("columns"), manifest.get("column_types")
     if cols is None or types is None:
-        # legacy pre-schema manifest: plain read, pending equality
-        # deletes still apply (legacy tables cannot have DVs)
+        # legacy pre-schema manifest: plain read of every file (no
+        # recorded types to plan with), pending equality deletes still
+        # apply (legacy tables cannot have DVs)
+        files = [f for fs in manifest["buckets"].values() for f in fs]
         df = _apply_mor_deletes(
             spark, spark.read.parquet(*files), manifest
         )
     else:
-        df = _read_visible_base(
-            spark, manifest, files, cols, types,
-            manifest.get("column_epochs"),
-            manifest.get("file_versions"),
+        kept, _ = plan_files(spark, manifest, where)
+        # no kept file: the pinned-schema empty frame, zero files opened
+        df = (
+            _read_visible_base(
+                spark, manifest, kept, cols, types,
+                manifest.get("column_epochs"),
+                manifest.get("file_versions"),
+            )
+            if kept
+            else _read_files_aligned(spark, [], cols, types)
+        )
+    if where is not None:
+        kind, col, *args = _bind_where(manifest, where)
+        df = df.filter(
+            F.col(col).isNull() if kind == "is_null"
+            else F.col(col) == F.lit(args[0]) if kind == "point"
+            else F.col(col).between(*args)
         )
     if not include_tombstones:
         df = _visible_rows(df)
     return df
+
+
+def read_snapshot_range(
+    spark: SparkSession, base_dir: str, lo, hi,
+    version: int | None = None, include_tombstones: bool = False,
+) -> DataFrame:
+    """``read_snapshot(where=("range", lo, hi))``."""
+    return read_snapshot(
+        spark, base_dir, version, include_tombstones, ("range", lo, hi)
+    )
+
+
+def read_snapshot_point(
+    spark: SparkSession, base_dir: str, value,
+    version: int | None = None, include_tombstones: bool = False,
+) -> DataFrame:
+    """``read_snapshot(where=("point", value))``."""
+    return read_snapshot(
+        spark, base_dir, version, include_tombstones, ("point", value)
+    )
+
+
+def read_snapshot_where(
+    spark: SparkSession, base_dir: str, col: str, lo, hi,
+    version: int | None = None, include_tombstones: bool = False,
+) -> DataFrame:
+    """``read_snapshot(where=("between", col, lo, hi))``."""
+    return read_snapshot(
+        spark, base_dir, version, include_tombstones,
+        ("between", col, lo, hi),
+    )
+
+
+def read_snapshot_null(
+    spark: SparkSession, base_dir: str, col: str,
+    version: int | None = None, include_tombstones: bool = False,
+) -> DataFrame:
+    """``read_snapshot(where=("is_null", col))``."""
+    return read_snapshot(
+        spark, base_dir, version, include_tombstones, ("is_null", col)
+    )
 
 
 def _visible_rows(df: DataFrame) -> DataFrame:
@@ -3743,7 +3607,7 @@ def replace_where_range(
                 f"replaceWhere constraint: {n_bad} batch rows lie "
                 f"outside {col} BETWEEN {lo!r} AND {hi!r}"
             )
-        kept, _skipped = prune_files_by_column(snap, col, lo, hi)
+        kept, _skipped = plan_files(spark, snap, ("between", col, lo, hi))
         keptset = set(kept)
         bb = batch.withColumn("bucket", _bucket_of(key_col, n_buckets))
         new_buckets = {
@@ -5075,15 +4939,15 @@ def scan_stats_pruned_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_upsert_manifest(base_dir, u1, ver_col="ver", tiebreak_col="etype")
 
     lo, hi = 1704844800000000, 1705104000000000  # 2024-01-10 .. -13 UTC
-    m = load_manifest(base_dir)
-    kept, skipped = prune_files_by_column(m, "ts_us", lo, hi)
+    where = ("between", "ts_us", lo, hi)
+    kept, skipped = plan_files(spark, load_manifest(base_dir), where)
     if not skipped:
         raise AssertionError(
             f"non-cluster predicate must skip files: kept={len(kept)}"
         )
 
     return (
-        read_snapshot_where(spark, base_dir, "ts_us", lo, hi)
+        read_snapshot(spark, base_dir, where=where)
         .groupBy("etype")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -5375,8 +5239,9 @@ def scan_null_pruned_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the column are never opened. Seed orders with a fully-populated
     note column (64 buckets), merge a sparse hole batch (every 3750th
     key, note = NULL — touching a few buckets at every fixture scale),
-    then read the IS NULL
-    rows via read_snapshot_null: only the rewritten buckets' files
+    then read the IS NULL rows via
+    ``read_snapshot(where=("is_null", "note"))``: only the rewritten
+    buckets' files
     record nulls, so the untouched majority of files skip — inline
     assert pins files-read < files-written. At 100 TB this turns a
     data-quality sweep from O(table) into O(files with holes).
@@ -5405,8 +5270,8 @@ def scan_null_pruned_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merge_upsert_manifest(base_dir, u, ver_col="ver", tiebreak_col="status")
 
-    m = load_manifest(base_dir)
-    kept, skipped = prune_files_by_null(m, "note", want_null=True)
+    where = ("is_null", "note")
+    kept, skipped = plan_files(spark, load_manifest(base_dir), where)
     if not skipped or not kept:
         raise AssertionError(
             f"null audit must skip hole-free files and keep hole files: "
@@ -5414,7 +5279,7 @@ def scan_null_pruned_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return (
-        read_snapshot_null(spark, base_dir, "note")
+        read_snapshot(spark, base_dir, where=where)
         .groupBy("status")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -5880,7 +5745,8 @@ def merge_clustered_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     alike) range-bins each bucket's rows by price — one file per
     (bucket, value slice), rows sorted within — and records per-file
     (min, max) in the manifest. The range read then plans its file
-    list FROM THE MANIFEST (read_snapshot_range): files whose slice
+    list FROM THE MANIFEST (``read_snapshot(where=("range", ...))``):
+    files whose slice
     provably misses [1000, 25000] are never opened — the
     scan_file_skipping_stats idiom composed into the transactional
     write path, which at 100 TB turns a post-merge range scan from
@@ -5919,7 +5785,8 @@ def merge_clustered_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     m = load_manifest(base_dir)
-    kept, skipped = prune_files_by_range(m, 1000.0, 25000.0)
+    where = ("range", 1000.0, 25000.0)
+    kept, skipped = plan_files(spark, m, where)
     if not skipped:
         raise AssertionError("range plan skipped no files — stats dead")
     n_all = sum(len(fs) for fs in m["buckets"].values())
@@ -5927,7 +5794,7 @@ def merge_clustered_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("pruning lost track of manifest files")
 
     return (
-        read_snapshot_range(spark, base_dir, 1000.0, 25000.0)
+        read_snapshot(spark, base_dir, where=where)
         .groupBy("status")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -6167,7 +6034,8 @@ def merge_partial_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def merge_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered face of the per-file Bloom point-lookup index
-    (``bloom_col`` at init_table + ``read_snapshot_point`` — the
+    (``bloom_col`` at init_table + ``read_snapshot(where=("point",
+    v))`` — the
     file-level form of Parquet column bloom filters / Delta's
     bloom-filter index): orders keyed on o_orderkey (32 buckets) with
     a bloom over o_custkey — the NON-key lookup bucket pruning cannot
@@ -6219,11 +6087,7 @@ def merge_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_files = {f for fs in manifest["buckets"].values() for f in fs}
     out = None
     for c in (0, 1, 2):
-        positions = _bloom_positions(
-            spark, c, manifest["column_types"]["custkey"],
-            manifest["bloom_m"], manifest["bloom_k"],
-        )
-        kept, skipped = prune_files_by_bloom(manifest, positions)
+        kept, skipped = plan_files(spark, manifest, ("point", c))
         if set(kept) | set(skipped) != all_files or (set(kept) & set(skipped)):
             raise AssertionError("bloom plan must partition the file set")
         if len(skipped) < len(all_files) // 3:
@@ -6231,7 +6095,7 @@ def merge_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"bloom index skipped only {len(skipped)}/{len(all_files)} "
                 f"files for custkey={c} — the index is not pruning"
             )
-        probe = read_snapshot_point(spark, base_dir, c)
+        probe = read_snapshot(spark, base_dir, where=("point", c))
         out = probe if out is None else out.unionByName(probe)
     return (
         out.groupBy("custkey")

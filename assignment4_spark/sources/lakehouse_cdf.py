@@ -309,12 +309,12 @@ class LakehouseCDFDataSource(DataSource):
     numeric band turning the feed into BAND-RELATIVE CDC for
     filtered-view maintenance: partition planning keeps only files
     whose per-file column statistics can hold a band row (the
-    streaming face of read_snapshot_where's pruning — a clustered
-    table's out-of-band files are never opened), the executor diff
-    runs over the band-visible state, and change_type is relative to
-    the band (a row crossing INTO the band is an insert, OUT a
-    delete — exactly the upsert/remove feed the downstream filtered
-    materialization applies)."""
+    streaming face of ``read_snapshot(where=("between", ...))``'s
+    pruning — a clustered table's out-of-band files are never opened),
+    the executor diff runs over the band-visible state, and
+    change_type is relative to the band (a row crossing INTO the band
+    is an insert, OUT a delete — exactly the upsert/remove feed the
+    downstream filtered materialization applies)."""
 
     @classmethod
     def name(cls) -> str:
@@ -409,15 +409,11 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
             }
             kept_from = kept_to = None
             if self._band is not None:
-                from ..operators.lakehouse import prune_files_by_column
+                from ..operators.lakehouse import plan_files
 
-                col, lo, hi = self._band
-                kept_from = set(
-                    prune_files_by_column(m_from, col, lo, hi)[0]
-                )
-                kept_to = set(
-                    prune_files_by_column(m_to, col, lo, hi)[0]
-                )
+                where = ("between", *self._band)
+                kept_from = set(plan_files(None, m_from, where)[0])
+                kept_to = set(plan_files(None, m_to, where)[0])
             for b in sorted(set(m_from["buckets"]) | set(m_to["buckets"])):
                 f_from = m_from["buckets"].get(b, [])
                 f_to = m_to["buckets"].get(b, [])

@@ -1417,20 +1417,20 @@ _CDF_BAND_HI = 150000.0
 )
 def stream_cdf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate-filtered CDC consumption with STATS-PRUNED partition
-    planning — the streaming face of read_snapshot_where's file
-    skipping (VERDICT r10 item 7). A consumer maintaining a
-    band-filtered materialization (price in [lo, hi]) attaches the
-    lakehouse_cdf source with ``prune_column``/``prune_lo``/
-    ``prune_hi``: partition planning intersects every (commit step,
-    changed bucket) task's file lists with the per-file column
-    statistics' band survivors — on a price-CLUSTERED table the
-    out-of-band files are never opened — and the executor diff runs
-    over the BAND-VISIBLE state, so change_type is relative to the
-    band (a row crossing INTO the band surfaces as insert, OUT as
-    delete: exactly the upsert/remove feed the downstream filtered
-    view applies; classification at crossings deliberately differs
-    from unfiltered-CDF-then-filter, which would emit updates naming
-    values the view never holds).
+    planning — the streaming face of
+    ``read_snapshot(where=("between", ...))``'s file skipping (VERDICT
+    r10 item 7). A consumer maintaining a band-filtered materialization
+    (price in [lo, hi]) attaches the lakehouse_cdf source with
+    ``prune_column``/``prune_lo``/``prune_hi``: partition planning
+    intersects every (commit step, changed bucket) task's file lists
+    with the per-file column statistics' band survivors — on a
+    price-CLUSTERED table the out-of-band files are never opened — and
+    the executor diff runs over the BAND-VISIBLE state, so change_type
+    is relative to the band (a row crossing INTO the band surfaces as
+    insert, OUT as delete: exactly the upsert/remove feed the
+    downstream filtered view applies; classification at crossings
+    deliberately differs from unfiltered-CDF-then-filter, which would
+    emit updates naming values the view never holds).
 
     Batch declaration: a 3-version ladder on a price-clustered table
     (v2 doubles every 5th key's price, v3 adds 100k + status 'B' to

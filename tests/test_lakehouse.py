@@ -1001,6 +1001,101 @@ def test_legacy_manifest_merge_preserves_base_rows(spark, tmp_path):
     assert rows[4] == (1, "p4") and rows[49] == (1, "p49")
 
 
+def test_legacy_manifest_pruned_reads(spark, tmp_path):
+    """Pruned reads of a pre-schema manifest (no columns/column_types/
+    column_epochs recorded) take read_snapshot's legacy branch — every
+    file read plainly, pending deletes applied, the exact filter on
+    top — instead of raising KeyError on the missing schema keys."""
+    import json as _json
+    import os as _os
+
+    from assignment4_spark.operators.lakehouse import (
+        _manifest_path,
+        read_snapshot_null,
+        read_snapshot_point,
+        read_snapshot_range,
+        read_snapshot_where,
+    )
+
+    base = str(tmp_path / "legacy_pruned")
+    df = spark.range(60).select(
+        F.col("id").alias("k"),
+        F.lit(1).alias("ver"),
+        (F.col("id") * 1.0).alias("x"),
+        F.concat(F.lit("u"), F.col("id")).alias("tag"),
+        F.when(F.col("id") % 10 == 0, None)
+        .otherwise(F.col("id"))
+        .alias("maybe"),
+    )
+    init_table(
+        df, base, key_col="k", n_buckets=4, cluster_col="x",
+        bloom_col="tag",
+    )
+    p = _manifest_path(base, 1)
+    with open(p) as fh:
+        m = _json.load(fh)
+    for key in ("columns", "column_types", "column_epochs"):
+        m.pop(key, None)
+    _os.remove(p)
+    with open(p, "w") as fh:
+        _json.dump(m, fh)
+
+    def keys(df):
+        return {r.k for r in df.collect()}
+
+    band = set(range(10, 21))
+    assert keys(read_snapshot_range(spark, base, 10.0, 20.0)) == band
+    assert keys(read_snapshot_where(spark, base, "x", 10.0, 20.0)) == band
+    assert keys(read_snapshot_null(spark, base, "maybe")) == set(
+        range(0, 60, 10)
+    )
+    assert keys(read_snapshot_point(spark, base, "u7")) == {7}
+
+
+def test_file_stats_manifest_plans_from_column_stats(spark, tmp_path):
+    """Manifests written before the cluster-only ``file_stats`` map was
+    dropped still carry it; range reads plan from ``column_stats``
+    alone. Here one file's column_stats lost the cluster column while
+    its stale file_stats entry claims the file misses the range: the
+    planner must keep the file (no entry, no proof) and the read must
+    return exactly the matching rows."""
+    import json as _json
+    import os as _os
+
+    from assignment4_spark.operators.lakehouse import (
+        _manifest_path,
+        plan_files,
+    )
+
+    base = str(tmp_path / "fstats")
+    df = spark.range(400).select(
+        F.col("id").alias("k"),
+        F.lit(1).alias("ver"),
+        (F.col("id") * 1.0).alias("x"),
+    )
+    init_table(df, base, key_col="k", n_buckets=2, cluster_col="x")
+    p = _manifest_path(base, 1)
+    with open(p) as fh:
+        m = _json.load(fh)
+    stats = m["column_stats"]
+    m["file_stats"] = {f: d["x"][:2] for f, d in stats.items()}
+    lo, hi = 100.0, 140.0
+    # a file holding rows in [lo, hi]; its stale map entry says it misses
+    hit = next(
+        f for f, d in stats.items() if d["x"][0] <= hi and d["x"][1] >= lo
+    )
+    m["file_stats"][hit] = [1e9, 2e9]
+    del stats[hit]["x"]
+    _os.remove(p)
+    with open(p, "w") as fh:
+        _json.dump(m, fh)
+
+    kept, skipped = plan_files(spark, load_manifest(base), ("range", lo, hi))
+    assert hit in kept and skipped, "missing stats keep; the rest still prune"
+    got = read_snapshot(spark, base, where=("range", lo, hi)).collect()
+    assert sorted(r.k for r in got) == list(range(100, 141))
+
+
 def test_rebucket_preserves_contents_and_old_epoch(spark, tmp_path):
     """rebucket_table: contents are invariant, the new manifest carries
     the new bucket count, PINNED readers keep the old epoch's bucket
@@ -1153,7 +1248,7 @@ def test_cluster_stats_prune_and_exact_range_read(spark, tmp_path):
     exactly equal to the filter over the full snapshot (pruning is an
     optimization, never a filter)."""
     from assignment4_spark.operators.lakehouse import (
-        prune_files_by_range,
+        plan_files,
         read_snapshot_range,
     )
 
@@ -1170,7 +1265,7 @@ def test_cluster_stats_prune_and_exact_range_read(spark, tmp_path):
     merge_upsert_manifest(base, upd, "ver", "val")
 
     m = load_manifest(base)
-    kept, skipped = prune_files_by_range(m, 100.0, 400.0)
+    kept, skipped = plan_files(spark, m, ("range", 100.0, 400.0))
     assert skipped, "narrow range must skip files"
     n_all = sum(len(fs) for fs in m["buckets"].values())
     assert len(kept) + len(skipped) == n_all
@@ -1190,7 +1285,7 @@ def test_cluster_layout_survives_compact_and_rebucket(spark, tmp_path):
     from assignment4_spark.operators.lakehouse import (
         TOMBSTONE_COL,
         compact_tombstones,
-        prune_files_by_range,
+        plan_files,
         read_snapshot_range,
         rebucket_table,
     )
@@ -1209,16 +1304,20 @@ def test_cluster_layout_survives_compact_and_rebucket(spark, tmp_path):
     merge_upsert_manifest(base, tomb, "ver", "val")
     compact_tombstones(spark, base)
     m = load_manifest(base)
-    assert m.get("cluster_col") == "val" and m.get("file_stats")
+    live = {f for fs in m["buckets"].values() for f in fs}
+    assert m.get("cluster_col") == "val"
+    # the compaction carried or re-recorded every live file's val stats
+    assert all("val" in m["column_stats"].get(f, {}) for f in live)
 
     rebucket_table(spark, base, 8)
     m = load_manifest(base)
     assert m["n_buckets"] == 8 and m.get("cluster_col") == "val"
     # every live file has fresh stats after the full rewrite
     live = {f for fs in m["buckets"].values() for f in fs}
-    assert set(m["file_stats"]) == live
+    assert set(m["column_stats"]) == live
+    assert all("val" in m["column_stats"][f] for f in live)
 
-    kept, skipped = prune_files_by_range(m, 0.0, 900.0)
+    kept, skipped = plan_files(spark, m, ("range", 0.0, 900.0))
     assert skipped, "post-rebucket range must still skip"
     got = read_snapshot_range(spark, base, 0.0, 900.0)
     want = read_snapshot(spark, base).filter(F.col("val").between(0.0, 900.0))
@@ -1390,9 +1489,8 @@ def test_bloom_point_lookup_exact_and_prunes(spark, tmp_path):
     values (pruning is invisible), return empty for absent values, and
     actually skip files."""
     from assignment4_spark.operators.lakehouse import (
-        _bloom_positions,
         load_manifest,
-        prune_files_by_bloom,
+        plan_files,
         read_snapshot_point,
     )
 
@@ -1404,8 +1502,7 @@ def test_bloom_point_lookup_exact_and_prunes(spark, tmp_path):
         assert got == want and len(got) == 10
     assert read_snapshot_point(spark, base, 12345).count() == 0
     m = load_manifest(base)
-    pos = _bloom_positions(spark, 7, "bigint", m["bloom_m"], m["bloom_k"])
-    kept, skipped = prune_files_by_bloom(m, pos)
+    kept, skipped = plan_files(spark, m, ("point", 7))
     n_files = sum(len(fs) for fs in m["buckets"].values())
     assert len(kept) + len(skipped) == n_files and skipped, (
         "bloom must skip at least one file on a sparse value"
@@ -1448,13 +1545,17 @@ def test_bloom_carry_and_recompute_across_merge(spark, tmp_path):
 def test_bloom_missing_entry_is_kept(spark, tmp_path):
     """A file without a bloom entry (pre-index commits) must always be
     kept — pruning is an optimization, never a filter."""
-    from assignment4_spark.operators.lakehouse import prune_files_by_bloom
+    from assignment4_spark.operators.lakehouse import plan_files
 
     manifest = {
         "buckets": {"0": ["/a", "/b"]},
+        "column_types": {"grp": "bigint"},
+        "bloom_col": "grp",
+        "bloom_m": 64,
+        "bloom_k": 3,
         "file_blooms": {"/a": {}},  # /b has no entry at all
     }
-    kept, skipped = prune_files_by_bloom(manifest, [1, 2, 3])
+    kept, skipped = plan_files(spark, manifest, ("point", 7))
     assert kept == ["/b"] and skipped == ["/a"], (
         "empty filter skips, missing filter keeps"
     )
@@ -2573,7 +2674,7 @@ def test_optimize_preserves_cluster_layout_and_stats(spark, tmp_path):
     from assignment4_spark.operators.lakehouse import (
         init_table,
         optimize_compact,
-        prune_files_by_range,
+        plan_files,
     )
 
     base = str(tmp_path / "ctbl")
@@ -2599,8 +2700,10 @@ def test_optimize_preserves_cluster_layout_and_stats(spark, tmp_path):
         # width_bucket hi-edge overflow bin), never unbounded splinters
         assert 1 <= len(m["buckets"][str(b)]) <= 5
         for f in m["buckets"][str(b)]:
-            assert f in m["file_stats"], "fresh stats must cover new files"
-    kept, skipped = prune_files_by_range(m, 0.0, 100.0)
+            assert "price" in m["column_stats"].get(f, {}), (
+                "fresh stats must cover new files"
+            )
+    kept, skipped = plan_files(spark, m, ("range", 0.0, 100.0))
     assert skipped, "zone-map pruning must survive the optimize"
 
 
@@ -2612,7 +2715,7 @@ def test_column_stats_recorded_carried_and_refreshed(spark, tmp_path):
     skips provably-missing files and keeps stats-less ones."""
     from assignment4_spark.operators.lakehouse import (
         init_table,
-        prune_files_by_column,
+        plan_files,
         read_snapshot_where,
     )
 
@@ -2650,7 +2753,7 @@ def test_column_stats_recorded_carried_and_refreshed(spark, tmp_path):
             if b not in changed:
                 assert m2["column_stats"][f] == m1["column_stats"][f]
     # prune on the never-declared string column
-    kept, skipped = prune_files_by_column(m2, "s", "zz", "zz")
+    kept, skipped = plan_files(spark, m2, ("between", "s", "zz", "zz"))
     assert skipped, "most files cannot hold 'zz'"
     got = {
         r.k for r in read_snapshot_where(spark, base, "s", "zz", "zz").collect()
@@ -2668,7 +2771,7 @@ def test_column_prune_timestamp_probe_shapes(spark, tmp_path):
 
     from assignment4_spark.operators.lakehouse import (
         init_table,
-        prune_files_by_column,
+        plan_files,
         read_snapshot_where,
     )
 
@@ -2684,7 +2787,7 @@ def test_column_prune_timestamp_probe_shapes(spark, tmp_path):
     init_table(df, base, key_col="k", n_buckets=4)
     m = load_manifest(base)
     iso_lo, iso_hi = "2024-03-02T05:00:00", "2024-03-02T07:00:00"
-    ref_kept, ref_skip = prune_files_by_column(m, "ts", iso_lo, iso_hi)
+    ref_kept, ref_skip = plan_files(spark, m, ("between", "ts", iso_lo, iso_hi))
     probes = [
         ("2024-03-02 05:00:00", "2024-03-02 07:00:00"),
         (
@@ -2693,7 +2796,7 @@ def test_column_prune_timestamp_probe_shapes(spark, tmp_path):
         ),
     ]
     for lo, hi in probes:
-        kept, skipped = prune_files_by_column(m, "ts", lo, hi)
+        kept, skipped = plan_files(spark, m, ("between", "ts", lo, hi))
         assert (sorted(kept), sorted(skipped)) == (
             sorted(ref_kept),
             sorted(ref_skip),
@@ -2736,7 +2839,7 @@ def test_column_stats_fresh_after_rebucket_and_all_null(spark, tmp_path):
     files are conservatively kept by pruning."""
     from assignment4_spark.operators.lakehouse import (
         init_table,
-        prune_files_by_column,
+        plan_files,
         rebucket_table,
     )
 
@@ -2755,7 +2858,7 @@ def test_column_stats_fresh_after_rebucket_and_all_null(spark, tmp_path):
     for f, d in m["column_stats"].items():
         assert "allnull" not in d
         assert "y" in d
-    kept, skipped = prune_files_by_column(m, "allnull", 0.0, 1.0)
+    kept, skipped = plan_files(spark, m, ("between", "allnull", 0.0, 1.0))
     assert skipped == [] and len(kept) == len(allfiles)
 
 
@@ -2835,37 +2938,87 @@ def test_mor_rewrite_applies_and_clears_sidecars(spark, tmp_path):
     assert rows[7] == "u7" and 8 not in rows and 9 not in rows
 
 
-def test_mor_applies_on_every_pruned_read_face(spark, tmp_path):
-    """read_snapshot_range / read_snapshot_where / read_snapshot_point
-    all anti-join the pending delete set — a stats- or bloom-pruned
-    scan must never leak a deleted row."""
+@pytest.mark.parametrize("how", ["mor", "dv"])
+def test_deletes_apply_on_every_pruned_read_face(spark, tmp_path, how):
+    """Every pruned read (range / between / point / is_null) applies the
+    pending deletes of both representations — MOR equality-delete
+    sidecars and positional deletion vectors — so a stats- or
+    bloom-pruned scan never leaks a deleted row."""
     from assignment4_spark.operators.lakehouse import (
+        delete_keys_dv,
         delete_keys_mor,
         init_table,
-        read_snapshot_point,
-        read_snapshot_range,
-        read_snapshot_where,
     )
 
-    base = str(tmp_path / "mor_pruned")
+    base = str(tmp_path / f"{how}_pruned")
     df = spark.range(300).select(
         F.col("id").alias("k"),
         F.lit(1).alias("ver"),
         (F.col("id") * 1.0).alias("x"),
         F.concat(F.lit("u"), F.col("id")).alias("tag"),
+        F.when(F.col("id") == 50, None).otherwise(F.col("id")).alias("maybe"),
     )
     init_table(
         df, base, key_col="k", n_buckets=4, cluster_col="x",
         bloom_col="tag",
     )
-    delete_keys_mor(spark, base, spark.createDataFrame([(50,)], "k long"))
-    assert 50 not in {
-        r.k for r in read_snapshot_range(spark, base, 40.0, 60.0).collect()
+    delete = delete_keys_mor if how == "mor" else delete_keys_dv
+    delete(spark, base, spark.createDataFrame([(50,)], "k long"))
+    for where in (("range", 40.0, 60.0), ("between", "x", 40.0, 60.0)):
+        got = {r.k for r in read_snapshot(spark, base, where=where).collect()}
+        assert got == set(range(40, 61)) - {50}, where
+    assert read_snapshot(spark, base, where=("point", "u50")).count() == 0
+    assert read_snapshot(spark, base, where=("is_null", "maybe")).count() == 0
+
+
+def test_read_job_counts_pinned(spark, tmp_path):
+    """Job-count pin for every read kind: ``.count()`` of a plain,
+    between, range, is_null and point read of a small clustered,
+    bloom-indexed table with one pending DV sidecar launches exactly
+    these Spark jobs, counted per job group the way
+    scripts/count_jobs.py counts an op — a perf gate that timing noise
+    cannot fake. The point read's extra job is the 1-row job hashing
+    the probe into its Bloom bit positions."""
+    import uuid
+
+    from assignment4_spark.operators.lakehouse import (
+        delete_keys_dv,
+        init_table,
+    )
+
+    base = str(tmp_path / "jobpin")
+    df = spark.range(200).select(
+        F.col("id").alias("k"),
+        F.lit(1).alias("ver"),
+        (F.col("id") * 1.0).alias("x"),
+        F.concat(F.lit("u"), F.col("id")).alias("tag"),
+        F.when(F.col("id") % 50 == 0, None)
+        .otherwise(F.col("id"))
+        .alias("maybe"),
+    )
+    init_table(
+        df, base, key_col="k", n_buckets=4, cluster_col="x",
+        bloom_col="tag",
+    )
+    delete_keys_dv(spark, base, spark.createDataFrame([(60,)], "k long"))
+    want = {
+        None: (5, 199),
+        ("between", "x", 40.0, 70.0): (5, 30),
+        ("range", 40.0, 70.0): (5, 30),
+        ("is_null", "maybe"): (5, 4),
+        ("point", "u61"): (6, 1),
     }
-    assert 50 not in {
-        r.k for r in read_snapshot_where(spark, base, "x", 40.0, 60.0).collect()
-    }
-    assert read_snapshot_point(spark, base, "u50").count() == 0
+    sc = spark.sparkContext
+    got = {}
+    for where in want:
+        group = f"read-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, str(where))
+        try:
+            n = read_snapshot(spark, base, where=where).count()
+        finally:
+            sc.setJobGroup(None, None)
+        got[where] = (len(sc.statusTracker().getJobIdsForGroup(group)), n)
+    assert got == want
 
 
 def test_mor_vacuum_retention_of_sidecars(spark, tmp_path):
@@ -2957,7 +3110,7 @@ def test_null_pruning_conservative_and_exact(spark, tmp_path):
     from assignment4_spark.operators.lakehouse import (
         delete_keys_mor,
         init_table,
-        prune_files_by_null,
+        plan_files,
         read_snapshot_null,
     )
 
@@ -2972,11 +3125,11 @@ def test_null_pruning_conservative_and_exact(spark, tmp_path):
     )
     init_table(df, base, key_col="k", n_buckets=6)
     m = load_manifest(base)
-    kept, skipped = prune_files_by_null(m, "attr", want_null=True)
+    kept, skipped = plan_files(spark, m, ("is_null", "attr"))
     got = {r.k for r in read_snapshot_null(spark, base, "attr").collect()}
     assert got == {0, 40, 80}
     # all-null column: no stats entry → every file kept, all rows out
-    k2, s2 = prune_files_by_null(m, "allnull", want_null=True)
+    k2, s2 = plan_files(spark, m, ("is_null", "allnull"))
     assert s2 == []
     assert read_snapshot_null(spark, base, "allnull").count() == 120
     # MOR delete applies on the audit read too
@@ -3169,6 +3322,7 @@ def test_protocol_model_fuzz(spark, tmp_path, seed):
         drop_column,
         init_table,
         optimize_compact,
+        plan_files,
         rebucket_table,
         replace_where_range,
         restore_table,
@@ -3207,19 +3361,44 @@ def test_protocol_model_fuzz(spark, tmp_path, seed):
         )
         return spark.createDataFrame(rows, cols)
 
+    # the pruned-read arm draws from its own stream so the op sequence
+    # stays the one each seed always produced
+    where_rng = random.Random(seed + 1)
+
     def check(step):
-        got = {
-            r.k: (r.ver, (r.attr if attr_live else None))
-            for r in read_snapshot(spark, base).collect()
-        }
+        def rows(where=None):
+            return {
+                r.k: (r.ver, (r.attr if attr_live else None))
+                for r in read_snapshot(spark, base, where=where).collect()
+            }
+
         want = {
             k: (v["ver"], (v["attr"] if attr_live else None))
             for k, v in model.items()
             if not v["dead"]
         }
+        got = rows()
         assert got == want, (
             f"seed={seed} step={step}: snapshot diverged from model\n"
             f"extra={set(got) - set(want)} missing={set(want) - set(got)}"
+        )
+        # one pruned read per step, against the model under the same
+        # predicate; its plan must partition the manifest's files
+        if attr_live and where_rng.random() < 0.5:
+            where = ("is_null", "attr")
+            want = {k: v for k, v in want.items() if v[1] is None}
+        else:
+            lo = where_rng.randint(1, ver)
+            hi = lo + where_rng.randint(0, 3)
+            where = ("between", "ver", lo, hi)
+            want = {k: v for k, v in want.items() if lo <= v[0] <= hi}
+        m = load_manifest(base)
+        kept, skipped = plan_files(spark, m, where)
+        files = [f for fs in m["buckets"].values() for f in fs]
+        assert set(kept) | set(skipped) == set(files), (seed, step, where)
+        assert not set(kept) & set(skipped), (seed, step, where)
+        assert rows(where) == want, (
+            f"seed={seed} step={step}: pruned read {where} diverged"
         )
 
     for step in range(18):
@@ -3718,42 +3897,6 @@ def test_dv_delete_contract(spark, tmp_path):
         != b7
     }
     assert others.isdisjoint(rows), f"leaked through rewrite: {others & set(rows)}"
-
-
-def test_dv_applies_on_every_pruned_read_face(spark, tmp_path):
-    """Every pruned read face (range / where / point / null) must
-    apply pending deletion vectors — a stats- or bloom-pruned scan
-    never leaks a position-deleted row."""
-    from assignment4_spark.operators.lakehouse import (
-        delete_keys_dv,
-        init_table,
-        read_snapshot_null,
-        read_snapshot_point,
-        read_snapshot_range,
-        read_snapshot_where,
-    )
-
-    base = str(tmp_path / "dv_pruned")
-    df = spark.range(300).select(
-        F.col("id").alias("k"),
-        F.lit(1).alias("ver"),
-        (F.col("id") * 1.0).alias("x"),
-        F.concat(F.lit("u"), F.col("id")).alias("tag"),
-        F.when(F.col("id") == 50, None).otherwise(F.col("id")).alias("maybe"),
-    )
-    init_table(
-        df, base, key_col="k", n_buckets=4, cluster_col="x",
-        bloom_col="tag",
-    )
-    delete_keys_dv(spark, base, spark.createDataFrame([(50,)], "k long"))
-    assert 50 not in {
-        r.k for r in read_snapshot_range(spark, base, 40.0, 60.0).collect()
-    }
-    assert 50 not in {
-        r.k for r in read_snapshot_where(spark, base, "x", 40.0, 60.0).collect()
-    }
-    assert read_snapshot_point(spark, base, "u50").count() == 0
-    assert read_snapshot_null(spark, base, "maybe").count() == 0
 
 
 def test_optimize_coalesces_dv_sidecars(spark, tmp_path):
