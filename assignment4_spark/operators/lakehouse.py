@@ -295,6 +295,42 @@ def _rel_cache_put(spark: SparkSession, key, rel: DataFrame | None):
     return rel
 
 
+def _dead_columns(
+    files: list, column_epochs: dict | None, file_versions: dict | None
+) -> dict[str, frozenset]:
+    """The column-epoch rule, the one copy every reader uses: a column
+    (re-)born at version R (DROP COLUMN + re-add) reads as NULL from
+    any file born before R. Such a file may still physically carry
+    same-named bytes from the dropped incarnation; they are the OLD
+    epoch's values (Delta column mapping reads by field id for the
+    same reason). Returns ``{file: dead columns}`` for the files with
+    any. Never-evolved tables (every epoch 1) return nothing without a
+    birth-version lookup: every committed file is born at v1 or later.
+
+    Birth versions come from the manifest's ``file_versions`` records,
+    never from directory names, which a rename would silently
+    invalidate (re-opening the stale-byte-resurrection class the
+    protocol fuzz caught): an evolved table with no record for a file
+    raises ValueError."""
+    epochs = {c: int(v) for c, v in (column_epochs or {}).items()}
+    if not any(v > 1 for v in epochs.values()):
+        return {}
+    born = file_versions or {}
+    out = {}
+    for f in files:
+        if f not in born:
+            raise ValueError(
+                "column-epoch read needs the manifest's per-file birth "
+                f"versions, but {f!r} has no file_versions entry — "
+                "refusing to trust physical bytes on an epoch-evolved "
+                "table"
+            )
+        dead = frozenset(c for c, v in epochs.items() if v > int(born[f]))
+        if dead:
+            out[f] = dead
+    return out
+
+
 def _read_files_aligned(
     spark: SparkSession,
     files: list,
@@ -315,25 +351,21 @@ def _read_files_aligned(
     bounded by the number of retained versions, never by file count,
     so plan cost stays O(versions) while scan parallelism is unchanged.
     Same-type casts are elided by Catalyst (SimplifyCasts), so the
-    common no-evolution case plans exactly as a plain read."""
+    common no-evolution case plans exactly as a plain read. Columns
+    ``_dead_columns`` names for a group's files read as NULL; a read
+    with none takes the one-relation fast path when it applies."""
     if not files:
         # a fully-compacted table (every key tombstoned, then
         # compact_tombstones) legitimately has an all-empty bucket map;
         # an empty frame with the manifest schema IS the snapshot
         ddl = ", ".join(f"`{c}` {column_types[c]}" for c in columns)
         return spark.createDataFrame([], ddl)
-    # the epoch guard only has work when some column was (re-)born
-    # AFTER v1 — for the common never-evolved table every epoch is 1
-    # and any committed file has version >= 1, so the guard is inert
-    # and no birth-version lookup is needed
-    guard = bool(column_epochs) and any(
-        int(v) > 1 for v in column_epochs.values()
-    )
+    dead = _dead_columns(files, column_epochs, file_versions)
     groups: dict[str, list] = {}
     for f in files:
         # …/commit_vN_*/bucket=B/part-*.parquet → group on the commit dir
         groups.setdefault(os.path.dirname(os.path.dirname(f)), []).append(f)
-    if not guard:
+    if not dead:
         fast = _uniform_schema_read(spark, groups, columns, column_types)
         if fast is not None:
             if not carry_positions:
@@ -352,34 +384,16 @@ def _read_files_aligned(
     parts = []
     for gdir, fs in sorted(groups.items()):
         df = spark.read.parquet(*fs)
-        have = set(df.columns)
-        if guard:
-            # column-epoch guard (DROP COLUMN + re-add): a file group
-            # written BEFORE a column's (re-)introduction may still
-            # physically carry same-named bytes from the dropped
-            # incarnation — those are the OLD epoch's values and must
-            # read as NULL, exactly as if the file lacked the column
-            # (Delta column-mapping reads by field id for the same
-            # reason). Birth versions come from the MANIFEST's
-            # file_versions records — never from the directory name,
-            # which a rename/relocation would silently invalidate
-            # (would degrade to trust-the-file, re-opening the
-            # stale-byte-resurrection class the protocol fuzz caught).
-            gvs = {
-                int((file_versions or {}).get(f, -1)) for f in fs
-            }
-            if -1 in gvs or len(gvs) != 1:
-                raise ValueError(
-                    "column-epoch read needs the manifest's per-file "
-                    f"birth versions, but group {gdir!r} has "
-                    f"{'missing' if -1 in gvs else 'conflicting'} "
-                    "file_versions entries — refusing to trust "
-                    "physical bytes on an epoch-evolved table"
-                )
-            gv = gvs.pop()
-            have = {
-                c for c in have if int(column_epochs.get(c, 0)) <= gv
-            }
+        # one read per group, so its files must agree on which
+        # same-named bytes are a dropped incarnation's
+        gdead = {dead.get(f, frozenset()) for f in fs}
+        if len(gdead) != 1:
+            raise ValueError(
+                f"file group {gdir!r} has conflicting file_versions "
+                "entries — its files disagree on which columns are "
+                "dead on an epoch-evolved table"
+            )
+        have = set(df.columns) - gdead.pop()
         sel = [
             (
                 F.col(c).cast(column_types[c])
@@ -1055,32 +1069,36 @@ def _manifest_col_max(manifest: dict, col: str):
     MOR/DV sidecars), that ``col`` is an integer type (stats hold the
     exact value, not a string/float re-encoding), and that EVERY live
     file has a stats entry for the column (an absent entry is
-    ambiguous between all-NULL and stats-less). An empty file set
-    returns None like an empty aggregate would."""
+    ambiguous between all-NULL and stats-less). A file in which
+    ``col`` is dead (``_dead_columns``) reads as NULL, so its stats —
+    the dropped incarnation's physical values — are skipped; an
+    evolved table with no birth version for a file returns None. An
+    empty file set returns None like an empty aggregate would."""
     if TOMBSTONE_COL in (manifest.get("columns") or []):
         return None
     if _mor_delete_files(manifest) or _dv_sidecar_files(manifest):
         return None
-    epochs = manifest.get("column_epochs") or {}
-    if any(int(v) > 1 for v in epochs.values()):
-        # a column (re-)born after v1 reads as NULL from files older
-        # than its epoch even when those files hold PHYSICAL values —
-        # the footer stats would overestimate the visible max. Same
-        # guard condition as _read_files_aligned's epoch alignment:
-        # never-evolved tables (every epoch 1) stay on the fast path.
-        return None
     ctype = (manifest.get("column_types") or {}).get(col, "")
     if ctype.lower() not in _EXACT_INT_STAT_TYPES:
         return None
+    files = [f for fs in manifest["buckets"].values() for f in fs]
+    try:
+        dead = _dead_columns(
+            files, manifest.get("column_epochs"),
+            manifest.get("file_versions"),
+        )
+    except ValueError:
+        return None
     stats = manifest.get("column_stats") or {}
     mx = None
-    for fs in manifest["buckets"].values():
-        for f in fs:
-            s = stats.get(f, {}).get(col)
-            if s is None or s[1] is None:
-                return None
-            if mx is None or s[1] > mx:
-                mx = s[1]
+    for f in files:
+        if col in dead.get(f, ()):
+            continue
+        s = stats.get(f, {}).get(col)
+        if s is None or s[1] is None:
+            return None
+        if mx is None or s[1] > mx:
+            mx = s[1]
     return mx
 
 
@@ -4240,6 +4258,70 @@ def _feed_stats(feed: DataFrame, expected_type: str) -> tuple[int, int]:
     return r.n, r.n_off
 
 
+def plan_diff(
+    m_from: dict,
+    m_to: dict,
+    within_buckets: tuple[int, list[int]] | None = None,
+) -> list[tuple[dict, dict]]:
+    """Plan the change feed between two manifests from metadata alone:
+    a list of diff groups ``(old, new)`` whose keys can only be
+    compared within the group. Each side is ``{"files", "dead",
+    "deletes", "dvs"}``: its data files, their dead columns
+    (``_dead_columns`` under ``m_to``'s epochs — both sides align to
+    v_to's schema — and the side's own birth versions), and the MOR
+    equality-delete and DV sidecars of the group's buckets.
+
+    A bucket is changed when its data files, MOR sidecars or DV
+    sidecars differ: commits rewrite whole touched buckets and a
+    merge-on-read delete changes visibility without touching a data
+    file, so an identical bucket cannot hold a logical change and is
+    never read. With one ``n_buckets`` on both sides a key stays in
+    its bucket, so each changed bucket is its own group; otherwise (a
+    rebucket between the versions moves keys between buckets) all
+    changed buckets form one group.
+
+    ``within_buckets = (n_buckets, ids)`` scopes the diff to a caller's
+    own buckets (the serializable conflict probe): a bucket is the
+    pure function pmod(xxhash64(key), n_buckets), so changed buckets
+    outside ``ids`` cannot hold a key the caller writes. It is honored
+    ONLY when both manifests record that ``n_buckets`` (after a
+    rebucket the restriction is unsound and the full diff runs). At
+    100 TB this turns the probe's read from O(all concurrent churn)
+    into O(churn ∩ writer's buckets)."""
+    def state(m, b):
+        return [
+            (m.get(k) or {}).get(b, [])
+            for k in ("buckets", "delete_files", "dv_files")
+        ]
+
+    changed = sorted(
+        (
+            b
+            for b in set(m_from["buckets"]) | set(m_to["buckets"])
+            if state(m_from, b) != state(m_to, b)
+        ),
+        key=int,
+    )
+    same_n = m_from.get("n_buckets") == m_to.get("n_buckets")
+    if within_buckets is not None:
+        nb, ids = within_buckets
+        if same_n and m_to.get("n_buckets") == nb:
+            keep = {str(b) for b in ids}
+            changed = [b for b in changed if b in keep]
+
+    def side(m, bs):
+        files, deletes, dvs = (
+            [f for b in bs for f in state(m, b)[i]] for i in range(3)
+        )
+        dead = _dead_columns(
+            files, m_to.get("column_epochs"), m.get("file_versions")
+        )
+        return {"files": files, "dead": dead, "deletes": deletes, "dvs": dvs}
+
+    bucket_sets = [[b] for b in changed] if same_n else [changed]
+    return [(side(m_from, bs), side(m_to, bs)) for bs in bucket_sets if bs]
+
+
 def changes_between(
     spark: SparkSession,
     base_dir: str,
@@ -4248,11 +4330,9 @@ def changes_between(
     within_buckets: tuple[int, list[int]] | None = None,
 ) -> DataFrame:
     """Change-data-feed between two committed versions, computed the
-    way the manifests allow at 100 TB: a bucket whose FILE SET is
-    identical in both manifests cannot contain a logical change
-    (commits rewrite whole touched buckets), so only differing buckets
-    are read from either side — the diff costs O(changed data), not
-    O(table). Both sides align to v_to's schema (v_from files may
+    way the manifests allow at 100 TB: only the changed buckets
+    ``plan_diff`` names are read from either side — the diff costs
+    O(changed data), not O(table). Both sides align to v_to's schema (v_from files may
     predate an evolution). Returns one row per logically-changed key:
     ``(key, change_type ∈ insert|update|delete, old/new columns)``.
     A key is 'deleted' when it was visible at v_from and is tombstoned
@@ -4288,41 +4368,9 @@ def changes_between(
         cols = list(derived.columns)
         types = _column_types(derived)
     data_cols = [c for c in cols if c != key_col and c != TOMBSTONE_COL]
-
-    # a bucket is unchanged only when BOTH its data-file set and its
-    # pending MOR-delete sidecar set are identical — a merge-on-read
-    # delete commit changes visibility without touching a data file
-    d_from = m_from.get("delete_files") or {}
-    d_to = m_to.get("delete_files") or {}
-    v_from = m_from.get("dv_files") or {}
-    v_to = m_to.get("dv_files") or {}
-    changed = [
-        b
-        for b in set(m_from["buckets"]) | set(m_to["buckets"])
-        if m_from["buckets"].get(b, []) != m_to["buckets"].get(b, [])
-        or d_from.get(b, []) != d_to.get(b, [])
-        or v_from.get(b, []) != v_to.get(b, [])
-    ]
-    if within_buckets is not None:
-        # caller-scoped diff (the serializable conflict probe): the
-        # caller only cares about keys whose bucket — a pure function
-        # pmod(xxhash64(key), n_buckets) — falls in its own touched
-        # set, so changed buckets outside it provably cannot hold a
-        # key the caller writes. Honored ONLY when both manifests
-        # record the same n_buckets as the hint was derived under (a
-        # rebucket between the versions moves the key→bucket mapping,
-        # making the restriction unsound — fall back to the full
-        # diff). At 100 TB this turns the probe's read from O(all
-        # concurrent churn) into O(churn ∩ writer's buckets).
-        nb, ids = within_buckets
-        if (
-            m_from.get("n_buckets") == nb
-            and m_to.get("n_buckets") == nb
-        ):
-            keep = {str(b) for b in ids}
-            changed = [b for b in changed if str(b) in keep]
-    files_from = [f for b in changed for f in m_from["buckets"].get(b, [])]
-    files_to = [f for b in changed for f in m_to["buckets"].get(b, [])]
+    groups = plan_diff(m_from, m_to, within_buckets)
+    files_from = [f for old, _ in groups for f in old["files"]]
+    files_to = [f for _, new in groups for f in new["files"]]
 
     def visible(files, manifest):
         # both sides align to v_to's LOGICAL schema (cols/types AND

@@ -21,17 +21,23 @@ Design (scale-first):
   ``(start, end]`` plans one diff per commit STEP ``v → v+1`` — every
   emitted row is tagged ``_commit_version`` (Delta CDF semantics), so
   a catch-up batch is the union of per-commit feeds, not a net blur.
-* **Manifest pruning before any I/O**: a bucket whose file set is
-  identical across a step cannot hold a logical change (commits
-  rewrite whole touched buckets), so partition planning emits one
-  input partition per (step, CHANGED bucket) — executors fan the diff
-  out bucket-parallel and read only changed data.
+* **One set of visibility rules**: partition planning runs
+  ``operators.lakehouse.plan_diff`` — the planner ``changes_between``
+  uses — so every decision (which buckets changed, which group a
+  rebucket forms, which columns a file's epoch NULLs, which MOR/DV
+  sidecars apply) is made once, on the driver, and shipped resolved
+  in each task. A bucket identical across a step is never read;
+  executors fan the diff out group-parallel over changed data only.
 * **Executor-side diff without a SparkSession**: ``read()`` runs in a
-  Python worker, so the per-bucket diff is Arrow/pandas over exactly
-  the partition's file lists — the same visible-rows / null-safe
-  compare semantics as ``changes_between`` (tombstone hiding, NULL
-  backfill neither masks nor invents a change), proven equivalent in
-  tests/test_streaming.py against the Spark-side batch declaration.
+  Python worker and performs only the mechanical steps over the
+  task's files with pyarrow — drop DV positions, hide tombstones
+  exactly as Spark's ``cast(... AS boolean)`` does, NULL absent and
+  dead columns, anti-join MOR keys — then the null-safe compare of
+  ``changes_between``. ``test_protocol_model_fuzz``'s CDF arm
+  (tests/test_lakehouse.py) is the equivalence proof: after every
+  commit of a random merge / tombstone / MOR / DV / optimize /
+  rebucket / drop+re-add / restore / replaceWhere history, the
+  reader's rows for the step equal ``changes_between``'s.
 * **Schema pinned at query start**: all steps project to the LATEST
   manifest's logical schema (columns added by a mid-range evolution
   read as NULL on the old side — the same alignment read_snapshot
@@ -60,219 +66,130 @@ from pyspark.sql.datasource import (
 # ---------------------------------------------------------------------------
 
 
-def _dv_positions(dv_files: list) -> dict:
+def _dv_positions(sidecars: list) -> dict:
     """Decode positional deletion-vector sidecars — rows of
     (file, word index, 64-bit word) — into {file: set(row positions)}
-    (the pandas mirror of _apply_dv_deletes's bitmap anti-filter;
-    sidecars from separate commits OR together)."""
+    (sidecars from separate commits OR together)."""
     import pyarrow.parquet as pq
 
     out: dict[str, set] = {}
-    for f in dv_files:
-        t = pq.read_table(f).to_pandas()
+    for f in sidecars:
+        t = pq.read_table(f).to_pydict()
         for file, w, word in zip(t["file"], t["w"], t["word"]):
-            base, word = int(w) * 64, int(word)
             s = out.setdefault(file, set())
-            for b in range(64):
-                if (word >> b) & 1:
-                    s.add(base + b)
+            s.update(int(w) * 64 + b for b in range(64) if (word >> b) & 1)
     return out
 
 
-def _read_aligned_pandas(files: list, columns: list, types: dict,
-                         epochs: dict | None = None,
-                         file_versions: dict | None = None,
-                         drop_positions: dict | None = None):
-    """Read parquet ``files`` with pyarrow and align every frame to the
-    logical ``columns`` (missing columns — files written before a
-    schema evolution — become NULL, the pandas mirror of
-    operators.lakehouse._read_files_aligned, including its
-    column-epoch guard: a column (re-)introduced at version R reads
-    as NULL from any file older than R). Birth versions come from the
-    manifest's ``file_versions`` records shipped in the partition —
-    never parsed from directory names, which a rename would silently
-    invalidate (the stale-byte-resurrection class the protocol fuzz
-    caught)."""
-    import pandas as pd
+#: the strings Spark's cast(string AS boolean) reads as true (trimmed,
+#: case-insensitive)
+_TRUE_STRINGS = ("t", "true", "y", "yes", "1")
+
+
+def _hidden(marker):
+    """coalesce(cast(marker AS boolean), false) — the tombstone test of
+    operators.lakehouse._visible_rows — over one arrow column of
+    boolean, numeric or string markers."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if pa.types.is_boolean(marker.type):
+        hit = marker
+    elif pa.types.is_string(marker.type) or pa.types.is_large_string(
+        marker.type
+    ):
+        hit = pc.is_in(
+            pc.utf8_lower(pc.utf8_trim_whitespace(marker)),
+            value_set=pa.array(_TRUE_STRINGS),
+        )
+    else:
+        hit = pc.not_equal(marker, 0)
+    return pc.fill_null(hit, False).to_numpy(zero_copy_only=False)
+
+
+def _visible_side(side: dict, schema: tuple, band) -> dict:
+    """{key: data values} of one side's visible rows, applying the
+    decisions ``plan_diff`` resolved on the driver: per file, drop its
+    DV positions (pyarrow keeps physical row order, so a row's index
+    IS the parquet row position Spark's _metadata.row_index reports),
+    hide tombstones, keep the band and read physically-absent and dead
+    columns as NULL; then anti-join the MOR delete keys. A row whose
+    band column is NULL is never in band, matching SQL BETWEEN."""
+    import numpy as np
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    guard = bool(epochs) and any(int(v) > 1 for v in epochs.values())
-    frames = []
-    for f in files:
-        df = pq.read_table(f).to_pandas()
-        dead = (drop_positions or {}).get(f)
-        if dead:
-            # pyarrow preserves physical row order, so the frame index
-            # IS the parquet row position Spark's _metadata.row_index
-            # reports — drop the vectored positions
-            df = df[~df.reset_index(drop=True).index.isin(dead)]
-        gv = None
-        if guard:
-            gv = (file_versions or {}).get(f)
-            if gv is None:
-                raise ValueError(
-                    "column-epoch read needs the manifest's per-file "
-                    f"birth versions, but {f!r} has no file_versions "
-                    "entry — refusing to trust physical bytes on an "
-                    "epoch-evolved table"
-                )
-        for c in columns:
-            if c not in df.columns or (
-                guard and int(epochs.get(c, 0)) > int(gv)
-            ):
-                df[c] = None
-        frames.append(df[columns])
-    if not frames:
-        return pd.DataFrame({c: [] for c in columns})
-    return pd.concat(frames, ignore_index=True)
-
-
-def _visible_pandas(df, tombstone_col: str):
-    """Hide tombstoned keys — the pandas mirror of _visible_rows
-    (same coalesce(cast(boolean), false) tolerance for dirty-typed
-    markers: any truthy non-null marker hides the row)."""
-    if tombstone_col not in df.columns:
-        return df
-    flags = df[tombstone_col].map(lambda v: bool(v) if v == v and v is not None else False)
-    return df[~flags].drop(columns=[tombstone_col])
-
-
-def _cell(v, spark_type: str):
-    """NaN/NaT-safe cell emission coerced to the declared Spark type
-    (an outer merge upcasts absent-side ints to float64 — 1.0 must go
-    back out as bigint 1, None as NULL)."""
-    if v is None or v != v:  # catches NaN and NaT, not just float nan
-        return None
-    base = spark_type.split("(")[0]
-    if base in ("tinyint", "smallint", "int", "bigint"):
-        return int(v)
-    if base in ("float", "double"):
-        return float(v)
-    if base == "boolean":
-        return bool(v)
-    return v
+    key, data, _, tomb = schema
+    gone = {
+        k
+        for f in side["deletes"]
+        for k in pq.read_table(f, columns=[key]).column(key).to_pylist()
+    }
+    dv = _dv_positions(side["dvs"])
+    rows = {}
+    for f in side["files"]:
+        t = pq.read_table(f)
+        live = set(t.column_names) - side["dead"].get(f, frozenset())
+        keep = np.ones(t.num_rows, dtype=bool)
+        keep[list(dv.get(f, ()))] = False
+        if tomb in live:
+            keep &= ~_hidden(t.column(tomb))
+        if band is not None:
+            col, lo, hi = band
+            if col in live:
+                c = t.column(col)
+                keep &= pc.fill_null(
+                    pc.and_(pc.greater_equal(c, lo), pc.less_equal(c, hi)),
+                    False,
+                ).to_numpy(zero_copy_only=False)
+            else:
+                keep[:] = False
+        t = t.filter(keep)
+        cols = [
+            t.column(c).to_pylist() if c in live else [None] * t.num_rows
+            for c in [key] + data
+        ]
+        for k, *vals in zip(*cols):
+            if k not in gone:
+                rows[k] = vals
+    return rows
 
 
 class _StepBucketDiff(InputPartition):
-    """One (commit step, changed bucket) diff task: carries the two
-    file lists plus the pinned logical schema — fully self-contained,
-    so read() needs no driver callback and no SparkSession."""
+    """One diff group of one commit step: the pinned logical schema,
+    the two sides ``plan_diff`` resolved (files, dead columns, MOR and
+    DV sidecars) and the optional band — self-contained, so read()
+    needs no driver callback and no SparkSession."""
 
-    def __init__(self, files_from, files_to, commit_version,
-                 key_col, data_cols, types, tombstone_col,
-                 dels_from=(), dels_to=(), epochs=None,
-                 file_versions=None, dvs_from=(), dvs_to=(),
-                 band=None):
-        self.files_from = files_from
-        self.files_to = files_to
+    def __init__(self, schema, old, new, commit_version, band):
+        self.schema = schema
+        self.old = old
+        self.new = new
         self.commit_version = commit_version
-        self.key_col = key_col
-        self.data_cols = data_cols
-        self.types = types
-        self.tombstone_col = tombstone_col
-        # per-side equality-delete sidecars for THIS bucket (merge-on-
-        # read deletes change visibility without touching data files)
-        self.dels_from = list(dels_from)
-        self.dels_to = list(dels_to)
-        # v_to's column birth versions (the epoch guard's input) and
-        # this bucket's per-file birth versions (the guard's manifest-
-        # backed file side)
-        self.epochs = dict(epochs or {})
-        self.file_versions = dict(file_versions or {})
-        # per-side positional deletion-vector sidecars for THIS bucket
-        self.dvs_from = list(dvs_from)
-        self.dvs_to = list(dvs_to)
         # optional (col, lo, hi) band: the diff is then RELATIVE TO THE
         # BAND-VISIBLE state (filtered-view maintenance semantics)
-        self.band = tuple(band) if band else None
+        self.band = band
 
 
-def _diff_bucket(part: _StepBucketDiff):
+def _diff_group(part: _StepBucketDiff):
     """Yield (key, change_type, old_*..., new_*..., _commit_version)
-    rows for one changed bucket — insert/update/delete classification
-    with the null-safe compare of changes_between (NULL == NULL is
-    'same'; copied-but-unchanged rows never report)."""
-    key, data = part.key_col, part.data_cols
-    cols = [key] + data + [part.tombstone_col]
-
-    def _in_band(df):
-        # band-visible state: rows whose prune column is inside
-        # [lo, hi] (NULL is never in band, matching SQL BETWEEN).
-        # Classification shifts at band crossings — a row moving INTO
-        # the band is an insert, OUT a delete — which is exactly the
-        # upsert/remove feed a band-filtered materialization applies.
-        if part.band is None or df.empty:
-            return df
-        col, lo, hi = part.band
-        s = df[col]
-        return df[s.notna() & (s >= lo) & (s <= hi)]
-
-    def _minus_mor(df, del_files):
-        # apply the side's pending MOR deletes: anti-filter on the key
-        # (the pandas mirror of _apply_mor_deletes)
-        if not del_files or df.empty:
-            return df
-        dead = _read_aligned_pandas(del_files, [key], part.types)
-        return df[~df[key].isin(set(dead[key]))]
-
-    # tombstone col may predate tombstone support in old files; the
-    # aligned read backfills it as NULL either way
-    old = _visible_pandas(
-        _minus_mor(
-            _in_band(
-                _read_aligned_pandas(
-                    part.files_from, cols, part.types, part.epochs,
-                    part.file_versions, _dv_positions(part.dvs_from),
-                )
-            ),
-            part.dels_from,
-        ),
-        part.tombstone_col,
-    )
-    new = _visible_pandas(
-        _minus_mor(
-            _in_band(
-                _read_aligned_pandas(
-                    part.files_to, cols, part.types, part.epochs,
-                    part.file_versions, _dv_positions(part.dvs_to),
-                )
-            ),
-            part.dels_to,
-        ),
-        part.tombstone_col,
-    )
-    # indicator name must not start with '_' (itertuples would mangle
-    # it) and plain-tuple itertuples avoids all field-name rewriting
-    m = old.merge(
-        new, on=key, how="outer", suffixes=("_o", "_n"), indicator="mergeside"
-    )
-    key_t = part.types[key]
-    for row in m.itertuples(index=False, name=None):
-        d = dict(zip(m.columns, row))
-        side = d["mergeside"]
-        if side == "left_only":
-            change = "delete"
-        elif side == "right_only":
+    rows for one diff group — insert/update/delete classification
+    with the null-safe compare of changes_between (NULL == NULL and
+    NaN == NaN are 'same'; copied-but-unchanged rows never report)."""
+    old = _visible_side(part.old, part.schema, part.band)
+    new = _visible_side(part.new, part.schema, part.band)
+    blank = [None] * len(part.schema[1])
+    for k in old.keys() | new.keys():
+        a, b = old.get(k), new.get(k)
+        if a is None:
             change = "insert"
+        elif b is None:
+            change = "delete"
+        elif all(x == y or (x != x and y != y) for x, y in zip(a, b)):
+            continue  # copied row, no logical change
         else:
-            change = None
-            for c in data:
-                a, b = d.get(f"{c}_o"), d.get(f"{c}_n")
-                a_null = a is None or a != a
-                b_null = b is None or b != b
-                if a_null and b_null:
-                    continue
-                if a_null != b_null or a != b:
-                    change = "update"
-                    break
-            if change is None:
-                continue  # copied row, no logical change
-        yield tuple(
-            [_cell(d[key], key_t), change]
-            + [_cell(d.get(f"{c}_o"), part.types[c]) for c in data]
-            + [_cell(d.get(f"{c}_n"), part.types[c]) for c in data]
-            + [int(part.commit_version)]
-        )
+            change = "update"
+        yield (k, change, *(a or blank), *(b or blank), part.commit_version)
 
 
 # ---------------------------------------------------------------------------
@@ -296,6 +213,23 @@ def _table_meta(base_dir: str) -> tuple:
         )
     data_cols = [c for c in cols if c != key_col and c != TOMBSTONE_COL]
     return key_col, data_cols, types, TOMBSTONE_COL
+
+
+def _band_files(manifest: dict, band: tuple) -> dict:
+    """``manifest`` keeping only the files whose column statistics can
+    hold a band row (``plan_files``). Sound because the diff runs over
+    the BAND-VISIBLE state: a file provably out of band holds no
+    band-visible row on its side."""
+    from ..operators.lakehouse import plan_files
+
+    kept = set(plan_files(None, manifest, ("between", *band))[0])
+    return {
+        **manifest,
+        "buckets": {
+            b: [f for f in fs if f in kept]
+            for b, fs in manifest["buckets"].items()
+        },
+    }
 
 
 class LakehouseCDFDataSource(DataSource):
@@ -376,7 +310,7 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
         return {"version": self._cur}
 
     def partitions(self, start: dict, end: dict):
-        from ..operators.lakehouse import load_manifest
+        from ..operators.lakehouse import load_manifest, plan_diff
 
         lo, hi = start["version"], end["version"]
         if hi < lo:
@@ -385,7 +319,6 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
             # next latestOffset resumes forward (rest_feed pattern)
             self._cur = lo
             return []
-        key_col, data_cols, types, tomb = self._meta
         parts = []
         for v in range(lo, hi):
             try:
@@ -397,59 +330,18 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
                     f"but it was vacuumed past retention at {self._base}; "
                     "restart the stream from a retained start_version"
                 ) from ex
-            d_from_all = m_from.get("delete_files") or {}
-            d_to_all = m_to.get("delete_files") or {}
-            v_from_all = m_from.get("dv_files") or {}
-            v_to_all = m_to.get("dv_files") or {}
-            # a file's birth version is invariant; union the two sides'
-            # records so each bucket task ships only its own files' rows
-            fv_all = {
-                **(m_from.get("file_versions") or {}),
-                **(m_to.get("file_versions") or {}),
-            }
-            kept_from = kept_to = None
             if self._band is not None:
-                from ..operators.lakehouse import plan_files
-
-                where = ("between", *self._band)
-                kept_from = set(plan_files(None, m_from, where)[0])
-                kept_to = set(plan_files(None, m_to, where)[0])
-            for b in sorted(set(m_from["buckets"]) | set(m_to["buckets"])):
-                f_from = m_from["buckets"].get(b, [])
-                f_to = m_to["buckets"].get(b, [])
-                if kept_from is not None:
-                    # stats pruning is sound here because the diff is
-                    # over the BAND-VISIBLE state: a file provably out
-                    # of band holds no band-visible row on its side
-                    f_from = [f for f in f_from if f in kept_from]
-                    f_to = [f for f in f_to if f in kept_to]
-                d_from = d_from_all.get(b, [])
-                d_to = d_to_all.get(b, [])
-                dv_from = v_from_all.get(b, [])
-                dv_to = v_to_all.get(b, [])
-                # manifest pruning: identical data-file AND delete-
-                # sidecar sets (equality keys AND deletion vectors)
-                # cannot hold a logical change
-                if f_from != f_to or d_from != d_to or dv_from != dv_to:
-                    parts.append(
-                        _StepBucketDiff(
-                            f_from, f_to, v + 1,
-                            key_col, data_cols, types, tomb,
-                            d_from, d_to,
-                            m_to.get("column_epochs"),
-                            {
-                                f: fv_all[f]
-                                for f in set(f_from) | set(f_to)
-                                if f in fv_all
-                            },
-                            dv_from, dv_to,
-                            self._band,
-                        )
-                    )
+                m_from, m_to = (
+                    _band_files(m, self._band) for m in (m_from, m_to)
+                )
+            parts += [
+                _StepBucketDiff(self._meta, old, new, v + 1, self._band)
+                for old, new in plan_diff(m_from, m_to)
+            ]
         return parts
 
     def read(self, partition: _StepBucketDiff):
-        return _diff_bucket(partition)
+        return _diff_group(partition)
 
     def commit(self, end: dict) -> None:
         pass

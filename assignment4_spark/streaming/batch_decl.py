@@ -1422,8 +1422,8 @@ def stream_cdf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     r10 item 7). A consumer maintaining a band-filtered materialization
     (price in [lo, hi]) attaches the lakehouse_cdf source with
     ``prune_column``/``prune_lo``/``prune_hi``: partition planning
-    intersects every (commit step, changed bucket) task's file lists
-    with the per-file column statistics' band survivors — on a
+    keeps only the per-file column statistics' band survivors before
+    ``plan_diff`` forms the (commit step, diff group) tasks — on a
     price-CLUSTERED table the out-of-band files are never opened — and
     the executor diff runs over the BAND-VISIBLE state, so change_type
     is relative to the band (a row crossing INTO the band surfaces as
@@ -1488,7 +1488,7 @@ def stream_cdf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         r = LakehouseCDFStreamReader({"path": base_dir,
                                       "start_version": "1", **opts})
         parts = r.partitions({"version": 1}, {"version": 3})
-        return sum(len(p.files_from) + len(p.files_to) for p in parts)
+        return sum(len(p.old["files"]) + len(p.new["files"]) for p in parts)
 
     n_all = shipped({})
     n_band = shipped({

@@ -904,6 +904,87 @@ def test_dirty_typed_tombstone_marker_roundtrips(spark, tmp_path):
     d = {r.k: r.change_type for r in changes_between(spark, base, 1, 2).collect()}
     assert d == {7: "delete"}
 
+    # string markers read as cast(string AS boolean) does: trimmed,
+    # case-insensitive "false"/"0" are visible, "TRUE"/"1" hidden
+    base = _string_marker_table(spark, tmp_path)
+    assert sorted(r.k for r in read_snapshot(spark, base).collect()) == [
+        0, 1, 2, 5,
+    ]
+    d = {r.k: r.change_type for r in changes_between(spark, base, 1, 2).collect()}
+    assert d == {1: "update", 2: "update", 3: "delete"}
+
+
+def _string_marker_table(spark, tmp_path):
+    """v1: keys 0-5 under string tombstone markers (4 hidden); v2:
+    keys 1/2 updated under markers "false"/" 0", keys 3/4 hidden under
+    "TRUE"/"1"."""
+    from assignment4_spark.operators.lakehouse import TOMBSTONE_COL
+
+    base = str(tmp_path / "str_marker")
+    schema = f"k long, ver int, payload string, {TOMBSTONE_COL} string"
+    init_table(
+        spark.createDataFrame(
+            [(0, 1, "p0", "f"), (1, 1, "p1", "false"), (2, 1, "p2", "no"),
+             (3, 1, "p3", "0"), (4, 1, "p4", "yes"), (5, 1, "p5", None)],
+            schema,
+        ),
+        base, key_col="k", n_buckets=2,
+    )
+    merge_upsert_manifest(
+        base,
+        spark.createDataFrame(
+            [(1, 2, "u1", "false"), (2, 2, "u2", " 0"),
+             (3, 2, "u3", "TRUE"), (4, 2, "u4", "1")],
+            schema,
+        ),
+        "ver", "payload",
+    )
+    return base
+
+
+def _assert_cdf_reader_matches(spark, base, v, why=""):
+    """The lakehouse_cdf reader's rows for step v-1 → v (its own
+    partitions() + read(), schema pinned at v) equal changes_between's
+    plus ``_commit_version``."""
+    from assignment4_spark.operators.lakehouse import changes_between
+    from assignment4_spark.sources.lakehouse_cdf import (
+        LakehouseCDFStreamReader,
+    )
+
+    rd = LakehouseCDFStreamReader({"path": base, "start_version": v - 1})
+    got = [
+        row
+        for part in rd.partitions({"version": v - 1}, {"version": v})
+        for row in rd.read(part)
+    ]
+    want = [(*r, v) for r in changes_between(spark, base, v - 1, v).collect()]
+    assert sorted(got, key=repr) == sorted(want, key=repr), why
+
+
+@pytest.mark.parametrize("case", ["new_bucket", "rebucket", "string_marker"])
+def test_cdf_reader_matches_changes_between(spark, tmp_path, case):
+    """The CDF stream reader and changes_between share one planner
+    (plan_diff) and one set of visibility rules: a merge into buckets
+    that had no files (no tombstone column at all), a 4→8 rebucket
+    (keys move between buckets: a logical no-op) and string tombstone
+    markers each diff identically on both sides."""
+    from assignment4_spark.operators.lakehouse import rebucket_table
+
+    if case == "string_marker":
+        base = _string_marker_table(spark, tmp_path)
+    else:
+        base = _mk_table(
+            spark, tmp_path, n=1 if case == "new_bucket" else 40,
+            n_buckets=16 if case == "new_bucket" else 4,
+        )
+        if case == "new_bucket":
+            merge_upsert_manifest(
+                base, _upd(spark, range(100, 110), 2, "n"), "ver", "payload"
+            )
+        else:
+            rebucket_table(spark, base, 8)
+    _assert_cdf_reader_matches(spark, base, latest_version(base), case)
+
 
 def test_evolution_rejects_internal_column_collision(spark, tmp_path):
     """evolve_schema=True must reject a new column named after an
@@ -3215,6 +3296,9 @@ def test_optimize_coalesces_mor_sidecars(spark, tmp_path):
         ).count()
         == 0
     ), "metadata-only coalesce must produce an empty CDF"
+    # the protocol fuzz's seeds reach no committing optimize, so the
+    # stream reader's optimize step is compared here
+    _assert_cdf_reader_matches(spark, base, res["version"], "optimize")
     # idempotent: nothing left to do -> no new commit
     res2 = optimize_compact(spark, base)
     assert res2["version"] == res["version"]
@@ -3309,7 +3393,10 @@ def test_protocol_model_fuzz(spark, tmp_path, seed):
     semantics; after EVERY step the visible snapshot must equal the
     model exactly. Individual tests pin each pairwise interaction —
     this pins the whole matrix (e.g. a MOR delete pending across a
-    rebucket that follows a tombstone compact after a column drop)."""
+    rebucket that follows a tombstone compact after a column drop).
+    After every commit the lakehouse_cdf stream reader's rows for the
+    step must equal changes_between's (the reader/Spark equivalence
+    proof over the same histories)."""
     import random
 
     import copy
@@ -3548,6 +3635,11 @@ def test_protocol_model_fuzz(spark, tmp_path, seed):
             own = ("restored_from",) if op == "restore" else ()
             leaked = [k for k in _PER_COMMIT_KEYS if k in m and k not in own]
             assert not leaked, f"seed={seed} step={step}: {op} leaked {leaked}"
+            # CDF arm: the stream reader diffs the new step exactly as
+            # changes_between does
+            _assert_cdf_reader_matches(
+                spark, base, m["version"], f"seed={seed} step={step}: {op}"
+            )
         hist[latest_version(base)] = (copy.deepcopy(model), attr_live)
         check(step)
 
@@ -4511,10 +4603,13 @@ def test_manifest_watermark_exact_and_gated(spark, tmp_path):
     REFUSE (None -> Spark fallback) whenever exactness is unprovable —
     a tombstone column (hidden rows could hold the max), pending
     MOR/DV sidecars, a missing per-file stats entry, or a non-integer
-    column type (stats re-encode those)."""
+    column type (stats re-encode those). On an epoch-evolved table it
+    still answers, skipping the stats of files where the column is
+    dead."""
     from assignment4_spark.operators.lakehouse import (
         _manifest_col_max,
         delete_keys_mor,
+        drop_column,
         init_table,
         load_manifest,
         merge_upsert_manifest,
@@ -4553,11 +4648,34 @@ def test_manifest_watermark_exact_and_gated(spark, tmp_path):
     m4 = dict(m3, columns=list(m3["columns"]) + ["_deleted"])
     m4["delete_files"] = {}
     assert _manifest_col_max(m4, "ver") is None
-    # column epochs present -> must refuse (pre-epoch files hold
-    # physical values the aligned read NULLs out; stats would
-    # overestimate the visible max)
-    m5 = dict(m3, column_epochs={"ver": 2}, delete_files={})
-    assert _manifest_col_max(m5, "ver") is None
+    # a real drop + re-add of src: the probed ver column is live in
+    # every file, so the epoch-evolved table still answers exactly
+    base2 = str(tmp_path / "wm_readd")
+    init_table(seed, base2, key_col="k", n_buckets=4)
+    drop_column(base2, "src")
+    readd = spark.createDataFrame(
+        [(1, 5, "c", 1.0), (2, 5, "c", 2.0)],
+        "k int, ver int, src string, price double",
+    )
+    merge_upsert_manifest(
+        base2, readd, ver_col="ver", tiebreak_col="src", evolve_schema=True
+    )
+    m5 = load_manifest(base2)
+    assert m5["column_epochs"]["src"] > 1
+    slow = read_snapshot(spark, base2).agg(F.max("ver")).first()[0]
+    assert _manifest_col_max(m5, "ver") == slow == 5
+    # a hand-built ver epoch newer than the oldest live files: they read
+    # ver as NULL, so their stats (doctored to 99 here) are skipped
+    born = m5["file_versions"]
+    oldest = min(born, key=born.get)
+    m5["column_stats"][oldest]["ver"][1] = 99
+    assert _manifest_col_max(m5, "ver") == 99
+    m5["column_epochs"]["ver"] = born[oldest] + 1
+    assert _manifest_col_max(m5, "ver") == max(
+        m5["column_stats"][f]["ver"][1]
+        for f in born
+        if born[f] > born[oldest]
+    )
 
 
 def test_listing_threshold_raised_for_local_fs(spark):

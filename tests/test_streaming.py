@@ -870,7 +870,8 @@ def test_cdf_partition_planning_prunes_and_names_vacuum(spark, tmp_path):
     """Driver-side planning: a single-key commit plans exactly ONE
     (step, bucket) diff task — manifest pruning, no I/O for identical
     buckets; a vacuumed-away manifest inside a pending range raises
-    the named retention error, not a silent skip."""
+    the named retention error, not a silent skip; the task and file
+    counts of a small ladder are pinned with and without a band."""
     from assignment4_spark.operators.lakehouse import (
         merge_upsert_manifest,
         vacuum,
@@ -891,6 +892,24 @@ def test_cdf_partition_planning_prunes_and_names_vacuum(spark, tmp_path):
     vacuum(base, keep_last=1)  # expires v1's manifest
     with pytest.raises(RuntimeError, match="vacuumed"):
         rd.partitions({"version": 1}, {"version": 2})
+
+    # (diff tasks, shipped files) for steps 1→2 and 2→3 of the 3-version
+    # ladder, unpruned and under a val band: a planning counter that
+    # timing noise cannot fake
+    ladder = _cdc_table(spark, tmp_path / "pin")
+    band = {"prune_column": "val", "prune_lo": "0", "prune_hi": "50"}
+    for opts, want in (({}, [(6, 12), (4, 8)]), (band, [(4, 7), (3, 5)])):
+        rd = LakehouseCDFStreamReader(
+            {"path": ladder, "start_version": "1", **opts}
+        )
+        got = []
+        for v in (1, 2):
+            parts = rd.partitions({"version": v}, {"version": v + 1})
+            got.append((
+                len(parts),
+                sum(len(p.old["files"]) + len(p.new["files"]) for p in parts),
+            ))
+        assert got == want, (opts, got)
 
 
 def test_stream_cdf_materialize_exactly_once_replay(spark, tmp_path):
@@ -1264,7 +1283,7 @@ def test_stream_cdf_band_pruned_planning_and_equivalence(spark, tmp_path):
             {"path": base, "start_version": "1", **opts}
         )
         parts = r.partitions({"version": 1}, {"version": 3})
-        return sum(len(p.files_from) + len(p.files_to) for p in parts)
+        return sum(len(p.old["files"]) + len(p.new["files"]) for p in parts)
 
     n_all = shipped({})
     n_band = shipped({"prune_column": "val", "prune_lo": str(lo),
