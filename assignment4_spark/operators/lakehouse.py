@@ -452,73 +452,84 @@ def _staging_path(base_dir: str, prefix: str, version: int, writer_id: str,
 def _write_clustered(
     df: DataFrame,
     staging: str,
-    key_col: str | None = None,
-    salt: int = 1,
-    n_buckets: int | None = None,
+    key_col: str | None,
+    salt: int,
+    n_buckets: int,
     cluster_col: str | None = None,
     cluster_bins: int = 4,
     latest_wins: tuple[str, str] | None = None,
 ) -> None:
-    """Commit write shared by init / merge / compact / rebucket:
-    repartition on bucket BEFORE the partitioned write. Without it
-    every upstream task opens a writer per bucket it holds —
-    O(tasks × buckets) small files per commit (measured: 32-task local
-    runs left 20-30 files in a single bucket), the classic lakehouse
-    file explosion; clustered, the commit leaves O(buckets) files and
-    every later bucket-pruned read opens proportionally fewer footers.
+    """Commit write shared by init / merge / compact / optimize /
+    replaceWhere / rebucket: route every row to its write task BEFORE
+    the ``partitionBy("bucket")`` sink. Without routing every upstream
+    task opens a writer per bucket it holds — O(tasks × buckets) small
+    files per commit (measured: 32-task local runs left 20-30 files in
+    a single bucket), the classic lakehouse file explosion; routed, the
+    commit leaves O(buckets) files and every later bucket-pruned read
+    opens proportionally fewer footers.
+
+    Routing is exact, not hashed (``repartitionById``, see
+    ``_route_slots``): each row gets a SLOT ``sub * n_buckets +
+    bucket``, and contiguous runs of ``chunk = min(n_buckets,
+    ceil(slots / defaultParallelism))`` slots go to one task, so the
+    write runs ``max(defaultParallelism, n_subs)`` tasks at most
+    (``n_subs`` sub-slots per bucket). ``chunk <= n_buckets`` means no
+    task ever holds two sub-slots of one bucket, so the sink writes
+    exactly one file per non-empty (bucket, sub-slot).
 
     ``salt > 1`` is the hot-bucket escape hatch: once one bucket's
     incoming rows outgrow what a single task should absorb (a skewed
-    update batch hammering one key range), clustering on bucket alone
-    serializes that bucket's write through one task. Salting the
-    repartition key with pmod(xxhash64(key), salt) spreads it over up
-    to ``salt`` tasks while keeping the commit's file count bounded at
-    O(buckets × salt) — a deliberate, bounded trade of files for write
-    parallelism (callers size it ≈ ceil(hot-bucket rows / rows a task
-    should write); the salt is derived from the KEY, so it is
-    deterministic and replay-stable, never round-robin).
+    update batch hammering one key range), a bucket-only sub-slot
+    serializes that bucket's write through one task. The sub-slot
+    pmod(xxhash64(key), salt) spreads it over ``salt`` tasks while
+    keeping the commit's file count bounded at O(buckets × salt) — a
+    deliberate, bounded trade of files for write parallelism (callers
+    size it ≈ ceil(hot-bucket rows / rows a task should write); the
+    salt is derived from the KEY, so it is deterministic and
+    replay-stable, never round-robin).
 
     ``cluster_col`` (zorder-lite, set table-wide at init and
     maintained by every commit path) range-bins each bucket's rows by
     the column's value — ``width_bucket`` over the batch's global
-    (min, max), one file per (bucket, bin), rows sorted within — so
-    every file covers a VALUE SLICE of the cluster column and the
-    manifest's per-file (min, max) stats give range reads real
-    file-level skipping (a hash bucket's single file otherwise spans
-    the full value range and no secondary-column stat can ever prune
-    it). File count is the same bounded O(buckets × bins) trade as
-    salting; the bin term already restores intra-bucket write
-    parallelism, so cluster_col supersedes salt when both are set.
-    Uniform bins are the 'lite' part — Delta's OPTIMIZE ZORDER uses
-    range partitioning over sampled quantiles; at fixture scale
-    uniform slices skip just as provably.
+    (min, max), the ``hi`` edge folded into the last bin, NULLs in one
+    extra bin — and sorts rows within, so every file covers a VALUE
+    SLICE of the cluster column and the manifest's per-file (min, max)
+    stats give range reads real file-level skipping (a hash bucket's
+    single file otherwise spans the full value range and no
+    secondary-column stat can ever prune it). A commit leaves at most
+    ``cluster_bins`` files per bucket, plus one for NULLs; the bin term
+    already restores intra-bucket write parallelism, so cluster_col
+    supersedes salt when both are set. Uniform bins are the 'lite'
+    part — Delta's OPTIMIZE ZORDER uses range partitioning over
+    sampled quantiles; at fixture scale uniform slices skip just as
+    provably.
 
     ``latest_wins=(ver_col, tiebreak_col)`` FUSES the merge path's
-    per-key winner selection into the clustered write's own exchange
+    per-key winner selection into the routed write's own exchange
     (guide §2.4 — two operations keyed the same way share one
-    exchange): the bucket is pmod(xxhash64(key), B), a pure function
-    of the key, so hash-partitioning on the bucket already co-locates
-    every row of a key, and a window PARTITION BY (bucket, key) ORDER
-    BY (ver DESC, tiebreak) needs NO second shuffle on top of it —
-    Catalyst proves HashPartitioning([bucket]) satisfies
-    ClusteredDistribution([bucket, key]). The unfused form (window by
-    key, then repartition by bucket) shuffles the merged data TWICE;
-    at 100 TB that is a full extra network pass of every commit's
-    bytes. The winner is identical by construction: within a key,
-    PARTITION BY key and PARTITION BY (bucket, key) define the same
-    groups. Only the plain and salted paths fuse — under
+    exchange): the slot is a pure function of the key (bucket =
+    pmod(xxhash64(key), B), salt likewise), so routing already
+    co-locates every row of a key, and a window PARTITION BY (bucket,
+    task, key) ORDER BY (ver DESC, tiebreak) needs NO second shuffle
+    on top of it — Catalyst proves the routed exchange satisfies a
+    ClusteredDistribution that contains the task expression. The
+    unfused form (window by key, then route) shuffles the merged data
+    TWICE; at 100 TB that is a full extra network pass of every
+    commit's bytes. The winner is identical by construction: within a
+    key, PARTITION BY key and PARTITION BY (bucket, task, key) define
+    the same groups. Only the plain and salted paths fuse — under
     ``cluster_col`` a key's rows can land in different range bins, so
     the caller pre-dedups there (and this function refuses the
     combination loudly rather than silently double-shuffling)."""
     spark = df.sparkSession
     # AQE bypass for the commit write only (restored in the finally):
-    # the staged write's partitioning is fully user-pinned — an
-    # explicit repartition on the bucket expression feeding a
-    # partitionBy(bucket) sink — so adaptive re-planning has nothing
-    # to decide, while its per-exchange stage-materialization barrier
-    # costs a driver re-optimization round per commit (measured
-    # paired on merge_upsert at sf0.1: ~0.25 s per commit write,
-    # ~20% of the op). File counts are unchanged: partitionBy splits
+    # the staged write's partitioning is fully user-pinned — rows
+    # routed to exact task ids feeding a partitionBy(bucket) sink —
+    # so adaptive re-planning has nothing to decide, while its
+    # per-exchange stage-materialization barrier costs a driver
+    # re-optimization round per commit (measured paired on
+    # merge_upsert at sf0.1: ~0.25 s per commit write, ~20% of the
+    # op). File counts are unchanged: partitionBy splits
     # per bucket value regardless of task count. On a cluster where
     # staged batches are large enough that writer-task right-sizing
     # matters more than commit latency, export
@@ -528,9 +539,14 @@ def _write_clustered(
     if toggled:
         _aqe_off_enter(spark)
     try:
-        _write_clustered_body(
-            df, staging, key_col, salt, n_buckets, cluster_col,
-            cluster_bins, latest_wins,
+        (
+            _route_slots(
+                df, key_col, salt, n_buckets, cluster_col, cluster_bins,
+                latest_wins,
+            )
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(staging)
         )
     finally:
         if toggled:
@@ -582,100 +598,83 @@ def _aqe_off_exit(spark: SparkSession) -> None:
                 pass
 
 
-def _write_clustered_body(
+def _route_slots(
     df: DataFrame,
-    staging: str,
     key_col: str | None,
     salt: int,
-    n_buckets: int | None,
+    n_buckets: int,
     cluster_col: str | None,
     cluster_bins: int,
     latest_wins: tuple[str, str] | None = None,
-) -> None:
+) -> DataFrame:
+    """The commit write's input routed to its write tasks (the rule is
+    in _write_clustered's docstring): slot ``sub * n_buckets +
+    bucket``, task ``slot // chunk``. ``sub`` is the range bin under
+    ``cluster_col``, the key's salt when ``salt > 1``, else 0."""
     if cluster_col is not None:
-        if n_buckets is None:
-            raise ValueError("cluster-binned write requires n_buckets")
         if latest_wins is not None:
             raise ValueError(
                 "latest_wins cannot fuse into a cluster-binned write "
                 "(a key's rows span range bins); pre-dedup the input"
             )
-        # the bin bounds pay a full pass over df before the write can
-        # even plan, so cluster-binned commits compute their input
-        # lineage twice. A persist(MEMORY_AND_DISK) between the two was
-        # tried and measured SLOWER (paired, +0.5-2 s per clustered
-        # face): DataFrame persist materializes a compressed columnar
+        # one job before the write plans: the batch's value range and
+        # whether it holds NULLs (the bins' edges and count). The job
+        # recomputes df's lineage; a persist(MEMORY_AND_DISK) between
+        # the two was tried and measured SLOWER (paired, +0.5-2 s per
+        # clustered face): DataFrame persist materializes a compressed columnar
         # InMemoryRelation, which costs more than re-running the
         # bucket-pruned read + window at fixture scale. Left as
         # recompute deliberately; at cluster scale the trade reverses
         # only when the rewrite lineage is much wider than the cache.
+        c = F.col(cluster_col)
         bounds = df.agg(
-            F.min(cluster_col).alias("lo"), F.max(cluster_col).alias("hi")
+            F.min(c).alias("lo"), F.max(c).alias("hi"),
+            (F.count(F.lit(1)) > F.count(c)).alias("has_null"),
         ).first()
         lo, hi = bounds.lo, bounds.hi
-        if lo is None or lo == hi:
-            bin_expr = F.lit(1)
+        bins = 1 if lo is None or lo == hi else cluster_bins
+        if bins == 1:
+            value_bin = F.lit(0)
         else:
-            bin_expr = F.width_bucket(
-                F.col(cluster_col).cast("double"),
-                F.lit(float(lo)), F.lit(float(hi)), F.lit(cluster_bins),
-            )
-        clustered = df.repartition(
-            n_buckets * cluster_bins, F.col("bucket"), bin_expr
-        ).sortWithinPartitions(cluster_col)
-    elif salt > 1:
-        if key_col is None or n_buckets is None:
-            raise ValueError(
-                "salted clustered write requires key_col and n_buckets"
-            )
-        # the extra literal DE-CORRELATES the salt hash from the bucket
-        # hash: bucket = pmod(xxhash64(key), B), so pmod(xxhash64(key),
-        # salt) would be constant within a bucket whenever salt | B —
-        # exactly the hot-bucket case the salt exists for. The explicit
-        # partition count matters too: a bare repartition(cols) leaves
-        # AQE free to coalesce the salt groups back into one task
-        # whenever they sit under the advisory size (measured: 4 salt
-        # groups -> 1 task -> 1 file at fixture scale), whereas the
-        # user-specified count pins the fan-out the salt exists to buy
-        salt_expr = F.pmod(
-            F.xxhash64(F.col(key_col), F.lit("salt")), F.lit(salt)
-        )
-        clustered = df.repartition(
-            n_buckets * salt, F.col("bucket"), salt_expr
-        )
-        if latest_wins is not None:
-            # same-key rows share (bucket, salt) — both are functions
-            # of the key — so the fused window partitions by (bucket,
-            # salt, key): a superset of the exchange's hash exprs,
-            # which is exactly what lets Catalyst reuse it (see
-            # _write_clustered docstring)
-            clustered = _fused_latest_wins(
-                clustered, [F.col("bucket"), salt_expr, F.col(key_col)],
-                latest_wins,
-            )
-    elif n_buckets is not None:
-        # the exchange hashes on the bucket expression ALONE, so its
-        # effective parallelism is <= n_buckets at any scale — the
-        # default spark.sql.shuffle.partitions count just adds
-        # guaranteed-empty tasks to both stages (at fixture scale,
-        # 16 - n_buckets task launches per commit for nothing; on a
-        # cluster, thousands). Pin the exchange to n_buckets.
-        clustered = df.repartition(n_buckets, F.col("bucket"))
-        if latest_wins is not None:
-            clustered = _fused_latest_wins(
-                clustered, [F.col("bucket"), F.col(key_col)], latest_wins
-            )
+            # width_bucket puts v == hi into bin bins + 1; least folds
+            # that edge into the last bin
+            value_bin = F.least(
+                F.width_bucket(
+                    c.cast("double"), F.lit(float(lo)), F.lit(float(hi)),
+                    F.lit(bins),
+                ),
+                F.lit(bins),
+            ) - 1
+        sub = F.when(c.isNull(), F.lit(bins)).otherwise(value_bin)
+        n_subs = bins + int(bounds.has_null)
     else:
-        clustered = df.repartition(F.col("bucket"))
-        if latest_wins is not None:
-            clustered = _fused_latest_wins(
-                clustered, [F.col("bucket"), F.col(key_col)], latest_wins
-            )
-    (
-        clustered.write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(staging)
-    )
+        if salt > 1 and key_col is None:
+            raise ValueError("salted clustered write requires key_col")
+        # the extra literal DE-CORRELATES the salt hash from the
+        # bucket hash: bucket = pmod(xxhash64(key), B), so
+        # pmod(xxhash64(key), salt) would be constant within a bucket
+        # whenever salt | B — exactly the hot-bucket case the salt
+        # exists for
+        n_subs = salt
+        sub = (
+            F.pmod(F.xxhash64(F.col(key_col), F.lit("salt")), F.lit(salt))
+            if salt > 1
+            else F.lit(0)
+        )
+    n_slots = n_subs * n_buckets
+    task_slots = df.sparkSession.sparkContext.defaultParallelism
+    chunk = min(n_buckets, -(-n_slots // task_slots))
+    task = ((sub * n_buckets + F.col("bucket")) / chunk).cast("int")
+    routed = df.repartitionById(-(-n_slots // chunk), task)
+    if latest_wins is not None:
+        # bucket leads so the window's sort also satisfies the sink's
+        # partitionBy(bucket) ordering (no second sort)
+        routed = _fused_latest_wins(
+            routed, [F.col("bucket"), task, F.col(key_col)], latest_wins
+        )
+    if cluster_col is not None:
+        routed = routed.sortWithinPartitions("bucket", cluster_col)
+    return routed
 
 
 def _fused_latest_wins(
@@ -684,7 +683,7 @@ def _fused_latest_wins(
     latest_wins: tuple[str, str],
 ) -> DataFrame:
     """Per-key latest-wins winner selection ON TOP of the commit
-    write's bucket exchange (one shuffle total — see _write_clustered's
+    write's routed exchange (one shuffle total — see _write_clustered's
     docstring for why the grouping is identical to PARTITION BY key
     and why no second exchange is planned)."""
     ver_col, tiebreak_col = latest_wins
@@ -3078,10 +3077,10 @@ def merge_upsert_manifest(
         ccol = snap.get("cluster_col")
         if ccol is None:
             # latest-wins winner selection FUSED into the write's
-            # bucket exchange: one shuffle of the commit's bytes
-            # instead of two (window-by-key, then
-            # repartition-by-bucket) — guide §2.4; grouping
-            # equivalence argued in _write_clustered's docstring
+            # routed exchange: one shuffle of the commit's bytes
+            # instead of two (window-by-key, then route) — guide
+            # §2.4; grouping equivalence argued in _write_clustered's
+            # docstring
             _write_clustered(
                 unioned, staging, key_col, write_salt, n_buckets,
                 None, snap.get("cluster_bins", 4),

@@ -40,7 +40,8 @@ def _listing_threshold() -> str:
     (~10-100 ms per stat); on a local filesystem a stat is ~10 µs, so
     the listing job's fixed cost (~0.1-0.4 s scheduling floor) can
     never win below ~10^4 paths — yet every >32-file snapshot read
-    (cluster-binned tables are 64 files) pays it. Applied to LOCAL
+    pays it (a cluster-binned table holds up to n_buckets ×
+    cluster_bins files: 128 for 32 buckets × 4 bins). Applied to LOCAL
     masters only; a cluster deployment's own threshold stands."""
     return os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "4096")
 

@@ -1,7 +1,8 @@
-"""Capture the INTERIOR commit-write plan (fused vs two-step) —
-the declared queries' returned frames cannot show the staging write's
-plan, so this script materializes both forms over a real table's merge
-input shape and writes them to plans/r{N}/.
+"""Capture the INTERIOR commit-write plans (fused vs two-step merge
+write, and the cluster-binned write) — the declared queries' returned
+frames cannot show the staging write's plan, so this script builds the
+forms over a real table's merge input shape and writes them to
+plans/r{N}/.
 
 Usage::
 
@@ -37,7 +38,7 @@ def main() -> None:
             (F.col("id") % 3000).alias("k"),
             (F.col("id") % 7).alias("ver"),
             F.col("id").alias("tb"),
-            (F.col("id") * 2).alias("val"),
+            (F.col("id") * 2).cast("double").alias("val"),
         )
         .withColumn("bucket", lh._bucket_of("k", 16))
     )
@@ -54,11 +55,9 @@ def main() -> None:
         .drop("rn")
         .repartition(16, F.col("bucket"))
     )
-    fused = lh._fused_latest_wins(
-        df.repartition(16, F.col("bucket")),
-        [F.col("bucket"), F.col("k")],
-        ("ver", "tb"),
-    )
+    fused = lh._route_slots(df, "k", 1, 16, None, 4, ("ver", "tb"))
+    # a 4-bin write over 16 buckets: runs the bin-bounds job now
+    binned = lh._route_slots(df, "k", 1, 16, "val", 4)
     with open(
         os.path.join(out_dir, "interior_commit_write_before.txt"), "w"
     ) as f:
@@ -71,11 +70,20 @@ def main() -> None:
         os.path.join(out_dir, "interior_commit_write_after.txt"), "w"
     ) as f:
         f.write(
-            "# merge commit write, r12 fused form: latest-wins window\n"
-            "# PARTITION BY (bucket, key) rides the write's own bucket\n"
-            "# exchange - ONE Exchange (HashPartitioning([bucket])\n"
-            "# satisfies ClusteredDistribution([bucket, key]))\n"
+            "# merge commit write, fused form: latest-wins window\n"
+            "# PARTITION BY (bucket, task, key) rides the write's own\n"
+            "# routed exchange - ONE Exchange (the task-id pass-through\n"
+            "# satisfies ClusteredDistribution([bucket, task, key]))\n"
             + fmt(fused)
+        )
+    with open(
+        os.path.join(out_dir, "interior_commit_write_clustered.txt"), "w"
+    ) as f:
+        f.write(
+            "# cluster-binned commit write: each (bucket, bin) slot\n"
+            "# routed to one of ~defaultParallelism tasks by id - ONE\n"
+            "# Exchange, then a sort by (bucket, cluster col) that the\n"
+            "# partitionBy(bucket) sink reuses\n" + fmt(binned)
         )
     print("captured interior commit write plans", file=sys.stderr)
     spark.stop()

@@ -1,10 +1,12 @@
-"""Exact Spark-job count per registered op (deterministic evidence the
-shared box's timing noise cannot fake): each op runs once warm inside
-its own job group; the group's job-id list length IS the op's job
-count.
+"""Exact Spark-job and task counts per registered op (deterministic
+evidence the shared box's timing noise cannot fake): each op runs once
+warm inside its own job group; the group's job-id list length IS the
+op's job count, and the tasks its stages ran (a skipped stage runs
+none) are its task count.
 
 Usage: python scripts/count_jobs.py <op> [<op> ...]
-Prints one JSON line: {"op": n_jobs, ...}
+Prints two JSON lines: JOBS {"op": n_jobs, ...} and
+TASKS {"op": n_tasks, ...}
 """
 
 from __future__ import annotations
@@ -22,6 +24,22 @@ from assignment4_spark.session import get_spark  # noqa: E402
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def group_tasks(tracker, jobs) -> int:
+    """Tasks run by the stages of ``jobs``; a stage shared by several
+    jobs counts once."""
+    stages = {
+        s
+        for j in jobs
+        if (info := tracker.getJobInfo(j))
+        for s in info.stageIds
+    }
+    return sum(
+        info.numCompletedTasks
+        for s in stages
+        if (info := tracker.getStageInfo(s))
+    )
+
+
 def main() -> None:
     ops = sys.argv[1:]
     registry.load_all()
@@ -29,6 +47,7 @@ def main() -> None:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     out: dict[str, int] = {}
+    tasks: dict[str, int] = {}
     for op in ops:
         registry.QUERIES[op](spark, SF).count()  # warm (first-touch pools)
         spark.catalog.clearCache()
@@ -38,9 +57,12 @@ def main() -> None:
             registry.QUERIES[op](spark, SF).count()
         finally:
             sc.setJobGroup(None, None)
-        out[op] = len(tracker.getJobIdsForGroup(group))
+        jobs = tracker.getJobIdsForGroup(group)
+        out[op] = len(jobs)
+        tasks[op] = group_tasks(tracker, jobs)
         spark.catalog.clearCache()
     print("JOBS " + json.dumps(out))
+    print("TASKS " + json.dumps(tasks))
     spark.stop()
 
 

@@ -1434,6 +1434,123 @@ def test_clustered_commit_file_count_bounded(spark, tmp_path):
     assert n_files >= 8, f"binning must actually split buckets, got {n_files}"
 
 
+def test_clustered_commit_layout_and_task_budget(spark, tmp_path):
+    """Exact-slot routing of the cluster-binned write: after an init, a
+    merge touching 2 of 4 buckets and an optimize, each bucket holds
+    one file per distinct bin of the commit that wrote it, with
+    disjoint price ranges; the snapshot equals a latest-wins model; and
+    each commit's write stage runs at most max(defaultParallelism, 4)
+    tasks, the routing rule's bound for 4 bins, plus one of slack (a
+    hash exchange over buckets x bins runs 16)."""
+    import uuid
+
+    from assignment4_spark.operators.lakehouse import (
+        _bucket_of,
+        optimize_compact,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    budget = max(sc.defaultParallelism, 4) + 1
+    base = str(tmp_path / "tbl")
+    bucket_of = {
+        r.k: r.b
+        for r in spark.range(600)
+        .select(F.col("id").alias("k"), _bucket_of("id", 4).alias("b"))
+        .collect()
+    }
+    model = {k: (1, k * 10.0) for k in range(400)}
+
+    def commit(fn):
+        group = f"layout-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "commit")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        # each job's final stage: the write job's is the write stage;
+        # the others' are input scans or 1-task aggregates
+        final = [
+            tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds))
+            for j in tracker.getJobIdsForGroup(group)
+        ]
+        tasks = [st.numTasks for st in final]
+        assert tasks and max(tasks) <= budget, (tasks, budget)
+        return out
+
+    def check(written):
+        got = sorted(
+            tuple(r)
+            for r in read_snapshot(spark, base).select("k", "ver", "price")
+            .collect()
+        )
+        assert got == sorted((k, *v) for k, v in model.items())
+        # the commit binned its own rows over their (min, max)
+        prices = [p for k, (_, p) in model.items() if bucket_of[k] in written]
+        lo, hi = min(prices), max(prices)
+        bins = {
+            r.b: r.n
+            for r in spark.createDataFrame(
+                [(bucket_of[k], p) for k, (_, p) in model.items()],
+                "b int, price double",
+            )
+            .filter(F.col("b").isin(list(written)))
+            .groupBy("b")
+            .agg(
+                F.countDistinct(
+                    F.least(
+                        F.width_bucket(
+                            "price", F.lit(lo), F.lit(hi), F.lit(4)
+                        ),
+                        F.lit(4),
+                    )
+                ).alias("n")
+            )
+            .collect()
+        }
+        m = load_manifest(base)
+        for b, fs in m["buckets"].items():
+            spans = sorted(tuple(m["column_stats"][f]["price"]) for f in fs)
+            assert all(a[1] < c[0] for a, c in zip(spans, spans[1:])), spans
+            if int(b) in written:
+                assert len(fs) == bins[int(b)], (b, len(fs), bins)
+
+    commit(
+        lambda: init_table(
+            spark.createDataFrame(
+                [(k, v, p) for k, (v, p) in model.items()],
+                "k long, ver int, price double",
+            ),
+            base, key_col="k", n_buckets=4, cluster_col="price",
+            cluster_bins=4,
+        )
+    )
+    check({0, 1, 2, 3})
+
+    touched = {0, 1}
+    upd = {
+        k: (2, k * 10.0 + 5)
+        for k in range(0, 600, 3)
+        if bucket_of[k] in touched
+    }
+    commit(
+        lambda: merge_upsert_manifest(
+            base,
+            spark.createDataFrame(
+                [(k, v, p) for k, (v, p) in upd.items()],
+                "k long, ver int, price double",
+            ),
+            "ver", "price",
+        )
+    )
+    model.update(upd)
+    check(touched)
+
+    out = commit(lambda: optimize_compact(spark, base, max_files_per_bucket=2))
+    assert out["buckets_optimized"], "every bucket holds > 2 bins"
+    check(set(out["buckets_optimized"]))
+
+
 def _mk_wide_table(spark, tmp_path, n=100, n_buckets=8):
     base = str(tmp_path / "wtbl")
     df = spark.range(n).select(
@@ -2773,13 +2890,16 @@ def test_optimize_preserves_cluster_layout_and_stats(spark, tmp_path):
         ),
         "ver", "price", write_salt=4,
     )
-    out = optimize_compact(spark, base, max_files_per_bucket=4)
+    # each commit leaves at most one file per (bucket, bin), so a
+    # bucket holds at most 4 files: only a threshold below that gives
+    # the optimize work
+    out = optimize_compact(spark, base, max_files_per_bucket=2)
     assert out["version"] == 3 and out["buckets_optimized"]
     m = load_manifest(base, 3)
     for b in out["buckets_optimized"]:
-        # clustered steady-state: one file per bin (+1 for the
-        # width_bucket hi-edge overflow bin), never unbounded splinters
-        assert 1 <= len(m["buckets"][str(b)]) <= 5
+        # clustered steady-state: at most one file per bin (the hi edge
+        # folds into the last bin), never unbounded splinters
+        assert 1 <= len(m["buckets"][str(b)]) <= 4
         for f in m["buckets"][str(b)]:
             assert "price" in m["column_stats"].get(f, {}), (
                 "fresh stats must cover new files"
@@ -4337,7 +4457,9 @@ def test_footer_stats_parity_with_spark_pass(spark, tmp_path):
         "dt date, ts timestamp, dead string",
     )
     staging = str(tmp_path / "staged")
-    _write_clustered(df.withColumn("bucket", _bucket_of("k", 4)), staging)
+    _write_clustered(
+        df.withColumn("bucket", _bucket_of("k", 4)), staging, "k", 1, 4
+    )
 
     types = _column_types(df)
     eligible = sorted(
@@ -4682,7 +4804,8 @@ def test_listing_threshold_raised_for_local_fs(spark):
     """Local sessions must not launch a distributed listing job for
     every >32-file snapshot read: on a local filesystem a path stat is
     ~10 us, so the job's fixed scheduling floor can never win at the
-    file counts manifests produce (cluster tables are 64 files). The
+    file counts manifests produce (a cluster-binned table holds up to
+    n_buckets x cluster_bins files: 128 for 32 buckets x 4 bins). The
     threshold is env-overridable and applied to local masters only."""
     assert int(
         spark.conf.get(
