@@ -459,8 +459,9 @@ def _write_clustered(
     cluster_bins: int = 4,
     latest_wins: tuple[str, str] | None = None,
 ) -> None:
-    """Commit write shared by init / merge / compact / optimize /
-    replaceWhere / rebucket: route every row to its write task BEFORE
+    """The commit write of ``_stage_rewrite`` (every face that rewrites
+    buckets: init / merge / compact / optimize / replaceWhere /
+    rebucket): route every row to its write task BEFORE
     the ``partitionBy("bucket")`` sink. Without routing every upstream
     task opens a writer per bucket it holds — O(tasks × buckets) small
     files per commit (measured: 32-task local runs left 20-30 files in
@@ -504,10 +505,11 @@ def _write_clustered(
     sampled quantiles; at fixture scale uniform slices skip just as
     provably.
 
-    ``latest_wins=(ver_col, tiebreak_col)`` FUSES the merge path's
-    per-key winner selection into the routed write's own exchange
-    (guide §2.4 — two operations keyed the same way share one
-    exchange): the slot is a pure function of the key (bucket =
+    ``latest_wins=(ver_col, tiebreak_col)`` keeps one row per key, the
+    highest ``ver_col`` (ties to the lowest ``tiebreak_col``). On the
+    plain and salted paths the window FUSES into the routed write's
+    own exchange (guide §2.4 — two operations keyed the same way share
+    one exchange): the slot is a pure function of the key (bucket =
     pmod(xxhash64(key), B), salt likewise), so routing already
     co-locates every row of a key, and a window PARTITION BY (bucket,
     task, key) ORDER BY (ver DESC, tiebreak) needs NO second shuffle
@@ -517,27 +519,23 @@ def _write_clustered(
     TWICE; at 100 TB that is a full extra network pass of every
     commit's bytes. The winner is identical by construction: within a
     key, PARTITION BY key and PARTITION BY (bucket, task, key) define
-    the same groups. Only the plain and salted paths fuse — under
-    ``cluster_col`` a key's rows can land in different range bins, so
-    the caller pre-dedups there (and this function refuses the
-    combination loudly rather than silently double-shuffling)."""
+    the same groups. Under ``cluster_col`` a key's rows can land in
+    different range bins, so the window runs by key BEFORE routing
+    (and before the bin-bounds job, so the bins span the winners
+    only).
+
+    The write runs with AQE off (restored after, see
+    ``_aqe_off_enter``): the partitioning is fully pinned — rows
+    routed to exact task ids feeding a ``partitionBy(bucket)`` sink —
+    so adaptive re-planning has nothing to decide, and AQE cannot
+    coalesce a ``repartitionById`` exchange anyway (pyspark 4.1.2:
+    with AQE on the same routed write still runs every task and adds
+    a job), while its per-exchange stage-materialization barrier costs
+    a driver re-optimization round per commit (measured paired on
+    merge_upsert at sf0.1: ~0.25 s per commit write, ~20% of the
+    op)."""
     spark = df.sparkSession
-    # AQE bypass for the commit write only (restored in the finally):
-    # the staged write's partitioning is fully user-pinned — rows
-    # routed to exact task ids feeding a partitionBy(bucket) sink —
-    # so adaptive re-planning has nothing to decide, while its
-    # per-exchange stage-materialization barrier costs a driver
-    # re-optimization round per commit (measured paired on
-    # merge_upsert at sf0.1: ~0.25 s per commit write, ~20% of the
-    # op). File counts are unchanged: partitionBy splits
-    # per bucket value regardless of task count. On a cluster where
-    # staged batches are large enough that writer-task right-sizing
-    # matters more than commit latency, export
-    # SPARK_GRAFT_COMMIT_AQE=on to keep AQE coalescing inside commit
-    # writes (every other query path keeps AQE regardless).
-    toggled = os.environ.get("SPARK_GRAFT_COMMIT_AQE", "off") != "on"
-    if toggled:
-        _aqe_off_enter(spark)
+    _aqe_off_enter(spark)
     try:
         (
             _route_slots(
@@ -549,8 +547,7 @@ def _write_clustered(
             .parquet(staging)
         )
     finally:
-        if toggled:
-            _aqe_off_exit(spark)
+        _aqe_off_exit(spark)
 
 
 # Depth-counted AQE toggle: concurrent commit writers (the session conf
@@ -613,10 +610,9 @@ def _route_slots(
     ``cluster_col``, the key's salt when ``salt > 1``, else 0."""
     if cluster_col is not None:
         if latest_wins is not None:
-            raise ValueError(
-                "latest_wins cannot fuse into a cluster-binned write "
-                "(a key's rows span range bins); pre-dedup the input"
-            )
+            # a key's rows span range bins: pick the winner first
+            df = _fused_latest_wins(df, [F.col(key_col)], latest_wins)
+            latest_wins = None
         # one job before the write plans: the batch's value range and
         # whether it holds NULLs (the bins' edges and count). The job
         # recomputes df's lineage; a persist(MEMORY_AND_DISK) between
@@ -678,20 +674,21 @@ def _route_slots(
 
 
 def _fused_latest_wins(
-    clustered: DataFrame,
+    df: DataFrame,
     partition_cols: list,
     latest_wins: tuple[str, str],
 ) -> DataFrame:
-    """Per-key latest-wins winner selection ON TOP of the commit
-    write's routed exchange (one shuffle total — see _write_clustered's
-    docstring for why the grouping is identical to PARTITION BY key
-    and why no second exchange is planned)."""
+    """Per-key latest-wins winner selection, one row per
+    ``partition_cols`` group: ON TOP of the routed exchange on the
+    plain and salted paths (one shuffle total — see _write_clustered's
+    docstring for why (bucket, task, key) groups equal key groups),
+    by key before routing under ``cluster_col``."""
     ver_col, tiebreak_col = latest_wins
     w = Window.partitionBy(*partition_cols).orderBy(
         F.col(ver_col).desc(), F.col(tiebreak_col)
     )
     return (
-        clustered.withColumn("rn", F.row_number().over(w))
+        df.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
@@ -700,18 +697,6 @@ def _fused_latest_wins(
 # numeric-only cluster columns: their column_stats (min, max) survive a
 # JSON manifest roundtrip and compare with plain <= at plan time
 _CLUSTERABLE = ("tinyint", "smallint", "int", "bigint", "float", "double")
-
-
-def _carry_file_stats(
-    snap: dict, buckets: dict, new_stats: dict, key: str
-) -> dict[str, list]:
-    """Next manifest's per-file map under ``key`` (``column_stats`` /
-    ``file_blooms`` / ``file_versions``): entries of carried-over files
-    that are still referenced + the staged files' fresh entries
-    (replaced files' entries drop with their files)."""
-    live = {f for fs in buckets.values() for f in fs}
-    old = snap.get(key, {})
-    return {f: s for f, s in old.items() if f in live} | new_stats
 
 
 # Column types whose per-file (min, max) survive a JSON manifest
@@ -905,7 +890,8 @@ def _spark_column_stats(
 
 
 def _staged_column_stats(
-    spark: SparkSession, staging: str, types: dict[str, str]
+    spark: SparkSession, staging: str, files: list[str],
+    types: dict[str, str],
 ) -> dict[str, dict[str, list]]:
     """Delta-style per-file column statistics for a just-staged commit:
     [min, max, null_count] for EVERY stats-eligible column. Read from
@@ -922,9 +908,6 @@ def _staged_column_stats(
         c
         for c, t in types.items()
         if t in _COLUMN_STATS_TYPES and c != "bucket"
-    ]
-    files = [
-        f for fs in _list_bucket_files(staging).values() for f in fs
     ]
     # a staged commit can legitimately hold ZERO files (an empty update
     # slice, an all-tombstone bucket compacting away) — reading the
@@ -1113,7 +1096,7 @@ BLOOM_K = 4
 
 def _staged_file_blooms(
     spark: SparkSession,
-    staging: str,
+    files: list[str],
     bloom_col: str,
     m: int,
     k: int,
@@ -1130,8 +1113,8 @@ def _staged_file_blooms(
 
     ``bloom_type`` (the table's recorded column type) lets the scan
     bind an explicit one-column schema: no schema-inference job, and
-    the file set comes from the staging listing the commit already
-    holds — the hashing pass is this function's ONLY Spark job (it
+    ``files`` is the staging listing the commit already holds — the
+    hashing pass is this function's ONLY Spark job (it
     previously paid two extra inference/listing relations per commit).
     The hash is over the BUILT column type either way — an explicit
     schema equal to what inference would return, so bits are
@@ -1139,8 +1122,6 @@ def _staged_file_blooms(
     read stands."""
     from urllib.parse import unquote, urlparse
 
-    by_bucket = _list_bucket_files(staging)
-    files = sorted(f for fs in by_bucket.values() for f in fs)
     if not files:
         return {}
     reader = spark.read
@@ -1206,81 +1187,75 @@ def _bloom_positions(
     return [row[f"p{i}"] for i in range(k)]
 
 
-def _attach_sidecars(
+def _stage_rewrite(
     spark: SparkSession,
-    snap: dict,
-    manifest: dict,
-    buckets: dict,
+    nxt: dict,
+    version: int,
     staging: str,
-    carry: bool = True,
-) -> None:
-    """Propagate the table-wide layout properties (column stats,
-    cluster layout, bloom index) from the pinned snapshot onto the
-    next manifest: fresh entries computed for the staged files,
-    carried entries for still-referenced files. ``carry=False`` for
-    full-rewrite commits (rebucket), where every visible file is
-    staged and a carry would resurrect dead paths."""
-    # all-column file statistics (Delta data skipping): recorded by
-    # EVERY commit path, not just clustered tables — one distributed
-    # metadata pass over the staged files
-    # per-file BIRTH VERSIONS — the durable source for the column-epoch
-    # guard (_read_files_aligned). Recorded in the manifest at every
-    # staging commit path and carried like the other sidecar maps;
-    # parsing the staging-directory NAME instead would silently degrade
-    # to trust-the-file on a renamed/relocated dir — re-opening the
-    # stale-byte-resurrection class the protocol fuzz caught (r10).
-    newv = {
-        f: int(snap["version"]) + 1
-        for fs in _list_bucket_files(staging).values()
-        for f in fs
+    df: DataFrame,
+    rewritten: list | None = None,
+    keep: dict[int, list[str]] | None = None,
+    salt: int = 1,
+    latest_wins: tuple[str, str] | None = None,
+) -> dict[int, list[str]]:
+    """The data-writing step every commit face that rewrites buckets
+    runs (init, merge, compact, optimize, replaceWhere, rebucket):
+    write ``df`` into ``staging`` under the next manifest ``nxt``'s
+    layout, then splice the staged files into ``nxt`` in place.
+
+    ``df`` is routed by ``nxt``'s key, bucket count and cluster column
+    through ``_write_clustered`` (``salt`` and ``latest_wins`` pass
+    through). Each bucket in ``rewritten`` then becomes its ``keep``
+    files (replaceWhere's out-of-slice files of a partially rewritten
+    bucket) plus its staged files, and loses its pending
+    ``delete_files`` / ``dv_files`` (the rewrite read applied them). A
+    staged bucket the caller did not name is NOT spliced: ``_transact``
+    rejects the commit before publish (a stale ``bucket_hint``).
+    ``rewritten=None`` is a full rewrite (init, rebucket): the staged
+    listing is the whole bucket map and every pending sidecar clears.
+
+    The per-file maps follow the files: ``file_versions`` (birth
+    version ``version`` — the durable source for the column-epoch
+    guard in _read_files_aligned; parsing the staging-directory NAME
+    instead would silently degrade to trust-the-file on a renamed dir),
+    ``column_stats`` (footer stats, skipped on legacy manifests that
+    record no ``column_types``) and, on a bloomed table,
+    ``file_blooms`` — fresh entries for the staged files, carried
+    entries for files the next manifest still references. Returns the
+    staging listing ({bucket: files})."""
+    _write_clustered(
+        df.withColumn("bucket", _bucket_of(nxt["key_col"], nxt["n_buckets"])),
+        staging, nxt["key_col"], salt, nxt["n_buckets"],
+        nxt.get("cluster_col"), nxt.get("cluster_bins", 4), latest_wins,
+    )
+    new = _list_bucket_files(staging)
+    if rewritten is None:
+        nxt.update(buckets={}, delete_files=None, dv_files=None)
+        rewritten = new
+    buckets = dict(nxt["buckets"])  # copy: still the snapshot's map
+    for b in rewritten:
+        buckets[str(b)] = (keep or {}).get(int(b), []) + new.get(int(b), [])
+    nxt["buckets"] = {b: buckets[b] for b in sorted(buckets, key=int)}
+    for key in ("delete_files", "dv_files"):
+        _carry_sidecars(nxt, key, rewritten)
+    files = sorted(f for fs in new.values() for f in fs)
+    types = nxt.get("column_types")
+    fresh = {
+        "file_versions": dict.fromkeys(files, version),
+        "column_stats": (
+            _staged_column_stats(spark, staging, files, types) if types else {}
+        ),
     }
-    manifest["file_versions"] = (
-        _carry_file_stats(snap, buckets, newv, key="file_versions")
-        if carry
-        else newv
-    )
-    # legacy pre-schema manifests record no column_types: no stats
-    # eligibility is derivable, so skip the stats pass (files stay
-    # conservatively unprunable — pruning is an optimization, never a
-    # filter) rather than KeyError the whole commit
-    types = manifest.get("column_types") or snap.get("column_types")
-    newc = _staged_column_stats(spark, staging, types) if types else {}
-    manifest["column_stats"] = (
-        _carry_file_stats(snap, buckets, newc, key="column_stats")
-        if carry
-        else newc
-    )
-    staged_any = any(_list_bucket_files(staging).values())
-    if snap.get("cluster_col") is not None:
-        # range reads plan from column_stats: the cluster column is
-        # numeric (_CLUSTERABLE), so it is always stats-eligible
-        manifest["cluster_col"] = snap["cluster_col"]
-        manifest["cluster_bins"] = snap.get("cluster_bins", 4)
-    if snap.get("bloom_col") is not None:
-        manifest["bloom_col"] = snap["bloom_col"]
-        manifest["bloom_m"] = snap["bloom_m"]
-        manifest["bloom_k"] = snap["bloom_k"]
-        newb = (
-            _staged_file_blooms(
-                spark, staging, snap["bloom_col"],
-                snap["bloom_m"], snap["bloom_k"],
-                bloom_type=(types or {}).get(snap["bloom_col"]),
-            )
-            if staged_any
-            else {}
+    if nxt.get("bloom_col") is not None:
+        fresh["file_blooms"] = _staged_file_blooms(
+            spark, files, nxt["bloom_col"], nxt["bloom_m"], nxt["bloom_k"],
+            bloom_type=(types or {}).get(nxt["bloom_col"]),
         )
-        manifest["file_blooms"] = (
-            _carry_file_stats(snap, buckets, newb, key="file_blooms")
-            if carry
-            else newb
-        )
-    if snap.get("identity_col") is not None:
-        # pure metadata carry: compaction/rebucket never mint ids, and
-        # the merge path sets these keys itself before calling here
-        manifest.setdefault("identity_col", snap["identity_col"])
-        manifest.setdefault(
-            "identity_high_water", snap.get("identity_high_water", 0)
-        )
+    live = {f for fs in nxt["buckets"].values() for f in fs}
+    for key, entries in fresh.items():
+        old = nxt.get(key) or {}
+        nxt[key] = {f: e for f, e in old.items() if f in live} | entries
+    return new
 
 
 def _column_types(df: DataFrame) -> dict[str, str]:
@@ -1291,20 +1266,27 @@ def _manifest_path(base_dir: str, version: int) -> str:
     return os.path.join(base_dir, f"v{version}.json")
 
 
+def _list_versions(base_dir: str) -> list[int]:
+    """Manifest versions on disk, ascending: every ``v{N}.json`` whose
+    N is all ASCII digits. Raises OSError on an unlistable dir."""
+    return sorted(
+        int(fn[1:-5])
+        for fn in os.listdir(base_dir)
+        if fn.startswith("v")
+        and fn.endswith(".json")
+        and fn[1:-5].isascii()
+        and fn[1:-5].isdigit()
+    )
+
+
 def latest_version(base_dir: str) -> int:
-    """Highest committed manifest version (0 = uninitialized table)."""
-    best = 0
+    """Highest committed manifest version (0 = uninitialized table, or
+    a dir that cannot be listed — _clone_pinned_versions relies on
+    that)."""
     try:
-        names = os.listdir(base_dir)
+        return max(_list_versions(base_dir), default=0)
     except OSError:
         return 0
-    for fn in names:
-        if fn.startswith("v") and fn.endswith(".json"):
-            try:
-                best = max(best, int(fn[1:-5]))
-            except ValueError:
-                continue
-    return best
 
 
 def version_as_of(base_dir: str, ts: float) -> int:
@@ -1316,11 +1298,7 @@ def version_as_of(base_dir: str, ts: float) -> int:
     the same retention contract as version-based travel). Legacy
     pre-stamp manifests count as epoch 0 (always eligible), so a
     probe after their retention never misses them."""
-    versions = sorted(
-        int(fn[1:-5])
-        for fn in os.listdir(base_dir)
-        if fn.startswith("v") and fn.endswith(".json") and fn[1:-5].isdigit()
-    )
+    versions = _list_versions(base_dir)
     if not versions:
         raise ValueError(f"no committed table at {base_dir}")
     best = None
@@ -1394,8 +1372,10 @@ _PER_COMMIT_KEYS = (
 def _strip_commit_records(manifest: dict) -> dict:
     """Drop per-commit records copied from a source manifest, so a
     restore of a publish commit (say) doesn't carry the publish's
-    ``published_from`` into a commit stamped ``kind='restore'``."""
-    for k in _PER_COMMIT_KEYS:
+    ``published_from`` into a commit stamped ``kind='restore'`` — and
+    the legacy cluster-only ``file_stats`` map, which nothing reads
+    (files plan from ``column_stats``)."""
+    for k in (*_PER_COMMIT_KEYS, "file_stats"):
         manifest.pop(k, None)
     return manifest
 
@@ -1472,12 +1452,15 @@ def _transact(
 
     ``stage(prefix)`` mints an attempt-private ``_staging_path`` and
     records it. ``build`` returns ``(manifest, result)``; a ``None``
-    manifest returns ``result`` without committing. The loop stamps
-    ``version`` / ``commit_kind`` / ``writer_id``, then checks that
-    every ``.parquet`` file staged this attempt is referenced by the
-    manifest (a staged file the manifest misses would be lost data
-    the moment the commit lands; vacuum never reclaims it either),
-    then calls ``before_commit(attempt)`` (the test seam into the
+    manifest returns ``result`` without committing. Every face builds
+    the next manifest the same way: ``_strip_commit_records({**snap,
+    **overrides})`` — table-level keys carry by copy — and a face that
+    writes data files splices them in with ``_stage_rewrite``. The
+    loop stamps ``version`` / ``commit_kind`` / ``writer_id``, then
+    checks that every ``.parquet`` file staged this attempt is
+    referenced by the manifest (a staged file the manifest misses
+    would be lost data the moment the commit lands; vacuum never
+    reclaims it either), then calls ``before_commit(attempt)`` (the test seam into the
     pre-CAS window) and publishes.
 
     A lost CAS, or a missing-file error from a read of the pinned
@@ -1556,17 +1539,17 @@ def _assert_staged_referenced(manifest: dict, staged: list[str]) -> None:
 
 
 def _carry_sidecars(
-    manifest: dict, snap: dict, key: str, replaced=(), added=None
+    manifest: dict, key: str, replaced=(), added=None
 ) -> None:
-    """Set ``manifest[key]`` (``delete_files`` or ``dv_files``) from
-    the pinned snapshot's entries: buckets in ``replaced`` drop theirs
-    (a rewrite applied them physically, or a coalesce supersedes
-    them), ``added`` ({bucket: files}) appends. Int-sorted, empty
-    entries dropped, the key absent when nothing is pending."""
+    """Update ``manifest[key]`` (``delete_files`` or ``dv_files``, as
+    copied from the pinned snapshot) in place: buckets in ``replaced``
+    drop theirs (a rewrite applied them physically, or a coalesce
+    supersedes them), ``added`` ({bucket: files}) appends. Int-sorted,
+    empty entries dropped, the key absent when nothing is pending."""
     replaced = {int(b) for b in replaced}
     out = {
         b: list(fs)
-        for b, fs in (snap.get(key) or {}).items()
+        for b, fs in (manifest.get(key) or {}).items()
         if int(b) not in replaced
     }
     for b, fs in (added or {}).items():
@@ -1578,7 +1561,8 @@ def _carry_sidecars(
 
 
 def _staged_tombstone_buckets(
-    spark: SparkSession, staging: str, types: dict[str, str]
+    spark: SparkSession, staging: str, by_bucket: dict[int, list[str]],
+    types: dict[str, str],
 ) -> list[int]:
     """Buckets of a just-staged commit that hold at least one live
     tombstone row — read from the footers' boolean max when the column
@@ -1586,8 +1570,8 @@ def _staged_tombstone_buckets(
     and an all-NULL chunk contributes nothing, exactly matching the
     ``max(coalesce(cast(_deleted as boolean), false))`` the distributed
     pass computes); any other physical type, or a footer without
-    usable stats, falls back to the scan."""
-    by_bucket = _list_bucket_files(staging)
+    usable stats, falls back to the scan. ``by_bucket`` is the staging
+    listing."""
     if types.get(TOMBSTONE_COL) == "boolean":
         files = [f for fs in by_bucket.values() for f in fs]
         maxes, usable = _footer_col_max(files, TOMBSTONE_COL)
@@ -1626,6 +1610,20 @@ def _list_bucket_files(staging_dir: str) -> dict[int, list[str]]:
     return out
 
 
+def _write_sidecar(df: DataFrame, staging: str) -> dict[int, list[str]]:
+    """Stage a per-bucket delete sidecar (MOR keys, DV bitmap words):
+    ``df`` carries ``bucket``; one hash exchange on it under the
+    session's AQE, which coalesces these metadata-sized writes to a
+    few tasks. Returns the staging listing ({bucket: files})."""
+    (
+        df.repartition(F.col("bucket"))
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(staging)
+    )
+    return _list_bucket_files(staging)
+
+
 def init_table(
     df: DataFrame,
     base_dir: str,
@@ -1646,8 +1644,10 @@ def init_table(
     a committed version (init is not a merge).
 
     ``cluster_col`` (numeric, optional) declares the table's zorder-
-    lite secondary layout: EVERY commit path (init/merge/compact/
-    rebucket) range-bins each bucket's rows by this column, so the
+    lite secondary layout: EVERY commit path that writes data files
+    (init / merge / compact / optimize / replaceWhere / rebucket, all
+    through ``_stage_rewrite``) range-bins each bucket's rows by this
+    column, so the
     per-file [min, max] every commit records in ``column_stats`` makes
     ``read_snapshot(where=("range", lo, hi))`` skip most files — the
     property is table-wide and writer-independent, like the bucket
@@ -1710,10 +1710,6 @@ def init_table(
     # LOSER delete the CAS winner's part files before losing —
     # publishing a v1 manifest that names dead paths
     staging = _staging_path(base_dir, "commit", 1, "init", 0)
-    _write_clustered(
-        df.withColumn("bucket", _bucket_of(key_col, n_buckets)), staging,
-        key_col, 1, n_buckets, cluster_col, cluster_bins,
-    )
     manifest = {
         "version": 1,
         "commit_kind": "init",
@@ -1722,54 +1718,35 @@ def init_table(
         "key_col": key_col,
         "columns": df.columns,
         "column_types": types0,
-        "buckets": {str(b): fs for b, fs in sorted(_list_bucket_files(staging).items())},
-        # true per-bucket flags, not "every bucket": a seed carrying an
-        # all-false marker column (the normal pattern) must not doom
-        # the first compact_tombstones to a full-table scan. Computed
-        # from the STAGED FILES, not by re-executing the seed frame: a
-        # second run of a non-deterministic seed (rand/sample/limit)
-        # could place its tombstones in different buckets than the ones
-        # actually committed, and merges only ever ADD flags — a live
-        # tombstone in an unflagged bucket would never be reclaimed.
-        # The staging dir's partition column IS the bucket, so this is
-        # one column-pruned scan of what was written.
-        "tombstone_buckets": (
-            _staged_tombstone_buckets(df.sparkSession, staging, types0)
-            if TOMBSTONE_COL in df.columns
-            else []
-        ),
+        # every column is first-epoch at init (see _read_files_aligned's
+        # column-epoch guard — DROP + re-add needs per-column birth
+        # versions)
+        "column_epochs": {c: 1 for c in df.columns},
     }
-    # every column is first-epoch at init (see _read_files_aligned's
-    # column-epoch guard — DROP + re-add needs per-column birth versions)
-    manifest["column_epochs"] = {c: 1 for c in df.columns}
-    # every staged file is born at v1 — the manifest-backed source the
-    # epoch guard reads (never the staging-directory name)
-    manifest["file_versions"] = {
-        f: 1 for fs in manifest["buckets"].values() for f in fs
-    }
-    # all-column file statistics (Delta data skipping) — every commit
-    # path records them; init is the first
-    manifest["column_stats"] = _staged_column_stats(
-        df.sparkSession, staging, types0
-    )
     if cluster_col is not None:
-        manifest["cluster_col"] = cluster_col
-        manifest["cluster_bins"] = cluster_bins
+        manifest.update(cluster_col=cluster_col, cluster_bins=cluster_bins)
     if bloom_col is not None:
-        manifest["bloom_col"] = bloom_col
-        manifest["bloom_m"] = bloom_m
-        manifest["bloom_k"] = bloom_k
-        manifest["file_blooms"] = _staged_file_blooms(
-            df.sparkSession, staging, bloom_col, bloom_m, bloom_k,
-            bloom_type=types0.get(bloom_col),
-        )
+        manifest.update(bloom_col=bloom_col, bloom_m=bloom_m, bloom_k=bloom_k)
+    new = _stage_rewrite(df.sparkSession, manifest, 1, staging, df)
+    # true per-bucket flags, not "every bucket": a seed carrying an
+    # all-false marker column (the normal pattern) must not doom the
+    # first compact_tombstones to a full-table scan. Computed from the
+    # STAGED FILES, not by re-executing the seed frame: a second run of
+    # a non-deterministic seed (rand/sample/limit) could place its
+    # tombstones in different buckets than the ones actually committed,
+    # and merges only ever ADD flags — a live tombstone in an unflagged
+    # bucket would never be reclaimed.
+    manifest["tombstone_buckets"] = (
+        _staged_tombstone_buckets(df.sparkSession, staging, new, types0)
+        if TOMBSTONE_COL in df.columns
+        else []
+    )
     if identity_col is not None:
         manifest["identity_col"] = identity_col
         # integral column (validated above): the staged footers hold
         # the exact max — avoid re-executing the seed frame for it
         maxes, usable = _footer_col_max(
-            [f for fs in manifest["buckets"].values() for f in fs],
-            identity_col,
+            [f for fs in new.values() for f in fs], identity_col
         )
         if usable:
             vals = [v for v in maxes.values() if v is not None]
@@ -2145,11 +2122,7 @@ def table_history(base_dir: str) -> list[dict]:
     restore / publish) and ``writer_id``; per-commit records surface as
     ``quarantined`` (expectations gate) and ``restored_from``. Legacy
     pre-stamp manifests read back with kind None rather than failing."""
-    versions = sorted(
-        int(fn[1:-5])
-        for fn in os.listdir(base_dir)
-        if fn.startswith("v") and fn.endswith(".json") and fn[1:-5].isdigit()
-    )
+    versions = _list_versions(base_dir)
     out = []
     for v in versions:
         m = load_manifest(base_dir, v)
@@ -2263,17 +2236,7 @@ def clone_table(
     )
     if not _publish_manifest(target_dir, manifest):
         raise RuntimeError(f"clone target {target_dir} already has a v1")
-    cdir = os.path.join(base_dir, "clones")
-    os.makedirs(cdir, exist_ok=True)
-    rec_path = os.path.join(
-        cdir,
-        f"clone_{os.getpid()}_{threading.get_ident()}_"
-        f"s{next(_STAGING_SEQ)}.json",
-    )
-    with open(rec_path, "w") as fh:
-        json.dump(
-            {"target": os.path.abspath(target_dir), "version": v}, fh
-        )
+    _pin_version(base_dir, target_dir, v)
     return {"target": os.path.abspath(target_dir), "source_version": v}
 
 
@@ -2313,15 +2276,7 @@ def publish_from(
     Returns ``(committed_version, attempts)``."""
     snap_src = load_manifest(source_dir, version)  # raises if expired
     v = snap_src["version"]
-    cdir = os.path.join(source_dir, "clones")
-    os.makedirs(cdir, exist_ok=True)
-    rec_path = os.path.join(
-        cdir,
-        f"clone_{os.getpid()}_{threading.get_ident()}_"
-        f"s{next(_STAGING_SEQ)}.json",
-    )
-    with open(rec_path, "w") as fh:
-        json.dump({"target": os.path.abspath(main_dir), "version": v}, fh)
+    _pin_version(source_dir, main_dir, v)
 
     def build(snap_main, attempt, stage):
         manifest = _strip_commit_records(dict(snap_src))
@@ -2339,6 +2294,23 @@ def publish_from(
     return _transact(
         main_dir, "publish", writer_id, build, max_retries, before_commit
     )
+
+
+def _pin_version(base_dir: str, target_dir: str, version: int) -> None:
+    """Record that the table at ``target_dir`` references ``base_dir``'s
+    files as of ``version``: one ``clones/clone_{pid}_{tid}_s{seq}.json``
+    record that ``_clone_pinned_versions`` reads."""
+    cdir = os.path.join(base_dir, "clones")
+    os.makedirs(cdir, exist_ok=True)
+    rec_path = os.path.join(
+        cdir,
+        f"clone_{os.getpid()}_{threading.get_ident()}_"
+        f"s{next(_STAGING_SEQ)}.json",
+    )
+    with open(rec_path, "w") as fh:
+        json.dump(
+            {"target": os.path.abspath(target_dir), "version": version}, fh
+        )
 
 
 def _clone_pinned_versions(base_dir: str) -> set[int]:
@@ -2437,11 +2409,7 @@ def vacuum(
     # enumerate versions that STILL EXIST on disk (an earlier vacuum
     # already removed older manifests — idempotency requires never
     # assuming a contiguous 1..latest range)
-    existing = sorted(
-        int(fn[1:-5])
-        for fn in os.listdir(base_dir)
-        if fn.startswith("v") and fn.endswith(".json") and fn[1:-5].isdigit()
-    )
+    existing = _list_versions(base_dir)
     pins = _clone_pinned_versions(base_dir)
     kept = [v for v in existing if v > latest - keep_last or v in pins]
     expired = [v for v in existing if v not in kept]
@@ -2870,7 +2838,7 @@ def merge_upsert_manifest(
             # would turn the patch into a full-row replacement
             upd = updates.select(
                 *[F.col(c).cast(res_types[c]).alias(c) for c in cols if c in have]
-            ).withColumn("bucket", _bucket_of(key_col, n_buckets))
+            )
         else:
             # align the batch to the RESULT schema: evolution may add
             # table columns the batch omits (NULL — latest-wins rows are
@@ -2886,7 +2854,7 @@ def merge_upsert_manifest(
                     ).alias(c)
                     for c in cols
                 ]
-            ).withColumn("bucket", _bucket_of(key_col, n_buckets))
+            )
         next_version = snap["version"] + 1
         staging = stage("commit")
         # one pass over the (small) batch keys plans BOTH the bucket
@@ -2921,7 +2889,7 @@ def merge_upsert_manifest(
                 else F.lit(False)
             )
             bucket_info = (
-                upd.groupBy("bucket")
+                upd.groupBy(_bucket_of(key_col, n_buckets).alias("bucket"))
                 .agg(F.max(tomb_flag).alias("has_tomb"))
                 .collect()
             )
@@ -3064,71 +3032,37 @@ def merge_upsert_manifest(
                 upd, new_hw = _mint_identities(
                     upd, ident, key_col, new_hw, res_types[ident]
                 )
-        unioned = upd
-        if base_df is not None:
-            unioned = base_df.withColumn(
-                "bucket", _bucket_of(key_col, n_buckets)
-            ).unionByName(upd)
-        # the lazy plan writes straight to staging: pinned base
-        # files are IMMUTABLE under the protocol (commits only add
-        # files and publish manifests; only vacuum deletes), so no
-        # checkpoint barrier is needed — a materialize-then-rewrite
-        # here would double the commit path's I/O for nothing
-        ccol = snap.get("cluster_col")
-        if ccol is None:
-            # latest-wins winner selection FUSED into the write's
-            # routed exchange: one shuffle of the commit's bytes
-            # instead of two (window-by-key, then route) — guide
-            # §2.4; grouping equivalence argued in _write_clustered's
-            # docstring
-            _write_clustered(
-                unioned, staging, key_col, write_salt, n_buckets,
-                None, snap.get("cluster_bins", 4),
-                latest_wins=(ver_col, tiebreak_col),
-            )
-        else:
-            # a key's rows can land in different range bins, so
-            # the winner must be chosen before the bin exchange
-            w = Window.partitionBy(key_col).orderBy(
-                F.col(ver_col).desc(), F.col(tiebreak_col)
-            )
-            merged = (
-                unioned.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-            )
-            _write_clustered(
-                merged, staging, key_col, write_salt, n_buckets,
-                ccol, snap.get("cluster_bins", 4),
-            )
-        new_files = _list_bucket_files(staging)
-        buckets = dict(snap["buckets"])
-        for b in touched:
-            buckets[str(b)] = new_files.get(b, [])
-        manifest = {
-            "n_buckets": n_buckets,
-            "key_col": key_col,
-            "columns": list(res_columns),
-            "column_types": {c: res_types[c] for c in res_columns},
-            "buckets": {k: buckets[k] for k in sorted(buckets, key=int)},
-            # buckets that MAY hold live tombstone rows — a conservative
-            # over-approximation maintained commit-side so
-            # compact_tombstones never scans the whole table to find
-            # work (at 100 TB that scan would dwarf the compaction)
-            "tombstone_buckets": tomb_buckets,
-        }
-        # column epochs: computed above, BEFORE the base read used them
-        manifest["column_epochs"] = new_epochs
-        # pending MOR deletes and deletion vectors: this rewrite applied
-        # the touched buckets' sidecars physically (base_df above), so
-        # only untouched buckets' sidecars carry forward
-        for key in ("delete_files", "dv_files"):
-            _carry_sidecars(manifest, snap, key, touched)
+        unioned = upd if base_df is None else base_df.unionByName(upd)
+        manifest = _strip_commit_records(
+            {
+                **snap,
+                "columns": list(res_columns),
+                "column_types": {c: res_types[c] for c in res_columns},
+                # buckets that MAY hold live tombstone rows — a
+                # conservative over-approximation maintained commit-side
+                # so compact_tombstones never scans the whole table to
+                # find work (at 100 TB that scan would dwarf the
+                # compaction)
+                "tombstone_buckets": tomb_buckets,
+                # computed above, BEFORE the base read used them
+                "column_epochs": new_epochs,
+            }
+        )
         if ident is not None:
-            manifest["identity_col"] = ident
             manifest["identity_high_water"] = int(new_hw or 0)
-        qpath = None
+        # the lazy plan writes straight to staging: pinned base files
+        # are IMMUTABLE under the protocol (commits only add files and
+        # publish manifests; only vacuum deletes), so no checkpoint
+        # barrier is needed — a materialize-then-rewrite here would
+        # double the commit path's I/O for nothing. The touched
+        # buckets' pending MOR deletes and deletion vectors were
+        # applied by the base read and clear with the rewrite.
+        _stage_rewrite(
+            spark, manifest, next_version, staging, unioned, touched,
+            salt=write_salt, latest_wins=(ver_col, tiebreak_col),
+        )
         if gate_stats is not None:
+            qpath = None
             if gate_stats["quarantined"]:
                 # attempt-private like commit staging (same collision
                 # reasoning as _staging_path's docstring); the manifest
@@ -3137,7 +3071,6 @@ def merge_upsert_manifest(
                 qpath = stage("quarantine")
                 quarantined.write.mode("error").parquet(qpath)
             manifest["expectations"] = {**gate_stats, "path": qpath}
-        _attach_sidecars(spark, snap, manifest, buckets, staging)
         probe_scope["buckets"] = (n_buckets, touched)
         return manifest, (next_version, attempt + 1)
 
@@ -3197,10 +3130,11 @@ def compact_tombstones(
         df = _read_visible_base(
             spark, snap, files, cols_, types_,
             snap.get("column_epochs"), snap.get("file_versions"),
-        ).withColumn("bucket", _bucket_of(key_col, n_buckets))
+        )
+        bucket = _bucket_of(key_col, n_buckets)
         per = {
             r.bucket: r.n
-            for r in df.groupBy("bucket")
+            for r in df.groupBy(bucket.alias("bucket"))
             .agg(F.sum(tomb.cast("int")).alias("n"))
             .collect()
         }
@@ -3211,39 +3145,18 @@ def compact_tombstones(
             "buckets_compacted": doomed,
             "tombstones_dropped": dropped,
         }
-        if not doomed:
-            # flags were conservative over-approximations (the
-            # tombstones lost latest-wins at some later merge) —
-            # clear them with a metadata-only commit
-            # per-commit records never carry into a new commit
-            return _strip_commit_records(
-                {**snap, "tombstone_buckets": []}
-            ), result
-        staging = stage("compact")
-        live = df.filter(F.col("bucket").isin(doomed)).filter(~tomb)
-        _write_clustered(
-            live, staging, key_col, 1, n_buckets,
-            snap.get("cluster_col"), snap.get("cluster_bins", 4),
+        manifest = _strip_commit_records(
+            {**snap, "tombstone_buckets": []}
         )
-        new_files = _list_bucket_files(staging)
-        buckets = dict(snap["buckets"])
-        for b in doomed:
+        if doomed:
             # an all-tombstone bucket compacts to NO files at all
-            buckets[str(b)] = new_files.get(b, [])
-        manifest = {
-            "n_buckets": n_buckets,
-            "key_col": key_col,
-            "columns": list(cols_),
-            "column_types": dict(types_),
-            "buckets": {k: buckets[k] for k in sorted(buckets, key=int)},
-            "tombstone_buckets": [],
-            "column_epochs": snap.get("column_epochs")
-            or {c: 1 for c in cols_},
-        }
-        # rewritten buckets applied their pending deletes; carry the rest
-        for key in ("delete_files", "dv_files"):
-            _carry_sidecars(manifest, snap, key, doomed)
-        _attach_sidecars(spark, snap, manifest, buckets, staging)
+            _stage_rewrite(
+                spark, manifest, snap["version"] + 1, stage("compact"),
+                df.filter(bucket.isin(doomed)).filter(~tomb), doomed,
+            )
+        # with nothing doomed the flags were conservative
+        # over-approximations (the tombstones lost latest-wins at some
+        # later merge) — clear them with a metadata-only commit
         return manifest, result
 
     return _transact(base_dir, "compact", writer_id, build, max_retries)
@@ -3322,25 +3235,21 @@ def optimize_compact(
                 "sidecars_coalesced": [],
                 "dv_coalesced": [],
             }
-        buckets = dict(snap["buckets"])
+        manifest = _strip_commit_records(dict(snap))
         if fragmented:
-            staging = stage("optimize")
-            files = [f for b in fragmented for f in snap["buckets"][str(b)]]
             # pending MOR deletes of the rewritten buckets apply
             # physically here (visible rows unchanged — they were
-            # already hidden at read); their sidecars clear below
-            df = _read_visible_base(
-                spark, snap, files, cols_, types_,
-                snap.get("column_epochs"),
-                snap.get("file_versions"),
-            ).withColumn("bucket", _bucket_of(key_col, n_buckets))
-            _write_clustered(
-                df, staging, key_col, 1, n_buckets,
-                snap.get("cluster_col"), snap.get("cluster_bins", 4),
+            # already hidden at read); their sidecars clear with the
+            # rewrite
+            files = [f for b in fragmented for f in snap["buckets"][str(b)]]
+            _stage_rewrite(
+                spark, manifest, snap["version"] + 1, stage("optimize"),
+                _read_visible_base(
+                    spark, snap, files, cols_, types_,
+                    snap.get("column_epochs"), snap.get("file_versions"),
+                ),
+                fragmented,
             )
-            new_files = _list_bucket_files(staging)
-            for b in fragmented:
-                buckets[str(b)] = new_files.get(b, [])
         del_new: dict[int, list] = {}
         dv_new: dict[int, list] = {}
         if dv_frag:
@@ -3351,7 +3260,6 @@ def optimize_compact(
             # to exactly one bucket, so re-deriving the bucket from
             # the sidecar's own partition layout is unnecessary:
             # fold per bucket's files directly
-            dv_staging = stage("optdv")
             bdf = spark.createDataFrame(
                 [
                     (f, int(b))
@@ -3361,62 +3269,43 @@ def optimize_compact(
                 "file string, bucket int",
             )
             dv_files_in = [f for b in dv_frag for f in dvs_all[str(b)]]
-            (
+            dv_new = _write_sidecar(
                 spark.read.parquet(*dv_files_in)
                 .groupBy("file", "w")
                 .agg(F.bit_or("word").alias("word"))
                 # vectors only survive while their bucket is
                 # unrewritten, so every referenced file is still a
                 # current bucket file — the inner join drops nothing
-                .join(F.broadcast(bdf), "file")
-                .repartition(F.col("bucket"))
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(dv_staging)
+                .join(F.broadcast(bdf), "file"),
+                stage("optdv"),
             )
-            dv_new = _list_bucket_files(dv_staging)
         if side_frag:
             # one job over O(pending deleted keys): keys re-derive
             # their own bucket (sidecars are bucket-scoped by the
             # same hash), so the rewrite is the delete_keys_mor
             # write shape with a fresh attempt-private dir
-            del_staging = stage("optdel")
             side_files = [f for b in side_frag for f in dels_all[str(b)]]
-            (
+            del_new = _write_sidecar(
                 spark.read.parquet(*side_files)
                 .select(key_col)
                 .distinct()
-                .withColumn("bucket", _bucket_of(key_col, n_buckets))
-                .repartition(F.col("bucket"))
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(del_staging)
+                .withColumn("bucket", _bucket_of(key_col, n_buckets)),
+                stage("optdel"),
             )
-            del_new = _list_bucket_files(del_staging)
-        manifest = _strip_commit_records(
-            {
-                **snap,
-                "buckets": {k: buckets[k] for k in sorted(buckets, key=int)},
-            }
-        )
-        # rewritten buckets applied their pending deletes; coalesced
-        # buckets swap theirs for the folded sidecar (an all-duplicate
-        # set can coalesce to zero files — the entry drops)
-        _carry_sidecars(
-            manifest, snap, "delete_files", fragmented + side_frag, del_new
-        )
-        _carry_sidecars(
-            manifest, snap, "dv_files", fragmented + dv_frag, dv_new
-        )
-        if fragmented:
-            _attach_sidecars(spark, snap, manifest, buckets, staging)
+        # coalesced buckets swap their sidecars for the folded one (an
+        # all-duplicate set can coalesce to zero files — the entry
+        # drops)
+        _carry_sidecars(manifest, "delete_files", side_frag, del_new)
+        _carry_sidecars(manifest, "dv_files", dv_frag, dv_new)
         # sidecar-only commits change no data files: every per-file
-        # sidecar map carried verbatim by the {**snap} copy stays exact
+        # map carried verbatim by the snapshot copy stays exact
         return manifest, {
             "version": snap["version"] + 1,
             "buckets_optimized": fragmented,
             "files_before": n_before,
-            "files_after": sum(len(fs) for fs in buckets.values()),
+            "files_after": sum(
+                len(fs) for fs in manifest["buckets"].values()
+            ),
             "sidecars_coalesced": side_frag,
             "dv_coalesced": dv_frag,
         }
@@ -3538,16 +3427,9 @@ def delete_keys_mor(
             .distinct()
             .withColumn("bucket", _bucket_of(key_col, n_buckets))
         )
-        (
-            keys.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staging)
-        )
         manifest = _strip_commit_records(dict(snap))
         _carry_sidecars(
-            manifest, snap, "delete_files",
-            added=_list_bucket_files(staging),
+            manifest, "delete_files", added=_write_sidecar(keys, staging)
         )
         return manifest, (snap["version"] + 1, attempt + 1)
 
@@ -3695,60 +3577,34 @@ def replace_where_range(
             for f in fs
             if plan[b] == "full" or (plan[b] == "partial" and f in keptset)
         ]
-        nothing_staged = not to_rewrite and not new_buckets
-        parts = []
-        if to_rewrite:
-            base_df = _read_visible_base(
-                spark, snap, to_rewrite, cols_, types_,
-                snap.get("column_epochs"), snap.get("file_versions"),
-            )
-            tomb = (
-                F.coalesce(
-                    F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
+        manifest = _strip_commit_records(dict(snap))
+        if to_rewrite or new_buckets:
+            out = batch
+            if to_rewrite:
+                tomb = (
+                    F.coalesce(
+                        F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
+                    )
+                    if TOMBSTONE_COL in types_
+                    else F.lit(False)
                 )
-                if TOMBSTONE_COL in types_
-                else F.lit(False)
+                out = _read_visible_base(
+                    spark, snap, to_rewrite, cols_, types_,
+                    snap.get("column_epochs"), snap.get("file_versions"),
+                ).filter(tomb | out_of_slice).unionByName(batch)
+            # a partial bucket keeps its provably out-of-slice files;
+            # full buckets' pending sidecars clear with the rewrite
+            _stage_rewrite(
+                spark, manifest, snap["version"] + 1, stage("replace"), out,
+                [b for b, how in plan.items() if how != "carry"],
+                keep={
+                    int(b): [f for f in all_buckets[b] if f not in keptset]
+                    for b, how in plan.items()
+                    if how == "partial"
+                },
             )
-            parts.append(base_df.filter(tomb | out_of_slice))
-        parts.append(batch)
-        if not nothing_staged:
-            staging = stage("replace")
-            out = parts[0]
-            for p_ in parts[1:]:
-                out = out.unionByName(p_)
-            _write_clustered(
-                out.withColumn(
-                    "bucket", _bucket_of(key_col, n_buckets)
-                ),
-                staging, key_col, 1, n_buckets,
-                snap.get("cluster_col"), snap.get("cluster_bins", 4),
-            )
-        new_files = (
-            _list_bucket_files(staging) if not nothing_staged else {}
-        )
-        buckets: dict[str, list] = {}
-        for b, fs in all_buckets.items():
-            if plan[b] == "carry":
-                buckets[b] = fs
-            elif plan[b] == "full":
-                buckets[b] = new_files.get(int(b), [])
-            else:
-                buckets[b] = [f for f in fs if f not in keptset] + (
-                    new_files.get(int(b), [])
-                )
-        manifest = _strip_commit_records(
-            {
-                **snap,
-                "buckets": {k: buckets[k] for k in sorted(buckets, key=int)},
-            }
-        )
-        full = [b for b, how in plan.items() if how == "full"]
-        for key in ("delete_files", "dv_files"):
-            _carry_sidecars(manifest, snap, key, full)
-        if not nothing_staged:
-            _attach_sidecars(spark, snap, manifest, buckets, staging)
         # an empty slice over an empty batch stages nothing: the
-        # {**snap} copy's sidecar maps stay exact, like OPTIMIZE's
+        # snapshot copy's per-file maps stay exact, like OPTIMIZE's
         # metadata-only commits
         return manifest, (snap["version"] + 1, attempt + 1)
 
@@ -3831,7 +3687,7 @@ def delete_keys_dv(
     def build(snap, attempt, stage):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         key_type = snap["column_types"][key_col]
-        cols_, types_ = snap["columns"], snap["column_types"]
+        types_ = snap["column_types"]
         keys = (
             keys_df.select(
                 F.col(keys_df.columns[0]).cast(key_type).alias(key_col)
@@ -3881,18 +3737,11 @@ def delete_keys_dv(
             words = hits.groupBy("bucket", "file", "w").agg(
                 F.bit_or("bit").alias("word")
             )
-            staging = stage("dv")
-            (
-                words.repartition(F.col("bucket"))
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(staging)
-            )
-            new_files = _list_bucket_files(staging)
+            new_files = _write_sidecar(words, stage("dv"))
         else:
             new_files = {}
         manifest = _strip_commit_records(dict(snap))
-        _carry_sidecars(manifest, snap, "dv_files", added=new_files)
+        _carry_sidecars(manifest, "dv_files", added=new_files)
         return manifest, (snap["version"] + 1, attempt + 1)
 
     return _transact(
@@ -4593,7 +4442,6 @@ def rebucket_table(
         raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
 
     def build(snap, attempt, stage):
-        key_col = snap["key_col"]
         if snap["n_buckets"] == new_n_buckets:
             return None, (snap["version"], 0)
         cols, types = snap.get("columns"), snap.get("column_types")
@@ -4611,41 +4459,33 @@ def rebucket_table(
             derived = spark.read.parquet(*files)
             cols = list(derived.columns)
             types = _column_types(derived)
+        manifest = _strip_commit_records(
+            {
+                **snap,
+                "n_buckets": new_n_buckets,
+                "columns": list(cols),
+                "column_types": dict(types),
+            }
+        )
         # include_tombstones semantics: NO visibility filter — a
         # live tombstone must keep suppressing lower-version
         # stragglers after the rewrite. Pending MOR deletes DO
         # apply (full rewrite = every sidecar applied + cleared)
-        df = _read_visible_base(
-            spark, snap, files, cols, types,
-            snap.get("column_epochs"), snap.get("file_versions"),
-        ).withColumn("bucket", _bucket_of(key_col, new_n_buckets))
-        _write_clustered(
-            df, staging, key_col, write_salt, new_n_buckets,
-            snap.get("cluster_col"), snap.get("cluster_bins", 4),
-        )
-        manifest = {
-            "n_buckets": new_n_buckets,
-            "key_col": key_col,
-            "columns": list(cols),
-            "column_types": dict(types),
-            "buckets": {
-                str(b): fs
-                for b, fs in sorted(_list_bucket_files(staging).items())
-            },
-            # footer-read boolean max when the marker is a plain
-            # boolean (zero Spark jobs — the same _staged_tombstone_
-            # buckets init uses), distributed scan otherwise
-            "tombstone_buckets": (
-                _staged_tombstone_buckets(spark, staging, types)
-                if TOMBSTONE_COL in types
-                else []
+        new = _stage_rewrite(
+            spark, manifest, snap["version"] + 1, staging,
+            _read_visible_base(
+                spark, snap, files, cols, types,
+                snap.get("column_epochs"), snap.get("file_versions"),
             ),
-            "column_epochs": snap.get("column_epochs")
-            or {c: 1 for c in cols},
-        }
-        # a rebucket replaces EVERY file: all sidecar entries are fresh
-        _attach_sidecars(
-            spark, snap, manifest, manifest["buckets"], staging, carry=False
+            salt=write_salt,
+        )
+        # footer-read boolean max when the marker is a plain boolean
+        # (zero Spark jobs — the same _staged_tombstone_buckets init
+        # uses), distributed scan otherwise
+        manifest["tombstone_buckets"] = (
+            _staged_tombstone_buckets(spark, staging, new, types)
+            if TOMBSTONE_COL in types
+            else []
         )
         return manifest, (snap["version"] + 1, attempt + 1)
 

@@ -1564,6 +1564,149 @@ def _mk_wide_table(spark, tmp_path, n=100, n_buckets=8):
     return base
 
 
+_TABLE_KEYS = (
+    "key_col", "cluster_col", "cluster_bins", "bloom_col", "bloom_m",
+    "bloom_k", "identity_col",
+)
+
+
+def _face_rows(spark, keys, ver, price, sid):
+    return spark.createDataFrame(
+        [(k, ver, f"t{k}", price(k), f"u{k}", sid(k), False) for k in keys],
+        "k long, ver int, tag string, price double, u string, sid long, "
+        "_deleted boolean",
+    )
+
+
+def _face_merge(spark, base):
+    merge_upsert_manifest(
+        base, _face_rows(spark, [3, 50, 999], 3, lambda k: k * 2.0,
+                         lambda k: k + 1),
+        "ver", "tag",
+    )
+
+
+def _face_patch(spark, base):
+    merge_upsert_manifest(
+        base,
+        spark.createDataFrame(
+            [(3, 3, "p3", 9.0), (998, 3, "p998", 8.0)],
+            "k long, ver int, tag string, price double",
+        ),
+        "ver", "tag", patch_cols=["price"],
+    )
+
+
+def _face_compact(spark, base):
+    from assignment4_spark.operators.lakehouse import compact_tombstones
+
+    merge_upsert_manifest(
+        base,
+        _face_rows(spark, [4, 60], 3, lambda k: k * 1.5, lambda k: k + 1)
+        .withColumn("_deleted", F.lit(True)),
+        "ver", "tag",
+    )
+    assert compact_tombstones(spark, base)["buckets_compacted"]
+
+
+def _face_optimize(spark, base):
+    from assignment4_spark.operators.lakehouse import optimize_compact
+
+    assert optimize_compact(spark, base)["buckets_optimized"]
+
+
+def _face_replace(spark, base):
+    from assignment4_spark.operators.lakehouse import replace_where_range
+
+    replace_where_range(
+        spark, base, "price", 15.0, 30.0,
+        _face_rows(spark, range(10, 21), 3, lambda k: k * 1.5,
+                   lambda k: k + 1),
+    )
+
+
+def _face_delete_where(spark, base):
+    from assignment4_spark.operators.lakehouse import delete_where_range
+
+    delete_where_range(spark, base, "price", 15.0, 30.0)
+
+
+def _face_mor(spark, base):
+    from assignment4_spark.operators.lakehouse import delete_keys_mor
+
+    delete_keys_mor(spark, base, spark.createDataFrame([(5,), (70,)], "k long"))
+
+
+def _face_dv(spark, base):
+    from assignment4_spark.operators.lakehouse import delete_keys_dv
+
+    delete_keys_dv(spark, base, spark.createDataFrame([(6,), (80,)], "k long"))
+
+
+def _face_rebucket(spark, base):
+    from assignment4_spark.operators.lakehouse import rebucket_table
+
+    rebucket_table(spark, base, 8)
+
+
+def _face_drop(spark, base):
+    from assignment4_spark.operators.lakehouse import drop_column
+
+    drop_column(base, "tag")
+
+
+def _face_restore(spark, base):
+    from assignment4_spark.operators.lakehouse import restore_table
+
+    _face_merge(spark, base)
+    restore_table(base, 2)
+
+
+@pytest.mark.parametrize(
+    "face",
+    [
+        _face_merge, _face_patch, _face_compact, _face_optimize,
+        _face_replace, _face_delete_where, _face_mor, _face_dv,
+        _face_rebucket, _face_drop, _face_restore,
+    ],
+    ids=lambda face: face.__name__[len("_face_"):],
+)
+def test_commit_face_keeps_table_keys_and_file_maps(spark, tmp_path, face):
+    """Every commit face on a clustered, bloomed, identity table: the
+    table-level keys stay v1's (n_buckets too, except rebucket), the
+    v2 merge's ``expectations`` record (and every other per-commit
+    record the face does not set itself) does not survive, and the
+    per-file maps cover exactly the live files."""
+    from assignment4_spark.operators.lakehouse import _PER_COMMIT_KEYS
+
+    base = str(tmp_path / "tbl")
+    init_table(
+        _face_rows(spark, range(120), 1, lambda k: k * 1.5, lambda k: k + 1),
+        base, key_col="k", n_buckets=4, cluster_col="price",
+        cluster_bins=2, bloom_col="u", identity_col="sid",
+    )
+    # v2 carries a per-commit record: one row fails the expectation
+    merge_upsert_manifest(
+        base,
+        _face_rows(spark, [1, 2], 2, lambda k: k - 2.0, lambda k: k + 1),
+        "ver", "tag", expectations={"nonneg_price": "price >= 0"},
+    )
+    v1, v2 = load_manifest(base, 1), load_manifest(base, 2)
+    assert v2["expectations"]["quarantined"] == 1
+    face(spark, base)
+    m = load_manifest(base)
+    assert m["version"] > 2
+    assert {k: m.get(k) for k in _TABLE_KEYS} == {k: v1[k] for k in _TABLE_KEYS}
+    assert m["n_buckets"] == (8 if face is _face_rebucket else v1["n_buckets"])
+    own = ["restored_from"] if face is _face_restore else []
+    assert [k for k in _PER_COMMIT_KEYS if k in m] == own
+    live = {f for fs in m["buckets"].values() for f in fs}
+    assert live
+    assert set(m["file_versions"]) == live
+    assert set(m["column_stats"]) == live
+    assert set(m["file_blooms"]) == live
+
+
 def test_partial_update_carries_unpatched_columns(spark, tmp_path):
     """A patch batch naming only `price` must keep every key's current
     `status`, and a patch-batch key absent from the table inserts with
@@ -4465,12 +4608,12 @@ def test_footer_stats_parity_with_spark_pass(spark, tmp_path):
     eligible = sorted(
         c for c, t in types.items() if t in _COLUMN_STATS_TYPES
     )
-    fast = _staged_column_stats(spark, staging, types)
+    files = [f for fs in _list_bucket_files(staging).values() for f in fs]
+    fast = _staged_column_stats(spark, staging, files, types)
     slow = _spark_column_stats(spark, staging, eligible)
     assert fast == slow
 
     # and the footer reader itself must have flagged ONLY the huge col
-    files = [f for fs in _list_bucket_files(staging).values() for f in fs]
     _, fallback = _footer_column_stats(files, eligible)
     assert fallback == {"huge"}
 
@@ -4631,6 +4774,7 @@ def test_staged_blooms_explicit_schema_matches_inferred(spark, tmp_path):
 
     from assignment4_spark.operators.lakehouse import (
         _bucket_of,
+        _list_bucket_files,
         _staged_file_blooms,
         _write_clustered,
     )
@@ -4643,8 +4787,9 @@ def test_staged_blooms_explicit_schema_matches_inferred(spark, tmp_path):
     ).withColumn("bucket", _bucket_of("k", 4))
     staging = str(tmp_path / "staged")
     _write_clustered(df, staging, "k", 1, 4)
-    fast = _staged_file_blooms(spark, staging, "u", 1024, 3, bloom_type="string")
-    slow = _staged_file_blooms(spark, staging, "u", 1024, 3)
+    files = sorted(f for fs in _list_bucket_files(staging).values() for f in fs)
+    fast = _staged_file_blooms(spark, files, "u", 1024, 3, bloom_type="string")
+    slow = _staged_file_blooms(spark, files, "u", 1024, 3)
     assert fast == slow and fast  # non-empty and identical bits
 
 
