@@ -810,47 +810,6 @@ def _footer_column_stats(
     return out, fallback
 
 
-def _footer_col_max(
-    files: list[str], col: str
-) -> tuple[dict[str, object], bool]:
-    """Per-file NULL-skipping max of one column from the parquet
-    footers: ({file: max_or_None}, usable). ``usable=False`` when any
-    footer lacks trustworthy stats for the column — caller must fall
-    back to a distributed pass (never guess)."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, object] = {}
-    for f in files:
-        try:
-            md = pq.ParquetFile(f).metadata
-        except Exception:
-            # unreadable footer -> distributed fallback, never a crash
-            # (mirrors _footer_column_stats's guard; ADVICE r11)
-            return {}, False
-        hi = None
-        seen = False
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                c = g.column(ci)
-                if c.path_in_schema != col:
-                    continue
-                seen = True
-                st = c.statistics
-                if st is None or not st.has_null_count:
-                    return {}, False
-                if st.has_min_max:
-                    v = _py_stat(st.max)
-                    if hi is None or v > hi:
-                        hi = v
-                elif st.null_count != c.num_values:
-                    return {}, False  # stats omitted on non-null data
-        if not seen:
-            return {}, False  # column missing from the file's schema
-        out[f] = hi
-    return out, True
-
-
 def _spark_column_stats(
     spark: SparkSession, staging: str, cols: list[str]
 ) -> dict[str, dict[str, list]]:
@@ -1568,30 +1527,26 @@ def _staged_tombstone_buckets(
     tombstone row — read from the footers' boolean max when the column
     is a plain boolean (zero Spark jobs; footer max is NULL-skipping
     and an all-NULL chunk contributes nothing, exactly matching the
-    ``max(coalesce(cast(_deleted as boolean), false))`` the distributed
-    pass computes); any other physical type, or a footer without
-    usable stats, falls back to the scan. ``by_bucket`` is the staging
-    listing."""
+    ``max(_tomb_flag())`` the distributed pass computes); any other
+    physical type, or a footer without usable stats, falls back to the
+    scan. ``by_bucket`` is the staging listing."""
     if types.get(TOMBSTONE_COL) == "boolean":
         files = [f for fs in by_bucket.values() for f in fs]
-        maxes, usable = _footer_col_max(files, TOMBSTONE_COL)
-        if usable:
+        stats, fallback = _footer_column_stats(files, [TOMBSTONE_COL])
+        if not fallback:
+            # [min, max, nulls]; an all-NULL file has no entry
+            tombed = {
+                f for f, d in stats.items()
+                if d.get(TOMBSTONE_COL, [None, None])[1] is True
+            }
             return sorted(
-                b
-                for b, fs in by_bucket.items()
-                if any(maxes.get(f) is True for f in fs)
+                b for b, fs in by_bucket.items() if tombed.intersection(fs)
             )
     return sorted(
         r.bucket
         for r in spark.read.parquet(staging)
         .groupBy("bucket")
-        .agg(
-            F.max(
-                F.coalesce(
-                    F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
-                )
-            ).alias("has_tomb")
-        )
+        .agg(F.max(_tomb_flag()).alias("has_tomb"))
         .collect()
         if r.has_tomb
     )
@@ -1743,17 +1698,17 @@ def init_table(
     )
     if identity_col is not None:
         manifest["identity_col"] = identity_col
-        # integral column (validated above): the staged footers hold
-        # the exact max — avoid re-executing the seed frame for it
-        maxes, usable = _footer_col_max(
-            [f for fs in new.values() for f in fs], identity_col
+        # integral column (validated above), so always stats-eligible:
+        # the column_stats the staged-rewrite step just recorded hold
+        # the exact max — no re-execution of the seed frame
+        manifest["identity_high_water"] = max(
+            (
+                int(d[identity_col][1])
+                for d in manifest["column_stats"].values()
+                if identity_col in d
+            ),
+            default=0,
         )
-        if usable:
-            vals = [v for v in maxes.values() if v is not None]
-            hw = max(vals) if vals else None
-        else:
-            hw = df.agg(F.max(identity_col).alias("hw")).first().hw
-        manifest["identity_high_water"] = int(hw) if hw is not None else 0
     if not _publish_manifest(base_dir, manifest):
         shutil.rmtree(staging, ignore_errors=True)  # loser leaves nothing
         raise ValueError(f"concurrent init of {base_dir}")
@@ -1864,6 +1819,13 @@ def read_snapshot_null(
     )
 
 
+def _tomb_flag():
+    """A row's tombstone flag: the marker cast to boolean, NULL read as
+    live — the same cast every write path applies, so a dirty-typed
+    marker (int 0/1, string flags) is accepted everywhere alike."""
+    return F.coalesce(F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False))
+
+
 def _visible_rows(df: DataFrame) -> DataFrame:
     """Hide tombstoned keys and drop the marker column — the ONE
     definition of 'visible', shared by read_snapshot and
@@ -1872,9 +1834,7 @@ def _visible_rows(df: DataFrame) -> DataFrame:
     write path accepts is equally readable."""
     if TOMBSTONE_COL not in df.columns:
         return df
-    return df.filter(
-        ~F.coalesce(F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False))
-    ).drop(TOMBSTONE_COL)
+    return df.filter(~_tomb_flag()).drop(TOMBSTONE_COL)
 
 
 def _mor_delete_files(manifest: dict) -> list[str]:
@@ -2882,11 +2842,7 @@ def merge_upsert_manifest(
             )
         else:
             tomb_flag = (
-                F.coalesce(
-                    F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
-                )
-                if TOMBSTONE_COL in upd.columns
-                else F.lit(False)
+                _tomb_flag() if TOMBSTONE_COL in upd.columns else F.lit(False)
             )
             bucket_info = (
                 upd.groupBy(_bucket_of(key_col, n_buckets).alias("bucket"))
@@ -3112,7 +3068,7 @@ def compact_tombstones(
     Returns ``{"version", "buckets_compacted", "tombstones_dropped"}``;
     a table with no flagged buckets returns its current version with
     no new commit."""
-    tomb = F.coalesce(F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False))
+    tomb = _tomb_flag()
 
     def build(snap, attempt, stage):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
@@ -3581,13 +3537,7 @@ def replace_where_range(
         if to_rewrite or new_buckets:
             out = batch
             if to_rewrite:
-                tomb = (
-                    F.coalesce(
-                        F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
-                    )
-                    if TOMBSTONE_COL in types_
-                    else F.lit(False)
-                )
+                tomb = _tomb_flag() if TOMBSTONE_COL in types_ else F.lit(False)
                 out = _read_visible_base(
                     spark, snap, to_rewrite, cols_, types_,
                     snap.get("column_epochs"), snap.get("file_versions"),

@@ -8,9 +8,12 @@ each engine's capability, the same rationale bench.py documents for
 its min-of-2). Full materialization on both sides (fetchall / count).
 Rows-only queries (no oracle SQL) get a Spark time and '—' for DuckDB.
 
-Usage: python scripts/make_baseline.py [sf_dir]  (default sf0.1)
-Writes the markdown table between the BASELINE_TABLE markers in
-BASELINE.md (appends markers if absent) and prints a summary.
+Usage: python scripts/make_baseline.py [QUERY ...] [sf_dir]  (default sf0.1)
+With no QUERY, times every registered query and rewrites the table
+between the BASELINE_TABLE markers in BASELINE.md; named queries re-time
+only their own rows and keep the rest (operators added late in a round).
+Either way the three totals lines are recomputed from the table's rows,
+and a summary is printed.
 """
 
 from __future__ import annotations
@@ -27,9 +30,18 @@ import duckdb
 from assignment4_spark import registry
 from assignment4_spark.schemas import TABLES
 from assignment4_spark.session import get_spark
+from scripts.time_slow_oracles import SLOW, WRITE_PATH_PROTOCOL
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_RUNS = 3
+TINY_SF = "/root/testdata/sf0.001"
+HEADER = [
+    "| Query (queries() key) | DuckDB sf0.1 (s) | Spark sf0.1 (s) | Ratio | Notes |",
+    "|---|---|---|---|---|",
+]
+TABLE_RE = re.compile(
+    r"<!-- BASELINE_TABLE -->\n(.*?)\n<!-- /BASELINE_TABLE -->", re.S
+)
 
 
 def best_time(fn, always_full: bool = False) -> float:
@@ -49,8 +61,121 @@ def best_time(fn, always_full: bool = False) -> float:
     return min(ts)
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+def table_rows(text: str) -> list[str]:
+    """The query rows of BASELINE.md's table (totals lines excluded)."""
+    m = TABLE_RE.search(text)
+    if m is None:
+        raise SystemExit("BASELINE.md has no BASELINE_TABLE markers")
+    return [line for line in m.group(1).splitlines() if line.startswith("| `")]
+
+
+def time_row(spark, con, name: str, sf_dir: str, slow: dict) -> str:
+    """One table row for ``name``: one untimed warm run (plan
+    compilation and codegen are not the steady state the table
+    reports), then MIN of N_RUNS per engine. O(N²) brute-force DuckDB
+    oracles are never re-run: their seconds come from ``slow``
+    (scripts/time_slow_oracles.py). The tripwire note marks a query
+    over 2x DuckDB only if it is DATA-PROPORTIONAL (sf0.1 >= 3x one
+    sf0.001 run — real compute); a query on Spark's fixed ~0.1-0.3 s
+    scheduling floor has ratio noise, not a compute regression
+    (BASELINE.md §3)."""
+    fn = registry.QUERIES[name]
+    fn(spark, sf_dir).count()
+    s = best_time(lambda: fn(spark, sf_dir).count(), always_full=True)
+    s_tiny = None
+    if os.path.isdir(TINY_SF):
+        try:
+            fn(spark, TINY_SF).count()  # warm: plan compile/codegen
+            t0 = time.perf_counter()
+            fn(spark, TINY_SF).count()
+            s_tiny = time.perf_counter() - t0
+        except Exception:
+            s_tiny = None
+    if name in slow:
+        d = slow[name]
+        cells = (
+            ("(pending)", f"{s:.3f}", "—",
+             "DuckDB O(N²) brute-force oracle still being timed")
+            if d is None
+            else (f"{d:.1f}", f"{s:.3f}", f"{s / d:.3f}×",
+                  "DuckDB side is the O(N²) brute-force oracle, timed once")
+        )
+    elif name in registry.ORACLES:
+        sql = registry.ORACLES[name]
+        d = best_time(lambda: con.execute(sql).fetchall())
+        note = ""
+        if d > 0 and s / d > 2.0 and s_tiny and s >= 3.0 * s_tiny:
+            note = (
+                f"TRIPWIRE: data-proportional (sf0.1 = {s / s_tiny:.1f}x "
+                "sf0.001) and >2x DuckDB"
+            )
+        cells = (f"{d:.3f}", f"{s:.3f}", f"{s / d:.1f}×" if d > 0 else "—", note)
+    else:
+        cells = ("—", f"{s:.3f}", "—", "rows-only (no oracle)")
+    print(f"{name:28s} duck={cells[0]:>7s} spark={cells[1]:>7s}", flush=True)
+    return f"| `{name}` | " + " | ".join(cells) + " |"
+
+
+def _seconds(cell: str) -> float | None:
+    try:
+        return float(cell)
+    except ValueError:  # '—' or '(pending)'
+        return None
+
+
+def totals(rows: list[str]) -> list[str]:
+    """The table's three totals lines, summed from its query rows: every
+    timed cell; the sane-oracle subset (rows with both timings whose
+    DuckDB side is not an O(N²) brute-force oracle); and the read-path
+    subset (sane rows minus the write-path protocol faces)."""
+    parsed = []
+    for line in rows:
+        cells = [c.strip() for c in line.split("|")[1:-1]]
+        parsed.append((cells[0].strip("`"), _seconds(cells[1]), _seconds(cells[2])))
+    both = [(n, d, s) for n, d, s in parsed if d is not None and s is not None]
+    sane = [(n, d, s) for n, d, s in both if n not in SLOW]
+    read = [(n, d, s) for n, d, s in sane if n not in WRITE_PATH_PROTOCOL]
+
+    def line(label, duck, spark, note):
+        ratio = spark / duck if duck else float("nan")
+        return (
+            f"| **{label}** | **{duck:.2f}** | **{spark:.2f}** | "
+            f"**{ratio:.3g}×** | {note} |"
+        )
+
+    return [
+        line(
+            "total (oracled queries)",
+            sum(d for _, d, _ in parsed if d is not None),
+            sum(s for _, _, s in parsed if s is not None),
+            f"per-query min of {N_RUNS} (symmetric); Spark includes "
+            "~0.1-0.3 s/query fixed driver+scheduling overhead",
+        ),
+        line(
+            "total (sane-oracle subset — excludes the O(N²) "
+            "brute-force-oracle rows)",
+            sum(d for _, d, _ in sane),
+            sum(s for _, _, s in sane),
+            "grows with every write-path protocol face added (family "
+            "growth, not regression); see the read-path row for the "
+            "committed headline",
+        ),
+        line(
+            "total (read-path subset — additionally excludes the "
+            f"{len(WRITE_PATH_PROTOCOL)} write-path protocol rows)",
+            sum(d for _, d, _ in read),
+            sum(s for _, _, s in read),
+            "THE COMMITTED PLAN-QUALITY HEADLINE vs the 2× bar "
+            "(BASELINE.md §2): every op whose oracle measures the same "
+            "work; the excluded protocol faces run 3-5 real table commits "
+            "against one-SELECT replay oracles (adjudicated category "
+            "mismatch, VERDICT r7; flat across the 100× sweep)",
+        ),
+    ]
+
+
+def main(args: list[str]) -> None:
+    sf_dir = args.pop() if args and os.path.isdir(args[-1]) else "/root/testdata/sf0.1"
     registry.load_all()
     spark = get_spark("baseline")
     con = duckdb.connect()
@@ -60,7 +185,7 @@ def main() -> None:
     # warm-up both engines, incl. each Python-worker pool (same set as
     # bench.py: plain UDF, Arrow/pandas, Python DataSource planning) so
     # first-touch process spawning doesn't land on one query's median
-    warm_sf = "/root/testdata/sf0.001" if os.path.isdir("/root/testdata/sf0.001") else sf_dir
+    warm_sf = TINY_SF if os.path.isdir(TINY_SF) else sf_dir
     for wname, wsf in (
         ("agg_groupby_basic", sf_dir),
         ("udf_python_scalar", warm_sf),
@@ -70,14 +195,7 @@ def main() -> None:
         registry.QUERIES[wname](spark, wsf).count()
     con.execute(registry.ORACLES["agg_groupby_basic"]).fetchall()
 
-    # Oracles that are O(N²) brute-force SQL (the honest correctness twin
-    # of an LSH/matmul operator, not a sane way to execute it): DuckDB
-    # runs them for MINUTES at sf0.1. Timed once via SLOW_ORACLE_SECONDS
-    # (scripts/time_slow_oracles.py), injected here instead of re-run.
-    from scripts.time_slow_oracles import SLOW as slow_names
-    from scripts.time_slow_oracles import WRITE_PATH_PROTOCOL as wp_names
-
-    slow = {n: None for n in slow_names}
+    slow: dict[str, float | None] = dict.fromkeys(SLOW)
     slow_path = os.path.join(REPO, "scripts", "slow_oracle_seconds.txt")
     if os.path.exists(slow_path):
         with open(slow_path) as f:
@@ -85,126 +203,30 @@ def main() -> None:
                 k, v = line.split()
                 slow[k] = float(v)
 
-    # Tripwire inputs: a single sf0.001 Spark timing per query separates
-    # DATA-PROPORTIONAL queries (sf0.1 >= 3x sf0.001 — real compute) from
-    # queries sitting on Spark's fixed ~0.1-0.3 s scheduling floor, where
-    # a big DuckDB ratio is meaningless (BASELINE.md §3).
-    tiny_sf = "/root/testdata/sf0.001"
-    tiny_ok = os.path.isdir(tiny_sf)
-    tripped: list[str] = []
-
-    rows = []
-    spark_total = duck_total = 0.0
-    sane_spark = sane_duck = 0.0
-    rp_spark = rp_duck = 0.0
-    for name in sorted(registry.QUERIES):
-        fn = registry.QUERIES[name]
-        # one untimed warm run per query: the first execution pays plan
-        # compilation + codegen (and, mid-sweep, code-cache churn) that
-        # is not the steady state the table claims to report
-        fn(spark, sf_dir).count()
-        s = best_time(lambda: fn(spark, sf_dir).count(), always_full=True)
-        spark_total += s
-        s_tiny = None
-        if tiny_ok:
-            try:
-                fn(spark, tiny_sf).count()  # warm: plan compile/codegen
-                t0 = time.perf_counter()
-                fn(spark, tiny_sf).count()
-                s_tiny = time.perf_counter() - t0
-            except Exception:
-                s_tiny = None
-        if name in slow:
-            d = slow[name]
-            if d is None:
-                rows.append((name, "(pending)", f"{s:.3f}", "—",
-                             "DuckDB O(N²) brute-force oracle still being timed"))
-            else:
-                duck_total += d
-                rows.append(
-                    (name, f"{d:.1f}", f"{s:.3f}", f"{s / d:.3f}×",
-                     "DuckDB side is the O(N²) brute-force oracle, timed once")
-                )
-        elif name in registry.ORACLES:
-            sql = registry.ORACLES[name]
-            d = best_time(lambda: con.execute(sql).fetchall())
-            duck_total += d
-            sane_spark += s
-            sane_duck += d
-            if name not in wp_names:
-                rp_spark += s
-                rp_duck += d
-            ratio = f"{s / d:.1f}×" if d > 0 else "—"
-            note = ""
-            # >2x tripwire, but only for data-proportional queries — a
-            # scheduling-floor query at sf0.1 has ratio noise, not a
-            # compute regression
-            if (
-                d > 0
-                and s / d > 2.0
-                and s_tiny is not None
-                and s_tiny > 0
-                and s >= 3.0 * s_tiny
-            ):
-                tripped.append(name)
-                note = f"TRIPWIRE: data-proportional (sf0.1 = {s / s_tiny:.1f}x sf0.001) and >2x DuckDB"
-            rows.append((name, f"{d:.3f}", f"{s:.3f}", ratio, note))
-        else:
-            rows.append((name, "—", f"{s:.3f}", "—", "rows-only (no oracle)"))
-        print(f"{name:28s} duck={rows[-1][1]:>7s} spark={rows[-1][2]:>7s}", flush=True)
-
-    ratio_total = spark_total / duck_total if duck_total else float("nan")
-    header = (
-        "| Query (queries() key) | DuckDB sf0.1 (s) | Spark sf0.1 (s) | Ratio | Notes |\n"
-        "|---|---|---|---|---|\n"
-    )
-    body = "\n".join(f"| `{n}` | {d} | {s} | {r} | {note} |" for n, d, s, r, note in rows)
-    sane_ratio = sane_spark / sane_duck if sane_duck else float("nan")
-    rp_ratio = rp_spark / rp_duck if rp_duck else float("nan")
-    totals = (
-        f"\n| **total (oracled queries)** | **{duck_total:.2f}** | "
-        f"**{spark_total:.2f}** | **{ratio_total:.3g}×** | per-query min of {N_RUNS} "
-        f"(symmetric); Spark includes ~0.1-0.3 s/query fixed driver+scheduling overhead |"
-        f"\n| **total (sane-oracle subset — excludes the O(N²) brute-force-oracle rows)** | "
-        f"**{sane_duck:.2f}** | **{sane_spark:.2f}** | **{sane_ratio:.3g}×** | "
-        f"grows with every write-path protocol face added (family growth, not regression); see the read-path row for the committed headline |"
-        f"\n| **total (read-path subset — additionally excludes the {len(wp_names)} write-path protocol rows)** | "
-        f"**{rp_duck:.2f}** | **{rp_spark:.2f}** | **{rp_ratio:.3g}×** | "
-        f"THE COMMITTED PLAN-QUALITY HEADLINE vs the 2× bar (BASELINE.md §2): "
-        "every op whose oracle measures the same work; the excluded protocol faces "
-        "run 3-5 real table commits against one-SELECT replay oracles "
-        "(adjudicated category mismatch, VERDICT r7; flat across the 100× sweep) |"
-    )
-    table = header + body + totals
-
+    timed = {
+        name: time_row(spark, con, name, sf_dir, slow)
+        for name in args or sorted(registry.QUERIES)
+    }
+    spark.stop()
     path = os.path.join(REPO, "BASELINE.md")
     with open(path) as f:
         text = f.read()
+    rows = {r.split("`")[1]: r for r in table_rows(text)} if args else {}
+    rows.update(timed)
+
+    body = [rows[k] for k in sorted(rows)]
+    tot = totals(body)
+    table = "\n".join(HEADER + body + tot)
     block = f"<!-- BASELINE_TABLE -->\n{table}\n<!-- /BASELINE_TABLE -->"
-    if "<!-- BASELINE_TABLE -->" in text:
-        text = re.sub(
-            r"<!-- BASELINE_TABLE -->.*?<!-- /BASELINE_TABLE -->",
-            block,
-            text,
-            flags=re.S,
-        )
-    else:
-        text = re.sub(
-            r"\| Query \(queries\(\) key\).*?\n\|---.*?\n\|.*?\n",
-            block + "\n",
-            text,
-            flags=re.S,
-        )
     with open(path, "w") as f:
-        f.write(text)
-    print(f"\nTOTAL duckdb={duck_total:.2f}s spark={spark_total:.2f}s ratio={ratio_total:.2f}x")
-    print(f"SANE-SUBSET duckdb={sane_duck:.2f}s spark={sane_spark:.2f}s ratio={sane_ratio:.2f}x")
+        f.write(TABLE_RE.sub(lambda _: block, text))
+    print("\n" + "\n".join(tot))
+    tripped = [r.split("`")[1] for r in body if "| TRIPWIRE:" in r]
     if tripped:
         print("TRIPWIRE (>2x DuckDB on data-proportional queries):", ", ".join(tripped))
     else:
         print("TRIPWIRE: none — no data-proportional query exceeds 2x DuckDB")
-    spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

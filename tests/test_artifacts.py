@@ -77,3 +77,46 @@ def test_shuffle_adjudications_are_live(reg):
             "no longer trips the flag rule — stale adjudication"
         )
         assert row["sf0.1"]["shuffle_bytes"] >= min_bytes
+
+
+def test_baseline_totals_derive_from_rows():
+    """BASELINE.md's three totals lines are exactly what the baseline
+    script's one totals rule sums from the committed table's rows."""
+    from scripts.make_baseline import TABLE_RE, table_rows, totals
+
+    with open(os.path.join(REPO, "BASELINE.md")) as f:
+        text = f.read()
+    lines = TABLE_RE.search(text).group(1).splitlines()
+    want = [line for line in lines if line.startswith("| **total")]
+    assert len(want) == 3
+    assert totals(table_rows(text)) == want
+
+
+def test_scripts_import_and_resolve():
+    """Every scripts/*.py module imports, and every ``scripts.*`` name it
+    imports, at module level or inside a function, exists — folding one
+    script into another cannot leave a dangling import behind."""
+    import ast
+    import glob
+    import importlib
+
+    paths = sorted(glob.glob(os.path.join(REPO, "scripts", "*.py")))
+    assert paths
+    for path in paths:
+        stem = os.path.splitext(os.path.basename(path))[0]
+        importlib.import_module(f"scripts.{stem}")
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for alias in node.names:
+                    if alias.name.startswith("scripts."):
+                        importlib.import_module(alias.name)
+            elif isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).startswith("scripts."):
+                mod = importlib.import_module(node.module)
+                for alias in node.names:
+                    assert hasattr(mod, alias.name), (
+                        f"{stem}: {node.module}.{alias.name} does not exist"
+                    )

@@ -1442,8 +1442,7 @@ def test_clustered_commit_layout_and_task_budget(spark, tmp_path):
     each commit's write stage runs at most max(defaultParallelism, 4)
     tasks, the routing rule's bound for 4 bins, plus one of slack (a
     hash exchange over buckets x bins runs 16)."""
-    import uuid
-
+    from assignment4_spark.obs import measure
     from assignment4_spark.operators.lakehouse import (
         _bucket_of,
         optimize_compact,
@@ -1462,21 +1461,16 @@ def test_clustered_commit_layout_and_task_budget(spark, tmp_path):
     model = {k: (1, k * 10.0) for k in range(400)}
 
     def commit(fn):
-        group = f"layout-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "commit")
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup(None, None)
+        m = measure(spark, fn)
         # each job's final stage: the write job's is the write stage;
         # the others' are input scans or 1-task aggregates
         final = [
             tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds))
-            for j in tracker.getJobIdsForGroup(group)
+            for j in m.job_ids
         ]
         tasks = [st.numTasks for st in final]
         assert tasks and max(tasks) <= budget, (tasks, budget)
-        return out
+        return m.result
 
     def check(written):
         got = sorted(
@@ -3319,12 +3313,11 @@ def test_read_job_counts_pinned(spark, tmp_path):
     """Job-count pin for every read kind: ``.count()`` of a plain,
     between, range, is_null and point read of a small clustered,
     bloom-indexed table with one pending DV sidecar launches exactly
-    these Spark jobs, counted per job group the way
-    scripts/count_jobs.py counts an op — a perf gate that timing noise
-    cannot fake. The point read's extra job is the 1-row job hashing
+    these Spark jobs, counted by ``obs.measure`` as
+    ``scripts/measure.py jobs`` counts an op — a perf gate that timing
+    noise cannot fake. The point read's extra job is the 1-row job hashing
     the probe into its Bloom bit positions."""
-    import uuid
-
+    from assignment4_spark.obs import measure
     from assignment4_spark.operators.lakehouse import (
         delete_keys_dv,
         init_table,
@@ -3352,16 +3345,12 @@ def test_read_job_counts_pinned(spark, tmp_path):
         ("is_null", "maybe"): (5, 4),
         ("point", "u61"): (6, 1),
     }
-    sc = spark.sparkContext
     got = {}
     for where in want:
-        group = f"read-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, str(where))
-        try:
-            n = read_snapshot(spark, base, where=where).count()
-        finally:
-            sc.setJobGroup(None, None)
-        got[where] = (len(sc.statusTracker().getJobIdsForGroup(group)), n)
+        m = measure(
+            spark, lambda: read_snapshot(spark, base, where=where).count()
+        )
+        got[where] = (m.jobs, m.result)
     assert got == want
 
 
@@ -4800,7 +4789,6 @@ def test_footer_stats_unreadable_file_falls_back(spark, tmp_path):
 
     from assignment4_spark.operators.lakehouse import (
         _bucket_of,
-        _footer_col_max,
         _footer_column_stats,
         _list_bucket_files,
         _write_clustered,
@@ -4817,8 +4805,6 @@ def test_footer_stats_unreadable_file_falls_back(spark, tmp_path):
         f.write(b"not a parquet file")
     stats, fallback = _footer_column_stats(files + [bad], ["k", "v"])
     assert stats == {} and fallback == {"k", "v"}
-    maxes, usable = _footer_col_max(files + [bad], "v")
-    assert maxes == {} and usable is False
 
 
 def test_uniform_schema_read_case_variant_column(spark, tmp_path):
