@@ -64,3 +64,54 @@ def measure(spark: SparkSession, fn: Callable[[], Any]) -> Measurement:
         if (info := tracker.getStageInfo(s))
     )
     return Measurement(seconds, job_ids, len(job_ids), tasks, result)
+
+
+def job_timeline(events: list[dict], job_ids: list[int]) -> list[dict]:
+    """One row per job in ``job_ids`` from a Spark event log's events
+    (the parsed JSON lines), in job-id order: ``job``, ``start`` and
+    ``end`` (epoch ms), ``desc`` (the job description, else its call
+    site), ``stages`` and ``tasks`` of the stages that RAN for it, and
+    ``skipped``, its listed stages that never ran.
+
+    The tasks follow ``measure``'s rule, so they sum to its ``tasks``:
+    a stage counts once, for the first of the jobs that lists it, and
+    only if a ``SparkListenerStageCompleted`` event shows it ran; a
+    stage an earlier job already ran is listed again by later jobs but
+    skipped there."""
+    wanted = set(job_ids)
+    jobs: dict[int, dict] = {}
+    listed: dict[int, list[int]] = {}
+    ran: dict[int, int] = {}
+    for ev in events:
+        kind = ev.get("Event")
+        if kind == "SparkListenerStageCompleted":
+            info = ev["Stage Info"]
+            ran[info["Stage ID"]] = info.get("Number of Tasks", 0)
+        elif ev.get("Job ID") not in wanted:
+            continue
+        elif kind == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            jid = ev["Job ID"]
+            jobs[jid] = {
+                "job": jid,
+                "start": ev["Submission Time"],
+                "desc": props.get("spark.job.description")
+                or props.get("callSite.short", ""),
+            }
+            listed[jid] = [s["Stage ID"] for s in ev.get("Stage Infos", [])]
+        elif kind == "SparkListenerJobEnd":
+            jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
+    seen: set[int] = set()
+    rows = []
+    for jid in sorted(jobs):
+        mine = [s for s in listed[jid] if s in ran and s not in seen]
+        seen.update(mine)
+        rows.append(
+            {
+                **jobs[jid],
+                "stages": len(mine),
+                "tasks": sum(ran[s] for s in mine),
+                "skipped": len(listed[jid]) - len(mine),
+            }
+        )
+    return rows

@@ -458,6 +458,7 @@ def _write_clustered(
     cluster_col: str | None = None,
     cluster_bins: int = 4,
     latest_wins: tuple[str, str] | None = None,
+    bounds: tuple | None = None,
 ) -> None:
     """The commit write of ``_stage_rewrite`` (every face that rewrites
     buckets: init / merge / compact / optimize / replaceWhere /
@@ -491,19 +492,35 @@ def _write_clustered(
 
     ``cluster_col`` (zorder-lite, set table-wide at init and
     maintained by every commit path) range-bins each bucket's rows by
-    the column's value — ``width_bucket`` over the batch's global
-    (min, max), the ``hi`` edge folded into the last bin, NULLs in one
-    extra bin — and sorts rows within, so every file covers a VALUE
-    SLICE of the cluster column and the manifest's per-file (min, max)
-    stats give range reads real file-level skipping (a hash bucket's
-    single file otherwise spans the full value range and no
-    secondary-column stat can ever prune it). A commit leaves at most
+    the column's value — ``width_bucket`` over a (min, max) that
+    covers every written row, the ``hi`` edge folded into the last
+    bin, NULLs in one extra bin — and sorts rows within, so every file
+    covers a VALUE SLICE of the cluster column and the manifest's
+    per-file (min, max) stats give range reads real file-level
+    skipping (a hash bucket's single file otherwise spans the full
+    value range and no secondary-column stat can ever prune it). A commit leaves at most
     ``cluster_bins`` files per bucket, plus one for NULLs; the bin term
     already restores intra-bucket write parallelism, so cluster_col
     supersedes salt when both are set. Uniform bins are the 'lite'
     part — Delta's OPTIMIZE ZORDER uses range partitioning over
     sampled quantiles; at fixture scale uniform slices skip just as
     provably.
+
+    The (min, max, has-NULL) triple is ``bounds`` when the caller has
+    it from metadata (``_cluster_bounds``): the union of the read
+    files' manifest ``column_stats`` and, for a merge, the batch's own
+    per-bucket triples from its bucket probe. Latest-wins, MOR/DV application and
+    tombstone compaction only REMOVE rows, so that union spans a
+    superset of the written rows' range — bins may widen, never miss a
+    row, and the file bound holds by construction (a NULL bin no row
+    lands in writes no file). ``_cluster_bounds`` refuses (the bounds
+    job over ``df`` runs instead) when a read file has no stats entry
+    for the column or the column is dead in it (``_dead_columns``, or
+    that rule raises); the merge also refuses when it skipped the probe
+    (``bucket_hint``), patches columns (``patch_cols``: carried and
+    NULL-filled values appear only after the probe) or clusters on its
+    identity column (minted ids appear after the probe). init and
+    replaceWhere always run the job.
 
     ``latest_wins=(ver_col, tiebreak_col)`` keeps one row per key, the
     highest ``ver_col`` (ties to the lowest ``tiebreak_col``). On the
@@ -521,8 +538,7 @@ def _write_clustered(
     key, PARTITION BY key and PARTITION BY (bucket, task, key) define
     the same groups. Under ``cluster_col`` a key's rows can land in
     different range bins, so the window runs by key BEFORE routing
-    (and before the bin-bounds job, so the bins span the winners
-    only).
+    (and before the bin-bounds job, if one runs).
 
     The write runs with AQE off (restored after, see
     ``_aqe_off_enter``): the partitioning is fully pinned — rows
@@ -540,7 +556,7 @@ def _write_clustered(
         (
             _route_slots(
                 df, key_col, salt, n_buckets, cluster_col, cluster_bins,
-                latest_wins,
+                latest_wins, bounds,
             )
             .write.mode("overwrite")
             .partitionBy("bucket")
@@ -603,31 +619,32 @@ def _route_slots(
     cluster_col: str | None,
     cluster_bins: int,
     latest_wins: tuple[str, str] | None = None,
+    bounds: tuple | None = None,
 ) -> DataFrame:
     """The commit write's input routed to its write tasks (the rule is
     in _write_clustered's docstring): slot ``sub * n_buckets +
     bucket``, task ``slot // chunk``. ``sub`` is the range bin under
-    ``cluster_col``, the key's salt when ``salt > 1``, else 0."""
+    ``cluster_col``, the key's salt when ``salt > 1``, else 0.
+
+    The range bins' edges are ``bounds = (lo, hi, has_null)`` when the
+    caller derived them from manifest stats (``_cluster_bounds``), else
+    one job over ``df`` before the write plans."""
     if cluster_col is not None:
         if latest_wins is not None:
             # a key's rows span range bins: pick the winner first
             df = _fused_latest_wins(df, [F.col(key_col)], latest_wins)
             latest_wins = None
-        # one job before the write plans: the batch's value range and
-        # whether it holds NULLs (the bins' edges and count). The job
-        # recomputes df's lineage; a persist(MEMORY_AND_DISK) between
-        # the two was tried and measured SLOWER (paired, +0.5-2 s per
-        # clustered face): DataFrame persist materializes a compressed columnar
-        # InMemoryRelation, which costs more than re-running the
-        # bucket-pruned read + window at fixture scale. Left as
-        # recompute deliberately; at cluster scale the trade reverses
-        # only when the rewrite lineage is much wider than the cache.
         c = F.col(cluster_col)
-        bounds = df.agg(
-            F.min(c).alias("lo"), F.max(c).alias("hi"),
-            (F.count(F.lit(1)) > F.count(c)).alias("has_null"),
-        ).first()
-        lo, hi = bounds.lo, bounds.hi
+        if bounds is None:
+            # the fallback re-runs df's whole lineage (the rewrite's
+            # base read and latest-wins window) once before the write
+            # runs it again
+            r = df.agg(
+                F.min(c).alias("lo"), F.max(c).alias("hi"),
+                (F.count(F.lit(1)) > F.count(c)).alias("has_null"),
+            ).first()
+            bounds = (r.lo, r.hi, r.has_null)
+        lo, hi, has_null = bounds
         bins = 1 if lo is None or lo == hi else cluster_bins
         if bins == 1:
             value_bin = F.lit(0)
@@ -642,7 +659,7 @@ def _route_slots(
                 F.lit(bins),
             ) - 1
         sub = F.when(c.isNull(), F.lit(bins)).otherwise(value_bin)
-        n_subs = bins + int(bounds.has_null)
+        n_subs = bins + int(has_null)
     else:
         if salt > 1 and key_col is None:
             raise ValueError("salted clustered write requires key_col")
@@ -953,8 +970,8 @@ def plan_files(
       [min, max, null_count] shape cannot tell them apart), so it is
       kept — and for the same reason IS NOT NULL could never prune;
     - point: some probe bit is absent from its ``file_blooms`` filter.
-      The bit positions are computed by ``spark`` (one 1-row job); the
-      other kinds need no session."""
+      The bit positions are computed by ``spark`` (on the driver, no
+      job); the other kinds need no session."""
     files = [f for fs in manifest["buckets"].values() for f in fs]
     if where is None:
         return files, []
@@ -1062,23 +1079,24 @@ def _staged_file_blooms(
     bloom_type: str | None = None,
 ) -> dict[str, dict[str, int]]:
     """Per-file Bloom filter of the bloom column for a just-staged
-    commit, built DISTRIBUTED: each row explodes to its k bit
-    positions (pmod(xxhash64(value, seed_i), m)), positions fold to
-    (file, word_index) → bit_or partial-aggregated words — the collect
-    is O(files × m/64) words of METADATA, independent of row count
-    (never the positions themselves, which scale with data). NULLs set
-    no bits (a NULL probe is meaningless); files holding only NULLs
-    get an empty entry and match nothing.
+    commit, built DISTRIBUTED in one job: each row's k bit positions
+    (pmod(xxhash64(value, seed_i), m)) fold per (file, 32 Ki-bit
+    bitmap bucket) into one ``bitmap_construct_agg`` bitmap — the
+    collect is one 4 KB bitmap per file per 32768 bits of ``m``,
+    independent of row count. The driver splits each bitmap into the
+    manifest's ``{str(word_index): signed int64 word}`` entries (bit
+    ``p`` is bit ``p % 64`` of word ``p // 64``), leaving out zero
+    words. NULLs set no bits (a NULL probe is meaningless); files
+    holding only NULLs get an empty entry and match nothing.
 
     ``bloom_type`` (the table's recorded column type) lets the scan
     bind an explicit one-column schema: no schema-inference job, and
-    ``files`` is the staging listing the commit already holds — the
-    hashing pass is this function's ONLY Spark job (it
-    previously paid two extra inference/listing relations per commit).
-    The hash is over the BUILT column type either way — an explicit
+    ``files`` is the staging listing the commit already holds. The
+    hash is over the BUILT column type either way — an explicit
     schema equal to what inference would return, so bits are
     unchanged. Without ``bloom_type`` (legacy manifests) the inferring
     read stands."""
+    import struct
     from urllib.parse import unquote, urlparse
 
     if not files:
@@ -1086,10 +1104,12 @@ def _staged_file_blooms(
     reader = spark.read
     if bloom_type is not None:
         reader = reader.schema(f"`{bloom_col}` {bloom_type}")
+    # bitmap positions are 1-based: bucket (p - 1) // 32768 + 1, bit
+    # (p - 1) % 32768
     pos = F.explode(
         F.array(
             *[
-                F.pmod(F.xxhash64(F.col("v"), F.lit(i)), F.lit(m))
+                F.pmod(F.xxhash64(F.col("v"), F.lit(i)), F.lit(m)) + 1
                 for i in range(k)
             ]
         )
@@ -1099,15 +1119,8 @@ def _staged_file_blooms(
         .select(F.input_file_name().alias("f"), F.col(bloom_col).alias("v"))
         .filter(F.col("v").isNotNull())
         .select("f", pos)
-        .select(
-            "f",
-            (F.col("pos") / 64).cast("int").alias("w"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))"
-            ).alias("bit"),
-        )
-        .groupBy("f", "w")
-        .agg(F.bit_or("bit").alias("word"))
+        .groupBy("f", F.bitmap_bucket_number("pos").alias("b"))
+        .agg(F.bitmap_construct_agg(F.bitmap_bit_position("pos")).alias("bm"))
         .collect()
     )
     out: dict[str, dict[str, int]] = {}
@@ -1116,7 +1129,11 @@ def _staged_file_blooms(
     for f in files:
         out[f] = {}
     for r in rows:
-        out[unquote(urlparse(r.f).path)][str(r.w)] = r.word
+        entry = out[unquote(urlparse(r.f).path)]
+        first = (r.b - 1) * (len(r.bm) // 8)
+        for j, (word,) in enumerate(struct.iter_unpack("<q", r.bm)):
+            if word:
+                entry[str(first + j)] = word
     return out
 
 
@@ -1127,12 +1144,16 @@ def _bloom_positions(
     value cast to the table's recorded column type — xxhash64(5L) !=
     xxhash64('5') != xxhash64(5 int), so hashing probe-side in Python
     (or at a drifted type) would silently never match the build-side
-    bits. One 1-row local job; returns k ints. numPartitions is
-    pinned to 1: a bare range(1) inherits defaultParallelism slices
-    (32 tasks, 31 empty — measured ~0.2 s of pure task-launch per
-    probe), and the probe is one row by construction."""
+    bits. The projection runs over an Arrow-backed one-row local
+    relation, which Catalyst folds the literal projection into, so the
+    collect runs on the driver: zero Spark jobs (a ``range(1)`` source
+    ran one 1-task job per probe). The value enters as ``F.lit``, so
+    every type — naive datetimes included — converts exactly as the
+    build side's literal semantics always did; returns k ints."""
+    import pyarrow as pa
+
     row = (
-        spark.range(0, 1, 1, 1)
+        spark.createDataFrame(pa.table({"_": [0]}))
         .select(
             *[
                 F.pmod(
@@ -1141,9 +1162,48 @@ def _bloom_positions(
                 for i in range(k)
             ]
         )
-        .first()
+        .collect()[0]
     )
     return [row[f"p{i}"] for i in range(k)]
+
+
+def _cluster_bounds(
+    snap: dict, files: list[str], batch: list[tuple] = ()
+) -> tuple | None:
+    """The range the rewrite of ``files`` (plus, for a merge, a batch
+    whose cluster column spans the ``(lo, hi, has_null)`` triples in
+    ``batch``) can write, from metadata alone: ``(lo, hi, has_null)``,
+    the union of the files' ``column_stats`` [min, max] and
+    ``null_count > 0`` for ``snap``'s cluster column and the batch's
+    triples. A superset of the
+    written rows' range, since a rewrite only removes rows (see
+    _write_clustered). None — the caller's write runs the bounds job —
+    on an unclustered table, when a file has no stats entry for the
+    column, the column is dead in a file, or the column-epoch rule
+    cannot tell (it raises)."""
+    col = snap.get("cluster_col")
+    if col is None:
+        return None
+    try:
+        dead = _dead_columns(
+            files, snap.get("column_epochs"), snap.get("file_versions")
+        )
+    except ValueError:
+        return None
+    stats = snap.get("column_stats") or {}
+    spans = list(batch)
+    for f in files:
+        s = stats.get(f, {}).get(col)
+        if s is None or col in dead.get(f, ()):
+            return None
+        spans.append((s[0], s[1], s[2] > 0))
+    los = [lo for lo, _, _ in spans if lo is not None]
+    his = [hi for _, hi, _ in spans if hi is not None]
+    return (
+        min(los, default=None),
+        max(his, default=None),
+        any(n for _, _, n in spans),
+    )
 
 
 def _stage_rewrite(
@@ -1156,6 +1216,7 @@ def _stage_rewrite(
     keep: dict[int, list[str]] | None = None,
     salt: int = 1,
     latest_wins: tuple[str, str] | None = None,
+    bounds: tuple | None = None,
 ) -> dict[int, list[str]]:
     """The data-writing step every commit face that rewrites buckets
     runs (init, merge, compact, optimize, replaceWhere, rebucket):
@@ -1163,9 +1224,11 @@ def _stage_rewrite(
     layout, then splice the staged files into ``nxt`` in place.
 
     ``df`` is routed by ``nxt``'s key, bucket count and cluster column
-    through ``_write_clustered`` (``salt`` and ``latest_wins`` pass
-    through). Each bucket in ``rewritten`` then becomes its ``keep``
-    files (replaceWhere's out-of-slice files of a partially rewritten
+    through ``_write_clustered`` (``salt``, ``latest_wins`` and the
+    cluster bins' ``bounds`` from ``_cluster_bounds`` pass through;
+    without ``bounds`` a clustered write runs its bounds job). Each
+    bucket in ``rewritten`` then becomes its ``keep`` files
+    (replaceWhere's out-of-slice files of a partially rewritten
     bucket) plus its staged files, and loses its pending
     ``delete_files`` / ``dv_files`` (the rewrite read applied them). A
     staged bucket the caller did not name is NOT spliced: ``_transact``
@@ -1179,13 +1242,15 @@ def _stage_rewrite(
     instead would silently degrade to trust-the-file on a renamed dir),
     ``column_stats`` (footer stats, skipped on legacy manifests that
     record no ``column_types``) and, on a bloomed table,
-    ``file_blooms`` — fresh entries for the staged files, carried
-    entries for files the next manifest still references. Returns the
-    staging listing ({bucket: files})."""
+    ``file_blooms`` (one bitmap job, ``_staged_file_blooms``) — fresh
+    entries for the staged files, carried entries for files the next
+    manifest still references. Returns the staging listing ({bucket:
+    files})."""
     _write_clustered(
         df.withColumn("bucket", _bucket_of(nxt["key_col"], nxt["n_buckets"])),
         staging, nxt["key_col"], salt, nxt["n_buckets"],
         nxt.get("cluster_col"), nxt.get("cluster_bins", 4), latest_wins,
+        bounds,
     )
     new = _list_bucket_files(staging)
     if rewritten is None:
@@ -2817,9 +2882,19 @@ def merge_upsert_manifest(
             )
         next_version = snap["version"] + 1
         staging = stage("commit")
-        # one pass over the (small) batch keys plans BOTH the bucket
-        # pruning and the tombstone bookkeeping the manifest carries
-        # for compact_tombstones — no second job
+        # one pass over the (small) batch keys plans the bucket
+        # pruning, the tombstone bookkeeping the manifest carries for
+        # compact_tombstones and the batch's cluster range — no second
+        # job. The range is what the batch writes unless its cluster
+        # values appear only after the probe: carried or NULL-filled
+        # patch columns, minted identities
+        ccol = snap.get("cluster_col")
+        span_probe = (
+            ccol is not None
+            and patch_cols is None
+            and ccol != snap.get("identity_col")
+        )
+        batch_spans = None
         if (
             bucket_hint is not None
             and TOMBSTONE_COL not in upd.columns
@@ -2844,9 +2919,16 @@ def merge_upsert_manifest(
             tomb_flag = (
                 _tomb_flag() if TOMBSTONE_COL in upd.columns else F.lit(False)
             )
+            aggs = [F.max(tomb_flag).alias("has_tomb")]
+            if span_probe:
+                c = F.col(ccol)
+                aggs += [
+                    F.min(c).alias("lo"), F.max(c).alias("hi"),
+                    (F.count(F.lit(1)) > F.count(c)).alias("has_null"),
+                ]
             bucket_info = (
                 upd.groupBy(_bucket_of(key_col, n_buckets).alias("bucket"))
-                .agg(F.max(tomb_flag).alias("has_tomb"))
+                .agg(*aggs)
                 .collect()
             )
             touched = sorted(r.bucket for r in bucket_info)
@@ -2854,6 +2936,8 @@ def merge_upsert_manifest(
                 set(int(b) for b in snap.get("tombstone_buckets", []))
                 | {r.bucket for r in bucket_info if r.has_tomb}
             )
+            if span_probe:
+                batch_spans = [(r.lo, r.hi, r.has_null) for r in bucket_info]
         base_files = [
             f for b in touched for f in snap["buckets"].get(str(b), [])
         ]
@@ -3016,6 +3100,11 @@ def merge_upsert_manifest(
         _stage_rewrite(
             spark, manifest, next_version, staging, unioned, touched,
             salt=write_salt, latest_wins=(ver_col, tiebreak_col),
+            bounds=(
+                None
+                if batch_spans is None
+                else _cluster_bounds(manifest, base_files, batch_spans)
+            ),
         )
         if gate_stats is not None:
             qpath = None
@@ -3109,6 +3198,10 @@ def compact_tombstones(
             _stage_rewrite(
                 spark, manifest, snap["version"] + 1, stage("compact"),
                 df.filter(bucket.isin(doomed)).filter(~tomb), doomed,
+                bounds=_cluster_bounds(
+                    snap,
+                    [f for b in doomed for f in snap["buckets"][str(b)]],
+                ),
             )
         # with nothing doomed the flags were conservative
         # over-approximations (the tombstones lost latest-wins at some
@@ -3205,6 +3298,7 @@ def optimize_compact(
                     snap.get("column_epochs"), snap.get("file_versions"),
                 ),
                 fragmented,
+                bounds=_cluster_bounds(snap, files),
             )
         del_new: dict[int, list] = {}
         dv_new: dict[int, list] = {}
@@ -4428,6 +4522,7 @@ def rebucket_table(
                 snap.get("column_epochs"), snap.get("file_versions"),
             ),
             salt=write_salt,
+            bounds=_cluster_bounds(snap, files),
         )
         # footer-read boolean max when the marker is a plain boolean
         # (zero Spark jobs — the same _staged_tombstone_buckets init
@@ -5889,9 +5984,9 @@ def merge_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably-absent probe bit.
 
     Scale shape: bloom build is one distributed pass per commit over
-    the STAGED files only (explode k=4 positions → map-side-combinable
-    bit_or per (file, word)); the driver collect is O(files × m/64)
-    words of metadata, independent of row count. Probe planning is
+    the STAGED files only (explode k=4 positions → one
+    map-side-combinable 4 KB bitmap per file); the driver collect is
+    O(files × m/32768) bitmaps of metadata, independent of row count. Probe planning is
     manifest-only; the read opens O(rows-with-value / rows-per-file)
     files instead of O(table).
     Reference provenance: generalizes the reference's Pinecone id

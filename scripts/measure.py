@@ -11,8 +11,10 @@ Usage::
         fake. Prints JOBS {"op": n_jobs, ...} and TASKS {"op": n, ...}.
     python scripts/measure.py timeline OP
         one row per job of a warm run, from the Spark event log: gap
-        since the previous job, seconds, stages, tasks and description
-        (or call site), so a multi-job face is attributable job by job.
+        since the previous job, seconds, stages that ran and stages
+        skipped, tasks (of the stages that ran: the column sums to
+        ``jobs``' TASKS) and description (or call site), so a multi-job
+        face is attributable job by job.
     python scripts/measure.py profile OP [TOP_N]
         cProfile of a warm run: the top TOP_N (default 35) functions of
         this package by cumulative time.
@@ -38,7 +40,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from assignment4_spark import registry  # noqa: E402
-from assignment4_spark.obs import measure  # noqa: E402
+from assignment4_spark.obs import job_timeline, measure  # noqa: E402
 from assignment4_spark.session import get_spark  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -95,36 +97,19 @@ def timeline(op: str) -> None:
         paths = [os.path.join(log_dir, f) for f in os.listdir(log_dir)]
         with open(max(paths, key=os.path.getmtime)) as fh:
             events = [json.loads(line) for line in fh]
-    wanted = set(m.job_ids)
-    jobs: dict[int, dict] = {}
-    for ev in events:
-        jid = ev.get("Job ID")
-        if jid not in wanted:
-            continue
-        if ev["Event"] == "SparkListenerJobStart":
-            props = ev.get("Properties") or {}
-            stages = ev.get("Stage Infos", [])
-            jobs[jid] = {
-                "start": ev["Submission Time"],
-                "desc": props.get("spark.job.description")
-                or props.get("callSite.short", ""),
-                "stages": len(stages),
-                "tasks": sum(s.get("Number of Tasks", 0) for s in stages),
-            }
-        elif ev["Event"] == "SparkListenerJobEnd":
-            jobs[jid]["end"] = ev["Completion Time"]
-    print(f"{'job':>4} {'gap':>7} {'sec':>7} {'stg':>3} {'tsk':>4}  desc")
+    rows = job_timeline(events, m.job_ids)
+    print(f"{'job':>4} {'gap':>7} {'sec':>7} {'stg':>3} {'skp':>3} {'tsk':>4}  desc")
     prev_end = None
     job_sec = gap_total = 0.0
-    for jid, j in sorted(jobs.items()):
+    for j in rows:
         gap = 0.0 if prev_end is None else max(0.0, (j["start"] - prev_end) / 1000)
         sec = (j["end"] - j["start"]) / 1000
         prev_end = j["end"]
         gap_total += gap
         job_sec += sec
-        print(f"{jid:>4} {gap:>7.3f} {sec:>7.3f} {j['stages']:>3} "
-              f"{j['tasks']:>4}  {j['desc'][:90]}")
-    print(f"jobs={len(jobs)} job_sec={job_sec:.2f} inter_job_gap={gap_total:.2f} "
+        print(f"{j['job']:>4} {gap:>7.3f} {sec:>7.3f} {j['stages']:>3} "
+              f"{j['skipped']:>3} {j['tasks']:>4}  {j['desc'][:90]}")
+    print(f"jobs={len(rows)} job_sec={job_sec:.2f} inter_job_gap={gap_total:.2f} "
           f"wall={m.seconds:.2f} (driver-only = wall - job_sec - gaps overlaps)")
 
 

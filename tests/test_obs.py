@@ -51,3 +51,46 @@ def test_measure_restores_caller_group_when_fn_raises(spark, caller_group):
     with pytest.raises(RuntimeError, match="boom"):
         measure(spark, boom)
     assert _props(sc) == ("caller-group", "caller description")
+
+
+def test_job_timeline_counts_only_stages_that_ran():
+    """The timeline's tasks follow ``measure``'s rule on a synthetic
+    event log: job 1 lists map stage 0, which job 0 already ran, so
+    stage 0 is skipped there and counts for job 0 only; jobs outside
+    the measured set are ignored."""
+    from assignment4_spark.obs import job_timeline
+
+    def start(job, stages, t, desc=None):
+        return {
+            "Event": "SparkListenerJobStart",
+            "Job ID": job,
+            "Submission Time": t,
+            "Stage Infos": [
+                {"Stage ID": s, "Number of Tasks": n} for s, n in stages
+            ],
+            "Properties": {"callSite.short": f"site{job}"}
+            | ({"spark.job.description": desc} if desc else {}),
+        }
+
+    def ran(stage, n):
+        return {
+            "Event": "SparkListenerStageCompleted",
+            "Stage Info": {"Stage ID": stage, "Number of Tasks": n},
+        }
+
+    def end(job, t):
+        return {"Event": "SparkListenerJobEnd", "Job ID": job,
+                "Completion Time": t}
+
+    events = [
+        start(0, [(0, 4)], 1000, desc="map"), ran(0, 4), end(0, 1500),
+        start(1, [(0, 4), (1, 1)], 1600), ran(1, 1), end(1, 1700),
+        start(2, [(2, 8)], 1800), ran(2, 8), end(2, 1900),
+    ]
+    rows = job_timeline(events, [0, 1])
+    assert [
+        (r["job"], r["stages"], r["skipped"], r["tasks"], r["desc"])
+        for r in rows
+    ] == [(0, 1, 0, 4, "map"), (1, 1, 1, 1, "site1")]
+    assert [(r["start"], r["end"]) for r in rows] == [(1000, 1500), (1600, 1700)]
+    assert sum(r["tasks"] for r in rows) == 5
