@@ -50,11 +50,12 @@ a point-update commit rewrites thousandths of the table.
 
 from __future__ import annotations
 
-import itertools
+import base64
 import json
 import os
 import threading
 import time
+import uuid
 import weakref
 from collections import OrderedDict
 
@@ -64,10 +65,6 @@ from pyspark.sql import functions as F
 from ..io_util import table
 from ..registry import register
 
-
-# process-wide staging-name disambiguator (see merge_upsert_manifest's
-# staging comment); itertools.count().__next__ is atomic under CPython
-_STAGING_SEQ = itertools.count()
 
 # reserved tombstone marker column (delete support): a row whose
 # _deleted is true participates in latest-wins like any row — winning
@@ -424,28 +421,27 @@ def _bucket_of(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
-def _staging_path(base_dir: str, prefix: str, version: int, writer_id: str,
-                  attempt: int) -> str:
+def _staging_path(base_dir: str, prefix: str, version: int,
+                  writer_id: str) -> str:
     """ATTEMPT-PRIVATE staging directory name, shared by every commit
     path that writes files (init, and every ``_transact`` face through
     its ``stage(prefix)``: merge + quarantine, compact, optimize and
     its coalesced sidecars, MOR/DV deletes, replaceWhere, rebucket):
-    pid + thread + a process-wide monotonic sequence. writer_id is
-    identity/debugging only, never a safety requirement. pid/thread
-    alone are NOT enough: a published commit directory keeps living
-    under its staging name (the manifest references files inside it),
-    so a LATER attempt on the same thread that pins a STALE manifest
-    (vacuum race, missed CAS) recomputes the same next_version and —
-    with a deterministic name — would mode(overwrite)/rmtree the LIVE
-    v{N} directory it collides with
-    (measured: the vacuum-race test deleted v2's published files this
-    way before the sequence term existed). The sequence number makes
-    every attempt's staging unique for the life of the process, so
-    cleanup can only ever touch its own files."""
+    ``{prefix}_v{version}_{writer_id}_{uuid4 hex}``. writer_id is
+    identity/debugging only, never a safety requirement. A
+    deterministic name is NOT enough: a published commit directory
+    keeps living under its staging name (the manifest references files
+    inside it), so a LATER attempt that pins a STALE manifest (vacuum
+    race, missed CAS) recomputes the same next_version and — with a
+    colliding name — would mode(overwrite)/rmtree the LIVE v{N}
+    directory (measured: the vacuum-race test deleted v2's published
+    files this way before names were unique per attempt). The random
+    suffix makes every attempt's staging unique across threads and
+    processes, so cleanup can only ever touch its own files; its
+    fixed width keeps manifest bytes independent of pid and thread id
+    digit counts."""
     return os.path.join(
-        base_dir,
-        f"{prefix}_v{version}_{writer_id}_{os.getpid()}_"
-        f"{threading.get_ident()}_s{next(_STAGING_SEQ)}_a{attempt}",
+        base_dir, f"{prefix}_v{version}_{writer_id}_{uuid.uuid4().hex}"
     )
 
 
@@ -969,27 +965,29 @@ def plan_files(
       an all-NULL column or one added after the file was written (the
       [min, max, null_count] shape cannot tell them apart), so it is
       kept — and for the same reason IS NOT NULL could never prune;
-    - point: some probe bit is absent from its ``file_blooms`` filter.
-      The bit positions are computed by ``spark`` (on the driver, no
-      job); the other kinds need no session."""
+    - point: some probe bit ``p`` is clear in its ``file_blooms``
+      bitmap (bit ``p`` is bit ``p & 7`` of byte ``p >> 3``; ``""``
+      matches nothing). An entry that is not a string — a pre-bitmap
+      word dict — is kept like a missing one. The bit positions are
+      computed by ``spark`` (on the driver, no job); the other kinds
+      need no session."""
     files = [f for fs in manifest["buckets"].values() for f in fs]
     if where is None:
         return files, []
     kind, col, *args = _bind_where(manifest, where)
     if kind == "point":
         positions = _bloom_positions(
-            spark, args[0], manifest["column_types"][col],
-            manifest["bloom_m"], manifest["bloom_k"],
+            spark, args[0], manifest["column_types"][col]
         )
         blooms = manifest.get("file_blooms", {})
 
         def keep(f):
-            # Python's arbitrary-precision ints read two's-complement
-            # longs correctly: (word >> bit) & 1 is exact even for
-            # negative words
             b = blooms.get(f)
-            return b is None or all(
-                (b.get(str(p // 64), 0) >> (p % 64)) & 1 for p in positions
+            if not isinstance(b, str):
+                return True
+            bm = base64.b64decode(b)
+            return bool(bm) and all(
+                bm[p >> 3] >> (p & 7) & 1 for p in positions
             )
     elif kind == "is_null":
         stats = manifest.get("column_stats", {})
@@ -1060,12 +1058,13 @@ def _manifest_col_max(manifest: dict, col: str):
     return mx
 
 
-# Bloom sizing for the per-file point-lookup index: 32 Ki bits (512
-# words) / 4 probes per file. At the ~5k rows-per-file the clustered
-# commit write targets, that is n/m ≈ 0.15 → ~4% false-keep per file —
-# a kept file is read and exact-filtered anyway, so FP only costs I/O,
-# never correctness. Production sizing scales m with rows-per-file
-# (Parquet's own column bloom filters size the same way).
+# Bloom sizing for the per-file point-lookup index: 32 Ki bits / 4
+# probes per file. 32768 bits is exactly one Spark bitmap (the bucket
+# ``bitmap_construct_agg`` builds), so each file's filter is the one
+# 4096-byte BINARY Spark returns, stored base64 in the manifest. At the
+# ~5k rows-per-file the clustered commit write targets, that is n/m ≈
+# 0.15 → ~4% false-keep per file — a kept file is read and
+# exact-filtered anyway, so FP only costs I/O, never correctness.
 BLOOM_M = 32768
 BLOOM_K = 4
 
@@ -1074,20 +1073,16 @@ def _staged_file_blooms(
     spark: SparkSession,
     files: list[str],
     bloom_col: str,
-    m: int,
-    k: int,
     bloom_type: str | None = None,
-) -> dict[str, dict[str, int]]:
+) -> dict[str, str]:
     """Per-file Bloom filter of the bloom column for a just-staged
-    commit, built DISTRIBUTED in one job: each row's k bit positions
-    (pmod(xxhash64(value, seed_i), m)) fold per (file, 32 Ki-bit
-    bitmap bucket) into one ``bitmap_construct_agg`` bitmap — the
-    collect is one 4 KB bitmap per file per 32768 bits of ``m``,
-    independent of row count. The driver splits each bitmap into the
-    manifest's ``{str(word_index): signed int64 word}`` entries (bit
-    ``p`` is bit ``p % 64`` of word ``p // 64``), leaving out zero
-    words. NULLs set no bits (a NULL probe is meaningless); files
-    holding only NULLs get an empty entry and match nothing.
+    commit, built DISTRIBUTED in one job: each row's ``BLOOM_K`` bit
+    positions (pmod(xxhash64(value, seed_i), BLOOM_M)) fold per file
+    into one ``bitmap_construct_agg`` bitmap — the collect is one 4 KB
+    bitmap per file, independent of row count. Each file's entry is
+    the base64 of that bitmap (bit ``p`` is bit ``p & 7`` of byte
+    ``p >> 3``). NULLs set no bits (a NULL probe is meaningless);
+    files holding only NULLs get ``""`` and match nothing.
 
     ``bloom_type`` (the table's recorded column type) lets the scan
     bind an explicit one-column schema: no schema-inference job, and
@@ -1096,7 +1091,6 @@ def _staged_file_blooms(
     schema equal to what inference would return, so bits are
     unchanged. Without ``bloom_type`` (legacy manifests) the inferring
     read stands."""
-    import struct
     from urllib.parse import unquote, urlparse
 
     if not files:
@@ -1104,13 +1098,12 @@ def _staged_file_blooms(
     reader = spark.read
     if bloom_type is not None:
         reader = reader.schema(f"`{bloom_col}` {bloom_type}")
-    # bitmap positions are 1-based: bucket (p - 1) // 32768 + 1, bit
-    # (p - 1) % 32768
+    # bitmap positions are 1-based (0 and 1 share bit 0): p + 1 → bit p
     pos = F.explode(
         F.array(
             *[
-                F.pmod(F.xxhash64(F.col("v"), F.lit(i)), F.lit(m)) + 1
-                for i in range(k)
+                F.pmod(F.xxhash64(F.col("v"), F.lit(i)), F.lit(BLOOM_M)) + 1
+                for i in range(BLOOM_K)
             ]
         )
     ).alias("pos")
@@ -1119,37 +1112,30 @@ def _staged_file_blooms(
         .select(F.input_file_name().alias("f"), F.col(bloom_col).alias("v"))
         .filter(F.col("v").isNotNull())
         .select("f", pos)
-        .groupBy("f", F.bitmap_bucket_number("pos").alias("b"))
+        .groupBy("f")
         .agg(F.bitmap_construct_agg(F.bitmap_bit_position("pos")).alias("bm"))
         .collect()
     )
-    out: dict[str, dict[str, int]] = {}
     # every staged file gets an entry (possibly empty) so the planner
     # can tell "indexed, no match" from "pre-bloom file, must read"
-    for f in files:
-        out[f] = {}
+    out = dict.fromkeys(files, "")
     for r in rows:
-        entry = out[unquote(urlparse(r.f).path)]
-        first = (r.b - 1) * (len(r.bm) // 8)
-        for j, (word,) in enumerate(struct.iter_unpack("<q", r.bm)):
-            if word:
-                entry[str(first + j)] = word
+        out[unquote(urlparse(r.f).path)] = base64.b64encode(r.bm).decode()
     return out
 
 
-def _bloom_positions(
-    spark: SparkSession, value, vtype: str, m: int, k: int
-) -> list[int]:
-    """The probe value's k bit positions, computed BY SPARK with the
-    value cast to the table's recorded column type — xxhash64(5L) !=
-    xxhash64('5') != xxhash64(5 int), so hashing probe-side in Python
-    (or at a drifted type) would silently never match the build-side
-    bits. The projection runs over an Arrow-backed one-row local
-    relation, which Catalyst folds the literal projection into, so the
-    collect runs on the driver: zero Spark jobs (a ``range(1)`` source
-    ran one 1-task job per probe). The value enters as ``F.lit``, so
-    every type — naive datetimes included — converts exactly as the
-    build side's literal semantics always did; returns k ints."""
+def _bloom_positions(spark: SparkSession, value, vtype: str) -> list[int]:
+    """The probe value's ``BLOOM_K`` bit positions, computed BY SPARK
+    with the value cast to the table's recorded column type —
+    xxhash64(5L) != xxhash64('5') != xxhash64(5 int), so hashing
+    probe-side in Python (or at a drifted type) would silently never
+    match the build-side bits. The projection runs over an
+    Arrow-backed one-row local relation, which Catalyst folds the
+    literal projection into, so the collect runs on the driver: zero
+    Spark jobs (a ``range(1)`` source ran one 1-task job per probe).
+    The value enters as ``F.lit``, so every type — naive datetimes
+    included — converts exactly as the build side's literal semantics
+    always did."""
     import pyarrow as pa
 
     row = (
@@ -1157,14 +1143,15 @@ def _bloom_positions(
         .select(
             *[
                 F.pmod(
-                    F.xxhash64(F.lit(value).cast(vtype), F.lit(i)), F.lit(m)
+                    F.xxhash64(F.lit(value).cast(vtype), F.lit(i)),
+                    F.lit(BLOOM_M),
                 ).alias(f"p{i}")
-                for i in range(k)
+                for i in range(BLOOM_K)
             ]
         )
         .collect()[0]
     )
-    return [row[f"p{i}"] for i in range(k)]
+    return [row[f"p{i}"] for i in range(BLOOM_K)]
 
 
 def _cluster_bounds(
@@ -1272,7 +1259,7 @@ def _stage_rewrite(
     }
     if nxt.get("bloom_col") is not None:
         fresh["file_blooms"] = _staged_file_blooms(
-            spark, files, nxt["bloom_col"], nxt["bloom_m"], nxt["bloom_k"],
+            spark, files, nxt["bloom_col"],
             bloom_type=(types or {}).get(nxt["bloom_col"]),
         )
     live = {f for fs in nxt["buckets"].values() for f in fs}
@@ -1501,7 +1488,7 @@ def _transact(
 
         def stage(prefix: str) -> str:
             path = _staging_path(
-                base_dir, prefix, snap["version"] + 1, writer_id, attempt
+                base_dir, prefix, snap["version"] + 1, writer_id
             )
             staged.append(path)
             return path
@@ -1652,8 +1639,6 @@ def init_table(
     cluster_col: str | None = None,
     cluster_bins: int = 4,
     bloom_col: str | None = None,
-    bloom_m: int = BLOOM_M,
-    bloom_k: int = BLOOM_K,
     identity_col: str | None = None,
 ) -> dict:
     """Commit version 1 of a manifest-tracked bucketed table.
@@ -1729,7 +1714,7 @@ def init_table(
     # 'commit_v1' dir with mode(overwrite) would let a concurrent-init
     # LOSER delete the CAS winner's part files before losing —
     # publishing a v1 manifest that names dead paths
-    staging = _staging_path(base_dir, "commit", 1, "init", 0)
+    staging = _staging_path(base_dir, "commit", 1, "init")
     manifest = {
         "version": 1,
         "commit_kind": "init",
@@ -1746,7 +1731,7 @@ def init_table(
     if cluster_col is not None:
         manifest.update(cluster_col=cluster_col, cluster_bins=cluster_bins)
     if bloom_col is not None:
-        manifest.update(bloom_col=bloom_col, bloom_m=bloom_m, bloom_k=bloom_k)
+        manifest["bloom_col"] = bloom_col
     new = _stage_rewrite(df.sparkSession, manifest, 1, staging, df)
     # true per-bucket flags, not "every bucket": a seed carrying an
     # all-false marker column (the normal pattern) must not doom the
@@ -2005,20 +1990,25 @@ def _read_visible_base(
     column_types: dict,
     column_epochs: dict | None = None,
     file_versions: dict | None = None,
+    carry_positions: bool = False,
 ) -> DataFrame:
     """Aligned manifest read with BOTH pending-delete representations
     applied: positional deletion vectors (bitmap anti-filter on native
     row indexes) then equality-delete sidecars (broadcast key
-    anti-join). The single choke point every read face and every
-    rewrite's base read goes through, so no path can forget one
-    representation."""
+    anti-join). The single choke point every read face, every
+    rewrite's base read and the DV delete's position-finding read go
+    through, so no path can forget one representation.
+    ``carry_positions`` keeps the native (file, row index) columns on
+    the result (see _read_files_aligned)."""
     has_dv = bool(files) and bool(manifest.get("dv_files"))
     df = _read_files_aligned(
         spark, files, columns, column_types, column_epochs,
-        file_versions, carry_positions=has_dv,
+        file_versions, carry_positions=has_dv or carry_positions,
     )
     if has_dv:
-        df = _apply_dv_deletes(spark, df, manifest)
+        df = _apply_dv_deletes(
+            spark, df, manifest, keep_positions=carry_positions
+        )
     return _apply_mor_deletes(spark, df, manifest)
 
 
@@ -2323,15 +2313,11 @@ def publish_from(
 
 def _pin_version(base_dir: str, target_dir: str, version: int) -> None:
     """Record that the table at ``target_dir`` references ``base_dir``'s
-    files as of ``version``: one ``clones/clone_{pid}_{tid}_s{seq}.json``
+    files as of ``version``: one ``clones/clone_{uuid4 hex}.json``
     record that ``_clone_pinned_versions`` reads."""
     cdir = os.path.join(base_dir, "clones")
     os.makedirs(cdir, exist_ok=True)
-    rec_path = os.path.join(
-        cdir,
-        f"clone_{os.getpid()}_{threading.get_ident()}_"
-        f"s{next(_STAGING_SEQ)}.json",
-    )
+    rec_path = os.path.join(cdir, f"clone_{uuid.uuid4().hex}.json")
     with open(rec_path, "w") as fh:
         json.dump(
             {"target": os.path.abspath(target_dir), "version": version}, fh
@@ -3754,19 +3740,15 @@ def delete_keys_dv(
             sub = [key_col] + (
                 [TOMBSTONE_COL] if TOMBSTONE_COL in types_ else []
             )
-            df = _read_files_aligned(
-                spark, files, sub,
-                {c: types_[c] for c in sub},
-                snap.get("column_epochs"),
-                snap.get("file_versions"),
-                carry_positions=True,
-            )
-            if snap.get("dv_files"):
-                df = _apply_dv_deletes(
-                    spark, df, snap, keep_positions=True
+            df = _visible_rows(
+                _read_visible_base(
+                    spark, snap, files, sub,
+                    {c: types_[c] for c in sub},
+                    snap.get("column_epochs"),
+                    snap.get("file_versions"),
+                    carry_positions=True,
                 )
-            df = _apply_mor_deletes(spark, df, snap)
-            df = _visible_rows(df)
+            )
             hits = df.join(
                 F.broadcast(keys.select(key_col)), key_col, "inner"
             ).select(

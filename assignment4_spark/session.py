@@ -33,17 +33,16 @@ RUNTIME_CONFS = {
 }
 
 
-def _listing_threshold() -> str:
-    """Path count above which Spark launches a DISTRIBUTED job just to
-    stat the input files ("Listing leaf files and directories for N
-    paths"). The default (32) is sized for object-store latency
-    (~10-100 ms per stat); on a local filesystem a stat is ~10 µs, so
-    the listing job's fixed cost (~0.1-0.4 s scheduling floor) can
-    never win below ~10^4 paths — yet every >32-file snapshot read
-    pays it (a cluster-binned table holds up to n_buckets ×
-    cluster_bins files: 128 for 32 buckets × 4 bins). Applied to LOCAL
-    masters only; a cluster deployment's own threshold stands."""
-    return os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "4096")
+# Path count above which Spark launches a DISTRIBUTED job just to stat
+# the input files ("Listing leaf files and directories for N paths").
+# The default (32) is sized for object-store latency (~10-100 ms per
+# stat); on a local filesystem a stat is ~10 µs, so the listing job's
+# fixed cost (~0.1-0.4 s scheduling floor) can never win below ~10^4
+# paths — yet every >32-file snapshot read pays it (a cluster-binned
+# table holds up to n_buckets × cluster_bins files: 128 for 32 buckets
+# × 4 bins). Applied to LOCAL masters only; a cluster deployment's own
+# threshold stands.
+_LISTING_THRESHOLD = "4096"
 
 
 def _shuffle_partitions_for(cores: int) -> str:
@@ -76,7 +75,7 @@ def get_spark(app_name: str = "assignment4_spark", cpus: int | None = None) -> S
         .config("spark.sql.shuffle.partitions", _shuffle_partitions_for(cpus))
         .config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            _listing_threshold(),
+            _LISTING_THRESHOLD,
         )
     )
     for k, v in RUNTIME_CONFS.items():
@@ -118,7 +117,7 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
             )
             confs[
                 "spark.sql.sources.parallelPartitionDiscovery.threshold"
-            ] = _listing_threshold()
+            ] = _LISTING_THRESHOLD
     except Exception:
         all_applied = False
     for k, v in confs.items():

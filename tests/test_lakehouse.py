@@ -1559,8 +1559,7 @@ def _mk_wide_table(spark, tmp_path, n=100, n_buckets=8):
 
 
 _TABLE_KEYS = (
-    "key_col", "cluster_col", "cluster_bins", "bloom_col", "bloom_m",
-    "bloom_k", "identity_col",
+    "key_col", "cluster_col", "cluster_bins", "bloom_col", "identity_col",
 )
 
 
@@ -1879,20 +1878,23 @@ def test_bloom_carry_and_recompute_across_merge(spark, tmp_path):
 
 def test_bloom_missing_entry_is_kept(spark, tmp_path):
     """A file without a bloom entry (pre-index commits) must always be
-    kept — pruning is an optimization, never a filter."""
+    kept — pruning is an optimization, never a filter — and so must a
+    file whose entry is a pre-bitmap ``{word: int}`` dict."""
+    import base64
+
     from assignment4_spark.operators.lakehouse import plan_files
 
+    full = base64.b64encode(b"\xff" * 4096).decode()
     manifest = {
-        "buckets": {"0": ["/a", "/b"]},
+        "buckets": {"0": ["/a", "/b", "/c", "/d"]},
         "column_types": {"grp": "bigint"},
         "bloom_col": "grp",
-        "bloom_m": 64,
-        "bloom_k": 3,
-        "file_blooms": {"/a": {}},  # /b has no entry at all
+        # /b has no entry at all; /c holds every bit
+        "file_blooms": {"/a": "", "/c": full, "/d": {"0": -1}},
     }
     kept, skipped = plan_files(spark, manifest, ("point", 7))
-    assert kept == ["/b"] and skipped == ["/a"], (
-        "empty filter skips, missing filter keeps"
+    assert kept == ["/b", "/c", "/d"] and skipped == ["/a"], (
+        "empty filter skips; missing, full and legacy dict filters keep"
     )
 
 
@@ -2227,9 +2229,11 @@ def test_expectations_gate_lost_race_cleans_loser_quarantine(spark, tmp_path):
     rows = {r.k: r.payload for r in read_snapshot(spark, base).collect()}
     assert rows[5] == "Apass" and rows[15] == "B15" and rows[6] == "p6"
     assert [r.k for r in read_quarantine(spark, base).collect()] == [6]
-    # exactly ONE quarantine dir survives: the winning attempt's
+    # exactly ONE quarantine dir survives: the winning attempt's, the
+    # one the published manifest references
     qdirs = [d for d in os.listdir(base) if d.startswith("quarantine_")]
-    assert len(qdirs) == 1 and "_a1" in qdirs[0]
+    qpath = load_manifest(base)["expectations"]["path"]
+    assert qdirs == [os.path.basename(qpath)]
 
 
 def test_expectations_gate_vacuum_reclaims_expired_quarantine(spark, tmp_path):
@@ -4777,8 +4781,8 @@ def test_staged_blooms_explicit_schema_matches_inferred(spark, tmp_path):
     staging = str(tmp_path / "staged")
     _write_clustered(df, staging, "k", 1, 4)
     files = sorted(f for fs in _list_bucket_files(staging).values() for f in fs)
-    fast = _staged_file_blooms(spark, files, "u", 1024, 3, bloom_type="string")
-    slow = _staged_file_blooms(spark, files, "u", 1024, 3)
+    fast = _staged_file_blooms(spark, files, "u", bloom_type="string")
+    slow = _staged_file_blooms(spark, files, "u")
     assert fast == slow and fast  # non-empty and identical bits
 
 
@@ -4937,7 +4941,7 @@ def test_listing_threshold_raised_for_local_fs(spark):
     ~10 us, so the job's fixed scheduling floor can never win at the
     file counts manifests produce (a cluster-binned table holds up to
     n_buckets x cluster_bins files: 128 for 32 buckets x 4 bins). The
-    threshold is env-overridable and applied to local masters only."""
+    threshold is applied to local masters only."""
     assert int(
         spark.conf.get(
             "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -5247,14 +5251,19 @@ def _reference_blooms(spark, files, col, m, k):
     return out
 
 
-@pytest.mark.parametrize("m", [4096, 32768, 65536])
-def test_bitmap_blooms_match_word_reference(spark, tmp_path, m):
-    """The bitmap Bloom build writes the same manifest words as the
-    explode / bit_or reference for bigint, int and string columns at
-    every ``bloom_m`` (65536 spans two 32768-bit bitmaps): same words,
-    words with bit 63 set as negative int64s, and an empty entry for
-    the file whose bloom values are all NULL."""
+def test_bitmap_blooms_match_word_reference(spark, tmp_path):
+    """Each file's Bloom entry is the base64 of one 4096-byte
+    (``BLOOM_M``-bit) bitmap whose bits equal the explode / bit_or
+    reference words for bigint, int and string columns (bit ``p`` is
+    bit ``p % 64`` of little-endian int64 word ``p // 64``, so words
+    with bit 63 set read negative), and ``""`` for the one file whose
+    bloom values are all NULL."""
+    import base64
+    import struct
+
     from assignment4_spark.operators.lakehouse import (
+        BLOOM_K,
+        BLOOM_M,
         _bucket_of,
         _list_bucket_files,
         _staged_file_blooms,
@@ -5276,9 +5285,17 @@ def test_bitmap_blooms_match_word_reference(spark, tmp_path, m):
     _write_clustered(df, staging, "k", 1, 4)
     files = sorted(f for fs in _list_bucket_files(staging).values() for f in fs)
     for col, t in (("b", "bigint"), ("i", "int"), ("s", "string")):
-        got = _staged_file_blooms(spark, files, col, m, 4, bloom_type=t)
-        assert got == _reference_blooms(spark, files, col, m, 4), (col, m)
-        words = [w for e in got.values() for w in e.values()]
-        assert any(w < 0 for w in words) and all(w != 0 for w in words)
-        assert max(int(w) for e in got.values() for w in e) == m // 64 - 1
-        assert sum(e == {} for e in got.values()) == 1
+        got = _staged_file_blooms(spark, files, col, bloom_type=t)
+        ref = _reference_blooms(spark, files, col, BLOOM_M, BLOOM_K)
+        assert sorted(got) == files and sum(e == "" for e in got.values()) == 1
+        for f, words in ref.items():
+            bm = base64.b64decode(got[f])
+            assert len(bm) == (BLOOM_M // 8 if words else 0), (col, f)
+            assert {
+                str(j): w
+                for j, (w,) in enumerate(struct.iter_unpack("<q", bm))
+                if w
+            } == words, (col, f)
+        words = [w for e in ref.values() for w in e.values()]
+        assert any(w < 0 for w in words)
+        assert max(int(w) for e in ref.values() for w in e) == BLOOM_M // 64 - 1
