@@ -1446,7 +1446,7 @@ def admit_candidates_into_index(
     deferred result is row-identical to per-slice verification)."""
     from .lakehouse import (
         _bucket_of,
-        _read_files_aligned,
+        _read_visible_base,
         load_manifest,
         merge_upsert_manifest,
     )
@@ -1462,14 +1462,7 @@ def admit_candidates_into_index(
         .collect()  # bounded O(n_buckets) bucket ids — plan metadata
     )
     files = [f for b in touched for f in man["buckets"].get(str(b), [])]
-    if files:
-        idx_rows = _read_files_aligned(
-            spark, files, man["columns"], man["column_types"]
-        )
-    else:
-        idx_rows = spark.createDataFrame(
-            [], "band_key bigint, ver int, src string, docs array<bigint>"
-        )
+    idx_rows = _read_visible_base(spark, man, files)
 
     cand = (
         batch_post.join(idx_rows.select("band_key", "docs"), "band_key")

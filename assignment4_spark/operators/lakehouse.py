@@ -293,7 +293,7 @@ def _rel_cache_put(spark: SparkSession, key, rel: DataFrame | None):
 
 
 def _dead_columns(
-    files: list, column_epochs: dict | None, file_versions: dict | None
+    manifest: dict, files: list, column_epochs: dict | None = None
 ) -> dict[str, frozenset]:
     """The column-epoch rule, the one copy every reader uses: a column
     (re-)born at version R (DROP COLUMN + re-add) reads as NULL from
@@ -304,15 +304,19 @@ def _dead_columns(
     any. Never-evolved tables (every epoch 1) return nothing without a
     birth-version lookup: every committed file is born at v1 or later.
 
-    Birth versions come from the manifest's ``file_versions`` records,
-    never from directory names, which a rename would silently
-    invalidate (re-opening the stale-byte-resurrection class the
-    protocol fuzz caught): an evolved table with no record for a file
-    raises ValueError."""
-    epochs = {c: int(v) for c, v in (column_epochs or {}).items()}
+    The epochs are ``manifest``'s unless ``column_epochs`` overrides
+    them (a merge's next epochs, the change feed's v_to epochs); birth
+    versions are always ``manifest``'s ``file_versions`` records,
+    never directory names, which a rename would silently invalidate
+    (re-opening the stale-byte-resurrection class the protocol fuzz
+    caught): an evolved table with no record for a file raises
+    ValueError."""
+    epochs = (
+        manifest["column_epochs"] if column_epochs is None else column_epochs
+    )
     if not any(v > 1 for v in epochs.values()):
         return {}
-    born = file_versions or {}
+    born = manifest["file_versions"]
     out = {}
     for f in files:
         if f not in born:
@@ -322,7 +326,7 @@ def _dead_columns(
                 "refusing to trust physical bytes on an epoch-evolved "
                 "table"
             )
-        dead = frozenset(c for c, v in epochs.items() if v > int(born[f]))
+        dead = frozenset(c for c, v in epochs.items() if v > born[f])
         if dead:
             out[f] = dead
     return out
@@ -333,8 +337,7 @@ def _read_files_aligned(
     files: list,
     columns: list,
     column_types: dict,
-    column_epochs: dict | None = None,
-    file_versions: dict | None = None,
+    dead: dict[str, frozenset] | None = None,
     carry_positions: bool = False,
 ) -> DataFrame:
     """Read manifest files and align every row to the manifest's
@@ -349,15 +352,10 @@ def _read_files_aligned(
     so plan cost stays O(versions) while scan parallelism is unchanged.
     Same-type casts are elided by Catalyst (SimplifyCasts), so the
     common no-evolution case plans exactly as a plain read. Columns
-    ``_dead_columns`` names for a group's files read as NULL; a read
-    with none takes the one-relation fast path when it applies."""
-    if not files:
-        # a fully-compacted table (every key tombstoned, then
-        # compact_tombstones) legitimately has an all-empty bucket map;
-        # an empty frame with the manifest schema IS the snapshot
-        ddl = ", ".join(f"`{c}` {column_types[c]}" for c in columns)
-        return spark.createDataFrame([], ddl)
-    dead = _dead_columns(files, column_epochs, file_versions)
+    ``dead`` (``_dead_columns``) names for a group's files read as
+    NULL; a read with none takes the one-relation fast path when it
+    applies."""
+    dead = dead or {}
     groups: dict[str, list] = {}
     for f in files:
         # …/commit_vN_*/bucket=B/part-*.parquet → group on the commit dir
@@ -809,9 +807,9 @@ def _footer_column_stats(
         for name, (lo, hi, nn, usable) in acc.items():
             if not usable:
                 fallback.add(name)
-            elif lo is not None:
-                # all-NULL columns get no entry (conservatively
-                # unprunable), matching the aggregation-pass contract
+            else:
+                # an all-NULL column records [None, None, rows],
+                # matching the aggregation-pass contract
                 d[name] = [_json_stat(lo), _json_stat(hi), int(nn)]
         out[f] = d
     # a column that fell back in ANY file is re-derived for EVERY file:
@@ -847,17 +845,14 @@ def _spark_column_stats(
     )
     out: dict[str, dict[str, list]] = {}
     for r in rows:
-        d = {}
-        for i, c in enumerate(cols):
-            lo = r[f"_lo{i}"]
-            if lo is None:
-                continue
-            d[c] = [
-                _json_stat(lo),
+        out[unquote(urlparse(r.f).path)] = {
+            c: [
+                _json_stat(r[f"_lo{i}"]),
                 _json_stat(r[f"_hi{i}"]),
                 int(r[f"_nn{i}"] or 0),
             ]
-        out[unquote(urlparse(r.f).path)] = d
+            for i, c in enumerate(cols)
+        }
     return out
 
 
@@ -874,8 +869,7 @@ def _staged_column_stats(
     whose footer stats are absent (single values over ~2 KiB) fall
     back to the distributed aggregation pass so the manifest stays
     byte-identical to the old implementation. A file whose column is
-    all-NULL gets no entry for it — conservatively unprunable,
-    matching the cluster-stats contract."""
+    all-NULL records ``[None, None, rows]`` for it."""
     cols = [
         c
         for c, t in types.items()
@@ -909,7 +903,7 @@ def _coerce_probe(manifest: dict, col: str, v):
 
     if isinstance(v, (datetime.date, datetime.datetime)):
         return v.isoformat()
-    ctype = (manifest.get("column_types") or {}).get(col, "")
+    ctype = manifest["column_types"].get(col, "")
     if (
         ctype.startswith("timestamp")
         and isinstance(v, str)
@@ -960,17 +954,16 @@ def plan_files(
     filter (the exact row filter runs on what is kept):
 
     - between / range: its ``column_stats`` [min, max] misses [lo, hi]
-      (probes coerced to the stats encoding by _coerce_probe);
-    - is_null: its ``column_stats`` null_count is 0. An absent entry is
-      an all-NULL column or one added after the file was written (the
-      [min, max, null_count] shape cannot tell them apart), so it is
-      kept — and for the same reason IS NOT NULL could never prune;
+      (probes coerced to the stats encoding by _coerce_probe). A file
+      whose column is all-NULL (``[None, None, rows]``) is kept, like
+      a file without an entry;
+    - is_null: its ``column_stats`` null_count is 0. A file has no
+      entry for a column of a type without stats, or for one added
+      after it was written (it reads as NULL there): it is kept;
     - point: some probe bit ``p`` is clear in its ``file_blooms``
       bitmap (bit ``p`` is bit ``p & 7`` of byte ``p >> 3``; ``""``
-      matches nothing). An entry that is not a string — a pre-bitmap
-      word dict — is kept like a missing one. The bit positions are
-      computed by ``spark`` (on the driver, no job); the other kinds
-      need no session."""
+      matches nothing). The bit positions are computed by ``spark``
+      (on the driver, no job); the other kinds need no session."""
     files = [f for fs in manifest["buckets"].values() for f in fs]
     if where is None:
         return files, []
@@ -979,29 +972,28 @@ def plan_files(
         positions = _bloom_positions(
             spark, args[0], manifest["column_types"][col]
         )
-        blooms = manifest.get("file_blooms", {})
+        blooms = manifest["file_blooms"]
 
         def keep(f):
-            b = blooms.get(f)
-            if not isinstance(b, str):
+            if f not in blooms:
                 return True
-            bm = base64.b64decode(b)
+            bm = base64.b64decode(blooms[f])
             return bool(bm) and all(
                 bm[p >> 3] >> (p & 7) & 1 for p in positions
             )
     elif kind == "is_null":
-        stats = manifest.get("column_stats", {})
+        stats = manifest["column_stats"]
 
         def keep(f):
             s = stats.get(f, {}).get(col)
             return s is None or s[2] != 0
     else:
-        stats = manifest.get("column_stats", {})
+        stats = manifest["column_stats"]
         lo, hi = (_coerce_probe(manifest, col, v) for v in args)
 
         def keep(f):
             s = stats.get(f, {}).get(col)
-            return s is None or not (s[0] > hi or s[1] < lo)
+            return s is None or s[0] is None or not (s[0] > hi or s[1] < lo)
     kept, skipped = [], []
     for f in files:
         (kept if keep(f) else skipped).append(f)
@@ -1024,35 +1016,35 @@ def _manifest_col_max(manifest: dict, col: str):
     row is hidden from the read (no tombstone column, no pending
     MOR/DV sidecars), that ``col`` is an integer type (stats hold the
     exact value, not a string/float re-encoding), and that EVERY live
-    file has a stats entry for the column (an absent entry is
-    ambiguous between all-NULL and stats-less). A file in which
-    ``col`` is dead (``_dead_columns``) reads as NULL, so its stats —
-    the dropped incarnation's physical values — are skipped; an
-    evolved table with no birth version for a file returns None. An
-    empty file set returns None like an empty aggregate would."""
-    if TOMBSTONE_COL in (manifest.get("columns") or []):
+    file has a stats entry for the column (a file written before the
+    column was added has none). A file in which ``col`` is dead
+    (``_dead_columns``) reads as NULL, so its stats — the dropped
+    incarnation's physical values — are skipped, as is a file whose
+    ``col`` is all-NULL (``[None, None, rows]``); an evolved table
+    with no birth version for a file returns None. A file set with no
+    value returns None like an empty aggregate would."""
+    if TOMBSTONE_COL in manifest["columns"]:
         return None
     if _mor_delete_files(manifest) or _dv_sidecar_files(manifest):
         return None
-    ctype = (manifest.get("column_types") or {}).get(col, "")
+    ctype = manifest["column_types"].get(col, "")
     if ctype.lower() not in _EXACT_INT_STAT_TYPES:
         return None
     files = [f for fs in manifest["buckets"].values() for f in fs]
     try:
-        dead = _dead_columns(
-            files, manifest.get("column_epochs"),
-            manifest.get("file_versions"),
-        )
+        dead = _dead_columns(manifest, files)
     except ValueError:
         return None
-    stats = manifest.get("column_stats") or {}
+    stats = manifest["column_stats"]
     mx = None
     for f in files:
         if col in dead.get(f, ()):
             continue
         s = stats.get(f, {}).get(col)
-        if s is None or s[1] is None:
+        if s is None:
             return None
+        if s[1] is None:
+            continue
         if mx is None or s[1] > mx:
             mx = s[1]
     return mx
@@ -1070,10 +1062,7 @@ BLOOM_K = 4
 
 
 def _staged_file_blooms(
-    spark: SparkSession,
-    files: list[str],
-    bloom_col: str,
-    bloom_type: str | None = None,
+    spark: SparkSession, files: list[str], bloom_col: str, bloom_type: str
 ) -> dict[str, str]:
     """Per-file Bloom filter of the bloom column for a just-staged
     commit, built DISTRIBUTED in one job: each row's ``BLOOM_K`` bit
@@ -1084,20 +1073,14 @@ def _staged_file_blooms(
     ``p >> 3``). NULLs set no bits (a NULL probe is meaningless);
     files holding only NULLs get ``""`` and match nothing.
 
-    ``bloom_type`` (the table's recorded column type) lets the scan
-    bind an explicit one-column schema: no schema-inference job, and
-    ``files`` is the staging listing the commit already holds. The
-    hash is over the BUILT column type either way — an explicit
-    schema equal to what inference would return, so bits are
-    unchanged. Without ``bloom_type`` (legacy manifests) the inferring
-    read stands."""
+    ``bloom_type`` (the table's recorded column type) binds the scan's
+    explicit one-column schema: no schema-inference job, and ``files``
+    is the staging listing the commit already holds. It is the type
+    the files were written with, so the bits hash the BUILT type."""
     from urllib.parse import unquote, urlparse
 
     if not files:
         return {}
-    reader = spark.read
-    if bloom_type is not None:
-        reader = reader.schema(f"`{bloom_col}` {bloom_type}")
     # bitmap positions are 1-based (0 and 1 share bit 0): p + 1 → bit p
     pos = F.explode(
         F.array(
@@ -1108,7 +1091,8 @@ def _staged_file_blooms(
         )
     ).alias("pos")
     rows = (
-        reader.parquet(*files)
+        spark.read.schema(f"`{bloom_col}` {bloom_type}")
+        .parquet(*files)
         .select(F.input_file_name().alias("f"), F.col(bloom_col).alias("v"))
         .filter(F.col("v").isNotNull())
         .select("f", pos)
@@ -1162,7 +1146,8 @@ def _cluster_bounds(
     ``batch``) can write, from metadata alone: ``(lo, hi, has_null)``,
     the union of the files' ``column_stats`` [min, max] and
     ``null_count > 0`` for ``snap``'s cluster column and the batch's
-    triples. A superset of the
+    triples (an all-NULL file's ``[None, None, rows]`` adds only its
+    NULLs). A superset of the
     written rows' range, since a rewrite only removes rows (see
     _write_clustered). None — the caller's write runs the bounds job —
     on an unclustered table, when a file has no stats entry for the
@@ -1172,12 +1157,10 @@ def _cluster_bounds(
     if col is None:
         return None
     try:
-        dead = _dead_columns(
-            files, snap.get("column_epochs"), snap.get("file_versions")
-        )
+        dead = _dead_columns(snap, files)
     except ValueError:
         return None
-    stats = snap.get("column_stats") or {}
+    stats = snap["column_stats"]
     spans = list(batch)
     for f in files:
         s = stats.get(f, {}).get(col)
@@ -1225,11 +1208,11 @@ def _stage_rewrite(
 
     The per-file maps follow the files: ``file_versions`` (birth
     version ``version`` — the durable source for the column-epoch
-    guard in _read_files_aligned; parsing the staging-directory NAME
-    instead would silently degrade to trust-the-file on a renamed dir),
-    ``column_stats`` (footer stats, skipped on legacy manifests that
-    record no ``column_types``) and, on a bloomed table,
-    ``file_blooms`` (one bitmap job, ``_staged_file_blooms``) — fresh
+    rule, _dead_columns; parsing the staging-directory NAME instead
+    would silently degrade to trust-the-file on a renamed dir),
+    ``column_stats`` (footer stats of ``nxt``'s ``column_types``) and,
+    on a bloomed table, ``file_blooms`` (one bitmap job,
+    ``_staged_file_blooms``) — fresh
     entries for the staged files, carried entries for files the next
     manifest still references. Returns the staging listing ({bucket:
     files})."""
@@ -1250,17 +1233,14 @@ def _stage_rewrite(
     for key in ("delete_files", "dv_files"):
         _carry_sidecars(nxt, key, rewritten)
     files = sorted(f for fs in new.values() for f in fs)
-    types = nxt.get("column_types")
+    types = nxt["column_types"]
     fresh = {
         "file_versions": dict.fromkeys(files, version),
-        "column_stats": (
-            _staged_column_stats(spark, staging, files, types) if types else {}
-        ),
+        "column_stats": _staged_column_stats(spark, staging, files, types),
     }
     if nxt.get("bloom_col") is not None:
         fresh["file_blooms"] = _staged_file_blooms(
-            spark, files, nxt["bloom_col"],
-            bloom_type=(types or {}).get(nxt["bloom_col"]),
+            spark, files, nxt["bloom_col"], types[nxt["bloom_col"]]
         )
     live = {f for fs in nxt["buckets"].values() for f in fs}
     for key, entries in fresh.items():
@@ -1306,16 +1286,16 @@ def version_as_of(base_dir: str, ts: float) -> int:
     table looked like at that moment. O(retained versions) manifest
     metadata, zero data I/O. Raises if ``ts`` predates the oldest
     RETAINED commit (vacuum-expired history cannot be resolved —
-    the same retention contract as version-based travel). Legacy
-    pre-stamp manifests count as epoch 0 (always eligible), so a
-    probe after their retention never misses them."""
+    the same retention contract as version-based travel). Every
+    manifest carries the ``committed_at`` stamp ``_publish_manifest``
+    sets."""
     versions = _list_versions(base_dir)
     if not versions:
         raise ValueError(f"no committed table at {base_dir}")
     best = None
     for v in versions:
         m = load_manifest(base_dir, v)
-        if float(m.get("committed_at") or 0.0) <= ts:
+        if m["committed_at"] <= ts:
             best = v
     if best is None:
         raise ValueError(
@@ -1326,11 +1306,30 @@ def version_as_of(base_dir: str, ts: float) -> int:
     return best
 
 
+#: The one manifest layout this module reads and writes. Every key a
+#: commit always records (``columns``, ``column_types``,
+#: ``column_epochs``, ``file_versions``, ``column_stats``,
+#: ``committed_at``) is present in it, so readers index them. A change
+#: to that layout bumps the number instead of adding a tolerance branch
+#: (Iceberg's format-version rule).
+MANIFEST_FORMAT = 1
+
+
 def load_manifest(base_dir: str, version: int | None = None) -> dict:
+    """The manifest at ``version`` (default: latest). Raises ValueError
+    when it is not ``MANIFEST_FORMAT``: a reader never guesses at a
+    layout it does not know."""
     if version is None:
         version = latest_version(base_dir)
     with open(_manifest_path(base_dir, version)) as fh:
-        return json.load(fh)
+        manifest = json.load(fh)
+    found = manifest.get("format")
+    if found != MANIFEST_FORMAT:
+        raise ValueError(
+            f"manifest v{version} at {base_dir} has format {found!r}; "
+            f"this reader supports format {MANIFEST_FORMAT} only"
+        )
+    return manifest
 
 
 def _floor_path(base_dir: str) -> str:
@@ -1383,10 +1382,8 @@ _PER_COMMIT_KEYS = (
 def _strip_commit_records(manifest: dict) -> dict:
     """Drop per-commit records copied from a source manifest, so a
     restore of a publish commit (say) doesn't carry the publish's
-    ``published_from`` into a commit stamped ``kind='restore'`` — and
-    the legacy cluster-only ``file_stats`` map, which nothing reads
-    (files plan from ``column_stats``)."""
-    for k in (*_PER_COMMIT_KEYS, "file_stats"):
+    ``published_from`` into a commit stamped ``kind='restore'``."""
+    for k in _PER_COMMIT_KEYS:
         manifest.pop(k, None)
     return manifest
 
@@ -1424,8 +1421,10 @@ def _publish_manifest(base_dir: str, manifest: dict) -> bool:
     # commit wall-clock stamp (Delta's timestamp per table version):
     # set HERE, unconditionally, so every commit path gets one and a
     # manifest-copying commit (clone/restore/publish) cannot carry its
-    # source's stamp — the basis for TIMESTAMP AS OF resolution
+    # source's stamp — the basis for TIMESTAMP AS OF resolution. The
+    # format stamp sits beside it: this is the one writer of v{N}.json
     manifest["committed_at"] = time.time()
+    manifest["format"] = MANIFEST_FORMAT
     tmp = os.path.join(
         base_dir,
         f".v{manifest['version']}.{os.getpid()}.{threading.get_ident()}.tmp",
@@ -1586,7 +1585,7 @@ def _staged_tombstone_buckets(
         files = [f for fs in by_bucket.values() for f in fs]
         stats, fallback = _footer_column_stats(files, [TOMBSTONE_COL])
         if not fallback:
-            # [min, max, nulls]; an all-NULL file has no entry
+            # [min, max, nulls]; an all-NULL file's max is None
             tombed = {
                 f for f, d in stats.items()
                 if d.get(TOMBSTONE_COL, [None, None])[1] is True
@@ -1723,9 +1722,8 @@ def init_table(
         "key_col": key_col,
         "columns": df.columns,
         "column_types": types0,
-        # every column is first-epoch at init (see _read_files_aligned's
-        # column-epoch guard — DROP + re-add needs per-column birth
-        # versions)
+        # every column is first-epoch at init (see _dead_columns' epoch
+        # rule — DROP + re-add needs per-column birth versions)
         "column_epochs": {c: 1 for c in df.columns},
     }
     if cluster_col is not None:
@@ -1750,12 +1748,13 @@ def init_table(
         manifest["identity_col"] = identity_col
         # integral column (validated above), so always stats-eligible:
         # the column_stats the staged-rewrite step just recorded hold
-        # the exact max — no re-execution of the seed frame
+        # the exact max (None in an all-NULL file) — no re-execution of
+        # the seed frame
         manifest["identity_high_water"] = max(
             (
                 int(d[identity_col][1])
                 for d in manifest["column_stats"].values()
-                if identity_col in d
+                if identity_col in d and d[identity_col][1] is not None
             ),
             default=0,
         )
@@ -1793,29 +1792,12 @@ def read_snapshot(
       read, never a wrong row).
 
     The exact row filter always runs on what is kept, and pending
-    MOR/DV deletes apply to every read."""
+    MOR/DV deletes apply to every read. A manifest of any format but
+    ``MANIFEST_FORMAT`` raises ValueError (``load_manifest``)."""
     manifest = load_manifest(base_dir, version)
-    cols, types = manifest.get("columns"), manifest.get("column_types")
-    if cols is None or types is None:
-        # legacy pre-schema manifest: plain read of every file (no
-        # recorded types to plan with), pending equality deletes still
-        # apply (legacy tables cannot have DVs)
-        files = [f for fs in manifest["buckets"].values() for f in fs]
-        df = _apply_mor_deletes(
-            spark, spark.read.parquet(*files), manifest
-        )
-    else:
-        kept, _ = plan_files(spark, manifest, where)
-        # no kept file: the pinned-schema empty frame, zero files opened
-        df = (
-            _read_visible_base(
-                spark, manifest, kept, cols, types,
-                manifest.get("column_epochs"),
-                manifest.get("file_versions"),
-            )
-            if kept
-            else _read_files_aligned(spark, [], cols, types)
-        )
+    kept, _ = plan_files(spark, manifest, where)
+    # no kept file: the pinned-schema empty frame, zero files opened
+    df = _read_visible_base(spark, manifest, kept)
     if where is not None:
         kind, col, *args = _bind_where(manifest, where)
         df = df.filter(
@@ -1986,24 +1968,40 @@ def _read_visible_base(
     spark: SparkSession,
     manifest: dict,
     files: list,
-    columns: list,
-    column_types: dict,
+    columns: list | None = None,
+    column_types: dict | None = None,
     column_epochs: dict | None = None,
-    file_versions: dict | None = None,
     carry_positions: bool = False,
 ) -> DataFrame:
-    """Aligned manifest read with BOTH pending-delete representations
-    applied: positional deletion vectors (bitmap anti-filter on native
-    row indexes) then equality-delete sidecars (broadcast key
-    anti-join). The single choke point every read face, every
-    rewrite's base read and the DV delete's position-finding read go
-    through, so no path can forget one representation.
-    ``carry_positions`` keeps the native (file, row index) columns on
-    the result (see _read_files_aligned)."""
-    has_dv = bool(files) and bool(manifest.get("dv_files"))
+    """Aligned read of ``manifest``'s ``files`` with BOTH pending-delete
+    representations applied: positional deletion vectors (bitmap
+    anti-filter on native row indexes) then equality-delete sidecars
+    (broadcast key anti-join). The single choke point every read face,
+    every rewrite's base read and the DV delete's position-finding
+    read go through, so no path can forget one representation.
+
+    ``columns``, ``column_types`` and ``column_epochs`` default to
+    ``manifest``'s own schema; a caller passes them to read a column
+    subset, or to align to another schema (a merge's result schema,
+    the change feed's v_to). Birth versions are always ``manifest``'s
+    (see _dead_columns). No files read as the empty frame of that
+    schema. ``carry_positions`` keeps the native (file, row index)
+    columns on the result (see _read_files_aligned)."""
+    if columns is None:
+        columns = manifest["columns"]
+    if column_types is None:
+        column_types = manifest["column_types"]
+    if not files:
+        # a plan that kept no file, or a fully-compacted table (every
+        # key tombstoned, then compact_tombstones): the empty frame of
+        # the schema IS the read, and no pending delete can apply
+        ddl = ", ".join(f"`{c}` {column_types[c]}" for c in columns)
+        return spark.createDataFrame([], ddl)
+    has_dv = bool(manifest.get("dv_files"))
     df = _read_files_aligned(
-        spark, files, columns, column_types, column_epochs,
-        file_versions, carry_positions=has_dv or carry_positions,
+        spark, files, columns, column_types,
+        _dead_columns(manifest, files, column_epochs),
+        carry_positions=has_dv or carry_positions,
     )
     if has_dv:
         df = _apply_dv_deletes(
@@ -2135,8 +2133,8 @@ def table_history(base_dir: str) -> list[dict]:
     stamps ``commit_kind`` (init / clone, and ``_transact``'s kinds:
     merge / compact / optimize / evolve / delete / replace / rebucket /
     restore / publish) and ``writer_id``; per-commit records surface as
-    ``quarantined`` (expectations gate) and ``restored_from``. Legacy
-    pre-stamp manifests read back with kind None rather than failing."""
+    ``quarantined`` (expectations gate) and ``restored_from``. A
+    manifest of another format raises ValueError (load_manifest)."""
     versions = _list_versions(base_dir)
     out = []
     for v in versions:
@@ -2144,9 +2142,9 @@ def table_history(base_dir: str) -> list[dict]:
         out.append(
             {
                 "version": v,
-                "kind": m.get("commit_kind"),
-                "writer_id": m.get("writer_id"),
-                "committed_at": m.get("committed_at"),
+                "kind": m["commit_kind"],
+                "writer_id": m["writer_id"],
+                "committed_at": m["committed_at"],
                 "n_buckets": int(m["n_buckets"]),
                 "n_files": sum(len(fs) for fs in m["buckets"].values()),
                 "quarantined": (m.get("expectations") or {}).get(
@@ -2194,9 +2192,11 @@ def restore_table(
         manifest = _strip_commit_records(dict(old))
         manifest["restored_from"] = to_version
         if snap.get("identity_col") is not None:
+            # an old version need not declare identity_col (a publish
+            # can bring it in later): no mark there to keep
             manifest["identity_high_water"] = max(
-                int(old.get("identity_high_water") or 0),
-                int(snap.get("identity_high_water") or 0),
+                old.get("identity_high_water", 0),
+                snap["identity_high_water"],
             )
         return manifest, (snap["version"] + 1, attempt + 1)
 
@@ -2300,9 +2300,10 @@ def publish_from(
             "version": v,
         }
         if snap_src.get("identity_col") is not None:
+            # a main without identity_col has no mark to keep
             manifest["identity_high_water"] = max(
-                int(snap_src.get("identity_high_water") or 0),
-                int(snap_main.get("identity_high_water") or 0),
+                snap_src["identity_high_water"],
+                snap_main.get("identity_high_water", 0),
             )
         return manifest, (snap_main["version"] + 1, attempt + 1)
 
@@ -2755,15 +2756,9 @@ def merge_upsert_manifest(
                 "tiebreak_col must differ from the table key "
                 f"({key_col!r}): a key cannot break its own ties"
             )
-        expected = snap.get("columns")
-        expected_types = snap.get("column_types")
+        expected = snap["columns"]
+        expected_types = snap["column_types"]
         if patch_cols is not None:
-            if expected is None or expected_types is None:
-                raise ValueError(
-                    "patch_cols requires a manifest with a recorded "
-                    "schema (legacy pre-schema manifests cannot define "
-                    "which columns a patch carries)"
-                )
             bad = [
                 c
                 for c in patch_cols
@@ -2782,7 +2777,7 @@ def merge_upsert_manifest(
                     f"partial-update batch columns "
                     f"{sorted(updates.columns)} must be exactly {need}"
                 )
-        if evolve_schema and expected is not None and expected_types is not None:
+        if evolve_schema:
             res_columns, res_types = _resolve_evolved_schema(
                 expected, expected_types, updates, key_col
             )
@@ -2802,10 +2797,8 @@ def merge_upsert_manifest(
                     "the built type; re-init or rebucket to re-index"
                 )
         else:
-            if (
-                patch_cols is None
-                and expected is not None
-                and sorted(updates.columns) != sorted(expected)
+            if patch_cols is None and sorted(updates.columns) != sorted(
+                expected
             ):
                 raise ValueError(
                     f"update batch columns {sorted(updates.columns)} do not "
@@ -2813,28 +2806,22 @@ def merge_upsert_manifest(
                     "evolve the schema unless evolve_schema=True — align the "
                     "batch (or re-init) first"
                 )
-            if expected_types is not None:
-                got_types = _column_types(updates)
-                drift = {
-                    c: (expected_types[c], got_types[c])
-                    for c in got_types
-                    if c in expected_types and got_types[c] != expected_types[c]
-                }
-                if drift:
-                    # name-only matching would let a type-drifted key column
-                    # re-bucket (xxhash64('5') != xxhash64(5L)) and leave TWO
-                    # live rows for one logical key across buckets
-                    raise ValueError(
-                        f"update batch column types drift from the table's: "
-                        f"{drift}; MERGE does not evolve the schema unless "
-                        "evolve_schema=True (safe widenings only)"
-                    )
-            res_columns = expected if expected is not None else updates.columns
-            res_types = (
-                expected_types
-                if expected_types is not None
-                else _column_types(updates)
-            )
+            got_types = _column_types(updates)
+            drift = {
+                c: (expected_types[c], got_types[c])
+                for c in got_types
+                if c in expected_types and got_types[c] != expected_types[c]
+            }
+            if drift:
+                # name-only matching would let a type-drifted key column
+                # re-bucket (xxhash64('5') != xxhash64(5L)) and leave TWO
+                # live rows for one logical key across buckets
+                raise ValueError(
+                    f"update batch column types drift from the table's: "
+                    f"{drift}; MERGE does not evolve the schema unless "
+                    "evolve_schema=True (safe widenings only)"
+                )
+            res_columns, res_types = expected, expected_types
         cols = [key_col, ver_col, tiebreak_col] + [
             c
             for c in res_columns
@@ -2899,7 +2886,7 @@ def merge_upsert_manifest(
             # the commit before publish.
             touched = sorted({int(b) for b in bucket_hint[1]})
             tomb_buckets = sorted(
-                set(int(b) for b in snap.get("tombstone_buckets", []))
+                set(int(b) for b in snap["tombstone_buckets"])
             )
         else:
             tomb_flag = (
@@ -2919,7 +2906,7 @@ def merge_upsert_manifest(
             )
             touched = sorted(r.bucket for r in bucket_info)
             tomb_buckets = sorted(
-                set(int(b) for b in snap.get("tombstone_buckets", []))
+                set(int(b) for b in snap["tombstone_buckets"])
                 | {r.bucket for r in bucket_info if r.has_tomb}
             )
             if span_probe:
@@ -2937,20 +2924,8 @@ def merge_upsert_manifest(
         # would read the dropped incarnation's stale bytes out of
         # old file groups and PERSIST them into the rewrite
         # (caught by the protocol model fuzz, seed 1337).
-        snap_epochs = snap.get("column_epochs") or {}
-        # legacy manifests record no schema (expected is None): every
-        # batch column is a carried column there — stamping them at
-        # next_version would make _read_files_aligned NULL every base
-        # column (key included) and fold the table into NULL-keyed
-        # rows. Only a column absent from a RECORDED prior schema is
-        # genuinely new.
         new_epochs = {
-            c: (
-                next_version
-                if expected is not None and c not in expected
-                else int(snap_epochs.get(c, 1))
-            )
-            for c in res_columns
+            c: snap["column_epochs"].get(c, next_version) for c in res_columns
         }
         base_df = None
         if base_files:
@@ -2962,8 +2937,7 @@ def merge_upsert_manifest(
             # deleted key patched/updated here re-inserts fresh
             # rather than carrying dead values
             base_df = _read_visible_base(
-                spark, snap, base_files, cols, res_types,
-                new_epochs, snap.get("file_versions"),
+                spark, snap, base_files, cols, res_types, new_epochs
             )
         if patch_cols is not None:
             # fill the carry columns from the pinned snapshot's
@@ -2992,13 +2966,7 @@ def merge_upsert_manifest(
                     TOMBSTONE_COL, F.lit(None).cast(res_types[TOMBSTONE_COL])
                 )
         ident = snap.get("identity_col")
-        # legacy manifests (identity declared, mark missing) start
-        # at 0 rather than crashing the arithmetic below
-        new_hw = (
-            int(snap.get("identity_high_water") or 0)
-            if ident is not None
-            else None
-        )
+        new_hw = snap["identity_high_water"] if ident is not None else None
         if (
             patch_cols is not None
             and ident is not None
@@ -3036,7 +3004,7 @@ def merge_upsert_manifest(
                 F.sum(F.col(ident).isNull().cast("int")).alias("nn"),
             ).first()
             if idstat.m is not None:
-                new_hw = max(new_hw or 0, int(idstat.m))
+                new_hw = max(new_hw, int(idstat.m))
             if int(idstat.nn or 0) > 0:
                 if base_df is not None:
                     existing = _visible_rows(base_df).select(
@@ -3075,7 +3043,7 @@ def merge_upsert_manifest(
             }
         )
         if ident is not None:
-            manifest["identity_high_water"] = int(new_hw or 0)
+            manifest["identity_high_water"] = new_hw
         # the lazy plan writes straight to staging: pinned base files
         # are IMMUTABLE under the protocol (commits only add files and
         # publish manifests; only vacuum deletes), so no checkpoint
@@ -3147,9 +3115,8 @@ def compact_tombstones(
 
     def build(snap, attempt, stage):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
-        cols_, types_ = snap["columns"], snap["column_types"]
-        candidates = sorted(int(b) for b in snap.get("tombstone_buckets", []))
-        if not candidates or TOMBSTONE_COL not in types_:
+        candidates = sorted(int(b) for b in snap["tombstone_buckets"])
+        if not candidates or TOMBSTONE_COL not in snap["column_types"]:
             return None, {
                 "version": snap["version"],
                 "buckets_compacted": [],
@@ -3158,10 +3125,7 @@ def compact_tombstones(
         files = [
             f for b in candidates for f in snap["buckets"].get(str(b), [])
         ]
-        df = _read_visible_base(
-            spark, snap, files, cols_, types_,
-            snap.get("column_epochs"), snap.get("file_versions"),
-        )
+        df = _read_visible_base(spark, snap, files)
         bucket = _bucket_of(key_col, n_buckets)
         per = {
             r.bucket: r.n
@@ -3242,7 +3206,6 @@ def optimize_compact(
     pack or coalesce returns its current version with no new commit."""
     def build(snap, attempt, stage):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
-        cols_, types_ = snap["columns"], snap["column_types"]
         fragmented = sorted(
             int(b)
             for b, fs in snap["buckets"].items()
@@ -3279,10 +3242,7 @@ def optimize_compact(
             files = [f for b in fragmented for f in snap["buckets"][str(b)]]
             _stage_rewrite(
                 spark, manifest, snap["version"] + 1, stage("optimize"),
-                _read_visible_base(
-                    spark, snap, files, cols_, types_,
-                    snap.get("column_epochs"), snap.get("file_versions"),
-                ),
+                _read_visible_base(spark, snap, files),
                 fragmented,
                 bounds=_cluster_bounds(snap, files),
             )
@@ -3375,9 +3335,9 @@ def drop_column(
     Returns ``(committed_version, attempts)``."""
 
     def build(snap, attempt, stage):
-        if col not in (snap.get("columns") or []):
+        if col not in snap["columns"]:
             raise ValueError(
-                f"column {col!r} not in table schema {snap.get('columns')}"
+                f"column {col!r} not in table schema {snap['columns']}"
             )
         protected = {
             snap["key_col"],
@@ -3391,32 +3351,23 @@ def drop_column(
                 f"column {col!r} is structural (key/cluster/bloom/"
                 "identity/tombstone) and cannot be dropped"
             )
+        def without(d):
+            return {c: v for c, v in d.items() if c != col}
+
         manifest = _strip_commit_records(
             {
                 **snap,
                 "columns": [c for c in snap["columns"] if c != col],
-                "column_types": {
-                    c: t
-                    for c, t in snap["column_types"].items()
-                    if c != col
+                "column_types": without(snap["column_types"]),
+                "column_epochs": without(snap["column_epochs"]),
+                # stats hygiene: the dropped column's per-file entries
+                # go with it (a re-added column's stats must not alias
+                # these)
+                "column_stats": {
+                    f: without(d) for f, d in snap["column_stats"].items()
                 },
             }
         )
-        manifest["column_epochs"] = {
-            c: e
-            for c, e in (
-                snap.get("column_epochs")
-                or {c: 1 for c in snap["columns"]}
-            ).items()
-            if c != col
-        }
-        if snap.get("column_stats"):
-            # stats hygiene: the dropped column's per-file entries go
-            # with it (a re-added column's stats must not alias these)
-            manifest["column_stats"] = {
-                f: {c: s for c, s in d.items() if c != col}
-                for f, d in snap["column_stats"].items()
-            }
         return manifest, (snap["version"] + 1, attempt + 1)
 
     return _transact(base_dir, "evolve", writer_id, build, max_retries)
@@ -3582,12 +3533,7 @@ def replace_where_range(
                 )
             )
             probe = _visible_rows(
-                _read_visible_base(
-                    spark, snap, check_files, sub,
-                    {c: types_[c] for c in sub},
-                    snap.get("column_epochs"),
-                    snap.get("file_versions"),
-                )
+                _read_visible_base(spark, snap, check_files, sub)
             )
             clash = (
                 probe.filter(out_of_slice)
@@ -3618,10 +3564,11 @@ def replace_where_range(
             out = batch
             if to_rewrite:
                 tomb = _tomb_flag() if TOMBSTONE_COL in types_ else F.lit(False)
-                out = _read_visible_base(
-                    spark, snap, to_rewrite, cols_, types_,
-                    snap.get("column_epochs"), snap.get("file_versions"),
-                ).filter(tomb | out_of_slice).unionByName(batch)
+                out = (
+                    _read_visible_base(spark, snap, to_rewrite)
+                    .filter(tomb | out_of_slice)
+                    .unionByName(batch)
+                )
             # a partial bucket keeps its provably out-of-slice files;
             # full buckets' pending sidecars clear with the rewrite
             _stage_rewrite(
@@ -3742,11 +3689,7 @@ def delete_keys_dv(
             )
             df = _visible_rows(
                 _read_visible_base(
-                    spark, snap, files, sub,
-                    {c: types_[c] for c in sub},
-                    snap.get("column_epochs"),
-                    snap.get("file_versions"),
-                    carry_positions=True,
+                    spark, snap, files, sub, carry_positions=True
                 )
             )
             hits = df.join(
@@ -4176,10 +4119,10 @@ def plan_diff(
         ),
         key=int,
     )
-    same_n = m_from.get("n_buckets") == m_to.get("n_buckets")
+    same_n = m_from["n_buckets"] == m_to["n_buckets"]
     if within_buckets is not None:
         nb, ids = within_buckets
-        if same_n and m_to.get("n_buckets") == nb:
+        if same_n and m_to["n_buckets"] == nb:
             keep = {str(b) for b in ids}
             changed = [b for b in changed if b in keep]
 
@@ -4187,9 +4130,7 @@ def plan_diff(
         files, deletes, dvs = (
             [f for b in bs for f in state(m, b)[i]] for i in range(3)
         )
-        dead = _dead_columns(
-            files, m_to.get("column_epochs"), m.get("file_versions")
-        )
+        dead = _dead_columns(m, files, m_to["column_epochs"])
         return {"files": files, "dead": dead, "deletes": deletes, "dvs": dvs}
 
     bucket_sets = [[b] for b in changed] if same_n else [changed]
@@ -4226,22 +4167,9 @@ def changes_between(
     m_from = load_manifest(base_dir, v_from)
     m_to = load_manifest(base_dir, v_to)
     key_col = m_to["key_col"]
-    cols, types = m_to.get("columns"), m_to.get("column_types")
-    if cols is None or types is None:
-        # pre-evolution manifests lack the logical schema (the same
-        # legacy class read_snapshot tolerates via .get): derive it
-        # from v_to's physical files — uniform by construction, since
-        # a schema-less manifest predates any evolution commit
-        all_to = [f for fs in m_to["buckets"].values() for f in fs]
-        if not all_to:
-            raise ValueError(
-                f"manifest v{v_to} at {base_dir} records no logical "
-                "schema and no files; cannot derive a diff schema"
-            )
-        derived = spark.read.parquet(*all_to)
-        cols = list(derived.columns)
-        types = _column_types(derived)
-    data_cols = [c for c in cols if c != key_col and c != TOMBSTONE_COL]
+    data_cols = [
+        c for c in m_to["columns"] if c != key_col and c != TOMBSTONE_COL
+    ]
     groups = plan_diff(m_from, m_to, within_buckets)
     files_from = [f for old, _ in groups for f in old["files"]]
     files_to = [f for _, new in groups for f in new["files"]]
@@ -4254,9 +4182,8 @@ def changes_between(
         # invariant; each manifest records its own referenced files)
         return _visible_rows(
             _read_visible_base(
-                spark, manifest, files, cols, types,
-                m_to.get("column_epochs"),
-                manifest.get("file_versions"),
+                spark, manifest, files, m_to["columns"],
+                m_to["column_types"], m_to["column_epochs"],
             )
         )
 
@@ -4470,28 +4397,10 @@ def rebucket_table(
     def build(snap, attempt, stage):
         if snap["n_buckets"] == new_n_buckets:
             return None, (snap["version"], 0)
-        cols, types = snap.get("columns"), snap.get("column_types")
         staging = stage("rebucket")
         files = [f for fs in snap["buckets"].values() for f in fs]
-        if cols is None or types is None:
-            # legacy pre-evolution manifest: derive the logical
-            # schema from the files (uniform by construction) and
-            # RECORD it in the new manifest
-            if not files:
-                raise ValueError(
-                    f"manifest v{snap['version']} at {base_dir} has "
-                    "no schema and no files; cannot rebucket"
-                )
-            derived = spark.read.parquet(*files)
-            cols = list(derived.columns)
-            types = _column_types(derived)
         manifest = _strip_commit_records(
-            {
-                **snap,
-                "n_buckets": new_n_buckets,
-                "columns": list(cols),
-                "column_types": dict(types),
-            }
+            {**snap, "n_buckets": new_n_buckets}
         )
         # include_tombstones semantics: NO visibility filter — a
         # live tombstone must keep suppressing lower-version
@@ -4499,16 +4408,14 @@ def rebucket_table(
         # apply (full rewrite = every sidecar applied + cleared)
         new = _stage_rewrite(
             spark, manifest, snap["version"] + 1, staging,
-            _read_visible_base(
-                spark, snap, files, cols, types,
-                snap.get("column_epochs"), snap.get("file_versions"),
-            ),
+            _read_visible_base(spark, snap, files),
             salt=write_salt,
             bounds=_cluster_bounds(snap, files),
         )
         # footer-read boolean max when the marker is a plain boolean
         # (zero Spark jobs — the same _staged_tombstone_buckets init
         # uses), distributed scan otherwise
+        types = snap["column_types"]
         manifest["tombstone_buckets"] = (
             _staged_tombstone_buckets(spark, staging, new, types)
             if TOMBSTONE_COL in types

@@ -204,15 +204,10 @@ def _table_meta(base_dir: str) -> tuple:
 
     m = load_manifest(base_dir)
     key_col = m["key_col"]
-    cols, types = m.get("columns"), m.get("column_types")
-    if cols is None or types is None:
-        raise ValueError(
-            f"table at {base_dir} has no logical schema in its manifest "
-            "(pre-evolution legacy table); re-commit once to record it "
-            "before attaching a CDF stream"
-        )
-    data_cols = [c for c in cols if c != key_col and c != TOMBSTONE_COL]
-    return key_col, data_cols, types, TOMBSTONE_COL
+    data_cols = [
+        c for c in m["columns"] if c != key_col and c != TOMBSTONE_COL
+    ]
+    return key_col, data_cols, m["column_types"], TOMBSTONE_COL
 
 
 def _band_files(manifest: dict, band: tuple) -> dict:

@@ -9,6 +9,10 @@ Usage::
         exact Spark jobs and tasks per op, counted per job group by
         ``obs.measure`` — evidence the shared box's timing noise cannot
         fake. Prints JOBS {"op": n_jobs, ...} and TASKS {"op": n, ...}.
+    python scripts/measure.py rows OP [OP ...]
+        row identity per op: the md5 of the op's collected rows, sorted,
+        as ROWS {"op": md5, ...}; two trees agree on an op exactly when
+        their digests match.
     python scripts/measure.py timeline OP
         one row per job of a warm run, from the Spark event log: gap
         since the previous job, seconds, stages that ran and stages
@@ -29,6 +33,7 @@ Usage::
 from __future__ import annotations
 
 import cProfile
+import hashlib
 import json
 import os
 import pstats
@@ -73,6 +78,18 @@ def jobs(*ops: str) -> None:
         out[op], tasks[op] = m.jobs, m.tasks
     print("JOBS " + json.dumps(out))
     print("TASKS " + json.dumps(tasks))
+    spark.stop()
+
+
+def rows(*ops: str) -> None:
+    spark = _session("rows")
+    out: dict[str, str] = {}
+    for op in ops:
+        collected = registry.QUERIES[op](spark, SF).collect()
+        text = "\n".join(sorted(repr(tuple(r)) for r in collected))
+        out[op] = hashlib.md5(text.encode()).hexdigest()
+        spark.catalog.clearCache()
+    print("ROWS " + json.dumps(out))
     spark.stop()
 
 
@@ -165,6 +182,7 @@ def ab(a: str, b: str, *ops: str) -> None:
 
 COMMANDS = {
     "jobs": jobs,
+    "rows": rows,
     "timeline": timeline,
     "profile": profile,
     "time": time_ops,

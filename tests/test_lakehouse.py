@@ -1025,112 +1025,49 @@ def test_missing_file_matcher_falls_through_analysis_condition(spark):
     assert not _is_missing_file_error(benign)
 
 
-def test_changes_between_tolerates_legacy_manifest(spark, tmp_path):
-    """Manifests written before schema tracking lack columns/
-    column_types; read_snapshot tolerates them via .get — changes_
-    between must too (derive the schema from v_to's files) instead of
-    KeyErroring (ADVICE r7)."""
+@pytest.mark.parametrize("face", ["read_snapshot", "merge", "changes"])
+def test_other_manifest_format_is_refused(spark, tmp_path, face):
+    """A manifest without the ``format`` stamp, or with a format this
+    reader does not know, is refused with a ValueError naming both
+    formats by every face that loads it: the snapshot read, the merge
+    (which commits nothing) and the change feed."""
     import json as _json
     import os as _os
 
     from assignment4_spark.operators.lakehouse import (
+        MANIFEST_FORMAT,
         _manifest_path,
         changes_between,
     )
 
     base = _mk_table(spark, tmp_path, n=50, n_buckets=4)
     merge_upsert_manifest(base, _upd(spark, [3, 999], 2, "u"), "ver", "payload")
-    for v in (1, 2):
-        p = _manifest_path(base, v)
-        with open(p) as fh:
-            m = _json.load(fh)
-        m.pop("columns", None)
-        m.pop("column_types", None)
-        _os.remove(p)
+    p = _manifest_path(base, 2)
+    with open(p) as fh:
+        stamped = _json.load(fh)
+    assert stamped["format"] == MANIFEST_FORMAT == 1
+    run = {
+        "read_snapshot": lambda: read_snapshot(spark, base),
+        "merge": lambda: merge_upsert_manifest(
+            base, _upd(spark, [4], 3, "u"), "ver", "payload"
+        ),
+        "changes": lambda: changes_between(spark, base, 1, 2),
+    }[face]
+    for fmt in (None, 2):
+        m = dict(stamped)
+        if fmt is None:
+            del m["format"]
+        else:
+            m["format"] = fmt
         with open(p, "w") as fh:
             _json.dump(m, fh)
-    d = {r.k: r.change_type for r in changes_between(spark, base, 1, 2).collect()}
-    assert d == {3: "update", 999: "insert"}
-
-
-def test_legacy_manifest_merge_preserves_base_rows(spark, tmp_path):
-    """MERGE against a pre-schema manifest (no columns/column_types/
-    column_epochs recorded) must treat every batch column as CARRIED —
-    not born-at-next-version. Stamping them new would make
-    _read_files_aligned NULL every base column (key included) and fold
-    the table into NULL-keyed wreckage (ADVICE r10 medium)."""
-    import json as _json
-    import os as _os
-
-    from assignment4_spark.operators.lakehouse import _manifest_path
-
-    base = _mk_table(spark, tmp_path, n=50, n_buckets=4)
-    p = _manifest_path(base, 1)
-    with open(p) as fh:
-        m = _json.load(fh)
-    for key in ("columns", "column_types", "column_epochs"):
-        m.pop(key, None)
-    _os.remove(p)
-    with open(p, "w") as fh:
-        _json.dump(m, fh)
-
-    merge_upsert_manifest(base, _upd(spark, [3, 999], 2, "u"), "ver", "payload")
-    rows = {r.k: (r.ver, r.payload) for r in read_snapshot(spark, base).collect()}
-    assert len(rows) == 51, f"base rows destroyed: {len(rows)} keys"
-    assert rows[3] == (2, "u3") and rows[999] == (2, "u999")
-    # untouched base rows keep their original bytes
-    assert rows[4] == (1, "p4") and rows[49] == (1, "p49")
-
-
-def test_legacy_manifest_pruned_reads(spark, tmp_path):
-    """Pruned reads of a pre-schema manifest (no columns/column_types/
-    column_epochs recorded) take read_snapshot's legacy branch — every
-    file read plainly, pending deletes applied, the exact filter on
-    top — instead of raising KeyError on the missing schema keys."""
-    import json as _json
-    import os as _os
-
-    from assignment4_spark.operators.lakehouse import (
-        _manifest_path,
-        read_snapshot_null,
-        read_snapshot_point,
-        read_snapshot_range,
-        read_snapshot_where,
-    )
-
-    base = str(tmp_path / "legacy_pruned")
-    df = spark.range(60).select(
-        F.col("id").alias("k"),
-        F.lit(1).alias("ver"),
-        (F.col("id") * 1.0).alias("x"),
-        F.concat(F.lit("u"), F.col("id")).alias("tag"),
-        F.when(F.col("id") % 10 == 0, None)
-        .otherwise(F.col("id"))
-        .alias("maybe"),
-    )
-    init_table(
-        df, base, key_col="k", n_buckets=4, cluster_col="x",
-        bloom_col="tag",
-    )
-    p = _manifest_path(base, 1)
-    with open(p) as fh:
-        m = _json.load(fh)
-    for key in ("columns", "column_types", "column_epochs"):
-        m.pop(key, None)
-    _os.remove(p)
-    with open(p, "w") as fh:
-        _json.dump(m, fh)
-
-    def keys(df):
-        return {r.k for r in df.collect()}
-
-    band = set(range(10, 21))
-    assert keys(read_snapshot_range(spark, base, 10.0, 20.0)) == band
-    assert keys(read_snapshot_where(spark, base, "x", 10.0, 20.0)) == band
-    assert keys(read_snapshot_null(spark, base, "maybe")) == set(
-        range(0, 60, 10)
-    )
-    assert keys(read_snapshot_point(spark, base, "u7")) == {7}
+        with pytest.raises(
+            ValueError,
+            match=f"v2 at .* has format {fmt!r}; this reader supports "
+            "format 1",
+        ):
+            run()
+    assert not _os.path.exists(_manifest_path(base, 3))
 
 
 def test_file_stats_manifest_plans_from_column_stats(spark, tmp_path):
@@ -1878,23 +1815,22 @@ def test_bloom_carry_and_recompute_across_merge(spark, tmp_path):
 
 def test_bloom_missing_entry_is_kept(spark, tmp_path):
     """A file without a bloom entry (pre-index commits) must always be
-    kept — pruning is an optimization, never a filter — and so must a
-    file whose entry is a pre-bitmap ``{word: int}`` dict."""
+    kept — pruning is an optimization, never a filter."""
     import base64
 
     from assignment4_spark.operators.lakehouse import plan_files
 
     full = base64.b64encode(b"\xff" * 4096).decode()
     manifest = {
-        "buckets": {"0": ["/a", "/b", "/c", "/d"]},
+        "buckets": {"0": ["/a", "/b", "/c"]},
         "column_types": {"grp": "bigint"},
         "bloom_col": "grp",
         # /b has no entry at all; /c holds every bit
-        "file_blooms": {"/a": "", "/c": full, "/d": {"0": -1}},
+        "file_blooms": {"/a": "", "/c": full},
     }
     kept, skipped = plan_files(spark, manifest, ("point", 7))
-    assert kept == ["/b", "/c", "/d"] and skipped == ["/a"], (
-        "empty filter skips; missing, full and legacy dict filters keep"
+    assert kept == ["/b", "/c"] and skipped == ["/a"], (
+        "empty filter skips; missing and full filters keep"
     )
 
 
@@ -3177,8 +3113,8 @@ def test_version_floor_propagates_read_errors(tmp_path):
 
 def test_column_stats_fresh_after_rebucket_and_all_null(spark, tmp_path):
     """Rebucket (carry=False) rebuilds stats fresh for every file — no
-    dead paths carried; an all-NULL column gets no stats entry and its
-    files are conservatively kept by pruning."""
+    dead paths carried; an all-NULL column records ``[None, None,
+    rows]`` and its files are kept by range pruning."""
     from assignment4_spark.operators.lakehouse import (
         init_table,
         plan_files,
@@ -3198,7 +3134,7 @@ def test_column_stats_fresh_after_rebucket_and_all_null(spark, tmp_path):
     allfiles = {f for fs in m["buckets"].values() for f in fs}
     assert set(m["column_stats"]) == allfiles
     for f, d in m["column_stats"].items():
-        assert "allnull" not in d
+        assert d["allnull"][:2] == [None, None] and d["allnull"][2] > 0
         assert "y" in d
     kept, skipped = plan_files(spark, m, ("between", "allnull", 0.0, 1.0))
     assert skipped == [] and len(kept) == len(allfiles)
@@ -3576,7 +3512,7 @@ def test_epoch_guard_is_manifest_backed_not_name_parsed(spark, tmp_path):
     stale-byte-resurrection class)."""
     import os as _os
 
-    from assignment4_spark.operators.lakehouse import _read_files_aligned
+    from assignment4_spark.operators.lakehouse import _read_visible_base
 
     # stage a parquet file under a name _staging_path would never emit
     gdir = str(tmp_path / "relocated-data" / "bucket=0")
@@ -3594,25 +3530,28 @@ def test_epoch_guard_is_manifest_backed_not_name_parsed(spark, tmp_path):
     types = {"k": "bigint", "ver": "int", "attr": "string"}
     epochs = {"k": 1, "ver": 1, "attr": 3}  # attr re-added at v3
 
+    def read(column_epochs, file_versions):
+        manifest = {
+            "columns": cols,
+            "column_types": types,
+            "column_epochs": column_epochs,
+            "file_versions": file_versions,
+        }
+        return _read_visible_base(spark, manifest, f).collect()
+
     # (a) manifest says the group was born at v1 -> attr is the
     # DROPPED incarnation's bytes and must read NULL
-    rows = _read_files_aligned(
-        spark, f, cols, types, epochs, {f[0]: 1}
-    ).collect()
+    rows = read(epochs, {f[0]: 1})
     assert rows[0].attr is None, "old-epoch bytes leaked through"
     # ...born at v3 -> same-named bytes are the fresh incarnation
-    rows = _read_files_aligned(
-        spark, f, cols, types, epochs, {f[0]: 3}
-    ).collect()
+    rows = read(epochs, {f[0]: 3})
     assert rows[0].attr == "stale"
 
     # (b) no recorded birth version on an epoch-evolved table: loud
     with pytest.raises(ValueError, match="file_versions"):
-        _read_files_aligned(spark, f, cols, types, epochs, None)
+        read(epochs, {})
     # inert guard (never-evolved table): no records needed
-    rows = _read_files_aligned(
-        spark, f, cols, types, {c: 1 for c in cols}, None
-    ).collect()
+    rows = read({c: 1 for c in cols}, {})
     assert rows[0].attr == "stale"
 
 
@@ -4760,32 +4699,6 @@ def test_fused_latest_wins_single_exchange_and_parity(spark, tmp_path):
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
-def test_staged_blooms_explicit_schema_matches_inferred(spark, tmp_path):
-    """The bloom sidecar's explicit-schema scan (no inference job) must
-    produce bit-identical filters to the inferring read it replaced."""
-    from pyspark.sql import functions as F
-
-    from assignment4_spark.operators.lakehouse import (
-        _bucket_of,
-        _list_bucket_files,
-        _staged_file_blooms,
-        _write_clustered,
-    )
-
-    df = spark.range(400).select(
-        F.col("id").alias("k"),
-        F.when(F.col("id") % 11 == 0, None)
-        .otherwise(F.concat(F.lit("u"), F.col("id")))
-        .alias("u"),
-    ).withColumn("bucket", _bucket_of("k", 4))
-    staging = str(tmp_path / "staged")
-    _write_clustered(df, staging, "k", 1, 4)
-    files = sorted(f for fs in _list_bucket_files(staging).values() for f in fs)
-    fast = _staged_file_blooms(spark, files, "u", bloom_type="string")
-    slow = _staged_file_blooms(spark, files, "u")
-    assert fast == slow and fast  # non-empty and identical bits
-
-
 def test_footer_stats_unreadable_file_falls_back(spark, tmp_path):
     """A file pyarrow cannot open must route the WHOLE stats call to
     the distributed fallback, never abort the commit (ADVICE r11)."""
@@ -4897,6 +4810,12 @@ def test_manifest_watermark_exact_and_gated(spark, tmp_path):
     first_file = next(iter(next(iter(m2["buckets"].values()))))
     m2["column_stats"].get(first_file, {}).pop("ver", None)
     assert _manifest_col_max(m2, "ver") is None
+    # an all-NULL file's [None, None, rows] entry is skipped, not refused
+    live = {f for fs in m2["buckets"].values() for f in fs}
+    m2["column_stats"][first_file]["ver"] = [None, None, 1]
+    assert _manifest_col_max(m2, "ver") == max(
+        m2["column_stats"][f]["ver"][1] for f in live - {first_file}
+    )
     # pending MOR delete sidecar: hidden rows could hold the max
     delete_keys_mor(spark, base, spark.createDataFrame([(0,)], "k int"))
     m3 = load_manifest(base)
@@ -5044,9 +4963,39 @@ def _check_cluster_layout(spark, base, model, bins=4):
     m = load_manifest(base)
     for b, fs in m["buckets"].items():
         stats = [m["column_stats"][f].get(m["cluster_col"]) for f in fs]
-        valued = [s for s in stats if s is not None]
+        # an all-NULL file records [None, None, rows]
+        valued = [s for s in stats if s is not None and s[0] is not None]
         assert len(valued) <= bins and len(fs) - len(valued) <= 1, (b, stats)
         assert all(s[2] == 0 for s in valued), (b, stats)
+
+
+def test_all_null_stats_entry_readers():
+    """A file whose column is all-NULL records ``[None, None, rows]``:
+    a between/range plan keeps it like a file with no entry (so no
+    declared skip count moves), is_null keeps it, and _cluster_bounds
+    unions only its NULLs."""
+    from assignment4_spark.operators.lakehouse import (
+        _cluster_bounds,
+        plan_files,
+    )
+
+    m = {
+        "buckets": {"0": ["/a", "/n"]},
+        "columns": ["k", "x"],
+        "column_types": {"k": "bigint", "x": "double"},
+        "column_epochs": {"k": 1, "x": 1},
+        "file_versions": {"/a": 1, "/n": 1},
+        "column_stats": {
+            "/a": {"x": [1.0, 2.0, 0]},
+            "/n": {"x": [None, None, 5]},
+        },
+        "cluster_col": "x",
+    }
+    assert plan_files(None, m, ("between", "x", 5.0, 6.0)) == (["/n"], ["/a"])
+    assert plan_files(None, m, ("range", 1.5, 1.6)) == (["/a", "/n"], [])
+    assert plan_files(None, m, ("is_null", "x")) == (["/n"], ["/a"])
+    assert _cluster_bounds(m, ["/a", "/n"]) == (1.0, 2.0, True)
+    assert _cluster_bounds(m, ["/n"]) == (None, None, True)
 
 
 def test_cluster_bounds_from_stats_save_a_job(spark, tmp_path):
@@ -5054,7 +5003,9 @@ def test_cluster_bounds_from_stats_save_a_job(spark, tmp_path):
     table take the bins' bounds from manifest stats: each runs one job
     fewer than the same commit on a twin whose manifest lacks one read
     file's cluster stats (the refusal, which runs the bounds job). A
-    batch's NULL cluster values land in the NULL bin."""
+    batch's NULL cluster values land in the NULL bin, whose all-NULL
+    file records ``[None, None, rows]``, so the next commit of that
+    bucket still takes its bounds from stats."""
     from assignment4_spark.operators.lakehouse import (
         _bucket_of,
         compact_tombstones,
@@ -5133,10 +5084,27 @@ def test_cluster_bounds_from_stats_save_a_job(spark, tmp_path):
         a_file(2),
     )
     m = load_manifest(base)
-    assert any(
-        "price" not in m["column_stats"][f]
+    all_null = [
+        f
         for b in (2, 5)
         for f in m["buckets"][str(b)]
+        if m["column_stats"][f]["price"][:2] == [None, None]
+    ]
+    assert all_null and all(
+        m["column_stats"][f]["price"][2] > 0 for f in all_null
+    )
+
+    # the next commit of an all-NULL file's bucket reads that file and
+    # still saves the bounds job
+    b = next(b for b in (2, 5) if set(all_null) & set(m["buckets"][str(b)]))
+    keys = [k for k in range(2, 300, 4) if bucket_of[k] == b][:6]
+    batch = _cl_rows(keys, 5, off=1.0)
+    model.update({r[0]: r[:4] for r in batch})
+    both(
+        lambda t: merge_upsert_manifest(
+            t, spark.createDataFrame(batch, _CL_SCHEMA), "ver", "price"
+        ),
+        a_file(b),
     )
 
 
