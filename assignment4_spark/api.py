@@ -49,8 +49,6 @@ from .operators.lakehouse import (  # noqa: F401
     drop_column,
     optimize_compact,
     plan_files,
-    read_snapshot_null,
-    read_snapshot_where,
     init_table,
     latest_version,
     load_manifest,
@@ -158,8 +156,6 @@ __all__ = [
     "drop_column",
     "optimize_compact",
     "plan_files",
-    "read_snapshot_null",
-    "read_snapshot_where",
     "compose_markdown",
     "compose_pdf",
     "connected_components",

@@ -157,135 +157,57 @@ def _resolve_evolved_schema(
     return columns, types
 
 
-def _arrow_ddl_type(t) -> str | None:
-    """Spark DDL name of an arrow footer type, or None when the mapping
-    is not exact (the caller must then fall back to schema inference —
-    guessing here would silently misread bytes)."""
-    import pyarrow as pa
-
-    if pa.types.is_int8(t):
-        return "tinyint"
-    if pa.types.is_int16(t):
-        return "smallint"
-    if pa.types.is_int32(t):
-        return "int"
-    if pa.types.is_int64(t):
-        return "bigint"
-    if pa.types.is_float32(t):
-        return "float"
-    if pa.types.is_float64(t):
-        return "double"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "string"
-    if pa.types.is_boolean(t):
-        return "boolean"
-    if pa.types.is_date32(t):
-        return "date"
-    if pa.types.is_timestamp(t):
-        # micros only; INT96 legacy files surface as nanos -> fallback
-        if t.unit == "us":
-            return "timestamp" if t.tz is not None else "timestamp_ntz"
-        return None
-    if pa.types.is_decimal(t):
-        return f"decimal({t.precision},{t.scale})"
-    return None
+def _ddl(columns: list, column_types: dict) -> str:
+    """Spark DDL schema string of ``columns`` at ``column_types``."""
+    return ", ".join(f"`{c}` {column_types[c]}" for c in columns)
 
 
-# Per-session PLAN-OBJECT cache for uniform-schema snapshot relations
-# (VERDICT r11 item 4): the replace/delete/changes faces plan the SAME
-# pinned snapshot 3-5x per invocation, and each relation creation pays
-# a driver-side file listing + analysis round (profiled ~30% of
-# merge_delete_where). Never result caching: the value is an UNEXECUTED
-# DataFrame plan; every action still scans the parquet inputs. The key
-# — exact file tuple + schema DDL — can only ever name one byte
-# content: committed files are immutable under the protocol (commits
-# add files; only vacuum deletes) and every staging path embeds a
-# process-wide monotonic sequence, so a rebuilt table never reuses a
-# path. A vacuumed file is caught by the os.path.exists revalidation
-# on hit, which re-creates the relation so PATH_NOT_FOUND surfaces at
-# construction exactly as before. LRU-bounded per session; the session
-# key is weak so a stopped session's plans are collectable.
+# Per-session PLAN-OBJECT memo for parquet relations: the
+# replace/delete/changes faces plan the SAME pinned snapshot 3-5x per
+# invocation, and each relation creation pays a driver-side file
+# listing + analysis round (profiled ~30% of merge_delete_where). Never
+# result caching: the value is an UNEXECUTED DataFrame plan; every
+# action still scans the parquet inputs. The key — exact file tuple +
+# schema DDL — can only ever name one byte content: committed files
+# are immutable under the protocol (commits add files; only vacuum
+# deletes) and every staging path ends in a uuid4 suffix
+# (_staging_path), so a rebuilt table never reuses a path. A vacuumed
+# file is caught by the os.path.exists revalidation on hit, which
+# re-creates the relation so PATH_NOT_FOUND surfaces at construction
+# exactly as before. LRU-bounded per session; the session key is weak
+# so a stopped session's plans are collectable.
 _REL_CACHE: "weakref.WeakKeyDictionary[SparkSession, OrderedDict]" = (
     weakref.WeakKeyDictionary()
 )
 _REL_CACHE_LOCK = threading.Lock()
 _REL_CACHE_MAX = 64
-_REL_NONE = object()  # cached "fast path not applicable" verdict
 
 
-def _rel_cache_for(spark: SparkSession) -> OrderedDict:
-    return _REL_CACHE.setdefault(spark, OrderedDict())
-
-
-def _uniform_schema_read(
-    spark: SparkSession,
-    groups: dict[str, list],
-    columns: list,
-    column_types: dict,
-) -> DataFrame | None:
-    """Fast path for the never-evolved (epoch-inert) common case: when
-    every commit group's PHYSICAL schema agrees exactly with the
-    manifest's logical types (checked from one parquet footer per
-    group — driver-side metadata, no Spark job), all files read as ONE
-    explicit-schema relation: no per-group schema-inference job, no
-    union of per-group plans (guide §1.2 — at 10 commits retained this
-    was 10 tiny inference jobs and a 10-way union per snapshot read).
-    Files physically missing a manifest column are filled with NULLs
-    by the reader's by-name resolution, exactly as the per-group
-    projection did. Any divergence (widened types, INT96 legacy
-    timestamps, unmappable arrow types) returns None -> caller falls
-    back to the per-group path.
-
-    Relations (and None verdicts) are memoized per (session, files,
-    schema) — see _REL_CACHE above; identical key means identical
-    bytes, and hits revalidate file existence so vacuum errors keep
-    surfacing at construction time."""
-    import pyarrow.parquet as pq
-
-    ddl = ", ".join(f"`{c}` {column_types[c]}" for c in columns)
-    all_files = sorted(f for fs in groups.values() for f in fs)
-    key = (ddl, tuple(all_files))
+def _read_parquet(spark: SparkSession, files: list, ddl: str) -> DataFrame:
+    """The module's one parquet read: ``files`` under the explicit
+    schema ``ddl``, so no schema-inference job runs. The schema comes
+    from the manifest (or from the step that wrote the files), never
+    from the files: columns bind by name, case-insensitively; a
+    physical column narrower along _WIDEN_CHAIN than its DDL type
+    (a pre-widening file) reads widened; a column the file lacks (a
+    pre-evolution file) reads as NULL. A physical type that is not a
+    widening of its DDL type fails at scan — only a file written
+    outside this module can hold one. Relations are memoized per
+    (session, schema, files); see _REL_CACHE above."""
+    files = sorted(files)
+    key = (ddl, tuple(files))
     with _REL_CACHE_LOCK:
-        cache = _rel_cache_for(spark)
+        cache = _REL_CACHE.setdefault(spark, OrderedDict())
         hit = cache.get(key)
         if hit is not None:
-            if hit is _REL_NONE:
-                cache.move_to_end(key)
-                return None
-            if all(os.path.exists(f) for f in all_files):
+            if all(os.path.exists(f) for f in files):
                 cache.move_to_end(key)
                 return hit
             del cache[key]  # vacuumed file: fall through, fail fresh
-    for fs in groups.values():
-        try:
-            sch = pq.read_schema(fs[0])
-        except Exception:
-            return None
-        # case-INSENSITIVE name match, like Spark's default by-name
-        # parquet resolution (spark.sql.caseSensitive=false): a
-        # physical column differing only in case from a manifest
-        # column would still be bound by the reader, so it must pass
-        # the type-parity check, not dodge it (ADVICE r11)
-        by_lower: dict[str, list[str]] = {}
-        for n in sch.names:
-            by_lower.setdefault(n.lower(), []).append(n)
-        for c in columns:
-            matches = by_lower.get(c.lower(), [])
-            if not matches:
-                continue  # pre-evolution file: reader null-fills
-            if len(matches) > 1:
-                return _rel_cache_put(spark, key, None)
-            if _arrow_ddl_type(sch.field(matches[0]).type) != column_types[c]:
-                return _rel_cache_put(spark, key, None)
-    return _rel_cache_put(
-        spark, key, spark.read.schema(ddl).parquet(*all_files)
-    )
-
-
-def _rel_cache_put(spark: SparkSession, key, rel: DataFrame | None):
+    rel = spark.read.schema(ddl).parquet(*files)
     with _REL_CACHE_LOCK:
-        cache = _rel_cache_for(spark)
-        cache[key] = _REL_NONE if rel is None else rel
+        cache = _REL_CACHE.setdefault(spark, OrderedDict())
+        cache[key] = rel
         cache.move_to_end(key)
         while len(cache) > _REL_CACHE_MAX:
             cache.popitem(last=False)
@@ -340,78 +262,45 @@ def _read_files_aligned(
     dead: dict[str, frozenset] | None = None,
     carry_positions: bool = False,
 ) -> DataFrame:
-    """Read manifest files and align every row to the manifest's
-    LOGICAL schema. Files written before a schema evolution physically
-    lack the added columns (and may carry narrower widened types), and
-    plain spark.read.parquet(mergeSchema) hard-fails on an int/bigint
-    conflict — so files group by their commit directory (physical
-    schema is uniform per commit: one staging write), each group reads
-    once and projects missing columns as NULL / narrower columns
-    through a lossless cast, and the groups union. Group count is
-    bounded by the number of retained versions, never by file count,
-    so plan cost stays O(versions) while scan parallelism is unchanged.
-    Same-type casts are elided by Catalyst (SimplifyCasts), so the
-    common no-evolution case plans exactly as a plain read. Columns
-    ``dead`` (``_dead_columns``) names for a group's files read as
-    NULL; a read with none takes the one-relation fast path when it
-    applies."""
+    """Read manifest files aligned to the manifest's LOGICAL schema
+    (``columns`` at ``column_types``), which is the read's only schema
+    source (_read_parquet: a pre-evolution file's missing columns read
+    as NULL, its narrower widened types read widened). Columns
+    ``dead`` (``_dead_columns``) names for a file read as NULL from it:
+    files group by their dead-column set, each group is one read of
+    its live columns with the dead ones projected as typed NULLs, and
+    the groups union. A read with no dead column is one relation over
+    every file, returned as is unless ``carry_positions`` adds the
+    native parquet (file, row index) columns — what makes positional
+    deletion vectors possible without any per-file sort."""
     dead = dead or {}
-    groups: dict[str, list] = {}
+    if not dead and not carry_positions:
+        return _read_parquet(spark, files, _ddl(columns, column_types))
+    groups: dict[frozenset, list] = {}
     for f in files:
-        # …/commit_vN_*/bucket=B/part-*.parquet → group on the commit dir
-        groups.setdefault(os.path.dirname(os.path.dirname(f)), []).append(f)
-    if not dead:
-        fast = _uniform_schema_read(spark, groups, columns, column_types)
-        if fast is not None:
-            if not carry_positions:
-                # the explicit-schema relation already carries exactly
-                # `columns` in manifest order — an identity select here
-                # is one py4j Column round-trip per column per snapshot
-                # read for a Project that Catalyst collapses anyway
-                return fast
-            sel = [F.col(c) for c in columns] + [
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:", ""
-                ).alias(DV_FILE_COL),
-                F.col("_metadata.row_index").alias(DV_POS_COL),
-            ]
-            return fast.select(*sel)
-    parts = []
-    for gdir, fs in sorted(groups.items()):
-        df = spark.read.parquet(*fs)
-        # one read per group, so its files must agree on which
-        # same-named bytes are a dropped incarnation's
-        gdead = {dead.get(f, frozenset()) for f in fs}
-        if len(gdead) != 1:
-            raise ValueError(
-                f"file group {gdir!r} has conflicting file_versions "
-                "entries — its files disagree on which columns are "
-                "dead on an epoch-evolved table"
-            )
-        have = set(df.columns) - gdead.pop()
-        sel = [
-            (
-                F.col(c).cast(column_types[c])
-                if c in have
-                else F.lit(None).cast(column_types[c])
-            ).alias(c)
-            for c in columns
+        groups.setdefault(dead.get(f, frozenset()), []).append(f)
+    pos = []
+    if carry_positions:
+        # Spark's _metadata hidden struct; the scheme prefix is
+        # stripped so write- and read-side paths compare equal
+        pos = [
+            F.regexp_replace(
+                F.col("_metadata.file_path"), "^file:", ""
+            ).alias(DV_FILE_COL),
+            F.col("_metadata.row_index").alias(DV_POS_COL),
         ]
-        if carry_positions:
-            # native parquet-reader row positions (Spark's _metadata
-            # hidden struct) — what makes positional deletion vectors
-            # possible without any per-file sort. The scheme prefix is
-            # stripped so write- and read-side paths compare equal.
-            sel += [
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:", ""
-                ).alias(DV_FILE_COL),
-                F.col("_metadata.row_index").alias(DV_POS_COL),
-            ]
-        parts.append(df.select(*sel))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = None
+    for gdead, fs in sorted(groups.items(), key=lambda g: sorted(g[0])):
+        live = [c for c in columns if c not in gdead]
+        df = _read_parquet(spark, fs, _ddl(live, column_types)).select(
+            *[
+                F.col(c) if c not in gdead
+                else F.lit(None).cast(column_types[c]).alias(c)
+                for c in columns
+            ],
+            *pos,
+        )
+        out = df if out is None else out.unionByName(df)
     return out
 
 
@@ -822,9 +711,11 @@ def _footer_column_stats(
 
 
 def _spark_column_stats(
-    spark: SparkSession, staging: str, cols: list[str]
+    spark: SparkSession, files: list[str], cols: list[str],
+    types: dict[str, str],
 ) -> dict[str, dict[str, list]]:
-    """The distributed stats pass: ONE column-pruned scan grouped on
+    """The distributed stats pass: ONE scan of ``files``' ``cols`` (at
+    ``types``, the types they were written with) grouped on
     input_file_name (cost O(staged data in ``cols``); the collect is
     O(files × columns) metadata). Fallback for columns whose footer
     stats are absent (values over parquet-java's ~2 KiB footer cap)."""
@@ -838,7 +729,7 @@ def _spark_column_stats(
             F.sum(F.col(c).isNull().cast("bigint")).alias(f"_nn{i}"),
         ]
     rows = (
-        spark.read.parquet(staging)
+        _read_parquet(spark, files, _ddl(cols, types))
         .groupBy(F.input_file_name().alias("f"))
         .agg(*aggs)
         .collect()
@@ -857,8 +748,7 @@ def _spark_column_stats(
 
 
 def _staged_column_stats(
-    spark: SparkSession, staging: str, files: list[str],
-    types: dict[str, str],
+    spark: SparkSession, files: list[str], types: dict[str, str]
 ) -> dict[str, dict[str, list]]:
     """Delta-style per-file column statistics for a just-staged commit:
     [min, max, null_count] for EVERY stats-eligible column. Read from
@@ -876,13 +766,12 @@ def _staged_column_stats(
         if t in _COLUMN_STATS_TYPES and c != "bucket"
     ]
     # a staged commit can legitimately hold ZERO files (an empty update
-    # slice, an all-tombstone bucket compacting away) — reading the
-    # empty dir would raise UNABLE_TO_INFER_SCHEMA
+    # slice, an all-tombstone bucket compacting away)
     if not cols or not files:
         return {}
     out, fallback = _footer_column_stats(files, cols)
     if fallback:
-        slow = _spark_column_stats(spark, staging, sorted(fallback))
+        slow = _spark_column_stats(spark, files, sorted(fallback), types)
         for f, d in slow.items():
             out.setdefault(f, {}).update(d)
     return out
@@ -1091,8 +980,7 @@ def _staged_file_blooms(
         )
     ).alias("pos")
     rows = (
-        spark.read.schema(f"`{bloom_col}` {bloom_type}")
-        .parquet(*files)
+        _read_parquet(spark, files, f"`{bloom_col}` {bloom_type}")
         .select(F.input_file_name().alias("f"), F.col(bloom_col).alias("v"))
         .filter(F.col("v").isNotNull())
         .select("f", pos)
@@ -1236,7 +1124,7 @@ def _stage_rewrite(
     types = nxt["column_types"]
     fresh = {
         "file_versions": dict.fromkeys(files, version),
-        "column_stats": _staged_column_stats(spark, staging, files, types),
+        "column_stats": _staged_column_stats(spark, files, types),
     }
     if nxt.get("bloom_col") is not None:
         fresh["file_blooms"] = _staged_file_blooms(
@@ -1571,7 +1459,7 @@ def _carry_sidecars(
 
 
 def _staged_tombstone_buckets(
-    spark: SparkSession, staging: str, by_bucket: dict[int, list[str]],
+    spark: SparkSession, by_bucket: dict[int, list[str]],
     types: dict[str, str],
 ) -> list[int]:
     """Buckets of a just-staged commit that hold at least one live
@@ -1579,10 +1467,14 @@ def _staged_tombstone_buckets(
     is a plain boolean (zero Spark jobs; footer max is NULL-skipping
     and an all-NULL chunk contributes nothing, exactly matching the
     ``max(_tomb_flag())`` the distributed pass computes); any other
-    physical type, or a footer without usable stats, falls back to the
-    scan. ``by_bucket`` is the staging listing."""
+    physical type, or a footer without usable stats, falls back to one
+    scan of the marker at ``types`` grouped per file. ``by_bucket`` is
+    the staging listing; it maps each file to its bucket."""
+    from urllib.parse import unquote, urlparse
+
+    files = [f for fs in by_bucket.values() for f in fs]
+    tombed = None
     if types.get(TOMBSTONE_COL) == "boolean":
-        files = [f for fs in by_bucket.values() for f in fs]
         stats, fallback = _footer_column_stats(files, [TOMBSTONE_COL])
         if not fallback:
             # [min, max, nulls]; an all-NULL file's max is None
@@ -1590,17 +1482,18 @@ def _staged_tombstone_buckets(
                 f for f, d in stats.items()
                 if d.get(TOMBSTONE_COL, [None, None])[1] is True
             }
-            return sorted(
-                b for b, fs in by_bucket.items() if tombed.intersection(fs)
+    if tombed is None:
+        tombed = {
+            unquote(urlparse(r.f).path)
+            for r in _read_parquet(
+                spark, files, _ddl([TOMBSTONE_COL], types)
             )
-    return sorted(
-        r.bucket
-        for r in spark.read.parquet(staging)
-        .groupBy("bucket")
-        .agg(F.max(_tomb_flag()).alias("has_tomb"))
-        .collect()
-        if r.has_tomb
-    )
+            .groupBy(F.input_file_name().alias("f"))
+            .agg(F.max(_tomb_flag()).alias("has_tomb"))
+            .collect()
+            if r.has_tomb
+        }
+    return sorted(b for b, fs in by_bucket.items() if tombed.intersection(fs))
 
 
 def _list_bucket_files(staging_dir: str) -> dict[int, list[str]]:
@@ -1740,7 +1633,7 @@ def init_table(
     # and merges only ever ADD flags — a live tombstone in an unflagged
     # bucket would never be reclaimed.
     manifest["tombstone_buckets"] = (
-        _staged_tombstone_buckets(df.sparkSession, staging, new, types0)
+        _staged_tombstone_buckets(df.sparkSession, new, types0)
         if TOMBSTONE_COL in df.columns
         else []
     )
@@ -1830,27 +1723,6 @@ def read_snapshot_point(
     )
 
 
-def read_snapshot_where(
-    spark: SparkSession, base_dir: str, col: str, lo, hi,
-    version: int | None = None, include_tombstones: bool = False,
-) -> DataFrame:
-    """``read_snapshot(where=("between", col, lo, hi))``."""
-    return read_snapshot(
-        spark, base_dir, version, include_tombstones,
-        ("between", col, lo, hi),
-    )
-
-
-def read_snapshot_null(
-    spark: SparkSession, base_dir: str, col: str,
-    version: int | None = None, include_tombstones: bool = False,
-) -> DataFrame:
-    """``read_snapshot(where=("is_null", col))``."""
-    return read_snapshot(
-        spark, base_dir, version, include_tombstones, ("is_null", col)
-    )
-
-
 def _tomb_flag():
     """A row's tombstone flag: the marker cast to boolean, NULL read as
     live — the same cast every write path applies, so a dirty-typed
@@ -1893,7 +1765,9 @@ def _apply_mor_deletes(
     if not files:
         return df
     key_col = manifest["key_col"]
-    dk = spark.read.parquet(*files).select(key_col).distinct()
+    dk = _read_parquet(
+        spark, files, _ddl([key_col], manifest["column_types"])
+    ).distinct()
     return df.join(F.broadcast(dk), key_col, "left_anti")
 
 
@@ -1901,6 +1775,8 @@ def _apply_mor_deletes(
 #: row-index metadata through an aligned read for DV application
 DV_FILE_COL = "__dv_file"
 DV_POS_COL = "__dv_pos"
+#: a DV sidecar's schema: per data file, 64-row word index and bitmap
+DV_SIDECAR_DDL = "file string, w int, word bigint"
 
 
 def _dv_sidecar_files(manifest: dict) -> list[str]:
@@ -1937,7 +1813,7 @@ def _apply_dv_deletes(
             else df.drop(DV_FILE_COL, DV_POS_COL)
         )
     dv = (
-        spark.read.parquet(*files)
+        _read_parquet(spark, files, DV_SIDECAR_DDL)
         .groupBy("file", "w")
         .agg(F.bit_or("word").alias("word"))
     )
@@ -1995,8 +1871,7 @@ def _read_visible_base(
         # a plan that kept no file, or a fully-compacted table (every
         # key tombstoned, then compact_tombstones): the empty frame of
         # the schema IS the read, and no pending delete can apply
-        ddl = ", ".join(f"`{c}` {column_types[c]}" for c in columns)
-        return spark.createDataFrame([], ddl)
+        return spark.createDataFrame([], _ddl(columns, column_types))
     has_dv = bool(manifest.get("dv_files"))
     df = _read_files_aligned(
         spark, files, columns, column_types,
@@ -2922,7 +2797,7 @@ def merge_upsert_manifest(
         # has no entry for a column this merge introduces, and an
         # entry-less column would default to trusted, so a re-add
         # would read the dropped incarnation's stale bytes out of
-        # old file groups and PERSIST them into the rewrite
+        # old files and PERSIST them into the rewrite
         # (caught by the protocol model fuzz, seed 1337).
         new_epochs = {
             c: snap["column_epochs"].get(c, next_version) for c in res_columns
@@ -3266,7 +3141,7 @@ def optimize_compact(
             )
             dv_files_in = [f for b in dv_frag for f in dvs_all[str(b)]]
             dv_new = _write_sidecar(
-                spark.read.parquet(*dv_files_in)
+                _read_parquet(spark, dv_files_in, DV_SIDECAR_DDL)
                 .groupBy("file", "w")
                 .agg(F.bit_or("word").alias("word"))
                 # vectors only survive while their bucket is
@@ -3282,8 +3157,9 @@ def optimize_compact(
             # write shape with a fresh attempt-private dir
             side_files = [f for b in side_frag for f in dels_all[str(b)]]
             del_new = _write_sidecar(
-                spark.read.parquet(*side_files)
-                .select(key_col)
+                _read_parquet(
+                    spark, side_files, _ddl([key_col], snap["column_types"])
+                )
                 .distinct()
                 .withColumn("bucket", _bucket_of(key_col, n_buckets)),
                 stage("optdel"),
@@ -3320,9 +3196,9 @@ def drop_column(
     """DROP COLUMN as a metadata-only commit (Delta column-mapping
     drop / Iceberg drop-column): the new manifest simply omits the
     column from the logical schema — zero data files rewritten, O(1)
-    in table size. The aligned read projects each file group to the
-    MANIFEST's columns, so files still carrying the dropped column's
-    bytes serve reads without it, readers pinned before the drop keep
+    in table size. The aligned read binds the MANIFEST's columns, so
+    files still carrying the dropped column's bytes serve reads
+    without it, readers pinned before the drop keep
     their epoch's schema (time travel shows the column), and the bytes
     are physically reclaimed whenever ordinary rewrites (merge /
     compact / optimize / rebucket) rewrite their buckets. A later
@@ -3614,9 +3490,7 @@ def delete_where_range(
     Returns ``(committed_version, attempts)``."""
     snap = load_manifest(base_dir)
     cols_, types_ = snap["columns"], snap["column_types"]
-    empty = spark.createDataFrame(
-        [], ", ".join(f"`{c}` {types_[c]}" for c in cols_)
-    )
+    empty = spark.createDataFrame([], _ddl(cols_, types_))
     return replace_where_range(
         spark, base_dir, col, lo, hi, empty,
         writer_id=writer_id, max_retries=max_retries,
@@ -4385,10 +4259,10 @@ def rebucket_table(
     without committing (nothing to do; attempts=0 marks the no-op).
 
     Tombstone bookkeeping: per-new-bucket flags are recomputed FROM
-    THE STAGED FILES (a column-pruned scan of only the marker column +
-    the bucket partition dir — never a re-execution of upstream
-    lineage), so compact_tombstones keeps its never-scan-the-table
-    guarantee across the rewrite.
+    THE STAGED FILES (their footers, or a scan of only the marker
+    column — never a re-execution of upstream lineage), so
+    compact_tombstones keeps its never-scan-the-table guarantee across
+    the rewrite.
 
     Returns ``(committed_version, attempts)``."""
     if new_n_buckets < 1:
@@ -4417,7 +4291,7 @@ def rebucket_table(
         # uses), distributed scan otherwise
         types = snap["column_types"]
         manifest["tombstone_buckets"] = (
-            _staged_tombstone_buckets(spark, staging, new, types)
+            _staged_tombstone_buckets(spark, new, types)
             if TOMBSTONE_COL in types
             else []
         )

@@ -120,3 +120,31 @@ def test_scripts_import_and_resolve():
                     assert hasattr(mod, alias.name), (
                         f"{stem}: {node.module}.{alias.name} does not exist"
                     )
+
+
+def test_lakehouse_reads_parquet_through_one_helper():
+    """In ``operators/lakehouse.py`` a SparkSession's ``.read`` appears
+    only inside ``_read_parquet`` (the manifest-schema read every table
+    and sidecar read goes through) and ``read_quarantine`` (the
+    quarantine table's schema is not in the manifest): a new inferring
+    read elsewhere would bring back a schema-inference job and a second
+    schema source."""
+    import ast
+
+    path = os.path.join(REPO, "assignment4_spark", "operators", "lakehouse.py")
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    readers = set()
+    for top in tree.body:
+        calls = {
+            id(n.func) for n in ast.walk(top) if isinstance(n, ast.Call)
+        }
+        for node in ast.walk(top):
+            # ``x.read.parquet(...)``: the property, not a ``f.read()`` call
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "read"
+                and id(node) not in calls
+            ):
+                readers.add(getattr(top, "name", "<module>"))
+    assert readers == {"_read_parquet", "read_quarantine"}

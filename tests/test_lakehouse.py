@@ -2994,7 +2994,6 @@ def test_column_stats_recorded_carried_and_refreshed(spark, tmp_path):
     from assignment4_spark.operators.lakehouse import (
         init_table,
         plan_files,
-        read_snapshot_where,
     )
 
     base = str(tmp_path / "cstbl")
@@ -3034,7 +3033,10 @@ def test_column_stats_recorded_carried_and_refreshed(spark, tmp_path):
     kept, skipped = plan_files(spark, m2, ("between", "s", "zz", "zz"))
     assert skipped, "most files cannot hold 'zz'"
     got = {
-        r.k for r in read_snapshot_where(spark, base, "s", "zz", "zz").collect()
+        r.k
+        for r in read_snapshot(
+            spark, base, where=("between", "s", "zz", "zz")
+        ).collect()
     }
     assert got == {7}
 
@@ -3050,7 +3052,6 @@ def test_column_prune_timestamp_probe_shapes(spark, tmp_path):
     from assignment4_spark.operators.lakehouse import (
         init_table,
         plan_files,
-        read_snapshot_where,
     )
 
     base = str(tmp_path / "tstbl")
@@ -3082,8 +3083,10 @@ def test_column_prune_timestamp_probe_shapes(spark, tmp_path):
     # end-to-end: the space-separated read returns the matching rows
     got = {
         r.k
-        for r in read_snapshot_where(
-            spark, base, "ts", "2024-03-02 05:00:00", "2024-03-02 07:00:00"
+        for r in read_snapshot(
+            spark, base,
+            where=("between", "ts", "2024-03-02 05:00:00",
+                   "2024-03-02 07:00:00"),
         ).collect()
     }
     assert got == {29, 30, 31}, got
@@ -3252,18 +3255,20 @@ def test_deletes_apply_on_every_pruned_read_face(spark, tmp_path, how):
 def test_read_job_counts_pinned(spark, tmp_path):
     """Job-count pin for every read kind: ``.count()`` of a plain,
     between, range, is_null and point read of a small clustered,
-    bloom-indexed table with one pending DV sidecar launches exactly
-    these Spark jobs, counted by ``obs.measure`` as
-    ``scripts/measure.py jobs`` counts an op — a perf gate that timing
-    noise cannot fake. The point read hashes its probe into Bloom bit
-    positions on the driver, so it runs no extra job."""
+    bloom-indexed table with one pending DV sidecar, and again with
+    one pending MOR sidecar, launches exactly these Spark jobs,
+    counted by ``obs.measure`` as ``scripts/measure.py jobs`` counts
+    an op — a perf gate that timing noise cannot fake. The point read
+    hashes its probe into Bloom bit positions on the driver, and every
+    data and sidecar read binds the manifest's schema, so neither runs
+    an extra job."""
     from assignment4_spark.obs import measure
     from assignment4_spark.operators.lakehouse import (
         delete_keys_dv,
+        delete_keys_mor,
         init_table,
     )
 
-    base = str(tmp_path / "jobpin")
     df = spark.range(200).select(
         F.col("id").alias("k"),
         F.lit(1).alias("ver"),
@@ -3273,24 +3278,33 @@ def test_read_job_counts_pinned(spark, tmp_path):
         .otherwise(F.col("id"))
         .alias("maybe"),
     )
-    init_table(
-        df, base, key_col="k", n_buckets=4, cluster_col="x",
-        bloom_col="tag",
+    wheres = (
+        None,
+        ("between", "x", 40.0, 70.0),
+        ("range", 40.0, 70.0),
+        ("is_null", "maybe"),
+        ("point", "u61"),
     )
-    delete_keys_dv(spark, base, spark.createDataFrame([(60,)], "k long"))
+    rows = (199, 30, 30, 4, 1)
     want = {
-        None: (5, 199),
-        ("between", "x", 40.0, 70.0): (5, 30),
-        ("range", 40.0, 70.0): (5, 30),
-        ("is_null", "maybe"): (5, 4),
-        ("point", "u61"): (5, 1),
+        (how, w): (4, n)
+        for how in ("dv", "mor")
+        for w, n in zip(wheres, rows)
     }
     got = {}
-    for where in want:
-        m = measure(
-            spark, lambda: read_snapshot(spark, base, where=where).count()
+    for how, delete in (("dv", delete_keys_dv), ("mor", delete_keys_mor)):
+        base = str(tmp_path / f"jobpin_{how}")
+        init_table(
+            df, base, key_col="k", n_buckets=4, cluster_col="x",
+            bloom_col="tag",
         )
-        got[where] = (m.jobs, m.result)
+        delete(spark, base, spark.createDataFrame([(60,)], "k long"))
+        for where in wheres:
+            m = measure(
+                spark,
+                lambda: read_snapshot(spark, base, where=where).count(),
+            )
+            got[(how, where)] = (m.jobs, m.result)
     assert got == want
 
 
@@ -3384,7 +3398,6 @@ def test_null_pruning_conservative_and_exact(spark, tmp_path):
         delete_keys_mor,
         init_table,
         plan_files,
-        read_snapshot_null,
     )
 
     base = str(tmp_path / "nulltbl")
@@ -3399,15 +3412,18 @@ def test_null_pruning_conservative_and_exact(spark, tmp_path):
     init_table(df, base, key_col="k", n_buckets=6)
     m = load_manifest(base)
     kept, skipped = plan_files(spark, m, ("is_null", "attr"))
-    got = {r.k for r in read_snapshot_null(spark, base, "attr").collect()}
+    attr_nulls = ("is_null", "attr")
+    got = {r.k for r in read_snapshot(spark, base, where=attr_nulls).collect()}
     assert got == {0, 40, 80}
     # all-null column: no stats entry → every file kept, all rows out
     k2, s2 = plan_files(spark, m, ("is_null", "allnull"))
     assert s2 == []
-    assert read_snapshot_null(spark, base, "allnull").count() == 120
+    assert read_snapshot(
+        spark, base, where=("is_null", "allnull")
+    ).count() == 120
     # MOR delete applies on the audit read too
     delete_keys_mor(spark, base, spark.createDataFrame([(40,)], "k long"))
-    got = {r.k for r in read_snapshot_null(spark, base, "attr").collect()}
+    got = {r.k for r in read_snapshot(spark, base, where=attr_nulls).collect()}
     assert got == {0, 80}
 
 
@@ -4541,8 +4557,8 @@ def test_footer_stats_parity_with_spark_pass(spark, tmp_path):
         c for c, t in types.items() if t in _COLUMN_STATS_TYPES
     )
     files = [f for fs in _list_bucket_files(staging).values() for f in fs]
-    fast = _staged_column_stats(spark, staging, files, types)
-    slow = _spark_column_stats(spark, staging, eligible)
+    fast = _staged_column_stats(spark, files, types)
+    slow = _spark_column_stats(spark, files, eligible, types)
     assert fast == slow
 
     # and the footer reader itself must have flagged ONLY the huge col
@@ -4724,36 +4740,77 @@ def test_footer_stats_unreadable_file_falls_back(spark, tmp_path):
     assert stats == {} and fallback == {"k", "v"}
 
 
-def test_uniform_schema_read_case_variant_column(spark, tmp_path):
-    """Spark resolves parquet columns case-insensitively by default, so
-    a physical column differing only in case from a manifest column
-    must still pass the footer type-parity gate: a case-variant with a
-    DIVERGENT type forces the per-group fallback instead of binding
-    unvalidated bytes (ADVICE r11)."""
+@pytest.mark.parametrize("vectorized", ["true", "false"])
+def test_aligned_read_binds_manifest_schema(spark, tmp_path, vectorized):
+    """The manifest is a read's only schema source, in both parquet
+    readers: hand-written files whose physical types are narrower
+    along _WIDEN_CHAIN (tinyint/smallint/int32/float32 under
+    smallint/int/bigint/double), whose key column is a case variant
+    (``K``), which hold an ``array<bigint>`` column, and one of which
+    carries stale bytes of a dead column, read exactly at the
+    manifest's types — and building the frame runs no Spark job (no
+    schema inference)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from assignment4_spark.operators.lakehouse import _uniform_schema_read
+    from assignment4_spark.obs import measure
+    from assignment4_spark.operators.lakehouse import (
+        _column_types,
+        _read_files_aligned,
+    )
 
-    d = tmp_path / "cv"
-    d.mkdir()
-    f_bad = str(d / "upper_int.parquet")
-    # physical 'K' is int32; the manifest wants bigint 'k'
-    pq.write_table(pa.table({"K": pa.array([1, 2], type=pa.int32())}), f_bad)
-    assert (
-        _uniform_schema_read(
-            spark, {str(d): [f_bad]}, ["k"], {"k": "bigint"}
+    columns = ["k", "s", "i", "x", "d", "docs", "gone"]
+    column_types = {
+        "k": "bigint", "s": "smallint", "i": "int", "x": "bigint",
+        "d": "double", "docs": "array<bigint>", "gone": "string",
+    }
+    files = []
+    for commit, table in (
+        ("c1", {
+            "K": pa.array([1, 2], pa.int32()),
+            "s": pa.array([-3, 4], pa.int8()),
+            "i": pa.array([300, None], pa.int16()),
+            "x": pa.array([70000, -1], pa.int32()),
+            "d": pa.array([0.5, 1.25], pa.float32()),
+            "docs": pa.array([[1, 2], []], pa.list_(pa.int64())),
+            "gone": ["stale1", "stale2"],
+        }),
+        ("c2", {
+            "k": pa.array([3], pa.int64()),
+            "s": pa.array([7], pa.int16()),
+            "i": pa.array([70000], pa.int32()),
+            "x": pa.array([1 << 40], pa.int64()),
+            "d": pa.array([2.0], pa.float64()),
+            "docs": pa.array([None], pa.list_(pa.int64())),
+            "gone": ["live"],
+        }),
+    ):
+        d = tmp_path / commit / "bucket=0"
+        d.mkdir(parents=True)
+        files.append(str(d / "part-0.parquet"))
+        pq.write_table(pa.table(table), files[-1])
+    # c1's file predates the column's re-add: its bytes are stale
+    dead = {files[0]: frozenset({"gone"})}
+    conf = "spark.sql.parquet.enableVectorizedReader"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, vectorized)
+    try:
+        m = measure(
+            spark,
+            lambda: _read_files_aligned(
+                spark, files, columns, column_types, dead
+            ),
         )
-        is None
-    )
-    # matching type under a case variant: fast path stays available
-    f_ok = str(d / "upper_ok.parquet")
-    pq.write_table(pa.table({"K": pa.array([1, 2], type=pa.int64())}), f_ok)
-    fast = _uniform_schema_read(
-        spark, {str(d): [f_ok]}, ["k"], {"k": "bigint"}
-    )
-    assert fast is not None
-    assert sorted(r.k for r in fast.collect()) == [1, 2]
+        df = m.result
+        assert m.jobs == 0
+        assert _column_types(df) == column_types
+        assert sorted(tuple(r) for r in df.collect()) == [
+            (1, -3, 300, 70000, 0.5, [1, 2], None),
+            (2, 4, None, -1, 1.25, [], None),
+            (3, 7, 70000, 1 << 40, 2.0, None, "live"),
+        ]
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_shuffle_partitions_derived_from_cores(spark):
